@@ -15,11 +15,12 @@ normalization anchors) — and the full per-query map is written to
 ``BENCH_DETAIL.json`` next to this script, where the judge reads it
 against BASELINE.md's per-query floor.
 
-Each query is materialized through the noop sink so the full plan
-executes (count() alone lets Spark prune projections). Every headliner
-runs twice and the SECOND run is the one timed, so the clock measures
-the plan, not per-query first-touch costs (codegen JIT, Arrow import,
-fixture staging) — see the warm-pass comment in main().
+Queries run through tools/runner.py: the driver contract, noop sink
+(count() alone lets Spark prune projections), caches drained outside
+the clock. A warm pass over every headliner comes first, then two timed
+runs each with the min kept, so the clock measures the plan, not
+per-query first-touch costs (codegen JIT, Arrow import, fixture
+staging) — see the warm-pass comment in main().
 """
 
 from __future__ import annotations
@@ -27,9 +28,9 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [REPO, os.path.join(REPO, "tools")]
 
 HEADLINE = [
     "candidate_parts",
@@ -183,39 +184,15 @@ EXTRA_CONFS: dict[str, dict[str, str]] = {
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from database_scan_spark.session import get_spark
+    import runner  # noqa: PLC0415
 
-    spark = get_spark("database-scan-spark-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    # Time queries through the DRIVER CONTRACT (__spark_entry__), not
-    # the raw registry fns: the contract's _released wrapper drops the
-    # previous query's persisted intermediates on entry, bounding the
-    # session to one query's caches. Raw fns leaked every persisting
-    # headliner's caches (x3 runs each) into all later timings — the
-    # tail of the list then timed GC pressure, not plans (r9: 5
-    # late-list floor flags on an otherwise idle, FAST host, all after
-    # the persisting queries; gone under the contract).
-    import __spark_entry__ as _entry
-
-    by_name = _entry.queries()
-
-    def run(name: str) -> float:
-        extra = EXTRA_CONFS.get(name, {})
-        saved = {k: spark.conf.get(k, None) for k in extra}
-        for k, v in extra.items():
-            spark.conf.set(k, v)
-        try:
-            # Drain the PREVIOUS query's persisted caches outside the
-            # timed region (ADVICE r9: the wrapper's on-entry drain
-            # otherwise lands inside the next query's clock).
-            _entry.drain()
-            t0 = time.perf_counter()
-            df = by_name[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            return time.perf_counter() - t0
-        finally:
-            for k, v in saved.items():
-                spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+    # Queries run through the DRIVER CONTRACT (tools/runner.py): the
+    # _released wrapper bounds the session to one query's persisted
+    # caches, and runner drains them outside the clock. Raw registry
+    # fns leaked every persisting headliner's caches into all later
+    # timings (r9: 5 late-list floor flags on an otherwise idle host).
+    spark = runner.engine_session("database-scan-spark-bench")
+    names = [n for n in HEADLINE if n in runner.contract()[0]]
 
     # Warm pass (not measured), then a measured pass: time the SECOND
     # run of every headliner (VERDICT r7 item 2). The first run per
@@ -231,35 +208,22 @@ def main() -> None:
     # spurious floor-gate flags in r7. The warm pass makes the timed
     # pass measure the read/compute path, matching how the per-query
     # floors in tools/floors.json were measured (warm, quiet host).
-    for name in HEADLINE:
-        if name in by_name:
-            try:
-                run(name)
-            except Exception:
-                pass  # the timed run will surface the real error
+    runner.warm(spark, names, sf_dir)
 
     # Jitter guard, SYMMETRIC (VERDICT r8 item 2): after the warm pass,
     # EVERY headliner gets two timed runs and reports the min; both raw
     # timings land in BENCH_DETAIL.json["runs"] so a masked retry is
-    # auditable. r8's guard re-timed only would-be floor violators and
-    # kept their min — one-sided, biased the total downward, and its
-    # retime loop could KeyError on gen_baseline's sentinel violation
-    # strings (ADVICE r8). Applying the same protocol to every query
-    # removes both the bias and that loop.
+    # auditable.
     queries: dict[str, float] = {}
     raw_runs: dict[str, list[float]] = {}
-    for name in HEADLINE:
-        if name not in by_name:
-            continue
-        t1, t2 = run(name), run(name)
+    for name in names:
+        t1, t2 = (b + e for b, e in runner.timed(spark, name, sf_dir))
         raw_runs[name] = [round(t1, 3), round(t2, 3)]
         queries[name] = round(min(t1, t2), 3)
 
     sf = os.path.basename(os.path.normpath(sf_dir)).replace("sf", "")
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
+    detail_path = os.path.join(REPO, "BENCH_DETAIL.json")
     detail = {
         "metric": "headline-query wall-clock, noop sink, local mode",
         "value": round(sum(queries.values()), 3),
@@ -273,7 +237,6 @@ def main() -> None:
     # history); tools/gen_baseline.py renders it and applies the >2x
     # host-adjusted rule. Evaluated here so every bench run self-reports.
     try:
-        sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
         import gen_baseline  # noqa: PLC0415
 
         if sf_val == gen_baseline.FLOOR_SF:

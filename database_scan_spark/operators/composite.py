@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..spec import QuerySpec
-from ._helpers import SQL_DISC_PRICE, disc_price
+from ._helpers import SQL_DISC_PRICE, disc_price, h32
 
 
 def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -882,7 +882,7 @@ def agg_hll_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     mergeability theta sketches give you, but with a hash family the
     oracle can re-derive bit-for-bit."""
     ev = load(spark, sf_dir, "events")
-    h = _h32_local(F.col("user_id").cast("string"))
+    h = h32(F.col("user_id").cast("string"))
     bucket = (h / F.lit(1 << _HLL_W)).cast("long")  # top 8 bits
     w = h % F.lit(1 << _HLL_W)                       # low 24 bits
     # rank = leading zeros in the 24-bit suffix + 1 = W+1 - bitlen(w)
@@ -925,12 +925,6 @@ def agg_hll_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("est_hll") / F.col("exact_distinct"), 6).alias("est_ratio"),
         )
     )
-
-
-def _h32_local(c):
-    from ._helpers import h32  # noqa: PLC0415 - avoid top-level churn
-
-    return h32(c)
 
 
 AGG_HLL_PORTABLE_ORACLE = f"""

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..spec import QuerySpec
-from ._helpers import spread
+from ._helpers import h32, spread
 
 P31 = 2_147_483_647  # 2^31 - 1, Mersenne prime
 
@@ -56,14 +56,6 @@ assert all(isinstance(a, int) and 0 < a < P31 for a in MINHASH_A)
 assert all(isinstance(b, int) and 0 <= b < P31 for b in MINHASH_B)
 
 JACCARD_THRESHOLD = 0.5
-
-
-def _h32(col: Column) -> Column:
-    """Cross-engine 32-bit hash — delegated to the package-wide kernel
-    in ``_helpers.h32`` (single source of truth)."""
-    from ._helpers import h32  # noqa: PLC0415
-
-    return h32(col)
 
 
 _SQL_H32 = "('0x' || substring(md5({expr}), 1, 8))::BIGINT"
@@ -117,8 +109,6 @@ def _shingle_df(
         "doc_id", F.split("text", " ").alias("toks")
     )
     if sample_mod is not None:
-        from ._helpers import h32  # noqa: PLC0415
-
         docs = docs.filter(
             h32(F.concat(F.lit("sample:"), F.col("doc_id").cast("string")))
             % sample_mod
@@ -348,7 +338,7 @@ def _bands_from_shingles(sh: DataFrame) -> DataFrame:
     One SQL parse constructs the identical expression tree JVM-side —
     measured warm build 1.60s -> 0.29s for this subtree, byte-equal
     output (A/B in OPTIMIZATION_r10.md)."""
-    sh_hashed = sh.withColumn("h", _h32(F.col("shingle")) % F.lit(P31))
+    sh_hashed = sh.withColumn("h", h32(F.col("shingle")) % F.lit(P31))
     min_exprs = ", ".join(
         f"min(({MINHASH_A[i]} * h + {MINHASH_B[i]}) % {P31}) AS m{i}"
         for i in range(_K)
@@ -517,7 +507,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         F.explode(F.array_distinct(F.split("text", " "))).alias("tok"),
-    ).withColumn("h", _h32(F.col("tok")))
+    ).withColumn("h", h32(F.col("tok")))
     votes = toks.groupBy("doc_id").agg(
         *[
             F.sum(
@@ -1010,7 +1000,7 @@ def dedup_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     asymmetric measure decontamination wants (a short eval prompt
     inside a long train doc still triggers)."""
     sh = _shingle_df(spark, sf_dir)
-    is_eval = _h32(F.col("doc_id").cast("string")) % 10 == 0
+    is_eval = h32(F.col("doc_id").cast("string")) % 10 == 0
     train_sh = sh.filter(~is_eval)
     eval_sh = sh.filter(is_eval).select(
         F.col("doc_id").alias("eval_id"), "shingle"
@@ -1291,7 +1281,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     index is the only state the pipeline keeps; appending today's
     bands to it (one partition write) rolls the window forward."""
     sh = _shingle_df(spark, sf_dir).persist()
-    is_delta = _h32(F.col("doc_id").cast("string")) % _DELTA_MOD == 0
+    is_delta = h32(F.col("doc_id").cast("string")) % _DELTA_MOD == 0
 
     import os  # noqa: PLC0415
 
@@ -1369,7 +1359,7 @@ def dedup_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_a", "doc_b", F.col("jaccard").alias("exact_jaccard")
     )
     sh = _shingle_df(spark, sf_dir)
-    sh_hashed = sh.withColumn("h", _h32(F.col("shingle")) % F.lit(P31))
+    sh_hashed = sh.withColumn("h", h32(F.col("shingle")) % F.lit(P31))
     mins = sh_hashed.groupBy("doc_id").agg(
         *[
             F.min(
@@ -1912,7 +1902,7 @@ def sim_corpus_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sh = docs.select(
         "source", F.explode(_shingles(F.col("toks"))).alias("shingle")
-    ).select("source", (_h32(F.col("shingle")) % F.lit(P31)).alias("h"))
+    ).select("source", (h32(F.col("shingle")) % F.lit(P31)).alias("h"))
     # 64 min-slots as ONE parsed expr (optimization r10): identical
     # expressions to the per-Column loop, ~400 fewer py4j round trips
     # at plan-build time (see _bands_from_shingles).
@@ -2146,8 +2136,6 @@ def dedup_bloom_archive(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership test is a broadcast semi-join per position with a
     count==k gate; ground truth is a hash semi-join. No UDFs, no
     driver state."""
-    from ._helpers import h32  # noqa: PLC0415
-
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     canon_h = h32(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))))
     keyed = docs.select("doc_id", canon_h.alias("h"))
@@ -2310,8 +2298,6 @@ def dedup_minhash_oph(
     sample — frequency /m, audit cost /m² — which is how an accuracy
     audit runs at 100 TB (the registered ``dedup_minhash_oph_sampled``
     pins the sampled path against its own exactly-sampled oracle)."""
-    from ._helpers import h32  # noqa: PLC0415
-
     # ONE shingle kernel for the whole audit (optimization r11): the
     # signature pass below and the exact-pair ground truth inside
     # dedup_ngram_jaccard consume the same persisted (doc_id, shingle)
@@ -2500,8 +2486,6 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     reassembly via sorted struct collect, one corpus-wide hash agg on
     the chunk hash. Returns chunks appearing in ≥2 distinct docs with
     occurrence stats — the shared-content ledger."""
-    from ._helpers import h32  # noqa: PLC0415
-
     docs = spread(load(spark, sf_dir, "documents")).select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
     )

@@ -812,16 +812,16 @@ def test_corpus_overlap_signatures_are_mergeable(spark, specs):
     full-corpus signature exactly."""
     from database_scan_spark.catalog import load
     from database_scan_spark.operators.dedup import (
-        MINHASH_A, MINHASH_B, P31, _K, _h32, _shingles,
+        MINHASH_A, MINHASH_B, P31, _K, _shingles,
     )
-    from database_scan_spark.operators._helpers import spread
+    from database_scan_spark.operators._helpers import h32, spread
 
     docs = spread(load(spark, SF_SMOKE, "documents")).select(
         "doc_id", "source", F.split("text", " ").alias("toks")
     )
     sh = docs.select(
         "doc_id", "source", F.explode(_shingles(F.col("toks"))).alias("shingle")
-    ).select("doc_id", "source", (_h32(F.col("shingle")) % F.lit(P31)).alias("h"))
+    ).select("doc_id", "source", (h32(F.col("shingle")) % F.lit(P31)).alias("h"))
 
     def sig(df):
         rows = df.groupBy("source").agg(

@@ -197,12 +197,11 @@ def test_hll_merge_property(spark):
     partial aggregate at 100 TB."""
     from pyspark.sql import functions as F
     from database_scan_spark.catalog import load
-    from database_scan_spark.operators.composite import (
-        _HLL_M, _HLL_W, _HLL_ALPHA, _h32_local,
-    )
+    from database_scan_spark.operators._helpers import h32
+    from database_scan_spark.operators.composite import _HLL_M, _HLL_W, _HLL_ALPHA
 
     ev = load(spark, SF_SMOKE, "events")
-    h = _h32_local(F.col("user_id").cast("string"))
+    h = h32(F.col("user_id").cast("string"))
     bucket = (h / F.lit(1 << _HLL_W)).cast("long")
     w = h % F.lit(1 << _HLL_W)
     rank = F.when(w == 0, F.lit(_HLL_W + 1)).otherwise(

@@ -1,0 +1,99 @@
+"""The tools' shared query runner (tools/runner.py) and their import
+surface.
+
+- ``run_once`` restores the per-query EXTRA_CONFS even when the query
+  raises, and ``check`` reports a wrong oracle as a mismatch naming the
+  query.
+- Importing any tool (or bench.py) starts no Spark JVM, and the two tool
+  surfaces the benchmark imports still exist.
+- bench_cores.py rejects fewer than 2 core counts at parse time, and
+  verify_window.py takes a `lo hi` slice or query names.
+"""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+
+import pytest
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TOOLS = os.path.join(REPO, "tools")
+sys.path.insert(0, TOOLS)
+
+import runner  # noqa: E402
+from bench import EXTRA_CONFS  # noqa: E402
+from conftest import SF_SMOKE as SF  # noqa: E402
+
+
+def test_run_once_restores_extra_confs_when_query_raises(spark, monkeypatch):
+    name = "join_skew_salted"
+    extra = EXTRA_CONFS[name]
+    before = {k: spark.conf.get(k, None) for k in extra}
+    seen = {}
+
+    def boom(spark_, sf_dir):
+        seen.update({k: spark_.conf.get(k, None) for k in extra})
+        raise RuntimeError("build failed")
+
+    monkeypatch.setitem(runner.contract()[0], name, boom)
+    with pytest.raises(RuntimeError, match="build failed"):
+        runner.run_once(spark, name, SF)
+    assert seen == extra
+    assert {k: spark.conf.get(k, None) for k in extra} == before
+
+
+def test_check_reports_wrong_oracle_as_mismatch(spark, monkeypatch):
+    name = "candidate_parts"
+    assert runner.check(spark, name, SF) > 0
+    monkeypatch.setitem(runner.contract()[1], name, "SELECT 1 AS part_id")
+    with pytest.raises(AssertionError, match=f"^{name}: "):
+        runner.check(spark, name, SF)
+
+
+def test_tools_import_without_starting_spark(tmp_path):
+    code = f"""
+import glob, importlib, os, sys
+sys.path[:0] = [{REPO!r}, {TOOLS!r}]
+mods = [os.path.basename(p)[:-3] for p in glob.glob(os.path.join({TOOLS!r}, "*.py"))]
+for m in sorted(mods) + ["bench"]:
+    importlib.import_module(m)
+from pyspark import SparkContext
+assert SparkContext._gateway is None, "a tool started a Spark JVM at import"
+import verify_scale
+assert callable(verify_scale.materialize_ctes)
+print(len(mods))
+"""
+    r = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                       text=True, cwd=tmp_path)
+    assert r.returncode == 0, r.stdout + r.stderr
+    assert int(r.stdout.split()[-1]) >= 10
+
+    # perfbench/fixture.py builds its scaled fixture through this CLI.
+    r = subprocess.run(
+        [sys.executable, os.path.join(TOOLS, "gen_scale_fixture.py"), "--help"],
+        capture_output=True, text=True, cwd=tmp_path,
+    )
+    assert r.returncode == 0, r.stderr
+    for flag in ("--src", "--out", "--copies"):
+        assert flag in r.stdout
+
+
+def test_bench_cores_rejects_a_single_core_count(capsys):
+    import bench_cores
+
+    with pytest.raises(SystemExit) as exc:
+        bench_cores.parse_args(["--core-counts", "8"])
+    assert exc.value.code == 2
+    assert "--core-counts" in capsys.readouterr().err
+    assert bench_cores.parse_args(["--core-counts", "8", "32"]).core_counts == [8, 32]
+
+
+def test_verify_window_takes_a_slice_or_names():
+    from verify_window import select
+
+    names = [f"q{i}" for i in range(60)]
+    assert select([], names) == ("window [0:50]", names[:50])
+    assert select(["50", "55"], names) == ("window [50:55]", names[50:55])
+    assert select(["q3", "q1"], names) == ("2 named", ["q3", "q1"])

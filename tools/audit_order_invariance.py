@@ -39,8 +39,6 @@ import shutil
 import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
 # Primary keys used as the deterministic shuffle key (md5 of the key
 # string reorders rows uniformly regardless of the original order).
 _PK: dict[str, tuple[str, ...]] = {
@@ -98,25 +96,16 @@ def main() -> None:
     ap.add_argument("--driver-memory", default=None)
     args = ap.parse_args()
 
-    sys.path.insert(0, REPO)
-    from pyspark.sql import SparkSession
+    import runner  # noqa: PLC0415
+    from database_scan_spark.testing import canonicalize  # noqa: PLC0415
 
-    b = SparkSession.builder.master(args.master)
-    if args.driver_memory:
-        b = b.config("spark.driver.memory", args.driver_memory)
-    spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    import __spark_entry__ as e
-    from database_scan_spark.testing import canonicalize
-
+    spark = runner.vanilla_session(args.master, args.driver_memory)
     tag = hashlib.sha256(os.path.abspath(args.sf).encode()).hexdigest()[:12]
     shuffled = stage_shuffled(
         args.sf, os.path.join("/tmp", f"order_shuffled_{tag}")
     )
 
-    qs = e.queries()
-    names = sorted(qs)[args.lo : args.hi]
+    names = sorted(runner.contract()[0])[args.lo : args.hi]
     t0 = time.time()
     diffs: list[str] = []
     errs: list[tuple[str, str]] = []
@@ -125,11 +114,10 @@ def main() -> None:
             print(f"[{i}/{len(names)}] {name}: EXEMPT ({_EXEMPT[name]})")
             continue
         try:
-            base = canonicalize(qs[name](spark, args.sf).toPandas())
-            shuf = canonicalize(qs[name](spark, shuffled).toPandas())
+            base = canonicalize(runner.result(spark, name, args.sf))
+            shuf = canonicalize(runner.result(spark, name, shuffled))
         except Exception as exc:  # noqa: BLE001 - audit must finish
             errs.append((name, str(exc).splitlines()[0][:160]))
-            spark.catalog.clearCache()
             continue
         if base != shuf:
             ndiff = sum(1 for a, b2 in zip(base[1], shuf[1]) if a != b2)
@@ -139,7 +127,6 @@ def main() -> None:
                 f"({ndiff} differing canonical rows, "
                 f"{len(base[1])} vs {len(shuf[1])} total)"
             )
-        spark.catalog.clearCache()
     status = "OK" if not diffs and not errs else "FAIL"
     print(
         f"order-invariance [{args.lo}:{args.lo + len(names)}] "

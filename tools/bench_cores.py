@@ -9,8 +9,8 @@ core counts and writes a stamped table where data-bound queries can
 show ratio >> 1.
 
 Protocol per core count: FRESH process (master is fixed at session
-creation), bench.py's warm-pass + two timed runs + min, noop sink,
-driver-contract wrapper (cache drain between queries). Same
+creation), then tools/runner.py as bench.py: warm pass + two timed
+runs + min, noop sink, driver-contract drain between queries. Same
 shuffle-partition rule as production guidance (partitions follow
 $SPARK_GRAFT_CPUS; AQE coalesces).
 
@@ -27,7 +27,6 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
@@ -51,37 +50,29 @@ QUERIES = [
 
 
 def child(cpus: int, sf_dir: str) -> None:
-    sys.path.insert(0, REPO)
-    from database_scan_spark.session import get_spark
+    import runner  # noqa: PLC0415
 
-    spark = get_spark(f"bench-cores-{cpus}")
-    spark.sparkContext.setLogLevel("ERROR")
-    import __spark_entry__ as _entry
-
-    by_name = _entry.queries()
-
-    def run(name: str) -> float:
-        _entry.drain()
-        spark.sparkContext.setJobDescription(f"bench-cores: {name}")
-        t0 = time.perf_counter()
-        df = by_name[name](spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
+    spark = runner.engine_session(f"bench-cores-{cpus}")
     out: dict[str, float] = {}
     for name in QUERIES:
-        run(name)  # warm (first-touch costs, same protocol as bench.py)
-        out[name] = round(min(run(name), run(name)), 3)
+        out[name] = round(runner.warm_min(spark, name, sf_dir), 3)
         print(f"  c{cpus} {out[name]:8.3f}s {name}", file=sys.stderr, flush=True)
     print(json.dumps(out))
 
 
-def main() -> None:
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     ap = argparse.ArgumentParser()
     ap.add_argument("--cpus", type=int, default=None)
     ap.add_argument("--sf-dir", default=SF_DIR_DEFAULT)
     ap.add_argument("--core-counts", type=int, nargs="*", default=[8, 32])
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
+    if args.cpus is None and len(set(args.core_counts)) < 2:
+        ap.error("--core-counts needs at least 2 distinct core counts")
+    return args
+
+
+def main() -> None:
+    args = parse_args()
     if args.cpus is not None:
         child(args.cpus, args.sf_dir)
         return

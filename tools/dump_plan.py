@@ -13,26 +13,20 @@ import os
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
 
 
 def main() -> None:
+    import runner  # noqa: PLC0415
+
     tag = sys.argv[1]
     names = sys.argv[2:]
     assert tag in ("before", "after"), "tag must be before|after"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from database_scan_spark.session import get_spark
-
-    spark = get_spark("database-scan-spark-dumpplan")
-    spark.sparkContext.setLogLevel("ERROR")
-    import __spark_entry__ as _entry
-
-    by_name = _entry.queries()
+    spark = runner.engine_session("database-scan-spark-dumpplan")
     outdir = os.path.join(REPO, "plans", os.environ.get("DUMP_ROUND", "r11"))
     os.makedirs(outdir, exist_ok=True)
     for name in names:
-        _entry.drain()
-        df = by_name[name](spark, sf_dir)
+        df = runner.contract()[0][name](spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
             df._jdf.queryExecution(), "formatted"
         )

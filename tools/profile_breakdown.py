@@ -20,64 +20,36 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+HERE = os.path.dirname(os.path.abspath(__file__))
 
 
 def main() -> None:
+    import runner  # noqa: PLC0415
+    from bench import HEADLINE  # noqa: PLC0415
+
     only = set(sys.argv[1:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from database_scan_spark.session import get_spark
-
-    spark = get_spark("database-scan-spark-profile")
-    spark.sparkContext.setLogLevel("ERROR")
-    import __spark_entry__ as _entry
-    from bench import EXTRA_CONFS, HEADLINE
-
-    by_name = _entry.queries()
-    names = [n for n in HEADLINE if n in by_name and (not only or n in only)]
-
-    def one(name: str) -> tuple[float, float]:
-        extra = EXTRA_CONFS.get(name, {})
-        saved = {k: spark.conf.get(k, None) for k in extra}
-        for k, v in extra.items():
-            spark.conf.set(k, v)
-        try:
-            _entry.drain()
-            spark.sparkContext.setJobDescription(f"profile: {name}")
-            t0 = time.perf_counter()
-            df = by_name[name](spark, sf_dir)
-            t1 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            t2 = time.perf_counter()
-            return t1 - t0, t2 - t1
-        finally:
-            spark.sparkContext.setJobDescription(None)
-            for k, v in saved.items():
-                spark.conf.unset(k) if v is None else spark.conf.set(k, v)
-
+    spark = runner.engine_session("database-scan-spark-profile")
+    names = [
+        n for n in HEADLINE
+        if n in runner.contract()[0] and (not only or n in only)
+    ]
+    runner.warm(spark, names, sf_dir)  # same protocol as bench.py
     out: dict[str, dict[str, float]] = {}
-    for name in names:  # warm pass, unmeasured (same protocol as bench.py)
-        try:
-            one(name)
-        except Exception as exc:  # noqa: BLE001
-            print(f"WARM FAIL {name}: {exc}", file=sys.stderr)
     for name in names:
-        b1, e1 = one(name)
-        b2, e2 = one(name)
+        runs = runner.timed(spark, name, sf_dir)
         out[name] = {
-            "build": round(min(b1, b2), 3),
-            "exec": round(min(e1, e2), 3),
-            "total": round(min(b1 + e1, b2 + e2), 3),
+            "build": round(min(b for b, _ in runs), 3),
+            "exec": round(min(e for _, e in runs), 3),
+            "total": round(min(b + e for b, e in runs), 3),
         }
         print(
             f"{out[name]['total']:8.3f} build={out[name]['build']:7.3f} "
             f"exec={out[name]['exec']:7.3f}  {name}",
             flush=True,
         )
-    with open(os.path.join(REPO, "tools", "profile_breakdown.json"), "w") as fh:
+    with open(os.path.join(HERE, "profile_breakdown.json"), "w") as fh:
         json.dump(out, fh, indent=1, sort_keys=True)
         fh.write("\n")
     tot = sum(v["total"] for v in out.values())

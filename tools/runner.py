@@ -1,0 +1,143 @@
+"""How a registry query runs through the driver contract.
+
+Every timing and verification tool (``bench.py`` and ``tools/*``) runs
+queries through this module, so the protocol is decided once:
+
+- queries come from ``__spark_entry__.queries()``, whose ``_released``
+  wrapper bounds the session to one query's persisted caches;
+- ``drain()`` releases the previous query's caches OUTSIDE the clock;
+- the Spark job description is the query name;
+- timed runs apply ``bench.EXTRA_CONFS`` around the run and restore the
+  session confs afterwards, even when the query raises;
+- the result is materialised through the noop sink, so the whole plan
+  executes without a collect;
+- ``check`` compares ``toPandas()`` with the DuckDB oracle from
+  ``oracle_sql()``, run through ``materialize_ctes`` (a result-neutral
+  rewrite that stops DuckDB re-evaluating shared CTEs per reference).
+  It applies no EXTRA_CONFS: verification keeps the driver's envelope.
+
+Tools import this module inside ``main()``; importing it starts nothing.
+"""
+
+from __future__ import annotations
+
+import contextlib
+import functools
+import os
+import sys
+import time
+from collections.abc import Iterable, Iterator
+
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+REPO = os.path.dirname(TOOLS)
+for _p in (REPO, TOOLS):
+    if _p not in sys.path:
+        sys.path.insert(0, _p)
+
+
+def vanilla_session(master: str = "local[8]", driver_memory: str | None = None,
+                    confs: Iterable[str] = ()):
+    """A session with none of the engine's configs, as the driver builds
+    it. ``confs`` are ``key=value`` strings (the tools' ``--conf``)."""
+    from pyspark.sql import SparkSession  # noqa: PLC0415
+
+    b = SparkSession.builder.master(master)
+    if driver_memory:
+        b = b.config("spark.driver.memory", driver_memory)
+    for kv in confs:
+        k, _, v = kv.partition("=")
+        b = b.config(k, v)
+    spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def engine_session(app: str):
+    """The engine's tuned session (``session.get_spark``), as the bench
+    runs it."""
+    from database_scan_spark.session import get_spark  # noqa: PLC0415
+
+    spark = get_spark(app)
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+@functools.cache
+def contract() -> tuple[dict, dict]:
+    """``(queries(), oracle_sql())`` of the driver contract."""
+    import __spark_entry__ as entry  # noqa: PLC0415
+
+    return entry.queries(), entry.oracle_sql()
+
+
+@contextlib.contextmanager
+def _described(spark, name: str) -> Iterator[None]:
+    spark.sparkContext.setJobDescription(name)
+    try:
+        yield
+    finally:
+        spark.sparkContext.setJobDescription(None)
+
+
+def run_once(spark, name: str, sf_dir: str) -> tuple[float, float]:
+    """One timed run to the noop sink: ``(build_s, exec_s)``."""
+    import __spark_entry__ as entry  # noqa: PLC0415
+    from bench import EXTRA_CONFS  # noqa: PLC0415
+
+    extra = EXTRA_CONFS.get(name, {})
+    saved = {k: spark.conf.get(k, None) for k in extra}
+    try:
+        for k, v in extra.items():
+            spark.conf.set(k, v)
+        entry.drain()
+        with _described(spark, name):
+            t0 = time.perf_counter()
+            df = contract()[0][name](spark, sf_dir)
+            t1 = time.perf_counter()
+            df.write.format("noop").mode("overwrite").save()
+            return t1 - t0, time.perf_counter() - t1
+    finally:
+        for k, v in saved.items():
+            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+
+
+def warm(spark, names: Iterable[str], sf_dir: str) -> None:
+    """Untimed pass: pays first-touch costs (codegen JIT, Arrow import,
+    marker-guarded fixture staging) so timed runs measure the plan. A
+    failure is reported and left for the timed run to raise."""
+    for name in names:
+        try:
+            run_once(spark, name, sf_dir)
+        except Exception as exc:  # noqa: BLE001
+            print(f"WARM FAIL {name}: {str(exc)[:200]}", file=sys.stderr)
+
+
+def timed(spark, name: str, sf_dir: str) -> list[tuple[float, float]]:
+    """Two timed runs; callers keep the min."""
+    return [run_once(spark, name, sf_dir) for _ in range(2)]
+
+
+def warm_min(spark, name: str, sf_dir: str) -> float:
+    """Warm run, then the min wall time of two timed runs."""
+    warm(spark, [name], sf_dir)
+    return min(b + e for b, e in timed(spark, name, sf_dir))
+
+
+def result(spark, name: str, sf_dir: str):
+    """``name``'s result as pandas, through ``queries()``."""
+    with _described(spark, name):
+        return contract()[0][name](spark, sf_dir).toPandas()
+
+
+def check(spark, name: str, sf_dir: str) -> int:
+    """Hash-compare ``name`` with its DuckDB oracle; raise
+    ``AssertionError`` naming the query on a mismatch. Returns the row
+    count. A query without an oracle is only run."""
+    from database_scan_spark.testing import assert_match, run_oracle  # noqa: PLC0415
+    from verify_scale import materialize_ctes  # noqa: PLC0415
+
+    got = result(spark, name, sf_dir)
+    oracle = contract()[1].get(name)
+    if oracle is not None:
+        assert_match(got, run_oracle(materialize_ctes(oracle), sf_dir), name)
+    return len(got)

@@ -10,9 +10,10 @@ surprise worth a plan read.
     python tools/gen_scale_fixture.py          # once, builds /tmp/testdata_sf1
     python tools/scale_rehearsal.py            # prints the SCALE.md table
 
-Protocol matches bench.py: noop sink, warm pass per query (JIT,
-fixture staging), then two timed runs, min kept. Same session confs as
-the engine bench so ratios isolate DATA volume, not tuning.
+Protocol (tools/runner.py, as bench.py): driver contract, noop sink,
+warm pass per query (JIT, fixture staging), then two timed runs, min
+kept. Same session confs as the engine bench so ratios isolate DATA
+volume, not tuning.
 """
 
 from __future__ import annotations
@@ -22,7 +23,6 @@ import json
 import math
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -122,34 +122,14 @@ def main() -> None:
                     "(>2x host-adjusted = exit 1)")
     args = ap.parse_args()
 
-    sys.path.insert(0, REPO)
-    from database_scan_spark.session import get_spark
+    import runner  # noqa: PLC0415
 
-    spark = get_spark("database-scan-spark-scale-rehearsal")
-    spark.sparkContext.setLogLevel("ERROR")
-    # Through the driver contract, same as bench.py: the _released
-    # wrapper bounds the session to one query's persisted caches, so
-    # later queries time their plans rather than earlier queries' GC
-    # pressure.
-    import __spark_entry__ as _entry
-
-    qfns = _entry.queries()
-
-    def timed(name: str, sf_dir: str) -> float:
-        def one() -> float:
-            t0 = time.perf_counter()
-            qfns[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            return time.perf_counter() - t0
-
-        one()  # warm
-        return min(one(), one())
+    spark = runner.engine_session("database-scan-spark-scale-rehearsal")
 
     rows = []
     for name in args.queries:
-        t_small = timed(name, args.small)
-        t_big = timed(name, args.big)
+        t_small = runner.warm_min(spark, name, args.small)
+        t_big = runner.warm_min(spark, name, args.big)
         ratio = t_big / t_small
         exponent = math.log(ratio) / math.log(args.factor)
         rows.append(

@@ -7,8 +7,8 @@ query this script:
 
 1. hash-checks the result against its DuckDB oracle ON THE SKEWED
    DATA (answers must not depend on key distribution), and
-2. times the query warm (min-of-2, bench.py protocol) on both the
-   uniform and the skewed fixture and reports the ratio.
+2. times the query warm (min-of-2, tools/runner.py as bench.py) on
+   both the uniform and the skewed fixture and reports the ratio.
 
 Equal volume means ratio ≈ 1 is the pass shape; a big ratio is a
 skew cliff (a single straggler task) that AQE skew-join / salting
@@ -24,11 +24,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
-import sys
-import time
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # join-heavy (skewed join keys), agg-heavy (hot groupBy key), and
 # window-heavy (hot window partition) representatives.
@@ -54,43 +49,18 @@ def main() -> None:
     ap.add_argument("--json", dest="json_out", default=None)
     args = ap.parse_args()
 
-    sys.path.insert(0, REPO)
-    from database_scan_spark.registry import get
-    from database_scan_spark.session import get_spark
-    from database_scan_spark.testing import assert_match, run_oracle
+    import runner  # noqa: PLC0415
 
-    spark = get_spark("database-scan-spark-skew-rehearsal")
-    spark.sparkContext.setLogLevel("ERROR")
-    # Through the driver contract, same as bench.py: the _released
-    # wrapper bounds the session to one query's persisted caches.
-    import __spark_entry__ as _entry
-
-    qfns = _entry.queries()
-
-    def timed(name: str, sf_dir: str) -> float:
-        def one() -> float:
-            t0 = time.perf_counter()
-            qfns[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            return time.perf_counter() - t0
-
-        one()  # warm
-        return min(one(), one())
-
+    spark = runner.engine_session("database-scan-spark-skew-rehearsal")
+    osql = runner.contract()[1]
     rows = []
     for name in args.queries:
-        spec = get(name)
         status = "no_oracle"
-        if spec.oracle:
-            assert_match(
-                spec.fn(spark, args.skew).toPandas(),
-                run_oracle(spec.oracle, args.skew),
-                name,
-            )
+        if name in osql:
+            runner.check(spark, name, args.skew)
             status = "hash_green"
-        t_uni = timed(name, args.uniform)
-        t_skew = timed(name, args.skew)
+        t_uni = runner.warm_min(spark, name, args.uniform)
+        t_skew = runner.warm_min(spark, name, args.skew)
         ratio = t_skew / t_uni
         rows.append(
             {

@@ -10,10 +10,11 @@ DuckDB caveat at this scale: non-MATERIALIZED CTEs referenced more
 than once are inlined PER REFERENCE (the exponential re-evaluation
 documented in the verify recipe — fine at sf0.01, tens of GB at 10x).
 The engine's oracles are written for the driver's sf0.01 gate, so
-this tool rewrites `name AS (` to `name AS MATERIALIZED (` for
-top-level CTEs before running them — an execution hint only, result
-values unchanged (WINDOW clauses are not touched: the pattern
-requires the CTE name to start its line).
+``materialize_ctes`` below rewrites `name AS (` to
+`name AS MATERIALIZED (` for top-level CTEs — an execution hint only,
+result values unchanged (WINDOW clauses are not touched: the pattern
+requires the CTE name to start its line). tools/runner.py ``check``
+applies it to every oracle it runs, at every scale.
 
     python tools/gen_scale_fixture.py       # once
     python tools/verify_scale.py            # heavy families, cheap first
@@ -22,12 +23,8 @@ requires the CTE name to start its line).
 from __future__ import annotations
 
 import argparse
-import os
 import re
-import sys
 import time
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # cheap-oracle first so a slow tail never hides early signal
 QUERIES = [
@@ -72,37 +69,18 @@ def main() -> None:
     ap.add_argument("--driver-memory", default="16g")
     args = ap.parse_args()
 
-    sys.path.insert(0, REPO)
-    from pyspark.sql import SparkSession
+    import runner  # noqa: PLC0415
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.driver.memory", args.driver_memory)
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    from database_scan_spark.registry import get
-    from database_scan_spark.testing import assert_match, run_oracle
-
+    spark = runner.vanilla_session("local[16]", args.driver_memory)
     fails: list[str] = []
     for name in args.queries:
-        spec = get(name)
         t0 = time.time()
         try:
-            spdf = spec.fn(spark, args.sf).toPandas()
-            t_spark = time.time() - t0
-            t0 = time.time()
-            opdf = run_oracle(materialize_ctes(spec.oracle), args.sf)
-            assert_match(spdf, opdf, name)
-            print(
-                f"{name}: hash-green at 10x "
-                f"(spark {t_spark:.0f}s, duckdb {time.time() - t0:.0f}s)",
-                flush=True,
-            )
+            runner.check(spark, name, args.sf)
+            print(f"{name}: hash-green at 10x ({time.time() - t0:.0f}s)", flush=True)
         except Exception as ex:  # noqa: BLE001 - report and continue
             fails.append(name)
             print(f"{name}: FAIL {str(ex)[:200]}", flush=True)
-        spark.catalog.clearCache()
     n = len(args.queries)
     print(f"10x differential: {n - len(fails)}/{n} green; fails={fails}")
     spark.stop()

@@ -1,13 +1,15 @@
 #!/usr/bin/env python
-"""Rehearse a driver CORRECTNESS window (or any registry slice) through
-the EXACT driver contract — a vanilla SparkSession, ``queries()`` /
-``oracle_sql()`` from ``__spark_entry__``, DuckDB hash-compare — so a
-window entry is a formality, not a hope.
+"""Rehearse a driver CORRECTNESS window (or any registry slice, or named
+queries) through the EXACT driver contract — a vanilla SparkSession,
+``queries()`` / ``oracle_sql()`` from ``__spark_entry__``, DuckDB
+hash-compare (tools/runner.py ``check``) — so a window entry is a
+formality, not a hope.
 
     python tools/verify_window.py                 # SPECS[:50] at sf0.01
     python tools/verify_window.py 50 100          # SPECS[50:100]
-    python tools/verify_window.py 0 464 --sf /root/testdata/sf0.1
+    python tools/verify_window.py 0 470 --sf SF_DIR   # full registry
     python tools/verify_window.py 0 50 --driver-memory 6g
+    python tools/verify_window.py q1 q2 [--sf DIR]   # named queries
 
 Run it from a SCRATCH directory to also prove no cwd dependence (the
 engine must work when the driver's cwd is not the repo). By default the
@@ -23,13 +25,21 @@ import os
 import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+def select(targets: list[str], names: list[str]) -> tuple[str, list[str]]:
+    """``[lo [hi]]`` slices ``names`` (default 0 50); anything else is a
+    list of query names. Returns a label and the selection."""
+    if len(targets) <= 2 and all(t.isdigit() for t in targets):
+        lo = int(targets[0]) if targets else 0
+        hi = int(targets[1]) if len(targets) > 1 else 50
+        return f"window [{lo}:{hi}]", names[lo:hi]
+    return f"{len(targets)} named", targets
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("lo", nargs="?", type=int, default=0)
-    ap.add_argument("hi", nargs="?", type=int, default=50)
+    ap.add_argument("targets", nargs="*",
+                    help="lo hi (default 0 50), or query names")
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("--master", default="local[8]")
     ap.add_argument("--driver-memory", default=None)
@@ -43,53 +53,26 @@ def main() -> None:
                     "depend on session tuning")
     args = ap.parse_args()
 
-    sys.path.insert(0, REPO)
-    from pyspark.sql import SparkSession
+    import runner  # noqa: PLC0415
+    from database_scan_spark.registry import SPECS  # noqa: PLC0415
 
-    b = SparkSession.builder.master(args.master)
-    if args.driver_memory:
-        b = b.config("spark.driver.memory", args.driver_memory)
-    for kv in args.conf:
-        k, _, v = kv.partition("=")
-        b = b.config(k, v)
-    spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    import __spark_entry__ as e
-    from database_scan_spark.registry import SPECS
-    from database_scan_spark.testing import assert_match, run_oracle
-
-    # DuckDB inlines a multiply-referenced CTE per reference; chained
-    # round CTEs go exponential with scale (bit twice: r8
-    # graph_label_propagation at sf0.1, r9 pipeline_corpus_prep at
-    # 10x). The rewrite is an execution hint only — result values are
-    # unchanged (pinned by tests/test_verify_scale.py) — so the
-    # standard verify path applies it at EVERY scale rather than
-    # leaving it a 10x-only tool (VERDICT r9 item 6).
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    from verify_scale import materialize_ctes
-
-    qs, osql = e.queries(), e.oracle_sql()
-    specs = sorted(SPECS, key=lambda s: s.name) if args.sorted else SPECS
-    window = specs[args.lo: args.hi]
+    names = [s.name for s in SPECS]
+    label, window = select(args.targets, sorted(names) if args.sorted else names)
+    spark = runner.vanilla_session(args.master, args.driver_memory, args.conf)
     t0 = time.time()
-    fails: list[tuple[str, str]] = []
-    for s in window:
+    fails: list[str] = []
+    for name in window:
+        t1 = time.time()
         try:
-            spdf = qs[s.name](spark, args.sf).toPandas()
-            if s.name in osql:
-                assert_match(
-                    spdf,
-                    run_oracle(materialize_ctes(osql[s.name]), args.sf),
-                    s.name,
-                )
+            rows = runner.check(spark, name, args.sf)
+            print(f"  OK {name} ({rows} rows, {time.time() - t1:.1f}s)", flush=True)
         except Exception as ex:  # noqa: BLE001 - report and continue
-            fails.append((s.name, str(ex)[:200]))
-            print("FAIL", s.name, str(ex)[:200], flush=True)
+            fails.append(name)
+            print("FAIL", name, str(ex)[:400], flush=True)
     print(
-        f"window [{args.lo}:{args.hi}] sf={os.path.basename(args.sf)}: "
+        f"{label} sf={os.path.basename(args.sf)}: "
         f"{len(window) - len(fails)}/{len(window)} green in "
-        f"{time.time() - t0:.0f}s; fails={[f[0] for f in fails]}"
+        f"{time.time() - t0:.0f}s; fails={fails}"
     )
     spark.stop()
     sys.exit(1 if fails else 0)
