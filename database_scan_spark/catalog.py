@@ -24,7 +24,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 TABLES = {
@@ -131,17 +132,36 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one snapshot table. Plain parquet read → pushdown-friendly.
+def read_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One snapshot table exactly as stored, with no normalisation.
 
     ``events.ts`` has shipped as TIMESTAMP(NANOS) in some fixture
-    generations (which Spark's vectorized reader only surfaces as a
-    raw long via ``nanosAsLong``) and as TIMESTAMP(MICROS) in others
-    (surfaced as TIMESTAMP_NTZ). Normalize both to a session-zone
-    microsecond TimestampType so every downstream time computation —
-    and the timezone-less DuckDB oracle — sees the same wall-clock
-    values.
+    generations, which Spark's vectorized reader rejects unless
+    ``nanosAsLong`` surfaces it as a raw long, and as TIMESTAMP(MICROS)
+    in others (surfaced as TIMESTAMP_NTZ). This is the one place that
+    sets the conf; it stays set, like ``load``'s other reader pins, so
+    a stream over the same files reads them the same way.
     """
+    if name == "events":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.parquet(table_path(sf_dir, name))
+
+
+def events_ts(raw_type: T.DataType) -> Column:
+    """``events.ts`` as a session-zone microsecond TimestampType, from
+    the raw type ``read_raw`` surfaces, so every downstream time
+    computation (and the timezone-less DuckDB oracle) sees the same
+    wall-clock values."""
+    if isinstance(raw_type, T.LongType):
+        # nanos fixture: micro-precision data, so div 1000 is lossless
+        return F.expr("timestamp_micros(ts div 1000)")
+    # micros fixture: arrives as TIMESTAMP_NTZ; same wall-clock under UTC
+    return F.col("ts").cast(T.TimestampType())
+
+
+def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan one snapshot table. Plain parquet read → pushdown-friendly;
+    ``events.ts`` normalised by ``events_ts``."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; catalog has {sorted(TABLES)}")
     # Fixture timestamps are naive wall-clock values; every time
@@ -161,18 +181,10 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set(
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
     )
-    path = table_path(sf_dir, name)
+    df = read_raw(spark, sf_dir, name)
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        df = spark.read.parquet(path)
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            # nanos fixture: micro-precision data, so div 1000 is lossless
-            return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        # micros fixture: arrives as TIMESTAMP_NTZ; same wall-clock under UTC
-        return df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-    return spark.read.parquet(path)
+        return df.withColumn("ts", events_ts(df.schema["ts"].dataType))
+    return df
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -240,7 +240,6 @@ def dedup_ngram_jaccard(
     sf_dir: str,
     prefix_filter: bool = False,
     sample_mod: int | None = None,
-    shingles: DataFrame | None = None,
 ) -> DataFrame:
     """EXACT Jaccard near-dup pairs via a set-similarity join: explode
     shingles, equi-join on the shingle (docs sharing no shingle never
@@ -252,18 +251,12 @@ def dedup_ngram_jaccard(
     when that wins). Both paths produce identical results; the DuckDB
     oracle is always the naive formulation (independent derivation).
 
-    ``shingles`` lets a caller that already materialized the SAME
-    (doc_id, shingle) relation (``_shingle_df`` with the same
-    sample_mod, persisted) share it instead of paying the doc scan +
-    explode a second time (optimization r11, guide §2.4) — the OPH
-    estimator audit is such a caller: its signature pass and this
-    exact audit consume one shingle kernel.
+    A caller that already persisted the same ``_shingle_df(...)``
+    relation (the OPH estimator audit) shares it through Spark's cache
+    manager, which matches the identical plan: the doc scan + explode
+    runs once.
     """
-    sh = (
-        shingles
-        if shingles is not None
-        else _shingle_df(spark, sf_dir, sample_mod=sample_mod).persist()
-    )
+    sh = _shingle_df(spark, sf_dir, sample_mod=sample_mod).persist()
     if prefix_filter:
         return _verified_pairs(sh, _prefix_filtered_candidates(sh))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
@@ -2301,7 +2294,8 @@ def dedup_minhash_oph(
     # ONE shingle kernel for the whole audit (optimization r11): the
     # signature pass below and the exact-pair ground truth inside
     # dedup_ngram_jaccard consume the same persisted (doc_id, shingle)
-    # relation, so the doc scan + split + explode runs once, not twice.
+    # relation (its identical persist() plan hits this cache), so the
+    # doc scan + split + explode runs once, not twice.
     sh = _shingle_df(spark, sf_dir, sample_mod=sample_mod).persist()
     hv = h32(F.concat(F.lit("oph:"), F.col("shingle")))
     raw = (
@@ -2335,7 +2329,7 @@ def dedup_minhash_oph(
              + F.expr(f"(packed div {_OPH_PACK})") * _OPH_C).alias("sig"),
         )
     )
-    pairs = dedup_ngram_jaccard(spark, sf_dir, sample_mod=sample_mod, shingles=sh)
+    pairs = dedup_ngram_jaccard(spark, sf_dir, sample_mod=sample_mod)
     sa = dense.select(F.col("doc_id").alias("doc_a"), "j", F.col("sig").alias("sig_a"))
     sb = dense.select(F.col("doc_id").alias("doc_b"), "j", F.col("sig").alias("sig_b"))
     return (

@@ -467,7 +467,10 @@ def _make_rle_udtf():
     workers; same discipline as the DataSource classes)."""
     from pyspark.sql.functions import udtf  # noqa: PLC0415
 
-    @udtf(returnType="doc_id: bigint, start_pos: int, token: string, run_len: int")
+    @udtf(
+        returnType="doc_id: bigint, start_pos: int, token: string, run_len: int",
+        useArrow=True,
+    )
     class RleTokens:
         def eval(self, doc_id: int, text: str):  # noqa: ANN001
             toks = text.split(" ") if text else []
@@ -487,7 +490,6 @@ def udtf_rle_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python UDTF (one variable-arity output table per input row — the
     API surface SURVEY §2.10 lists as available-if-needed). Arrow
     batch transfer; narrow (no shuffle)."""
-    spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
     spark.udtf.register("rle_tokens", _make_rle_udtf())
     sf_tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     view = f"docs_rle_{sf_tag}"
@@ -573,7 +575,7 @@ def _make_parse_delimited_udtf():
         "double": T.DoubleType(),
     }
 
-    @udtf
+    @udtf(useArrow=True)
     class ParseDelimited:
         @staticmethod
         def analyze(fmt: AnalyzeArgument, line: AnalyzeArgument) -> AnalyzeResult:
@@ -616,7 +618,6 @@ def udtf_analyze_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trips part attributes through a CSV line and back; the
     oracle selects the originals, proving the parse is lossless and
     correctly typed."""
-    spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
     spark.udtf.register("parse_delimited", _make_parse_delimited_udtf())
     sf_tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     view = f"part_lines_{sf_tag}"
@@ -908,7 +909,8 @@ def _make_burst_udtf():
 
     @udtf(
         returnType="user_id: bigint, n_events: bigint, n_bursts: bigint,"
-        " max_gap_us: bigint"
+        " max_gap_us: bigint",
+        useArrow=True,
     )
     class UserBursts:
         def __init__(self):  # noqa: ANN204
@@ -948,7 +950,6 @@ def udtf_table_arg(spark: SparkSession, sf_dir: str) -> DataFrame:
     more than needed. Equal timestamps contribute gap 0 under any
     tie order, so the output is deterministic. Scale: one shuffle on
     user_id (the PARTITION BY), per-group state is O(1)."""
-    spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
     spark.udtf.register("user_bursts", _make_burst_udtf())
     sf_tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     view = f"events_bursts_{sf_tag}"

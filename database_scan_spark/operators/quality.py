@@ -1566,12 +1566,12 @@ def dq_schema_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     lived through is exactly the class of drift it catches.
 
     Both sides are METADATA (footer reads, no data pages); the
-    result is a ~60-row audit relation. The nanosAsLong reader shim
-    surfaces nanos-generation timestamps as bigint in Spark's raw
-    schema — reported as 'timestamp' here because the shim is a
+    result is a ~60-row audit relation. The physical side is read
+    through ``catalog.load``, which normalises only ``events.ts``: the
+    raw reader surfaces nanos-generation timestamps as bigint, a
     reader compatibility detail, not a physical type change (the
     parquet logical type IS timestamp)."""
-    from ..catalog import TABLES, table_path  # noqa: PLC0415
+    from ..catalog import TABLES  # noqa: PLC0415
 
     decl_rows = [
         (t, f.name, i + 1, f.dataType.simpleString().lower())
@@ -1579,15 +1579,11 @@ def dq_schema_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i, f in enumerate(st.fields)
     ]
     decl = spark.createDataFrame(decl_rows, "tbl string, col string, pos int, declared string")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     act_rows = []
     for t in sorted(TABLES):
-        sch = spark.read.parquet(table_path(sf_dir, t)).schema
+        sch = load(spark, sf_dir, t).schema
         for i, f in enumerate(sch.fields):
-            a = f.dataType.simpleString().lower()
-            if t == "events" and f.name == "ts" and a == "bigint":
-                a = "timestamp"  # nanosAsLong shim, see docstring
-            act_rows.append((t, f.name, i + 1, a))
+            act_rows.append((t, f.name, i + 1, f.dataType.simpleString().lower()))
     act = spark.createDataFrame(act_rows, "tbl string, col string, apos int, actual string")
 
     def norm(c):

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load, register_views
+from ..session import scoped_confs
 from ..spec import QuerySpec
 
 
@@ -840,11 +841,7 @@ def catalog_stats_cbo(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"ANALYZE TABLE {tbl} COMPUTE STATISTICS FOR COLUMNS {stat_cols[t]}"
         )
     li, na, od, cu = (_cbo_table_name(sf_dir, t) for t in _CBO_TABLES)
-    saved = {}
-    for k, v in _CBO_CONFS.items():
-        saved[k] = spark.conf.get(k, None)
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, _CBO_CONFS):
         out = spark.sql(
             f"""
             SELECT n_name,
@@ -860,12 +857,6 @@ def catalog_stats_cbo(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out._jdf.queryExecution().optimizedPlan()
         return out
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 CATALOG_STATS_CBO_ORACLE = """

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import scoped_confs
 from ..spec import QuerySpec
 from ._helpers import h32, workdir
 
@@ -770,11 +771,7 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     conservative prefilter, false positives are removed by the join.
     ``tests/test_scale_posture.py`` asserts might_contain reaches the
     fact side's scan stage."""
-    saved = {}
-    for k, v in _BLOOM_CONFS.items():
-        saved[k] = spark.conf.get(k, None)
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, _BLOOM_CONFS):
         li = load(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_extendedprice", "l_discount"
         )
@@ -803,12 +800,6 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         # join it rides on) after the confs are restored.
         out._jdf.queryExecution().optimizedPlan()
         return out
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 JOIN_BLOOM_PREFILTER_ORACLE = """

@@ -16,7 +16,9 @@ local-mode hack:
 
 from __future__ import annotations
 
+import contextlib
 import os
+from collections.abc import Iterator, Mapping
 
 from pyspark.sql import SparkSession
 
@@ -58,6 +60,29 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
     )
     return builder.getOrCreate()
+
+
+@contextlib.contextmanager
+def scoped_confs(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the body of a ``with`` block.
+
+    On exit, even when the body raises, each key gets back the value
+    it had, or is unset if it had none. Queries run one after another
+    in a shared caller-owned session (the driver contract), so a conf
+    a query needs must not outlive it; ``catalog.load``'s reader pins
+    are the only permanent ones.
+    """
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 # Recommended configuration for a real multi-executor deployment at

@@ -45,17 +45,10 @@ from __future__ import annotations
 import os
 
 
-def make_datasource():
-    """Return the GraphQLSnapshot DataSource class, closure-defined so
-    registration ships the code itself to workers."""
-    import glob  # noqa: PLC0415
-    import json  # noqa: PLC0415
-
-    from pyspark.sql.datasource import (  # noqa: PLC0415
-        DataSource,
-        DataSourceReader,
-        InputPartition,
-    )
+def make_extract_rows():
+    """Return the GraphQL row extractor both connectors use (this
+    module and ``page_stream``). Closure-defined like the DataSource
+    classes, so each reader that calls it ships it by value."""
 
     def _extract_rows(payload: dict, rows_path: str) -> list:
         """Pull the row list out of a GraphQL response, fail-loud.
@@ -91,6 +84,23 @@ def make_datasource():
                 f"{type(node).__name__}, expected a list of rows"
             )
         return node
+
+    return _extract_rows
+
+
+def make_datasource():
+    """Return the GraphQLSnapshot DataSource class, closure-defined so
+    registration ships the code itself to workers."""
+    import glob  # noqa: PLC0415
+    import json  # noqa: PLC0415
+
+    from pyspark.sql.datasource import (  # noqa: PLC0415
+        DataSource,
+        DataSourceReader,
+        InputPartition,
+    )
+
+    _extract_rows = make_extract_rows()
 
     class _PagePartition(InputPartition):
         def __init__(self, path: str):

@@ -35,6 +35,8 @@ isn't guaranteed to be /root/repo). Same rule as
 
 from __future__ import annotations
 
+from .graphql_snapshot import make_extract_rows
+
 
 def make_page_stream_source():
     """Return the page_stream DataSource class (closure-defined so
@@ -48,37 +50,7 @@ def make_page_stream_source():
         SimpleDataSourceStreamReader,
     )
 
-    def _extract_rows(payload: dict, rows_path: str) -> list:
-        """Row list from a GraphQL response, fail-loud (same contract
-        as graphql_snapshot): `{"errors": ...}` bodies, missing
-        rows_path segments, and non-list leaves all raise — only an
-        ACTUAL empty list means the cursor is exhausted, so an error
-        page can never masquerade as end-of-stream and stall the
-        query while looking healthy."""
-        if payload.get("errors"):
-            raise RuntimeError(f"GraphQL error response: {payload['errors']}")
-        node = payload
-        walked = []
-        for key in rows_path.split("."):
-            walked.append(key)
-            if not isinstance(node, dict):
-                raise ValueError(
-                    f"rows_path {'.'.join(walked)!r}: parent is "
-                    f"{type(node).__name__}, not an object — fix the "
-                    "rows_path option to match the response shape"
-                )
-            node = node.get(key)
-            if node is None:
-                raise ValueError(
-                    f"rows_path {'.'.join(walked)!r} missing from the "
-                    "response — fix the rows_path option"
-                )
-        if not isinstance(node, list):
-            raise ValueError(
-                f"rows_path {rows_path!r} resolves to "
-                f"{type(node).__name__}, expected a list of rows"
-            )
-        return node
+    _extract_rows = make_extract_rows()
 
     class _PageStreamReader(SimpleDataSourceStreamReader):
         """One response-page file per micro-batch; offset = page index.

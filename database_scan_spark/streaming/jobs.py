@@ -13,8 +13,8 @@ checked twice: batch vs DuckDB, and stream vs the same oracle.
 Production shape notes (local fixtures stream one parquet file):
 
 - source: a directory of arriving files / Kafka; here the snapshot
-  parquet behind the same schema (ts arrives as raw nanos — the
-  stream reader gets the identical nanosAsLong treatment as
+  parquet behind the same schema (raw ``ts`` is read and normalised
+  by the same ``catalog.read_raw`` / ``catalog.events_ts`` as
   ``catalog.load``);
 - sink: memory for the harness; parquet/Kafka + checkpointLocation
   in production — the checkpoint dir IS specified here so state
@@ -36,21 +36,29 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..catalog import load, table_path
+from ..catalog import events_ts, load, read_raw, table_path
 from ..operators._helpers import workdir
+from ..session import scoped_confs
 from ..spec import QuerySpec
+
+# transformWithStateInPandas keeps state in per-variable column
+# families, which only the RocksDB provider supports; a vanilla session
+# defaults to HDFSBackedStateStore and throws
+# STATE_STORE_MULTIPLE_COLUMN_FAMILIES.
+_ROCKSDB = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    )
+}
+
 
 def _events_raw_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
     """Raw schema as stored in parquet. ``ts`` has shipped both as
-    TIMESTAMP(NANOS) (Spark reads it as long via nanosAsLong) and as
-    TIMESTAMP(MICROS) (TIMESTAMP_NTZ) across fixture generations —
-    probe the batch reader's view of the footer so the stream schema
-    always matches the files."""
-    # Self-apply the nanos conf: a standalone job whose first events
-    # read is THIS probe (e.g. stream_mv_refresh in a fresh session)
-    # would otherwise throw on the TIMESTAMP(NANOS) fixture generation.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ts_type = spark.read.parquet(table_path(sf_dir, "events")).schema["ts"].dataType
+    TIMESTAMP(NANOS) and as TIMESTAMP(MICROS) across fixture
+    generations — probe the batch reader's view of the footer
+    (``catalog.read_raw``, which also readies the reader for the nanos
+    generation) so the stream schema always matches the files."""
+    ts_type = read_raw(spark, sf_dir, "events").schema["ts"].dataType
     return T.StructType(
         [
             T.StructField("event_id", T.LongType()),
@@ -64,7 +72,6 @@ def _events_raw_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw_schema = _events_raw_schema(spark, sf_dir)
     # FileStreamSource wants a *directory* of arriving files; expose the
     # snapshot through a symlink dir (zero-copy).
@@ -73,12 +80,13 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.exists(link):
         os.symlink(table_path(sf_dir, "events"), link)
     df = spark.readStream.schema(raw_schema).parquet(src_dir)
-    if isinstance(raw_schema["ts"].dataType, T.LongType):
-        return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    return df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
+    return df.withColumn("ts", events_ts(raw_schema["ts"].dataType))
 
 
-def _run_to_memory(df: DataFrame, spark: SparkSession, sf_dir: str, name: str, mode: str) -> DataFrame:
+def _run_to_memory(
+    df: DataFrame, spark: SparkSession, sf_dir: str, name: str, mode: str,
+    confs: dict[str, str] | None = None,
+) -> DataFrame:
     """Execute a streaming plan to completion (availableNow) into a
     fresh memory sink + checkpoint dir; return the sink table.
 
@@ -92,25 +100,23 @@ def _run_to_memory(df: DataFrame, spark: SparkSession, sf_dir: str, name: str, m
     preserve), results are partition-count-independent (integer /
     DECIMAL accumulators; the memory-sink compare is order-
     insensitive), and at cluster scale the session's own parallelism
-    is the right default anyway.
+    is the right default anyway. ``confs`` (e.g. ``_ROCKSDB``) are
+    scoped to the same window.
 
-    SINGLE-QUERY-AT-A-TIME CONTRACT (ADVICE r4): the pin/restore
-    mutates the session-global conf, so a caller-owned session must
+    SINGLE-QUERY-AT-A-TIME CONTRACT (ADVICE r4): the scoped confs
+    mutate the session-global conf, so a caller-owned session must
     not run CONCURRENT queries while a streaming spec executes — the
-    restore would race with them (same applies to the RocksDB
-    state-store provider conf in ``stream_tws_eventtime_timer``).
-    That matches the driver contract (one registry query at a time
-    per session) and every batch spec here is conf-neutral; callers
+    restore would race with them. That matches the driver contract
+    (one registry query at a time per session) and every batch spec
+    here is conf-neutral; callers
     embedding these jobs in a multi-tenant session should scope the
     conf per-query via ``writeStream`` options where Spark supports
     it, or serialize streaming specs."""
     sink = f"{name}_{os.path.basename(os.path.normpath(sf_dir)).replace('.', '_')}"
     ckpt = os.path.join(workdir(sf_dir, name), "checkpoint")
     shutil.rmtree(ckpt, ignore_errors=True)  # fresh run each invocation
-    shuffle_key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(shuffle_key, None)
-    spark.conf.set(shuffle_key, str(spark.sparkContext.defaultParallelism))
-    try:
+    shuffle = {"spark.sql.shuffle.partitions": str(spark.sparkContext.defaultParallelism)}
+    with scoped_confs(spark, {**shuffle, **(confs or {})}):
         q = (
             df.writeStream.format("memory")
             .queryName(sink)
@@ -120,11 +126,6 @@ def _run_to_memory(df: DataFrame, spark: SparkSession, sf_dir: str, name: str, m
             .start()
         )
         q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset(shuffle_key)
-        else:
-            spark.conf.set(shuffle_key, prev)
     return df.sparkSession.table(sink)
 
 
@@ -406,20 +407,9 @@ def stream_stateful_running_total(spark: SparkSession, sf_dir: str) -> DataFrame
         outputMode="Update",
         timeMode="None",
     )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+    return _run_to_memory(
+        out, spark, sf_dir, "stream_tws_totals", "update", _ROCKSDB
     )
-    try:
-        return _run_to_memory(out, spark, sf_dir, "stream_tws_totals", "update")
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
 
 
 STREAM_STATEFUL_RUNNING_TOTAL_ORACLE = """
@@ -496,20 +486,9 @@ def stream_tws_recent_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+    return _run_to_memory(
+        out, spark, sf_dir, "stream_tws_recent", "update", _ROCKSDB
     )
-    try:
-        return _run_to_memory(out, spark, sf_dir, "stream_tws_recent", "update")
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
 
 
 STREAM_TWS_RECENT_EVENTS_ORACLE = f"""
@@ -580,20 +559,9 @@ def stream_tws_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+    return _run_to_memory(
+        out, spark, sf_dir, "stream_tws_types", "update", _ROCKSDB
     )
-    try:
-        return _run_to_memory(out, spark, sf_dir, "stream_tws_types", "update")
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
 
 
 STREAM_TWS_TYPE_COUNTS_ORACLE = """
@@ -845,7 +813,7 @@ def stream_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_dir = os.path.join(root, "src")
     if not os.path.exists(os.path.join(src_dir, "_SPLIT_OK")):
         shutil.rmtree(src_dir, ignore_errors=True)
-        ev = spark.read.parquet(table_path(sf_dir, "events"))
+        ev = read_raw(spark, sf_dir, "events")
         # modulo split: four deterministic arrival batches, no driver
         # materialization needed to find range bounds
         for i in range(4):
@@ -956,7 +924,7 @@ def _two_file_events_src(
     src_dir = os.path.join(workdir(sf_dir, name), "src")
     if not os.path.exists(os.path.join(src_dir, "_SPLIT_OK")):
         shutil.rmtree(src_dir, ignore_errors=True)
-        ev = spark.read.parquet(table_path(sf_dir, "events"))
+        ev = read_raw(spark, sf_dir, "events")
         split = F.lit(_TWS_FLUSH_SPLIT).cast(T.TimestampType())
         for i, cond in enumerate([nts < split, nts >= split]):
             (
@@ -1081,12 +1049,7 @@ def stream_tws_inactivity_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-by-batch watermark sequence (emit1/emit2 CTEs)."""
     _ensure_tws_protobuf(spark)
     raw_schema = _events_raw_schema(spark, sf_dir)
-    ts_is_long = isinstance(raw_schema["ts"].dataType, T.LongType)
-    nts = (
-        F.expr("timestamp_micros(ts div 1000)")
-        if ts_is_long
-        else F.col("ts").cast(T.TimestampType())
-    )
+    nts = events_ts(raw_schema["ts"].dataType)
     src_dir = _two_file_events_src(spark, sf_dir, "stream_tws_flush", nts)
 
     stream = (
@@ -1105,20 +1068,9 @@ def stream_tws_inactivity_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Append",
         timeMode="EventTime",
     )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+    sink = _run_to_memory(
+        out, spark, sf_dir, "stream_tws_flush", "append", _ROCKSDB
     )
-    try:
-        sink = _run_to_memory(out, spark, sf_dir, "stream_tws_flush", "append")
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
     return sink.select(
         "user_id",
         "n_events",
@@ -1270,12 +1222,7 @@ def stream_tws_proctime_timer(spark: SparkSession, sf_dir: str) -> DataFrame:
     in its registration batch (expiry ≤ batch timestamp)."""
     _ensure_tws_protobuf(spark)
     raw_schema = _events_raw_schema(spark, sf_dir)
-    ts_is_long = isinstance(raw_schema["ts"].dataType, T.LongType)
-    nts = (
-        F.expr("timestamp_micros(ts div 1000)")
-        if ts_is_long
-        else F.col("ts").cast(T.TimestampType())
-    )
+    nts = events_ts(raw_schema["ts"].dataType)
     src_dir = _two_file_events_src(spark, sf_dir, "stream_tws_flush", nts)
 
     stream = (
@@ -1292,21 +1239,10 @@ def stream_tws_proctime_timer(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Append",
         timeMode="ProcessingTime",
     )
-    confs = {
-        "spark.sql.streaming.stateStore.providerClass": (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        ),
-        "spark.sql.streaming.noDataMicroBatches.enabled": "false",
-    }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        sink = _run_to_memory(out, spark, sf_dir, "stream_tws_proctime", "append")
-    finally:
-        for k, v in prev.items():
-            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+    sink = _run_to_memory(
+        out, spark, sf_dir, "stream_tws_proctime", "append",
+        {**_ROCKSDB, "spark.sql.streaming.noDataMicroBatches.enabled": "false"},
+    )
     return sink.select(
         "user_id", "n_first", F.timestamp_micros("first_us").alias("first_ts")
     )
@@ -1439,12 +1375,7 @@ def stream_tws_eventtime_timer(spark: SparkSession, sf_dir: str) -> DataFrame:
     (unlike ProcessingTime, which never does)."""
     _ensure_tws_protobuf(spark)
     raw_schema = _events_raw_schema(spark, sf_dir)
-    ts_is_long = isinstance(raw_schema["ts"].dataType, T.LongType)
-    nts = (
-        F.expr("timestamp_micros(ts div 1000)")
-        if ts_is_long
-        else F.col("ts").cast(T.TimestampType())
-    )
+    nts = events_ts(raw_schema["ts"].dataType)
     src_dir = _two_file_events_src(spark, sf_dir, "stream_tws_flush", nts)
 
     stream = (
@@ -1467,22 +1398,9 @@ def stream_tws_eventtime_timer(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Append",
         timeMode="EventTime",
     )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+    sink = _run_to_memory(
+        out, spark, sf_dir, "stream_tws_evtime", "append", _ROCKSDB
     )
-    try:
-        sink = _run_to_memory(
-            out, spark, sf_dir, "stream_tws_evtime", "append"
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
     return sink.select(
         "user_id",
         "n_first",
@@ -1810,17 +1728,12 @@ def stream_update_vs_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob  # noqa: PLC0415
 
     raw_schema = _events_raw_schema(spark, sf_dir)
-    ts_is_long = isinstance(raw_schema["ts"].dataType, T.LongType)
-    nts = (
-        F.expr("timestamp_micros(ts div 1000)")
-        if ts_is_long
-        else F.col("ts").cast(T.TimestampType())
-    )
+    nts = events_ts(raw_schema["ts"].dataType)
     root = workdir(sf_dir, "stream_mode_split")
     src_dir = os.path.join(root, "src")
     if not os.path.exists(os.path.join(src_dir, "_SPLIT_OK")):
         shutil.rmtree(src_dir, ignore_errors=True)
-        ev = spark.read.parquet(table_path(sf_dir, "events"))
+        ev = read_raw(spark, sf_dir, "events")
         split = F.lit(_MODE_SPLIT).cast(T.TimestampType())
         for i, cond in enumerate([nts < split, nts >= split]):
             (
@@ -1925,17 +1838,12 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators._helpers import h32  # noqa: PLC0415
 
     raw_schema = _events_raw_schema(spark, sf_dir)
-    ts_is_long = isinstance(raw_schema["ts"].dataType, T.LongType)
-    nts = (
-        F.expr("timestamp_micros(ts div 1000)")
-        if ts_is_long
-        else F.col("ts").cast(T.TimestampType())
-    )
+    nts = events_ts(raw_schema["ts"].dataType)
     root = workdir(sf_dir, "stream_wm_drop3")
     src_dir = os.path.join(root, "src")
     if not os.path.exists(os.path.join(src_dir, "_SPLIT_OK")):
         shutil.rmtree(src_dir, ignore_errors=True)
-        ev = spark.read.parquet(table_path(sf_dir, "events"))
+        ev = read_raw(spark, sf_dir, "events")
         third = h32(F.concat(F.lit("wm-"), F.col("event_id"))) % 3
         for i in range(3):
             (
@@ -2040,12 +1948,11 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators._helpers import h32  # noqa: PLC0415
 
     raw_schema = _events_raw_schema(spark, sf_dir)
-    ts_is_long = isinstance(raw_schema["ts"].dataType, T.LongType)
     root = workdir(sf_dir, "stream_ckpt_resume")
     stage = os.path.join(root, "stage")  # both halves, pre-built once
     if not os.path.exists(os.path.join(stage, "_SPLIT_OK")):
         shutil.rmtree(stage, ignore_errors=True)
-        ev = spark.read.parquet(table_path(sf_dir, "events"))
+        ev = read_raw(spark, sf_dir, "events")
         half = h32(F.concat(F.lit("ck-"), F.col("event_id"))) % 2
         for i, cond in enumerate([half == 0, half == 1]):
             (
@@ -2296,13 +2203,8 @@ def stream_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_dir = os.path.join(root, "src")
     if not os.path.exists(os.path.join(src_dir, "_SPLIT_OK")):
         shutil.rmtree(src_dir, ignore_errors=True)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        ev = spark.read.parquet(table_path(sf_dir, "events"))
-        ts_day = (
-            F.date_format("ts", "yyyy-MM-dd")
-            if str(ev.schema["ts"].dataType) != "LongType()"
-            else F.date_format(F.timestamp_micros((F.col("ts") / 1000).cast("long")), "yyyy-MM-dd")
-        )
+        ev = read_raw(spark, sf_dir, "events")
+        ts_day = F.date_format(events_ts(ev.schema["ts"].dataType), "yyyy-MM-dd")
         bounds = [("0000-01-01", "2024-01-10"), ("2024-01-10", "2024-01-20"), ("2024-01-20", "9999-01-01")]
         for i, (lo, hi) in enumerate(bounds):
             (
@@ -2512,7 +2414,7 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     if not os.path.exists(os.path.join(src_dir, "_SPLIT_OK")):
         shutil.rmtree(src_dir, ignore_errors=True)
-        docs = spark.read.parquet(table_path(sf_dir, "documents"))
+        docs = read_raw(spark, sf_dir, "documents")
         for i in range(_SCI_BATCHES):
             (
                 docs.filter(F.col("doc_id") % _SCI_BATCHES == i)
@@ -2528,7 +2430,7 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(os.path.join(src_dir, "_SPLIT_OK"), "w") as fh:
             fh.write("ok")
 
-    doc_schema = spark.read.parquet(table_path(sf_dir, "documents")).schema
+    doc_schema = read_raw(spark, sf_dir, "documents").schema
     n_ws = F.size(F.split("text", " "))
     mean_word = (F.length("text") - n_ws + 1) / n_ws
     canon_h = h32(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))))

@@ -305,3 +305,41 @@ def test_drain_releases_between_queries(spark):
     entry_mod.drain()
     assert qs[_NEXT](spark, SF).count() > 0
     spark.catalog.clearCache()
+
+
+# catalog.load's permanent reader pins (README "Correctness model")
+_CATALOG_PINS = {
+    "spark.sql.session.timeZone",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+    "spark.sql.legacy.parquet.nanosAsLong",
+}
+
+
+def test_queries_leave_no_session_conf_behind(spark):
+    """The driver runs queries one after another in one shared session,
+    so a conf a query sets must not outlive it. Each query that needs a
+    conf runs in a session that has none of them set yet (its own conf,
+    shared SparkContext); after it executes, the session's explicitly
+    set confs must be what they were, apart from the catalog pins."""
+    qs = entry_mod.queries()
+    leaked = {}
+    for name in (
+        "join_bloom_prefilter",
+        "catalog_stats_cbo",
+        "udtf_rle_tokens",
+        "udtf_analyze_parse",
+        "udtf_table_arg",
+        "stream_tws_type_counts",
+    ):
+        session = spark.newSession()
+        before = session.conf.getAll
+        qs[name](session, SF).write.format("noop").mode("overwrite").save()
+        entry_mod.drain()
+        after = session.conf.getAll
+        changed = {
+            k for k in before.keys() | after.keys()
+            if before.get(k) != after.get(k)
+        } - _CATALOG_PINS
+        if changed:
+            leaked[name] = sorted(changed)
+    assert not leaked, f"queries left confs behind: {leaked}"

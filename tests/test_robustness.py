@@ -261,3 +261,27 @@ def test_dsir_null_lang_parity(spark, tmp_path):
     assert n_null > 0, "fixture mutation produced no NULL langs"
     pdf = wf_dsir_select(spark, str(fix)).toPandas()
     assert_match(pdf, run_oracle(WF_DSIR_SELECT_ORACLE, str(fix)), "wf_dsir_select/null-lang")
+
+
+def test_events_ts_reads_nanos_generation_exactly(spark, tmp_path):
+    """The TIMESTAMP(NANOS) fixture generation: ``catalog.read_raw``
+    surfaces ``ts`` as a raw long and ``catalog.events_ts`` turns it
+    into the same microsecond instants. The values include ones a
+    double division by 1000 truncates to the previous microsecond."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from database_scan_spark.catalog import events_ts, read_raw
+
+    micros = [1_705_276_800_000_000, 1_705_276_800_000_016, 1_705_276_800_000_080]
+    assert any(int(float(us * 1000) / 1000) != us for us in micros)
+    pq.write_table(
+        pa.table({"ts": pa.array([us * 1000 for us in micros], pa.timestamp("ns"))}),
+        tmp_path / "events.parquet",
+    )
+    raw = read_raw(spark, str(tmp_path), "events")
+    assert isinstance(raw.schema["ts"].dataType, T.LongType)
+    got = raw.select(F.unix_micros(events_ts(raw.schema["ts"].dataType)).alias("us"))
+    assert sorted(r.us for r in got.collect()) == micros

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE
+from database_scan_spark.session import scoped_confs
 
 
 def _plan(df) -> str:
@@ -69,22 +70,49 @@ def test_whole_stage_codegen_in_agg(spark):
     assert "isFinalPlan=true" in simple and "*(" in simple
 
 
+# (banned substrings, files allowed to use them, where to look); files
+# are paths relative to the repo root
+_STATIC_RULES = (
+    # no operator pulls data to the driver (SURVEY §7.2 phase 5); the
+    # harness legitimately materializes results
+    (
+        (".collect(", ".toPandas(", ".toLocalIterator("),
+        {"database_scan_spark/testing.py"},
+        ("database_scan_spark",),
+    ),
+    # catalog's reader pins are the only permanent session confs;
+    # everything else goes through session.scoped_confs
+    (
+        (".conf.set(", ".conf.unset("),
+        {"database_scan_spark/session.py", "database_scan_spark/catalog.py"},
+        ("database_scan_spark", "tools", "bench.py"),
+    ),
+    # how the raw events.ts is read and normalised is decided once
+    (
+        ("nanosAsLong", "timestamp_micros(ts div 1000)"),
+        {"database_scan_spark/catalog.py"},
+        ("database_scan_spark", "tools", "bench.py"),
+    ),
+)
+
+
 def test_operators_never_collect():
-    """No operator may pull data to the driver: static scan of the
-    operator/plan modules for driver-side materialization in the
-    hot path (SURVEY §7.2 phase 5 convention)."""
+    """Static scan for constructs only their owner module may use:
+    driver-side materialization in the hot path, session conf changes
+    and the raw events.ts reader shim."""
     import pathlib
 
-    root = pathlib.Path(__file__).resolve().parent.parent / "database_scan_spark"
-    banned = (".collect(", ".toPandas(", ".toLocalIterator(")
+    repo = pathlib.Path(__file__).resolve().parent.parent
     offenders = []
-    for py in root.rglob("*.py"):
-        if py.name == "testing.py":
-            continue  # the harness legitimately materializes results
-        src = py.read_text()
-        for b in banned:
-            if b in src:
-                offenders.append(f"{py.name}: {b}")
+    for banned, allowed, roots in _STATIC_RULES:
+        for root in roots:
+            path = repo / root
+            for py in [path] if path.is_file() else sorted(path.rglob("*.py")):
+                rel = py.relative_to(repo).as_posix()
+                if rel in allowed:
+                    continue
+                src = py.read_text()
+                offenders += [f"{rel}: {b}" for b in banned if b in src]
     assert not offenders, offenders
 
 
@@ -111,9 +139,7 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         "l_orderkey", "l_partkey", "o_custkey"
     )
     # disable broadcast so the join exercises the bucket layout
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with scoped_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         plan = _plan(joined)
         assert "Exchange" not in plan, plan
         assert "SortMergeJoin" in plan
@@ -131,8 +157,6 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         plan2 = _plan(joined2)
         assert "Exchange" not in plan2, plan2
         assert "SortMergeJoin" in plan2
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def test_q4_exists_plans_semi_join(spark):
@@ -418,15 +442,8 @@ def test_cbo_reorders_pathological_star(spark):
     # stats() evaluates lazily under the CURRENT conf — re-open the CBO
     # window so the estimate comes from the ANALYZE'd statistics, not
     # the size-only fallback
-    saved = spark.conf.get("spark.sql.cbo.enabled", None)
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    try:
+    with scoped_confs(spark, {"spark.sql.cbo.enabled": "true"}):
         assert "rowCount=25" in opt.stats().toString()
-    finally:
-        if saved is None:
-            spark.conf.unset("spark.sql.cbo.enabled")
-        else:
-            spark.conf.set("spark.sql.cbo.enabled", saved)
 
 
 def test_directional_asof_is_single_exchange(spark):

@@ -482,7 +482,9 @@ def test_tws_running_total_boundary_independent(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from database_scan_spark.catalog import load
+    from database_scan_spark.session import scoped_confs
     from database_scan_spark.streaming.jobs import (
+        _ROCKSDB,
         _ensure_tws_protobuf,
         _running_total_processor,
     )
@@ -504,14 +506,7 @@ def test_tws_running_total_boundary_independent(spark, tmp_path):
         outputMode="Update",
         timeMode="None",
     )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_confs(spark, _ROCKSDB):
         q = (
             out.writeStream.format("memory")
             .queryName("tws_multi_batch")
@@ -521,11 +516,6 @@ def test_tws_running_total_boundary_independent(spark, tmp_path):
             .start()
         )
         q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
     sink = spark.table("tws_multi_batch")
     n_rows = sink.count()
     final = sink.groupBy("user_id").agg(
@@ -556,7 +546,9 @@ def test_tws_list_state_accumulates_across_batches(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from database_scan_spark.catalog import load
+    from database_scan_spark.session import scoped_confs
     from database_scan_spark.streaming.jobs import (
+        _ROCKSDB,
         _ensure_tws_protobuf,
         _recent_events_processor,
     )
@@ -578,14 +570,7 @@ def test_tws_list_state_accumulates_across_batches(spark, tmp_path):
         outputMode="Update",
         timeMode="None",
     )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_confs(spark, _ROCKSDB):
         q = (
             out.writeStream.format("memory")
             .queryName("tws_list_multi_batch")
@@ -595,11 +580,6 @@ def test_tws_list_state_accumulates_across_batches(spark, tmp_path):
             .start()
         )
         q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
     sink_rows = {
         (r["user_id"], r["rank"], r["event_id"])
         for r in spark.table("tws_list_multi_batch").collect()

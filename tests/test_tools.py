@@ -29,7 +29,11 @@ from conftest import SF_SMOKE as SF  # noqa: E402
 
 def test_run_once_restores_extra_confs_when_query_raises(spark, monkeypatch):
     name = "join_skew_salted"
-    extra = EXTRA_CONFS[name]
+    # one more key the session has never set: it must be unset after
+    unset_key = "spark.sql.files.maxRecordsPerFile"
+    assert spark.conf.get(unset_key, None) is None
+    extra = {**EXTRA_CONFS[name], unset_key: "1000"}
+    monkeypatch.setitem(EXTRA_CONFS, name, extra)
     before = {k: spark.conf.get(k, None) for k in extra}
     seen = {}
 

@@ -7,8 +7,9 @@ queries through this module, so the protocol is decided once:
   wrapper bounds the session to one query's persisted caches;
 - ``drain()`` releases the previous query's caches OUTSIDE the clock;
 - the Spark job description is the query name;
-- timed runs apply ``bench.EXTRA_CONFS`` around the run and restore the
-  session confs afterwards, even when the query raises;
+- timed runs apply ``bench.EXTRA_CONFS`` through
+  ``session.scoped_confs``, which restores them even when the query
+  raises;
 - the result is materialised through the noop sink, so the whole plan
   executes without a collect;
 - ``check`` compares ``toPandas()`` with the DuckDB oracle from
@@ -83,12 +84,9 @@ def run_once(spark, name: str, sf_dir: str) -> tuple[float, float]:
     """One timed run to the noop sink: ``(build_s, exec_s)``."""
     import __spark_entry__ as entry  # noqa: PLC0415
     from bench import EXTRA_CONFS  # noqa: PLC0415
+    from database_scan_spark.session import scoped_confs  # noqa: PLC0415
 
-    extra = EXTRA_CONFS.get(name, {})
-    saved = {k: spark.conf.get(k, None) for k in extra}
-    try:
-        for k, v in extra.items():
-            spark.conf.set(k, v)
+    with scoped_confs(spark, EXTRA_CONFS.get(name, {})):
         entry.drain()
         with _described(spark, name):
             t0 = time.perf_counter()
@@ -96,9 +94,6 @@ def run_once(spark, name: str, sf_dir: str) -> tuple[float, float]:
             t1 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
             return t1 - t0, time.perf_counter() - t1
-    finally:
-        for k, v in saved.items():
-            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
 
 
 def warm(spark, names: Iterable[str], sf_dir: str) -> None:
