@@ -416,38 +416,47 @@ def test_mmr_matches_greedy_reference(spark, specs):
     assert got == want
 
 
-def test_mmr_barrier_survives_optimizer(spark, specs):
+def test_mmr_barrier_survives_optimizer(tmp_path):
     """Regression guard for sim_mmr_rerank's Generate barrier (ADVICE
     r10): the chained per-step argmax folds stay evaluable only
     because CollapseProject does not merge across a Generate node. A
     Spark upgrade that simplifies explode(array(struct(...))) or
     collapses through Generate would re-inline the folds and — per the
     measurement in similarity.py — hang the analyzer. Build the
-    optimized plan in a BOUNDED worker thread so that failure mode is
-    a loud assert, not a hung test, and require the per-step Generate
-    barriers to still be present."""
-    import threading
+    optimized plan in a BOUNDED subprocess, so that failure mode is a
+    loud assert and a timeout kills the whole JVM (a thread of the
+    shared session would leave a wedged analyzer behind), and require
+    the per-step Generate barriers to still be present."""
+    import os
+    import subprocess
+    import sys
 
     from database_scan_spark.operators.similarity import MMR_K
 
-    df = specs["sim_mmr_rerank"].fn(spark, SF_SMOKE)
-    result: dict[str, str] = {}
-
-    def build() -> None:
-        result["plan"] = (
-            df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
-        )
-
-    t = threading.Thread(target=build, daemon=True)
-    t.start()
-    t.join(timeout=180)
-    assert "plan" in result, (
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from database_scan_spark.registry import SPECS
+from database_scan_spark.session import get_spark
+spark = get_spark("mmr-barrier", shuffle_partitions=8)
+spark.sparkContext.setLogLevel("ERROR")
+df = next(s for s in SPECS if s.name == "sim_mmr_rerank").fn(spark, {SF_SMOKE!r})
+print(df._jdf.queryExecution().optimizedPlan().toString())
+"""
+    try:
+        r = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                           text=True, cwd=tmp_path, timeout=180)
+    except subprocess.TimeoutExpired:
+        r = None
+    assert r is not None, (
         "sim_mmr_rerank's optimized plan did not build within 180s — "
         "the optimizer likely collapsed across the Generate barrier "
         "and re-inlined the chained argmax folds (see barrier() in "
         "operators/similarity.py)"
     )
-    n_generate = result["plan"].count("Generate explode")
+    assert r.returncode == 0, r.stderr[-4000:]
+    n_generate = r.stdout.count("Generate explode")
     assert n_generate >= MMR_K - 1, (
         f"expected >= {MMR_K - 1} per-step Generate barriers in the "
         f"optimized plan, found {n_generate} — an optimizer change "

@@ -1,0 +1,86 @@
+"""Executed-plan ratchet: what Spark actually ran, not the static plan.
+
+``tools/runner.py`` ``layers`` runs each pinned query once (after a warm
+pass) in a vanilla session at sf0.01 and reads the executed plans from
+Spark's event log through perfbench's parser: a scan, shuffle or
+broadcast counts only if its metrics updated. The static ``explain``
+text misses this; in r11 it was wrong about three of five targets.
+
+A pin fails when a count grows. Reused exchanges are a floor instead:
+q21 reads lineitem once only because its two (orderkey, suppkey)
+branches canonicalize equal and the second becomes a ``ReusedExchange``;
+if they stop matching, lineitem is read twice and reuse drops to 0.
+Lower a pin when a change shrinks a count; raise one only with a
+measured reason.
+
+The run is one subprocess (its own JVM, scratch cwd and
+``SPARK_GRAFT_TMP``), shared by every test here.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
+
+import pytest
+
+from conftest import SF_SMOKE
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SF = os.path.join(os.path.dirname(SF_SMOKE), "sf0.01")
+TABLES = ("lineitem", "orders", "documents")
+COLUMNS = (*TABLES, "shuffles", "reused", "broadcasts", "build_jobs")
+
+# runtime scans of each table, then shuffles, reused exchanges (a floor),
+# broadcast builds and build-phase jobs. Link prediction runs 10 shuffles
+# in most runs and 11 in about 1 of 20: the extra one is the hash exchange
+# of the edge list into its left_anti join, which a run executes or skips
+# depending on when AQE re-plans that join, so its pin is 11.
+PINS: dict[str, tuple[int, ...]] = {
+    "tpch_q21_sole_blame_supplier": (1, 1, 0, 3, 1, 3, 3),
+    "candidate_parts": (4, 5, 0, 6, 4, 10, 4),
+    "dedup_cluster_cc": (0, 0, 1, 10, 0, 7, 32),
+    "graph_label_propagation": (1, 1, 0, 13, 0, 12, 6),
+    "graph_link_prediction": (1, 1, 0, 11, 0, 7, 4),
+}
+
+
+@pytest.fixture(scope="module")
+def executed(tmp_path_factory):
+    """``runner.layers`` over every pinned query, plus the temp dir it
+    ran under."""
+    root = tmp_path_factory.mktemp("plan_layers")
+    dirs = {k: root / k for k in ("cwd", "graft", "tmp")}
+    for d in dirs.values():
+        d.mkdir()
+    code = (
+        f"import json, sys; sys.path.insert(0, {os.path.join(REPO, 'tools')!r}); "
+        f"import runner; print(json.dumps(runner.layers({sorted(PINS)!r}, {SF!r})))"
+    )
+    env = dict(os.environ, SPARK_GRAFT_TMP=str(dirs["graft"]), TMPDIR=str(dirs["tmp"]))
+    r = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        cwd=dirs["cwd"], env=env, timeout=600,
+    )
+    assert r.returncode == 0, r.stdout[-2000:] + r.stderr[-4000:]
+    return json.loads(r.stdout.splitlines()[-1]), dirs["tmp"]
+
+
+@pytest.mark.parametrize("name", sorted(PINS))
+def test_executed_plan_within_pins(executed, name):
+    got = executed[0][name]
+    pin = dict(zip(COLUMNS, PINS[name]))
+    have = {k: got["scans"].get(k, 0) if k in TABLES else got[k] for k in COLUMNS}
+    grew = {k: f"{pin[k]} -> {have[k]}" for k in COLUMNS if k != "reused" and have[k] > pin[k]}
+    assert not grew, f"{name}: executed plan grew: {grew} (layers: {got})"
+    assert have["reused"] >= pin["reused"], (
+        f"{name}: {have['reused']} reused exchanges at runtime, pinned >= {pin['reused']}; "
+        f"a shared subtree stopped canonicalizing equal (layers: {got})"
+    )
+
+
+def test_layers_deletes_its_event_log(executed):
+    left = [p.name for p in executed[1].iterdir() if p.name.startswith("spark-graft-eventlog-")]
+    assert not left, f"runner.layers left event-log dirs behind: {left}"

@@ -17,7 +17,7 @@ $SPARK_GRAFT_CPUS; AQE coalesces).
     python tools/bench_cores.py                 # 8 then 32 cores
     python tools/bench_cores.py --cpus 8        # one core count (child mode)
 
-Writes plans/r11/scale_cores_sf1.json (parent mode).
+Writes tools/scale_cores_sf1.json (parent mode).
 """
 
 from __future__ import annotations
@@ -29,9 +29,8 @@ import subprocess
 import sys
 
 HERE = os.path.dirname(os.path.abspath(__file__))
-REPO = os.path.dirname(HERE)
 SF_DIR_DEFAULT = "/tmp/testdata_sf1"
-OUT = os.path.join(REPO, "plans", "r11", "scale_cores_sf1.json")
+OUT = os.path.join(HERE, "scale_cores_sf1.json")
 
 # Data-bound headliners (token/fact/pair cardinality grows 10x at sf1;
 # none is dominated by per-query fixed overhead at this scale).
@@ -107,7 +106,6 @@ def main() -> None:
         },
         "totals": {k: round(sum(v.values()), 3) for k, v in results.items()},
     }
-    os.makedirs(os.path.dirname(OUT), exist_ok=True)
     with open(OUT, "w") as fh:
         json.dump(doc, fh, indent=1, sort_keys=True)
         fh.write("\n")

@@ -1,15 +1,22 @@
 #!/usr/bin/env python
-"""Per-query time breakdown for optimization targeting (guide §1):
+"""Per-query layer breakdown for optimization targeting (guide §1):
 split each headliner's wall-clock into
 
   build   — Python plan construction (queries()[name](spark, sf_dir))
   exec    — noop-sink materialization of the returned DataFrame
+
+and record what the run executed (``runner.layers``, read from Spark's
+event log): runtime scans per table, shuffles, reused exchanges,
+broadcast builds and MB, build-phase and exec jobs.
 
 Build time is driver-side Python + any actions the builder itself
 runs (iterative fixpoints, K-sizing counts); exec time is the final
 plan. Queries whose build dominates need driver-side work (fewer
 actions per round, shallower lineage); queries whose exec dominates
 need plan work (shuffles, joins, Python boundary).
+
+The session is the driver's vanilla one, as in verify_window.py: a warm
+pass, then one recorded run per query.
 
 Usage: python tools/profile_breakdown.py [name ...]   # default: all
 Writes tools/profile_breakdown.json.
@@ -30,23 +37,18 @@ def main() -> None:
 
     only = set(sys.argv[1:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = runner.engine_session("database-scan-spark-profile")
     names = [
         n for n in HEADLINE
         if n in runner.contract()[0] and (not only or n in only)
     ]
-    runner.warm(spark, names, sf_dir)  # same protocol as bench.py
-    out: dict[str, dict[str, float]] = {}
-    for name in names:
-        runs = runner.timed(spark, name, sf_dir)
-        out[name] = {
-            "build": round(min(b for b, _ in runs), 3),
-            "exec": round(min(e for _, e in runs), 3),
-            "total": round(min(b + e for b, e in runs), 3),
-        }
+    out: dict[str, dict] = {}
+    for name, lay in runner.layers(names, sf_dir).items():
+        b, e = lay.pop("build_s"), lay.pop("exec_s")
+        out[name] = {"build": b, "exec": e, "total": round(b + e, 3), **lay}
+        scans = " ".join(f"{t}={n}" for t, n in lay["scans"].items())
         print(
-            f"{out[name]['total']:8.3f} build={out[name]['build']:7.3f} "
-            f"exec={out[name]['exec']:7.3f}  {name}",
+            f"{out[name]['total']:8.3f} build={b:7.3f} exec={e:7.3f} "
+            f"shuffles={lay['shuffles']} reused={lay['reused']} scans[{scans}]  {name}",
             flush=True,
         )
     with open(os.path.join(HERE, "profile_breakdown.json"), "w") as fh:

@@ -12,6 +12,8 @@ queries through this module, so the protocol is decided once:
   raises;
 - the result is materialised through the noop sink, so the whole plan
   executes without a collect;
+- ``layers`` reads what one run of each query actually executed from
+  Spark's event log, through perfbench's parser (``perfbench/layers.py``);
 - ``check`` compares ``toPandas()`` with the DuckDB oracle from
   ``oracle_sql()``, run through ``materialize_ctes`` (a result-neutral
   rewrite that stops DuckDB re-evaluating shared CTEs per reference).
@@ -80,8 +82,19 @@ def _described(spark, name: str) -> Iterator[None]:
         spark.sparkContext.setJobDescription(None)
 
 
-def run_once(spark, name: str, sf_dir: str) -> tuple[float, float]:
-    """One timed run to the noop sink: ``(build_s, exec_s)``."""
+class Run(tuple):
+    """``(build_s, exec_s)`` of one run. ``t0``/``t1``/``t2`` are its epoch
+    stamps (build start, build end, exec end): the windows by which
+    perfbench's event-log parser attributes Spark events to a query."""
+
+    def __new__(cls, t0: float, t1: float, t2: float):
+        run = super().__new__(cls, (t1 - t0, t2 - t1))
+        run.t0, run.t1, run.t2 = t0, t1, t2
+        return run
+
+
+def run_once(spark, name: str, sf_dir: str) -> Run:
+    """One timed run to the noop sink: ``(build_s, exec_s)``, as a ``Run``."""
     import __spark_entry__ as entry  # noqa: PLC0415
     from bench import EXTRA_CONFS  # noqa: PLC0415
     from database_scan_spark.session import scoped_confs  # noqa: PLC0415
@@ -89,11 +102,11 @@ def run_once(spark, name: str, sf_dir: str) -> tuple[float, float]:
     with scoped_confs(spark, EXTRA_CONFS.get(name, {})):
         entry.drain()
         with _described(spark, name):
-            t0 = time.perf_counter()
+            t0 = time.time()
             df = contract()[0][name](spark, sf_dir)
-            t1 = time.perf_counter()
+            t1 = time.time()
             df.write.format("noop").mode("overwrite").save()
-            return t1 - t0, time.perf_counter() - t1
+            return Run(t0, t1, time.time())
 
 
 def warm(spark, names: Iterable[str], sf_dir: str) -> None:
@@ -116,6 +129,62 @@ def warm_min(spark, name: str, sf_dir: str) -> float:
     """Warm run, then the min wall time of two timed runs."""
     warm(spark, [name], sf_dir)
     return min(b + e for b, e in timed(spark, name, sf_dir))
+
+
+def layers(names: Iterable[str], sf_dir: str) -> dict[str, dict]:
+    """What one recorded run of each query executed, per name: a warm
+    pass, then one ``run_once`` each, in a fresh vanilla session with
+    Spark's event log on; the session is stopped and the log deleted.
+    Counts come from ``perfbench/layers.per_query``, where a plan node
+    counts only if its metrics updated, i.e. it actually ran."""
+    import glob  # noqa: PLC0415
+    import shutil  # noqa: PLC0415
+    import tempfile  # noqa: PLC0415
+
+    from pyspark import SparkContext  # noqa: PLC0415
+
+    if SparkContext._active_spark_context is not None:  # noqa: SLF001
+        raise RuntimeError("runner.layers starts and stops its own session; "
+                           "call it in a process that has none")
+    perfbench = os.path.join(REPO, "perfbench")
+    if perfbench not in sys.path:  # layers.py imports workloads by bare name
+        sys.path.append(perfbench)
+    from layers import MB, per_query  # noqa: PLC0415
+
+    names = list(names)
+    log_dir = tempfile.mkdtemp(prefix="spark-graft-eventlog-")
+    try:
+        spark = vanilla_session(confs=[
+            "spark.eventLog.enabled=true",
+            f"spark.eventLog.dir=file://{log_dir}",
+            "spark.eventLog.compress=false",
+            "spark.eventLog.rolling.enabled=false",
+        ])
+        try:
+            warm(spark, names, sf_dir)
+            runs = [run_once(spark, name, sf_dir) for name in names]
+        finally:
+            spark.stop()  # closes the log (drops its .inprogress suffix)
+        (log,) = glob.glob(os.path.join(log_dir, "*"))
+        per = per_query([vars(r) for r in runs], log, [])
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
+    return {
+        name: {
+            "build_s": round(run[0], 3),
+            "exec_s": round(run[1], 3),
+            "scans": {
+                k[9:] or "other": v for k, v in sorted(c.items()) if k.startswith("ran.scan.")
+            },
+            "shuffles": c.get("ran.shuffle", 0),
+            "reused": c.get("reused", 0),
+            "broadcasts": c.get("ran.broadcast", 0),
+            "broadcast_mb": round(c.get("bcast_b", 0) / MB, 2),
+            "build_jobs": c.get("build.jobs", 0),
+            "exec_jobs": c.get("exec.jobs", 0),
+        }
+        for name, run, c in zip(names, runs, per)
+    }
 
 
 def result(spark, name: str, sf_dir: str):
