@@ -42,8 +42,6 @@ HEADLINE = [
     "win_session",
     "win_tumbling",
     "udf_smiles_canonical",
-    # LLM-pipeline extensions (registered in later milestones; skipped
-    # gracefully if absent so bench never breaks mid-build)
     "dedup_minhash_lsh",
     "dedup_ngram_jaccard",
     "sim_topk_bruteforce",
@@ -192,7 +190,6 @@ def main() -> None:
     # fns leaked every persisting headliner's caches into all later
     # timings (r9: 5 late-list floor flags on an otherwise idle host).
     spark = runner.engine_session("database-scan-spark-bench")
-    names = [n for n in HEADLINE if n in runner.contract()[0]]
 
     # Warm pass (not measured), then a measured pass: time the SECOND
     # run of every headliner (VERDICT r7 item 2). The first run per
@@ -208,7 +205,7 @@ def main() -> None:
     # spurious floor-gate flags in r7. The warm pass makes the timed
     # pass measure the read/compute path, matching how the per-query
     # floors in tools/floors.json were measured (warm, quiet host).
-    runner.warm(spark, names, sf_dir)
+    runner.warm(spark, HEADLINE, sf_dir)
 
     # Jitter guard, SYMMETRIC (VERDICT r8 item 2): after the warm pass,
     # EVERY headliner gets two timed runs and reports the min; both raw
@@ -216,7 +213,7 @@ def main() -> None:
     # auditable.
     queries: dict[str, float] = {}
     raw_runs: dict[str, list[float]] = {}
-    for name in names:
+    for name in HEADLINE:
         t1, t2 = (b + e for b, e in runner.timed(spark, name, sf_dir))
         raw_runs[name] = [round(t1, 3), round(t2, 3)]
         queries[name] = round(min(t1, t2), 3)

@@ -122,11 +122,6 @@ TABLES = {
     ),
 }
 
-# Dimension tables small enough to broadcast at any realistic scale.
-BROADCAST_DIMS = {"region", "nation", "supplier"}
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")

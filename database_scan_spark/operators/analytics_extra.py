@@ -25,7 +25,7 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
@@ -38,6 +38,7 @@ from ..operators._helpers import (
     workdir,
 )
 from ..spec import QuerySpec
+from .windows import _daily_priority_cents
 
 SPECS: list[QuerySpec] = []
 
@@ -807,15 +808,14 @@ SPECS.append(
 # ---------------------------------------------------------------------------
 
 
-def analytic_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A/B significance: users are deterministically bucketed into
-    two variants by content hash (the engine's h32 — stable across
-    runs and engines, SURVEY.md §1.4 determinism discipline), and the
-    per-variant mean event value is compared with a Welch z-score.
-    Moments are exact DECIMAL sums (value has 2 decimals → squares
-    have 4), collapsed to doubles only for the final ratio, so the
-    hash-compared output is engine-identical. Single scan, single
-    2-group aggregate, one final one-row combine."""
+def _ab_moments(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, Column, Column, Column]:
+    """The two-variant moments behind the A/B family: users bucketed
+    by ``h32(user_id) % 2``, per-variant n / Σvalue / Σvalue² as
+    exact DECIMAL sums cast to double, the two rows crossed into one
+    (aliases ``a`` and ``b``). Returns that one-row frame with the
+    two means and the Welch standard error of their difference."""
     ev = load(spark, sf_dir, "events")
     variant = (h32(F.col("user_id").cast("string")) % 2).alias("variant")
     per = (
@@ -846,16 +846,26 @@ def analytic_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     var_b = (F.col("b.ss") - F.col("b.s") * F.col("b.s") / F.col("b.n")) / (
         F.col("b.n") - 1
     )
+    se = F.sqrt(var_a / F.col("a.n") + var_b / F.col("b.n"))
+    return joined, mean_a, mean_b, se
+
+
+def analytic_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A/B significance: users are deterministically bucketed into
+    two variants by content hash (the engine's h32 — stable across
+    runs and engines, SURVEY.md §1.4 determinism discipline), and the
+    per-variant mean event value is compared with a Welch z-score.
+    Moments are exact DECIMAL sums (value has 2 decimals → squares
+    have 4), collapsed to doubles only for the final ratio, so the
+    hash-compared output is engine-identical. Single scan, single
+    2-group aggregate, one final one-row combine."""
+    joined, mean_a, mean_b, se = _ab_moments(spark, sf_dir)
     return joined.select(
         F.col("a.n").alias("n_a"),
         F.col("b.n").alias("n_b"),
         F.round(mean_a, 6).alias("mean_a"),
         F.round(mean_b, 6).alias("mean_b"),
-        F.round(
-            (mean_a - mean_b)
-            / F.sqrt(var_a / F.col("a.n") + var_b / F.col("b.n")),
-            6,
-        ).alias("welch_z"),
+        F.round((mean_a - mean_b) / se, 6).alias("welch_z"),
     )
 
 
@@ -1472,6 +1482,43 @@ LOGREG_LR = 1.0
 LOGREG_XSCALE = 500000.0
 
 
+def _hard_sigmoid() -> Column:
+    """clamp((w·x + b)/4 + 1/2) over the model row's w, b and the
+    data row's x — arithmetic only, so both engines agree bit for bit."""
+    z = F.col("w") * F.col("x") + F.col("b")
+    return F.least(F.greatest(z * 0.25 + 0.5, F.lit(0.0)), F.lit(1.0))
+
+
+def _logreg_fit(spark: SparkSession, rows: DataFrame) -> DataFrame:
+    """LOGREG_STEPS unrolled batch gradient-descent steps of the
+    hard-sigmoid model on ``rows`` (x, y), from w = b = 0; returns
+    the one-row (w, b) model. Each step is one aggregation whose two
+    gradient sums are exact DECIMAL."""
+    D = "decimal(28,12)"
+    w = spark.range(1).select(F.lit(0.0).alias("w"), F.lit(0.0).alias("b"))
+    for _ in range(LOGREG_STEPS):
+        j = rows.crossJoin(F.broadcast(w))
+        err = _hard_sigmoid() - F.col("y")
+        g = j.agg(
+            F.sum(F.round(err * F.col("x"), 12).cast(D)).alias("sgw"),
+            F.sum(F.round(err, 12).cast(D)).alias("sgb"),
+            F.count(F.lit(1)).alias("n"),
+            F.first("w").alias("w0"),
+            F.first("b").alias("b0"),
+        )
+        w = g.select(
+            F.round(
+                F.col("w0") - F.lit(LOGREG_LR) * F.col("sgw").cast("double") / F.col("n"),
+                12,
+            ).alias("w"),
+            F.round(
+                F.col("b0") - F.lit(LOGREG_LR) * F.col("sgb").cast("double") / F.col("n"),
+                12,
+            ).alias("b"),
+        )
+    return w
+
+
 def analytic_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN-ENGINE model TRAINING: logistic-style classifier (urgent
     order from scaled price) fit by LOGREG_STEPS unrolled batch
@@ -1493,39 +1540,10 @@ def analytic_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") / F.lit(LOGREG_XSCALE), 9).alias("x"),
         F.when(F.col("o_orderpriority") == "1-URGENT", 1.0).otherwise(0.0).alias("y"),
     )
-    D = "decimal(28,12)"
-    w = spark.range(1).select(
-        F.lit(0.0).alias("w"), F.lit(0.0).alias("b")
-    )
-    for _ in range(LOGREG_STEPS):
-        j = base.crossJoin(F.broadcast(w))
-        z = F.col("w") * F.col("x") + F.col("b")
-        p = F.least(F.greatest(z * 0.25 + 0.5, F.lit(0.0)), F.lit(1.0))
-        err = p - F.col("y")
-        g = j.agg(
-            F.sum(F.round(err * F.col("x"), 12).cast(D)).alias("sgw"),
-            F.sum(F.round(err, 12).cast(D)).alias("sgb"),
-            F.count(F.lit(1)).alias("n"),
-            F.first("w").alias("w0"),
-            F.first("b").alias("b0"),
-        )
-        w = g.select(
-            F.round(
-                F.col("w0")
-                - F.lit(LOGREG_LR) * F.col("sgw").cast("double") / F.col("n"),
-                12,
-            ).alias("w"),
-            F.round(
-                F.col("b0")
-                - F.lit(LOGREG_LR) * F.col("sgb").cast("double") / F.col("n"),
-                12,
-            ).alias("b"),
-        )
+    w = _logreg_fit(spark, base)
     # evaluation pass: confusion counts at p >= 0.5 with the final model
     j = base.crossJoin(F.broadcast(w))
-    z = F.col("w") * F.col("x") + F.col("b")
-    p = F.least(F.greatest(z * 0.25 + 0.5, F.lit(0.0)), F.lit(1.0))
-    pred = (p >= 0.5).cast("int")
+    pred = (_hard_sigmoid() >= 0.5).cast("int")
     return j.groupBy().agg(
         F.first("w").alias("w"),
         F.first("b").alias("b"),
@@ -2967,6 +2985,19 @@ SPECS.append(
 # ---------------------------------------------------------------------------
 
 
+def _day_pairs(daily: DataFrame) -> DataFrame:
+    """Every (earlier day i, later day j) pair within one priority of
+    the daily cents series: the calendar-bounded pair space shared by
+    ``analytic_trend_mk`` and ``analytic_theil_sen``."""
+    a = daily.select("priority", F.col("day").alias("d_i"), F.col("x").alias("x_i"))
+    b = daily.select(
+        F.col("priority").alias("p2"),
+        F.col("day").alias("d_j"),
+        F.col("x").alias("x_j"),
+    )
+    return a.join(b, (a["priority"] == b["p2"]) & (a["d_i"] < b["d_j"]))
+
+
 def analytic_trend_mk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Kendall trend test per priority on the daily revenue
     series: S = Σ_{i<j} sign(x_j − x_i) — the standard nonparametric
@@ -2981,23 +3012,8 @@ def analytic_trend_mk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair space is the DAY-aggregated series squared — calendar-
     bounded (≤ ~10⁷ pairs per partition for a 10-year series), an
     equi self-join on the series key, never on raw rows."""
-    orders = load(spark, sf_dir, "orders")
-    daily = (
-        orders.select(
-            F.col("o_orderpriority").alias("priority"),
-            F.to_date("o_orderdate").alias("day"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-        )
-        .groupBy("priority", "day")
-        .agg(F.sum("cents").alias("x"))
-    )
-    a = daily.select("priority", F.col("day").alias("d_i"), F.col("x").alias("x_i"))
-    b = daily.select(
-        F.col("priority").alias("p2"),
-        F.col("day").alias("d_j"),
-        F.col("x").alias("x_j"),
-    )
-    pairs = a.join(b, (a["priority"] == b["p2"]) & (a["d_i"] < b["d_j"]))
+    daily = _daily_priority_cents(spark, sf_dir)
+    pairs = _day_pairs(daily)
     s_tab = pairs.groupBy("priority").agg(
         F.sum(F.signum(F.col("x_j") - F.col("x_i")).cast("bigint")).alias("s")
     )
@@ -3074,24 +3090,8 @@ def analytic_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     middles, so no float addition anywhere). Scale: same
     calendar-bounded pair space as Mann-Kendall — the self-join runs
     on the day-aggregated series, never raw rows."""
-    orders = load(spark, sf_dir, "orders")
-    daily = (
-        orders.select(
-            F.col("o_orderpriority").alias("priority"),
-            F.to_date("o_orderdate").alias("day"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-        )
-        .groupBy("priority", "day")
-        .agg(F.sum("cents").alias("x"))
-    )
-    a = daily.select("priority", F.col("day").alias("d_i"), F.col("x").alias("x_i"))
-    b = daily.select(
-        F.col("priority").alias("p2"),
-        F.col("day").alias("d_j"),
-        F.col("x").alias("x_j"),
-    )
     slopes = (
-        a.join(b, (a["priority"] == b["p2"]) & (a["d_i"] < b["d_j"]))
+        _day_pairs(_daily_priority_cents(spark, sf_dir))
         .select(
             "priority",
             (
@@ -3593,41 +3593,10 @@ def pipeline_model_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     train = base.filter(F.col("fold") < _PME_FOLDS - 1)
     test = base.filter(F.col("fold") == _PME_FOLDS - 1)
-
-    D = "decimal(28,12)"
-    w = spark.range(1).select(F.lit(0.0).alias("w"), F.lit(0.0).alias("b"))
-    for _ in range(LOGREG_STEPS):
-        j = train.crossJoin(F.broadcast(w))
-        z = F.col("w") * F.col("x") + F.col("b")
-        p = F.least(F.greatest(z * 0.25 + 0.5, F.lit(0.0)), F.lit(1.0))
-        err = p - F.col("y")
-        g = j.agg(
-            F.sum(F.round(err * F.col("x"), 12).cast(D)).alias("sgw"),
-            F.sum(F.round(err, 12).cast(D)).alias("sgb"),
-            F.count(F.lit(1)).alias("n"),
-            F.first("w").alias("w0"),
-            F.first("b").alias("b0"),
-        )
-        w = g.select(
-            F.round(
-                F.col("w0") - F.lit(LOGREG_LR) * F.col("sgw").cast("double") / F.col("n"),
-                12,
-            ).alias("w"),
-            F.round(
-                F.col("b0") - F.lit(LOGREG_LR) * F.col("sgb").cast("double") / F.col("n"),
-                12,
-            ).alias("b"),
-        )
-
+    w = _logreg_fit(spark, train)
     scored = test.crossJoin(F.broadcast(w)).select(
         "y",
-        F.round(
-            F.least(
-                F.greatest((F.col("w") * F.col("x") + F.col("b")) * 0.25 + 0.5, F.lit(0.0)),
-                F.lit(1.0),
-            ),
-            9,
-        ).alias("p"),
+        F.round(_hard_sigmoid(), 9).alias("p"),
         F.col("w"),
         F.col("b"),
     )
@@ -3767,43 +3736,13 @@ def analytic_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles only in the final one-row combine; sqrt is IEEE
     correctly-rounded (portable across engines, unlike exp/log), so
     both z's hash-match. One scan, one 2-group aggregate."""
-    ev = load(spark, sf_dir, "events")
-    variant = (h32(F.col("user_id").cast("string")) % 2).alias("variant")
-    per = (
-        ev.select(variant, F.col("value"))
-        .groupBy("variant")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(money("value")).alias("s"),
-            F.sum(
-                (F.col("value").cast("decimal(18,2)") * F.col("value").cast("decimal(18,2)"))
-            ).alias("ss"),
-        )
-        .select(
-            "variant",
-            "n",
-            F.col("s").cast("double").alias("s"),
-            F.col("ss").cast("double").alias("ss"),
-        )
-    )
-    a = per.filter(F.col("variant") == 0).alias("a")
-    b = per.filter(F.col("variant") == 1).alias("b")
-    joined = a.crossJoin(b)
-    mean_a = F.col("a.s") / F.col("a.n")
-    mean_b = F.col("b.s") / F.col("b.n")
+    joined, mean_a, mean_b, se = _ab_moments(spark, sf_dir)
     diff = mean_a - mean_b
     delta = (
         F.lit(_TOST_MARGIN_PCT / 100.0)
         * (F.col("a.s") + F.col("b.s"))
         / (F.col("a.n") + F.col("b.n"))
     )
-    var_a = (F.col("a.ss") - F.col("a.s") * F.col("a.s") / F.col("a.n")) / (
-        F.col("a.n") - 1
-    )
-    var_b = (F.col("b.ss") - F.col("b.s") * F.col("b.s") / F.col("b.n")) / (
-        F.col("b.n") - 1
-    )
-    se = F.sqrt(var_a / F.col("a.n") + var_b / F.col("b.n"))
     z_lower = (diff + delta) / se
     z_upper = (delta - diff) / se
     return joined.select(

@@ -169,7 +169,6 @@ def _verified_pairs(sh: DataFrame, candidates: DataFrame) -> DataFrame:
         .dropDuplicates(["doc_id"])
     )
     sh_c = sh.join(F.broadcast(cand_docs), "doc_id")
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     sa = sh_c.select(F.col("doc_id").alias("a_id"), F.col("shingle").alias("a_sh"))
     sb = sh_c.select(F.col("doc_id").alias("b_id"), F.col("shingle").alias("b_sh"))
     inter = (
@@ -178,12 +177,41 @@ def _verified_pairs(sh: DataFrame, candidates: DataFrame) -> DataFrame:
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
+    return _jaccard_scored(_with_sizes(sh, inter))
+
+
+def _with_sizes(sh: DataFrame, inter: DataFrame) -> DataFrame:
+    """Pair intersections (doc_a, doc_b, inter) joined with both
+    docs' shingle-set sizes ``na`` and ``nb``."""
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
     nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
+    return inter.join(na, "doc_a").join(nb, "doc_b")
+
+
+def _shingle_overlaps(sh: DataFrame) -> DataFrame:
+    """|A∩B| with both set sizes for every doc pair (doc_a < doc_b)
+    sharing a shingle: the shingle equi-join, so docs sharing no
+    shingle never meet (no O(n²) cross join)."""
+    a = sh.alias("a")
+    b = sh.alias("b")
+    inter = (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    return _with_sizes(sh, inter)
+
+
+def _jaccard_scored(pairs: DataFrame) -> DataFrame:
+    """Exact Jaccard |A∩B| / (|A|+|B|−|A∩B|) of sized pairs, kept at
+    or above JACCARD_THRESHOLD."""
     return (
-        inter.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .withColumn(
+        pairs.withColumn(
             "jaccard",
             F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6),
         )
@@ -259,30 +287,7 @@ def dedup_ngram_jaccard(
     sh = _shingle_df(spark, sf_dir, sample_mod=sample_mod).persist()
     if prefix_filter:
         return _verified_pairs(sh, _prefix_filtered_candidates(sh))
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    return (
-        inter.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _jaccard_scored(_shingle_overlaps(sh))
 
 
 def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1095,25 +1100,10 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the sizes — identical scale posture to the Jaccard variant.
     """
     sh = _shingle_df(spark, sf_dir)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
     cont_a = F.round(F.col("inter") / F.col("na"), 6)
     cont_b = F.round(F.col("inter") / F.col("nb"), 6)
     return (
-        inter.join(na, "doc_a")
-        .join(nb, "doc_b")
+        _shingle_overlaps(sh)
         .withColumn("cont_a_in_b", cont_a)
         .withColumn("cont_b_in_a", cont_b)
         .filter(

@@ -35,14 +35,47 @@ N_ITER = 3
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank (damping 0.85, 3 unrolled iterations) on the
     nation trade graph; returns each nation's scaled rank and share."""
-    edges = _trade_edges(spark, sf_dir).persist()
-    out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
     nodes = load(spark, sf_dir, "nation").select(F.col("n_nationkey").alias("node"))
     nn = nodes.agg(F.count(F.lit(1)).alias("n_nodes"))
-
-    ranks = nodes.crossJoin(F.broadcast(nn)).select(
-        "node", "n_nodes", F.expr(f"{SCALE} div n_nodes").alias("rank")
+    return (
+        _rank_rounds(
+            spark,
+            sf_dir,
+            nodes,
+            nn,
+            f"{SCALE} div n_nodes",
+            f"(({SCALE} * 15) div 100) div n_nodes",
+        )
+        .select(
+            "node",
+            "n_name",
+            "rank",
+            F.round(F.col("rank") / F.lit(float(SCALE)), 6).alias("rank_share"),
+        )
+        .orderBy(F.desc("rank"), "node")
     )
+
+
+def _rank_rounds(
+    spark: SparkSession,
+    sf_dir: str,
+    nodes: DataFrame,
+    consts: DataFrame,
+    init: str,
+    teleport: str,
+) -> DataFrame:
+    """N_ITER unrolled rounds of weighted rank flow on the trade
+    graph — the one loop behind ``graph_pagerank`` and ``graph_ppr``.
+    ``nodes`` carries the per-node columns, ``consts`` a one-row
+    relation cross-joined onto every round; ``init`` is the round-0
+    rank and ``teleport`` the per-round restart mass (both SQL over
+    those columns). Each round a node keeps ``teleport + 85% of its
+    inflow``, the inflow being every in-neighbour's rank split by edge
+    weight (integer div). Returns the final ranks with ``n_name``."""
+    edges = _trade_edges(spark, sf_dir).persist()
+    out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
+    keep = [*nodes.columns, *consts.columns]
+    ranks = nodes.crossJoin(F.broadcast(consts)).select(*keep, F.expr(init).alias("rank"))
     for _ in range(N_ITER):
         contrib = (
             ranks.join(F.broadcast(edges), ranks.node == edges.src)
@@ -63,29 +96,16 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         inflow = contrib.groupBy("dst").agg(F.sum("c").alias("inflow"))
         ranks = (
             nodes.join(F.broadcast(inflow), nodes.node == inflow.dst, "left")
-            .crossJoin(F.broadcast(nn))
+            .crossJoin(F.broadcast(consts))
             .select(
-                "node",
-                "n_nodes",
-                F.expr(
-                    f"(({SCALE} * 15) div 100) div n_nodes"
-                    " + (85 * coalesce(inflow, 0)) div 100"
-                ).alias("rank"),
+                *keep,
+                F.expr(f"{teleport} + (85 * coalesce(inflow, 0)) div 100").alias("rank"),
             )
         )
     names = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("node"), "n_name"
     )
-    return (
-        ranks.join(F.broadcast(names), "node")
-        .select(
-            "node",
-            "n_name",
-            "rank",
-            F.round(F.col("rank") / F.lit(float(SCALE)), 6).alias("rank_share"),
-        )
-        .orderBy(F.desc("rank"), "node")
-    )
+    return ranks.join(F.broadcast(names), "node")
 
 
 def _pagerank_oracle() -> str:
@@ -155,22 +175,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (≤ nations² rows after the weight aggregate) is dimension-
     sized, so both joins broadcast; the heavy work stays in the one
     fact-fact aggregate that built the edges."""
-    cust = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    und = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .select(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .distinct()
-        .persist()
-    )
+    und = _undirected_pairs(spark, sf_dir).distinct().persist()
     e1 = und.select(F.col("a").alias("t_a"), F.col("b").alias("t_b"))
     e2 = und.select(F.col("a").alias("t_b2"), F.col("b").alias("t_c"))
     e3 = und.select(F.col("a").alias("t_a3"), F.col("b").alias("t_c3"))
@@ -243,19 +248,7 @@ def graph_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``WITH RECURSIVE`` — an independent formulation of the same
     traversal. At 100 TB the one fact-fact aggregate that builds the
     edge list dominates; the unrolled rounds stay dimension-sized."""
-    cust = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    weighted = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .select(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
+    weighted = _trade_edges(spark, sf_dir).filter(F.col("src") != F.col("dst"))
     rn = F.row_number().over(Window.partitionBy("src").orderBy(F.desc("w"), F.asc("dst")))
     edges = (
         weighted.withColumn("rn", rn)
@@ -325,21 +318,7 @@ def graph_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     contribution shuffle and blowup in triangle enumeration). Two
     dimension-sized aggregates after the one fact-fact edge build:
     per-node degree, then nodes per degree."""
-    cust = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    und = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .select(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .distinct()
-    )
+    und = _undirected_pairs(spark, sf_dir).distinct()
     deg = (
         und.select(F.col("a").alias("node"))
         .unionByName(und.select(F.col("b").alias("node")))
@@ -737,7 +716,9 @@ SPECS.append(
 HITS_ROUNDS = 2
 
 
-def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One (src, dst) row per lineitem: customer nation → supplier
+    nation, the fact-fact join under every trade-graph operator."""
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     supp = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -747,8 +728,22 @@ def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
         .select(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
+    )
+
+
+def _undirected_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One canonical (a < b) nation pair per cross-border lineitem."""
+    return (
+        _trade_pairs(spark, sf_dir)
+        .filter(F.col("src") != F.col("dst"))
+        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
+    )
+
+
+def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The weighted directed trade graph: w = lineitems per pair."""
+    return _trade_pairs(spark, sf_dir).groupBy("src", "dst").agg(
+        F.count(F.lit(1)).alias("w")
     )
 
 
@@ -1314,8 +1309,6 @@ def graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     set' curation signal. Plan shape identical to graph_pagerank:
     edges built once and persisted, per-round broadcast joins on the
     bounded node/edge relations."""
-    edges = _trade_edges(spark, sf_dir).persist()
-    out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
     nation = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("node"), "n_name", "n_regionkey"
     )
@@ -1329,49 +1322,15 @@ def graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("r_regionkey").isNotNull(), 1).otherwise(0).alias("is_seed"),
     )
     n_seeds = nodes.agg(F.sum("is_seed").alias("n_seeds"))
-
-    ranks = nodes.crossJoin(F.broadcast(n_seeds)).select(
-        "node",
-        "is_seed",
-        "n_seeds",
-        F.expr(f"(is_seed * {SCALE}) div n_seeds").alias("rank"),
-    )
-    for _ in range(N_ITER):
-        contrib = (
-            ranks.join(F.broadcast(edges), ranks.node == edges.src)
-            .join(F.broadcast(out_w), "src")
-            .select(
-                "dst",
-                # DECIMAL(38,0) promotion: rank ~ 1e12 (SCALE) times a
-                # fact-scale edge weight overflows int64 around w ~ 1e7
-                # (sf >= ~1000); decimal keeps the product exact and div
-                # still returns the integral quotient as BIGINT. Mirrored
-                # in the oracle with HUGEINT (graph_hits documents the
-                # same promotion for its h*w sums).
-                F.expr(
-                    "(cast(rank as decimal(38,0)) * w) div out_w"
-                ).alias("c"),
-            )
-        )
-        inflow = contrib.groupBy("dst").agg(F.sum("c").alias("inflow"))
-        ranks = (
-            nodes.join(F.broadcast(inflow), nodes.node == inflow.dst, "left")
-            .crossJoin(F.broadcast(n_seeds))
-            .select(
-                "node",
-                "is_seed",
-                "n_seeds",
-                F.expr(
-                    f"(is_seed * (({SCALE} * 15) div 100)) div n_seeds"
-                    " + (85 * coalesce(inflow, 0)) div 100"
-                ).alias("rank"),
-            )
-        )
-    names = load(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("node"), "n_name"
-    )
     return (
-        ranks.join(F.broadcast(names), "node")
+        _rank_rounds(
+            spark,
+            sf_dir,
+            nodes,
+            n_seeds,
+            f"(is_seed * {SCALE}) div n_seeds",
+            f"(is_seed * (({SCALE} * 15) div 100)) div n_seeds",
+        )
         .select(
             "node",
             "n_name",

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..spec import QuerySpec
+from .graph import _trade_edges, _undirected_pairs
 
 SPECS: list[QuerySpec] = []
 
@@ -599,18 +600,9 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph_pagerank (broadcast dimension hops, one groupBy); community
     terms are three dimension-sized aggregations joined on the ≤5-row
     region relation."""
-    cust = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     nat = load(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
     edges = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .select(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
+        _trade_edges(spark, sf_dir)
         .join(
             F.broadcast(nat.select(F.col("n_nationkey").alias("src"),
                                    F.col("n_regionkey").alias("src_reg"))),
@@ -2786,20 +2778,7 @@ def graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     hops, one groupBy); reciprocity is then one self-join of the
     dimension-sized edge list on the REVERSED key pair and a
     two-number exact-integer reduce — one final division."""
-    cust = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    edges = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .select(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .persist()
-    )
+    edges = _trade_edges(spark, sf_dir).filter(F.col("src") != F.col("dst")).persist()
     rev = edges.select(
         F.col("dst").alias("src"), F.col("src").alias("dst"), F.col("w").alias("w_rev")
     )
@@ -3154,19 +3133,8 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the dimension-sized canonical edge list (both joins
     broadcast); degrees are one aggregation; C_v is exact-integer
     in, one division out (d_v < 2 → null)."""
-    cust = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     wpairs = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .select(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
+        _undirected_pairs(spark, sf_dir)
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("w"))
         .persist()

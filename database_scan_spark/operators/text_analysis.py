@@ -534,26 +534,28 @@ BM25_B = 0.75
 BM25_TOP_N = 10
 
 
-def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Okapi BM25 top-10 for the literal query {scan, customer, merge}.
-    Plan shape: one explode→filter→(doc,term) aggregate restricted to
-    the 3 query terms (the filter pushes inside the explode stage, so
-    the shuffle carries only matching postings — at 100 TB this is the
-    'score a query against an indexed corpus' access path), df and
-    corpus stats broadcast, narrow per-doc math, global top-10."""
+def _bm25_corpus(spark: SparkSession, sf_dir: str):
+    """The documents with their length ``dl``, their exploded
+    (doc_id, dl, term) postings and the one-row corpus stats
+    (n_docs, sum_dl) that BM25 normalises by."""
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", F.size(F.split("text", " ")).alias("dl"), "text"
     )
+    postings = docs.select("doc_id", "dl", F.explode(F.split("text", " ")).alias("term"))
     stats = docs.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("dl").cast("long").alias("sum_dl"),
     )
-    tf = (
-        docs.select("doc_id", "dl", F.explode(F.split("text", " ")).alias("term"))
-        .filter(F.col("term").isin(*BM25_QUERY_TERMS))
-        .groupBy("doc_id", "dl", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
+    return docs, postings, stats
+
+
+def _bm25_term_scores(hits: DataFrame, stats: DataFrame, name: str) -> DataFrame:
+    """Okapi BM25 (k1, b = BM25_K1, BM25_B) term scores: one
+    (doc_id, ``name``) row per (doc, query term) of ``hits``, the
+    postings already restricted to the query terms. Each score is
+    rounded to 6 places in DECIMAL so per-doc sums are order-free;
+    df and the corpus stats broadcast."""
+    tf = hits.groupBy("doc_id", "dl", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     avgdl = F.col("sum_dl").cast("double") / F.col("n_docs")
     idf = F.log(
@@ -568,13 +570,23 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             * (F.lit(1.0) - F.lit(BM25_B) + F.lit(BM25_B) * F.col("dl") / avgdl)
         )
     )
-    scored = (
+    return (
         tf.join(F.broadcast(df_), "term")
         .crossJoin(F.broadcast(stats))
-        .select(
-            "doc_id",
-            F.round(term_score, 6).cast("decimal(18,6)").alias("ts"),
-        )
+        .select("doc_id", F.round(term_score, 6).cast("decimal(18,6)").alias(name))
+    )
+
+
+def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Okapi BM25 top-10 for the literal query {scan, customer, merge}.
+    Plan shape: one explode→filter→(doc,term) aggregate restricted to
+    the 3 query terms (the filter pushes inside the explode stage, so
+    the shuffle carries only matching postings — at 100 TB this is the
+    'score a query against an indexed corpus' access path), df and
+    corpus stats broadcast, narrow per-doc math, global top-10."""
+    _, postings, stats = _bm25_corpus(spark, sf_dir)
+    scored = (
+        _bm25_term_scores(postings.filter(F.col("term").isin(*BM25_QUERY_TERMS)), stats, "ts")
         .groupBy("doc_id")
         .agg(F.sum("ts").alias("score_dec"))
     )
@@ -1278,37 +1290,9 @@ def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties by doc_id. At 100 TB each leg is the indexed-retrieval
     access path (posting-list shuffle for BM25, candidate-pruned for
     the dense leg) and the fusion itself touches only 2×20 rows."""
-    docs = load(spark, sf_dir, "documents").select(
-        "doc_id", F.size(F.split("text", " ")).alias("dl"), "text"
-    )
-    stats = docs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("sum_dl"),
-    )
-    tf = (
-        docs.select("doc_id", "dl", F.explode(F.split("text", " ")).alias("term"))
-        .filter(F.col("term").isin(*BM25_QUERY_TERMS))
-        .groupBy("doc_id", "dl", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    avgdl = F.col("sum_dl").cast("double") / F.col("n_docs")
-    idf = F.log(
-        (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-        + F.lit(1.0)
-    )
-    term_score = idf * (
-        F.col("tf") * (F.lit(BM25_K1) + 1)
-        / (
-            F.col("tf")
-            + F.lit(BM25_K1)
-            * (F.lit(1.0) - F.lit(BM25_B) + F.lit(BM25_B) * F.col("dl") / avgdl)
-        )
-    )
+    docs, postings, stats = _bm25_corpus(spark, sf_dir)
     bm25 = (
-        tf.join(F.broadcast(df_), "term")
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", F.round(term_score, 6).cast("decimal(18,6)").alias("ts"))
+        _bm25_term_scores(postings.filter(F.col("term").isin(*BM25_QUERY_TERMS)), stats, "ts")
         .groupBy("doc_id")
         .agg(F.sum("ts").alias("s"))
         .orderBy(F.desc("s"), "doc_id")
@@ -1469,9 +1453,7 @@ def analytic_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks). Each DCG term is ``round(·, 12)`` DECIMAL (the last-ulp
     log2 argument), so both sums are order-free exact; gains 2^g−1
     are exact integers."""
-    docs = load(spark, sf_dir, "documents").select(
-        "doc_id", F.size(F.split("text", " ")).alias("dl"), "text"
-    )
+    docs, postings, stats = _bm25_corpus(spark, sf_dir)
     grade = F.size(
         F.array_intersect(
             F.array_distinct(F.split("text", " ")),
@@ -1479,35 +1461,8 @@ def analytic_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     graded = docs.select("doc_id", grade.alias("g"))
-
-    stats = docs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("sum_dl"),
-    )
-    tf = (
-        docs.select("doc_id", "dl", F.explode(F.split("text", " ")).alias("term"))
-        .filter(F.col("term").isin(*BM25_QUERY_TERMS))
-        .groupBy("doc_id", "dl", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    avgdl = F.col("sum_dl").cast("double") / F.col("n_docs")
-    idf = F.log(
-        (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-        + F.lit(1.0)
-    )
-    term_score = idf * (
-        F.col("tf") * (F.lit(BM25_K1) + 1)
-        / (
-            F.col("tf")
-            + F.lit(BM25_K1)
-            * (F.lit(1.0) - F.lit(BM25_B) + F.lit(BM25_B) * F.col("dl") / avgdl)
-        )
-    )
     ranking = (
-        tf.join(F.broadcast(df_), "term")
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", F.round(term_score, 6).cast("decimal(18,6)").alias("s"))
+        _bm25_term_scores(postings.filter(F.col("term").isin(*BM25_QUERY_TERMS)), stats, "s")
         .groupBy("doc_id")
         .agg(F.sum("s").alias("s"))
         .orderBy(F.desc("s"), "doc_id")
@@ -2401,42 +2356,11 @@ def sim_prf_rocchio(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered top-k. Output: the final top-10 with per-doc matched
     term counts and the expansion terms rolled into a column for
     auditability."""
-    docs = load(spark, sf_dir, "documents").select(
-        "doc_id", F.size(F.split("text", " ")).alias("dl"), "text"
-    )
-    stats = docs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("sum_dl"),
-    )
-    avgdl = F.col("sum_dl").cast("double") / F.col("n_docs")
+    docs, postings, stats = _bm25_corpus(spark, sf_dir)
 
     def bm25(terms_df):
-        tf = (
-            docs.select("doc_id", "dl", F.explode(F.split("text", " ")).alias("term"))
-            .join(F.broadcast(terms_df), "term")
-            .groupBy("doc_id", "dl", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
-        df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        idf = F.log(
-            (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-            + F.lit(1.0)
-        )
-        term_score = idf * (
-            F.col("tf") * (F.lit(BM25_K1) + 1)
-            / (
-                F.col("tf")
-                + F.lit(BM25_K1)
-                * (F.lit(1.0) - F.lit(BM25_B) + F.lit(BM25_B) * F.col("dl") / avgdl)
-            )
-        )
         return (
-            tf.join(F.broadcast(df_), "term")
-            .crossJoin(F.broadcast(stats))
-            .select(
-                "doc_id",
-                F.round(term_score, 6).cast("decimal(18,6)").alias("ts"),
-            )
+            _bm25_term_scores(postings.join(F.broadcast(terms_df), "term"), stats, "ts")
             .groupBy("doc_id")
             .agg(
                 F.sum("ts").alias("score"),

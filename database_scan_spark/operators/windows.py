@@ -834,10 +834,11 @@ SPECS.append(
 
 def _daily_priority_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(priority, day) revenue series in exact integer cents —
-    the ONE input construction shared by the two day-series monitors
-    (``win_cusum``, ``win_hampel``) and mirrored by their oracles'
-    ``daily`` CTEs, so a change to the cents derivation cannot make
-    the two monitors disagree about the same series."""
+    the ONE input construction shared by the day-series monitors
+    (``win_cusum``, ``win_hampel``, ``analytic_trend_mk``,
+    ``analytic_theil_sen``) and mirrored by their oracles' ``daily``
+    CTEs, so a change to the cents derivation cannot make them
+    disagree about the same series."""
     orders = load(spark, sf_dir, "orders")
     return (
         orders.select(

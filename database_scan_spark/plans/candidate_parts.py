@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators._helpers import disc_price
 
 SEED_SEGMENT = "BUILDING"
 # Seed resolution also thresholds on account balance so the seed is a
@@ -51,14 +52,6 @@ SEED_SEGMENT = "BUILDING"
 # sf0.001 where a whole segment would cover every part.
 SEED_MIN_ACCTBAL = 6000.0
 MIN_SCORE = 0.33
-
-def _rev():
-    # Exact-arithmetic revenue term: DECIMAL products/sums are associative,
-    # so Spark's unordered partial aggregation is deterministic.
-    return (
-        F.col("l_extendedprice").cast("decimal(18,2)")
-        * (F.lit(1) - F.col("l_discount")).cast("decimal(8,2)")
-    )
 
 
 def candidate_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -92,7 +85,7 @@ def candidate_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The global max is a ONE-ROW aggregate broadcast back onto the
     # rows — not an empty-partition window, which would plan an
     # Exchange SinglePartition and funnel every row through one task.
-    sup_rev = seed_li.groupBy("l_suppkey").agg(F.sum(_rev()).alias("rev"))
+    sup_rev = seed_li.groupBy("l_suppkey").agg(F.sum(disc_price()).alias("rev"))
     max_rev = sup_rev.agg(F.max(F.col("rev").cast("double")).alias("max_rev"))
     main_sups = (
         sup_rev.crossJoin(F.broadcast(max_rev))

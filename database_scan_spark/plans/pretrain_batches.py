@@ -37,9 +37,10 @@ PB_BUDGET = 256         # BPE-chunk tokens per packed sequence bin
 PB_SHARDS = 8           # training shards
 
 
-def pipeline_pretrain_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → quality gate → exact dedup → tokenize → pack →
-    shard → per-shard manifest (see module docstring)."""
+def _stages(spark: SparkSession, sf_dir: str):
+    """The pipeline's stage relations (see module docstring): raw
+    docs, gated, deduped, and packed docs carrying their ``bin_id``
+    and ``shard_id``."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "source", "text")
 
     # 1. quality gate: row-local, fused into the scan
@@ -75,13 +76,19 @@ def pipeline_pretrain_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bin_id", F.expr(f"(cum - n_tok) div {PB_BUDGET}")
     )
 
-    # 5. deterministic shard of each (source, bin) + manifest
+    # 5. deterministic shard of each (source, bin)
     shard = (h32(F.concat_ws(":", F.col("source"), F.col("bin_id"))) % PB_SHARDS).cast(
         "int"
     )
+    return docs, gated, deduped, packed.withColumn("shard_id", shard)
+
+
+def pipeline_pretrain_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents → quality gate → exact dedup → tokenize → pack →
+    shard → per-shard manifest (see module docstring)."""
+    *_, packed = _stages(spark, sf_dir)
     return (
-        packed.withColumn("shard_id", shard)
-        .groupBy("shard_id")
+        packed.groupBy("shard_id")
         .agg(
             F.countDistinct("source", "bin_id").cast("bigint").alias("n_bins"),
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -173,42 +180,8 @@ def wf_provenance_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     All stage aggregates are one-row reductions; the chain is five
     nested h32 applications on those scalars (no iteration, no
     driver state)."""
-    from ..operators._helpers import h32  # noqa: PLC0415
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    n_ws = F.size(F.split("text", " "))
-    mean_word = (F.length("text") - n_ws + 1) / n_ws
-    gated = docs.filter((n_ws >= PB_MIN_TOKENS) & (mean_word <= PB_MAX_WORD_LEN))
-    canon = F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))
-    w_dup = Window.partitionBy(h32(canon)).orderBy("doc_id")
-    deduped = (
-        gated.withColumn("rk", F.row_number().over(w_dup))
-        .filter(F.col("rk") == 1)
-        .drop("rk")
-    )
-    toks = deduped.select(
-        "doc_id",
-        "source",
-        F.size(F.regexp_extract_all("text", F.lit("[a-z]{1,4}"), 0))
-        .cast("bigint")
-        .alias("n_tok"),
-    )
-    w_pack = (
-        Window.partitionBy("source")
-        .orderBy(F.desc("n_tok"), "doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    packed = toks.withColumn("cum", F.sum("n_tok").over(w_pack)).withColumn(
-        "bin_id", F.expr(f"(cum - n_tok) div {PB_BUDGET}")
-    )
-    shard = (h32(F.concat_ws(":", F.col("source"), F.col("bin_id"))) % PB_SHARDS).cast(
-        "int"
-    )
-    sharded = (
-        packed.withColumn("shard_id", shard)
-        .groupBy("shard_id")
-        .agg(F.sum("n_tok").alias("n_tokens"))
-    )
+    docs, gated, deduped, packed = _stages(spark, sf_dir)
+    sharded = packed.groupBy("shard_id").agg(F.sum("n_tok").alias("n_tokens"))
 
     def doc_stage(df):
         return df.agg(

@@ -32,7 +32,7 @@ from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -127,6 +127,36 @@ def _run_to_memory(
         )
         q.awaitTermination()
     return df.sparkSession.table(sink)
+
+
+def _stage_arrivals(
+    spark: SparkSession, sf_dir: str, table: str, conds: list[Column], src_dir: str
+) -> None:
+    """Stage ``table`` as one arrival file per filter in ``conds``
+    (``{table}_{i}.parquet`` in ``src_dir``), mtimes ascending in list
+    order: FileStreamSource orders arrivals by modification time, so
+    ``_replay`` delivers them one micro-batch each, in that order.
+    Idempotent (guarded by _SPLIT_OK)."""
+    import glob  # noqa: PLC0415
+
+    if os.path.exists(os.path.join(src_dir, "_SPLIT_OK")):
+        return
+    shutil.rmtree(src_dir, ignore_errors=True)
+    rel = read_raw(spark, sf_dir, table)
+    for i, cond in enumerate(conds):
+        part = os.path.join(src_dir, f"part{i}")
+        rel.filter(cond).coalesce(1).write.mode("overwrite").parquet(part)
+        dst = os.path.join(src_dir, f"{table}_{i}.parquet")
+        os.replace(glob.glob(os.path.join(part, "*.parquet"))[0], dst)
+        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+        shutil.rmtree(part, ignore_errors=True)
+    with open(os.path.join(src_dir, "_SPLIT_OK"), "w") as fh:
+        fh.write("ok")
+
+
+def _replay(spark: SparkSession, schema: T.StructType, src_dir: str) -> DataFrame:
+    """The staged arrival files as a stream, one file per micro-batch."""
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src_dir)
 
 
 def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -811,27 +841,10 @@ def stream_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = workdir(sf_dir, "stream_mv_refresh")
     src_dir = os.path.join(root, "src")
-    if not os.path.exists(os.path.join(src_dir, "_SPLIT_OK")):
-        shutil.rmtree(src_dir, ignore_errors=True)
-        ev = read_raw(spark, sf_dir, "events")
-        # modulo split: four deterministic arrival batches, no driver
-        # materialization needed to find range bounds
-        for i in range(4):
-            (
-                ev.filter(F.col("event_id") % 4 == i)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(src_dir, f"part{i}"))
-            )
-        # flatten: FileStreamSource lists one directory of files
-        for i, f in enumerate(
-            sorted(glob.glob(os.path.join(src_dir, "part*", "*.parquet")))
-        ):
-            os.replace(f, os.path.join(src_dir, f"events_{i}.parquet"))
-        for i in range(4):
-            shutil.rmtree(os.path.join(src_dir, f"part{i}"), ignore_errors=True)
-        with open(os.path.join(src_dir, "_SPLIT_OK"), "w") as fh:
-            fh.write("ok")
+    # modulo split: four deterministic arrival batches, no driver
+    # materialization needed to find range bounds
+    conds = [F.col("event_id") % 4 == i for i in range(4)]
+    _stage_arrivals(spark, sf_dir, "events", conds, src_dir)
 
     mv_root = os.path.join(root, "mv")
     ckpt = os.path.join(root, "checkpoint")
@@ -861,11 +874,8 @@ def stream_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(mv_root, f"v{batch_id:05d}")
         )
 
-    stream = (
-        spark.readStream.schema(_events_raw_schema(spark, sf_dir))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-        .select("user_id", "value")
+    stream = _replay(spark, _events_raw_schema(spark, sf_dir), src_dir).select(
+        "user_id", "value"
     )
     q = (
         stream.writeStream.foreachBatch(merge_batch)
@@ -910,38 +920,22 @@ _TWS_FLUSH_SPLIT = "2024-01-16 00:00:00"  # fixture events span Jan 2024
 _TWS_FLUSH_GAP_S = 3600  # inactivity gap (whole-second timer granularity)
 
 
-def _two_file_events_src(
-    spark: SparkSession, sf_dir: str, name: str, nts
-) -> str:
-    """Stage the events table as TWO arrival files split at
-    ``_TWS_FLUSH_SPLIT`` (pre/post), mtime-ordered so FileStreamSource
-    with maxFilesPerTrigger=1 delivers them as two deterministic
-    micro-batches. Idempotent (guarded by _SPLIT_OK); shared by the
-    event-time-timer and processing-time-timer jobs so both observe
-    the same batch boundary."""
-    import glob  # noqa: PLC0415
-
-    src_dir = os.path.join(workdir(sf_dir, name), "src")
-    if not os.path.exists(os.path.join(src_dir, "_SPLIT_OK")):
-        shutil.rmtree(src_dir, ignore_errors=True)
-        ev = read_raw(spark, sf_dir, "events")
-        split = F.lit(_TWS_FLUSH_SPLIT).cast(T.TimestampType())
-        for i, cond in enumerate([nts < split, nts >= split]):
-            (
-                ev.filter(cond)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(src_dir, f"part{i}"))
-            )
-            f = glob.glob(os.path.join(src_dir, f"part{i}", "*.parquet"))[0]
-            dst = os.path.join(src_dir, f"events_{i}.parquet")
-            os.replace(f, dst)
-            # FileStreamSource orders arrivals by mtime: force it
-            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-            shutil.rmtree(os.path.join(src_dir, f"part{i}"), ignore_errors=True)
-        with open(os.path.join(src_dir, "_SPLIT_OK"), "w") as fh:
-            fh.write("ok")
-    return src_dir
+def _two_file_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, ts, ts_us) of the events table replayed as TWO
+    arrival files split at ``_TWS_FLUSH_SPLIT`` (pre/post): two
+    deterministic micro-batches, shared by the event-time-timer and
+    processing-time-timer jobs so they all observe the same batch
+    boundary."""
+    raw_schema = _events_raw_schema(spark, sf_dir)
+    nts = events_ts(raw_schema["ts"].dataType)
+    src_dir = os.path.join(workdir(sf_dir, "stream_tws_flush"), "src")
+    split = F.lit(_TWS_FLUSH_SPLIT).cast(T.TimestampType())
+    _stage_arrivals(spark, sf_dir, "events", [nts < split, nts >= split], src_dir)
+    return (
+        _replay(spark, raw_schema, src_dir)
+        .withColumn("ts", nts)
+        .select("user_id", "ts", F.unix_micros("ts").alias("ts_us"))
+    )
 
 
 def _inactivity_flush_processor(gap_s: int):
@@ -1048,20 +1042,7 @@ def stream_tws_inactivity_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
     the memory-sink content has an exact SQL oracle reproducing the
     batch-by-batch watermark sequence (emit1/emit2 CTEs)."""
     _ensure_tws_protobuf(spark)
-    raw_schema = _events_raw_schema(spark, sf_dir)
-    nts = events_ts(raw_schema["ts"].dataType)
-    src_dir = _two_file_events_src(spark, sf_dir, "stream_tws_flush", nts)
-
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    ev = (
-        stream.withColumn("ts", nts)
-        .withWatermark("ts", "0 seconds")
-        .select("user_id", "ts", F.unix_micros("ts").alias("ts_us"))
-    )
+    ev = _two_file_events(spark, sf_dir).withWatermark("ts", "0 seconds")
     out = ev.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=_inactivity_flush_processor(_TWS_FLUSH_GAP_S),
         outputStructType="user_id long, n_events long, first_us long, last_us long",
@@ -1221,18 +1202,7 @@ def stream_tws_proctime_timer(spark: SparkSession, sf_dir: str) -> DataFrame:
     follows the last data batch, and every timer has already fired
     in its registration batch (expiry ≤ batch timestamp)."""
     _ensure_tws_protobuf(spark)
-    raw_schema = _events_raw_schema(spark, sf_dir)
-    nts = events_ts(raw_schema["ts"].dataType)
-    src_dir = _two_file_events_src(spark, sf_dir, "stream_tws_flush", nts)
-
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    ev = stream.withColumn("ts", nts).select(
-        "user_id", F.unix_micros("ts").alias("ts_us")
-    )
+    ev = _two_file_events(spark, sf_dir).select("user_id", "ts_us")
     out = ev.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=_proctime_snapshot_processor(),
         outputStructType="user_id long, n_first long, first_us long",
@@ -1374,20 +1344,7 @@ def stream_tws_eventtime_timer(spark: SparkSession, sf_dir: str) -> DataFrame:
     trailing batch and terminates when the watermark stops advancing
     (unlike ProcessingTime, which never does)."""
     _ensure_tws_protobuf(spark)
-    raw_schema = _events_raw_schema(spark, sf_dir)
-    nts = events_ts(raw_schema["ts"].dataType)
-    src_dir = _two_file_events_src(spark, sf_dir, "stream_tws_flush", nts)
-
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    ev = (
-        stream.withColumn("ts", nts)
-        .withWatermark("ts", "0 seconds")
-        .select("user_id", "ts", F.unix_micros("ts").alias("ts_us"))
-    )
+    ev = _two_file_events(spark, sf_dir).withWatermark("ts", "0 seconds")
     out = ev.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=_eventtime_deadline_processor(
             _TWS_SLA_BASE_DAYS, _TWS_SLA_STEP_DAYS, _TWS_SLA_TIERS
@@ -1725,30 +1682,11 @@ def stream_update_vs_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
     unwindowed running aggregation is the state-store path where the
     modes genuinely diverge. Oracle reconstructs both sets from the
     split timestamp."""
-    import glob  # noqa: PLC0415
-
     raw_schema = _events_raw_schema(spark, sf_dir)
     nts = events_ts(raw_schema["ts"].dataType)
-    root = workdir(sf_dir, "stream_mode_split")
-    src_dir = os.path.join(root, "src")
-    if not os.path.exists(os.path.join(src_dir, "_SPLIT_OK")):
-        shutil.rmtree(src_dir, ignore_errors=True)
-        ev = read_raw(spark, sf_dir, "events")
-        split = F.lit(_MODE_SPLIT).cast(T.TimestampType())
-        for i, cond in enumerate([nts < split, nts >= split]):
-            (
-                ev.filter(cond)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(src_dir, f"part{i}"))
-            )
-            f = glob.glob(os.path.join(src_dir, f"part{i}", "*.parquet"))[0]
-            dst = os.path.join(src_dir, f"events_{i}.parquet")
-            os.replace(f, dst)
-            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-            shutil.rmtree(os.path.join(src_dir, f"part{i}"), ignore_errors=True)
-        with open(os.path.join(src_dir, "_SPLIT_OK"), "w") as fh:
-            fh.write("ok")
+    src_dir = os.path.join(workdir(sf_dir, "stream_mode_split"), "src")
+    split = F.lit(_MODE_SPLIT).cast(T.TimestampType())
+    _stage_arrivals(spark, sf_dir, "events", [nts < split, nts >= split], src_dir)
 
     def agg_of(stream_df: DataFrame) -> DataFrame:
         return stream_df.groupBy("event_type").agg(
@@ -1757,12 +1695,9 @@ def stream_update_vs_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     outs = []
     for mode in ("update", "complete"):
-        stream = (
-            spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
+        ev = _replay(spark, raw_schema, src_dir).withColumn("ts", nts).select(
+            "event_type", "ts"
         )
-        ev = stream.withColumn("ts", nts).select("event_type", "ts")
         sink = _run_to_memory(
             agg_of(ev), spark, sf_dir, f"stream_mode_{mode}", mode
         )
@@ -1833,40 +1768,16 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-version change in lateness timing fails the hash.
     Emission: windows of surviving rows whose end ≤ final watermark
     (the trailing no-data batch closes them)."""
-    import glob  # noqa: PLC0415
-
     from ..operators._helpers import h32  # noqa: PLC0415
 
     raw_schema = _events_raw_schema(spark, sf_dir)
     nts = events_ts(raw_schema["ts"].dataType)
-    root = workdir(sf_dir, "stream_wm_drop3")
-    src_dir = os.path.join(root, "src")
-    if not os.path.exists(os.path.join(src_dir, "_SPLIT_OK")):
-        shutil.rmtree(src_dir, ignore_errors=True)
-        ev = read_raw(spark, sf_dir, "events")
-        third = h32(F.concat(F.lit("wm-"), F.col("event_id"))) % 3
-        for i in range(3):
-            (
-                ev.filter(third == i)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(src_dir, f"part{i}"))
-            )
-            f = glob.glob(os.path.join(src_dir, f"part{i}", "*.parquet"))[0]
-            dst = os.path.join(src_dir, f"events_{i}.parquet")
-            os.replace(f, dst)
-            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-            shutil.rmtree(os.path.join(src_dir, f"part{i}"), ignore_errors=True)
-        with open(os.path.join(src_dir, "_SPLIT_OK"), "w") as fh:
-            fh.write("ok")
-
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
+    src_dir = os.path.join(workdir(sf_dir, "stream_wm_drop3"), "src")
+    third = h32(F.concat(F.lit("wm-"), F.col("event_id"))) % 3
+    _stage_arrivals(spark, sf_dir, "events", [third == i for i in range(3)], src_dir)
     ev = (
-        stream.withColumn("ts", nts)
+        _replay(spark, raw_schema, src_dir)
+        .withColumn("ts", nts)
         .withWatermark("ts", "0 seconds")
         .select("ts")
     )
@@ -1943,29 +1854,13 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts and a DECIMAL value checksum per run equal the hash-half
     populations the oracle recomputes. A source that replays run-1
     offsets (double counting) or skips run-2 data breaks the hash."""
-    import glob  # noqa: PLC0415
-
     from ..operators._helpers import h32  # noqa: PLC0415
 
     raw_schema = _events_raw_schema(spark, sf_dir)
     root = workdir(sf_dir, "stream_ckpt_resume")
     stage = os.path.join(root, "stage")  # both halves, pre-built once
-    if not os.path.exists(os.path.join(stage, "_SPLIT_OK")):
-        shutil.rmtree(stage, ignore_errors=True)
-        ev = read_raw(spark, sf_dir, "events")
-        half = h32(F.concat(F.lit("ck-"), F.col("event_id"))) % 2
-        for i, cond in enumerate([half == 0, half == 1]):
-            (
-                ev.filter(cond)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(stage, f"part{i}"))
-            )
-            f = glob.glob(os.path.join(stage, f"part{i}", "*.parquet"))[0]
-            os.replace(f, os.path.join(stage, f"events_{i}.parquet"))
-            shutil.rmtree(os.path.join(stage, f"part{i}"), ignore_errors=True)
-        with open(os.path.join(stage, "_SPLIT_OK"), "w") as fh:
-            fh.write("ok")
+    half = h32(F.concat(F.lit("ck-"), F.col("event_id"))) % 2
+    _stage_arrivals(spark, sf_dir, "events", [half == 0, half == 1], stage)
 
     src_dir = os.path.join(root, "src")
     ckpt = os.path.join(root, "ckpt")
@@ -2197,36 +2092,14 @@ def stream_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.streaming.state import GroupStateTimeout  # noqa: PLC0415
 
-    import glob  # noqa: PLC0415
-
-    root = workdir(sf_dir, "stream_pit_enrich")
-    src_dir = os.path.join(root, "src")
-    if not os.path.exists(os.path.join(src_dir, "_SPLIT_OK")):
-        shutil.rmtree(src_dir, ignore_errors=True)
-        ev = read_raw(spark, sf_dir, "events")
-        ts_day = F.date_format(events_ts(ev.schema["ts"].dataType), "yyyy-MM-dd")
-        bounds = [("0000-01-01", "2024-01-10"), ("2024-01-10", "2024-01-20"), ("2024-01-20", "9999-01-01")]
-        for i, (lo, hi) in enumerate(bounds):
-            (
-                ev.filter((ts_day >= lo) & (ts_day < hi))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(src_dir, f"part{i}"))
-            )
-        for i in range(3):
-            f = sorted(glob.glob(os.path.join(src_dir, f"part{i}", "*.parquet")))[0]
-            dst = os.path.join(src_dir, f"events_{i}.parquet")
-            os.replace(f, dst)
-            os.utime(dst, (1_700_000_000 + i * 100, 1_700_000_000 + i * 100))
-            shutil.rmtree(os.path.join(src_dir, f"part{i}"), ignore_errors=True)
-        with open(os.path.join(src_dir, "_SPLIT_OK"), "w") as fh:
-            fh.write("ok")
-
-    stream = (
-        spark.readStream.schema(_events_raw_schema(spark, sf_dir))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-        .select("event_id", "ts", "user_id", "event_type", "value")
+    raw_schema = _events_raw_schema(spark, sf_dir)
+    src_dir = os.path.join(workdir(sf_dir, "stream_pit_enrich"), "src")
+    ts_day = F.date_format(events_ts(raw_schema["ts"].dataType), "yyyy-MM-dd")
+    bounds = [("0000-01-01", "2024-01-10"), ("2024-01-10", "2024-01-20"), ("2024-01-20", "9999-01-01")]
+    conds = [(ts_day >= lo) & (ts_day < hi) for lo, hi in bounds]
+    _stage_arrivals(spark, sf_dir, "events", conds, src_dir)
+    stream = _replay(spark, raw_schema, src_dir).select(
+        "event_id", "ts", "user_id", "event_type", "value"
     )
     out = stream.groupBy("user_id").applyInPandasWithState(
         _pit_enrich_fn(),
@@ -2412,24 +2285,8 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     acc_root = os.path.join(root, "accepted")
     shutil.rmtree(acc_root, ignore_errors=True)
 
-    if not os.path.exists(os.path.join(src_dir, "_SPLIT_OK")):
-        shutil.rmtree(src_dir, ignore_errors=True)
-        docs = read_raw(spark, sf_dir, "documents")
-        for i in range(_SCI_BATCHES):
-            (
-                docs.filter(F.col("doc_id") % _SCI_BATCHES == i)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(src_dir, f"part{i}"))
-            )
-            f = glob.glob(os.path.join(src_dir, f"part{i}", "*.parquet"))[0]
-            dst = os.path.join(src_dir, f"docs_{i}.parquet")
-            os.replace(f, dst)
-            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-            shutil.rmtree(os.path.join(src_dir, f"part{i}"), ignore_errors=True)
-        with open(os.path.join(src_dir, "_SPLIT_OK"), "w") as fh:
-            fh.write("ok")
-
+    conds = [F.col("doc_id") % _SCI_BATCHES == i for i in range(_SCI_BATCHES)]
+    _stage_arrivals(spark, sf_dir, "documents", conds, src_dir)
     doc_schema = read_raw(spark, sf_dir, "documents").schema
     n_ws = F.size(F.split("text", " "))
     mean_word = (F.length("text") - n_ws + 1) / n_ws
@@ -2465,11 +2322,7 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(acc_root, f"batch_id={batch_id}")
         )
 
-    stream = (
-        spark.readStream.schema(doc_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
+    stream = _replay(spark, doc_schema, src_dir)
     ckpt = os.path.join(root, "checkpoint")
     shutil.rmtree(ckpt, ignore_errors=True)
     q = (

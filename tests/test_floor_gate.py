@@ -24,13 +24,18 @@ def _doc():
 
 
 def test_floors_cover_every_benched_headliner():
-    """Every query bench.py times must have a floor (else the gate
-    reports it unfloored and --check fails)."""
+    """Every query bench.py times must be registered, listed once and
+    have a floor (else the gate reports it unfloored and --check
+    fails)."""
     sys.path.insert(
         0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
     import bench
+    from __spark_entry__ import queries
 
+    assert len(set(bench.HEADLINE)) == len(bench.HEADLINE), "duplicate headliners"
+    unregistered = sorted(set(bench.HEADLINE) - set(queries()))
+    assert not unregistered, f"headliners not in queries(): {unregistered}"
     doc = _doc()
     missing = [q for q in bench.HEADLINE if q not in doc["floors"]]
     # join_skew_unsalted is the untimed pathology control — floored but

@@ -37,10 +37,7 @@ def main() -> None:
 
     only = set(sys.argv[1:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    names = [
-        n for n in HEADLINE
-        if n in runner.contract()[0] and (not only or n in only)
-    ]
+    names = [n for n in HEADLINE if not only or n in only]
     out: dict[str, dict] = {}
     for name, lay in runner.layers(names, sf_dir).items():
         b, e = lay.pop("build_s"), lay.pop("exec_s")
