@@ -10,10 +10,12 @@ materializes (``/root/reference/x2.2.py:249-256``).
 
 Scale notes:
 
-- Schemas are declared, not inferred: at 100 TB an inferSchema pass
-  is a full extra scan.
-- ``load`` is a plain ``spark.read.parquet`` so Catalyst keeps
-  predicate pushdown / column pruning / partition pruning.
+- Schemas are declared, not inferred: ``load`` reads every table but
+  ``events`` with ``READ_SCHEMAS`` (``timestamp`` as ``timestamp_ntz``,
+  what the fixtures' tz-naive ``timestamp[us]`` surfaces as), so a
+  plan build starts no footer-read inference job per table.
+- ``load`` is a plain parquet read so Catalyst keeps predicate
+  pushdown / column pruning / partition pruning.
 - Entity-graph mapping (SURVEY §7.0): customer≈disease, part≈drug,
   supplier≈target, orders+lineitem≈scored association edges,
   nation/region≈ontology dims, events≈activity stream,
@@ -123,6 +125,18 @@ TABLES = {
 }
 
 
+# ``load``'s read schemas: ``TABLES`` with ``timestamp`` read as
+# ``timestamp_ntz``. ``events`` infers instead (see ``read_raw``).
+READ_SCHEMAS = {
+    name: T.StructType(
+        [T.StructField(f.name, T.TimestampNTZType() if f.dataType == T.TimestampType() else f.dataType)
+         for f in st.fields]
+    )
+    for name, st in TABLES.items()
+    if name != "events"
+}
+
+
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
@@ -155,8 +169,17 @@ def events_ts(raw_type: T.DataType) -> Column:
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one snapshot table. Plain parquet read → pushdown-friendly;
-    ``events.ts`` normalised by ``events_ts``."""
+    """Scan one snapshot table. Plain parquet read → pushdown-friendly.
+
+    Tables but ``events`` read with ``READ_SCHEMAS``: no Spark job. A
+    declared read would surface a column missing from the files as
+    NULLs, so the footer's names are checked on the driver (pyarrow)
+    and a missing one is dropped: a reference to it fails at analysis
+    (``UNRESOLVED_COLUMN``), as under inference, and queries that never
+    use it still run. A stored type wider than declared fails at the
+    first action (``PARQUET_COLUMN_DATA_TYPE_MISMATCH``, naming the file).
+    ``events`` (``ts`` differs by fixture generation) is ``read_raw``
+    with ``ts`` normalised by ``events_ts``."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; catalog has {sorted(TABLES)}")
     # Fixture timestamps are naive wall-clock values; every time
@@ -176,10 +199,16 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set(
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
     )
-    df = read_raw(spark, sf_dir, name)
     if name == "events":
+        df = read_raw(spark, sf_dir, name)
         return df.withColumn("ts", events_ts(df.schema["ts"].dataType))
-    return df
+    path = table_path(sf_dir, name)
+    df = spark.read.schema(READ_SCHEMAS[name]).parquet(path)
+    import pyarrow.dataset as ds  # noqa: PLC0415
+
+    stored = ds.dataset(path, format="parquet").schema.names
+    missing = [c for c in READ_SCHEMAS[name].names if c not in stored]
+    return df.drop(*missing) if missing else df
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

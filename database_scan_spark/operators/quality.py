@@ -1566,12 +1566,14 @@ def dq_schema_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     lived through is exactly the class of drift it catches.
 
     Both sides are METADATA (footer reads, no data pages); the
-    result is a ~60-row audit relation. The physical side is read
-    through ``catalog.load``, which normalises only ``events.ts``: the
-    raw reader surfaces nanos-generation timestamps as bigint, a
+    result is a ~60-row audit relation. The physical side is the
+    footer as Spark infers it (``catalog.read_raw``, not ``load``,
+    whose declared read schema would audit the contract against
+    itself), with ``events.ts`` normalised by ``catalog.events_ts``:
+    the raw reader surfaces nanos-generation timestamps as bigint, a
     reader compatibility detail, not a physical type change (the
     parquet logical type IS timestamp)."""
-    from ..catalog import TABLES  # noqa: PLC0415
+    from ..catalog import TABLES, events_ts, read_raw  # noqa: PLC0415
 
     decl_rows = [
         (t, f.name, i + 1, f.dataType.simpleString().lower())
@@ -1581,8 +1583,10 @@ def dq_schema_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     decl = spark.createDataFrame(decl_rows, "tbl string, col string, pos int, declared string")
     act_rows = []
     for t in sorted(TABLES):
-        sch = load(spark, sf_dir, t).schema
-        for i, f in enumerate(sch.fields):
+        df = read_raw(spark, sf_dir, t)
+        if t == "events":
+            df = df.withColumn("ts", events_ts(df.schema["ts"].dataType))
+        for i, f in enumerate(df.schema.fields):
             act_rows.append((t, f.name, i + 1, f.dataType.simpleString().lower()))
     act = spark.createDataFrame(act_rows, "tbl string, col string, apos int, actual string")
 

@@ -73,40 +73,25 @@ for _mod in _MODULES:
 # the queries the latest change restructured lead the list; everything
 # else keeps registration order (the sort is stable).
 FOCUS: tuple[str, ...] = (
+    "catalog",
+    "dq_schema_contract",
     "candidate_parts",
-    "graph_pagerank",
-    "graph_ppr",
-    "graph_triangle_count",
-    "graph_shortest_path",
-    "graph_degree_histogram",
-    "graph_modularity",
-    "graph_reciprocity",
-    "graph_clustering_coefficient",
-    "text_bm25_search",
-    "sim_rrf_fusion",
-    "analytic_ndcg",
-    "sim_prf_rocchio",
-    "analytic_ab_test",
-    "analytic_tost_equivalence",
-    "analytic_logreg_gd",
-    "pipeline_model_eval",
-    "analytic_trend_mk",
-    "analytic_theil_sen",
-    "dedup_ngram_jaccard",
-    "dedup_jaccard_prefix",
-    "dedup_containment",
+    "join_multi_hop",
+    "set_union_accumulate",
+    "dedup_by_id",
+    "tpch_q3_shipping_priority",
+    "tpch_q5_local_supplier_volume",
+    "tpch_q10_returned_items",
+    "tpch_q21_sole_blame_supplier",
     "dedup_cluster_cc",
-    "pipeline_pretrain_batches",
-    "wf_provenance_chain",
-    "stream_mv_refresh",
-    "stream_tws_inactivity_flush",
-    "stream_tws_proctime_timer",
-    "stream_tws_eventtime_timer",
-    "stream_update_vs_complete",
-    "stream_watermark_late_drop",
-    "stream_checkpoint_resume",
-    "stream_pit_enrich",
+    "text_keyword_rake",
+    "udf_smiles_canonical",
+    "mm_audio_fingerprint",
     "stream_corpus_ingest",
+    "wf_checkpoint_resume",
+    "sink_python_datasource",
+    "src_python_datasource",
+    "text_quality",
 )
 _FOCUS_RANK = {name: i for i, name in enumerate(FOCUS)}
 SPECS.sort(key=lambda s: _FOCUS_RANK.get(s.name, len(FOCUS)))

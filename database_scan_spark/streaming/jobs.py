@@ -36,7 +36,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..catalog import events_ts, load, read_raw, table_path
+from ..catalog import READ_SCHEMAS, events_ts, load, read_raw, table_path
 from ..operators._helpers import workdir
 from ..session import scoped_confs
 from ..spec import QuerySpec
@@ -2287,7 +2287,7 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     conds = [F.col("doc_id") % _SCI_BATCHES == i for i in range(_SCI_BATCHES)]
     _stage_arrivals(spark, sf_dir, "documents", conds, src_dir)
-    doc_schema = read_raw(spark, sf_dir, "documents").schema
+    doc_schema = READ_SCHEMAS["documents"]
     n_ws = F.size(F.split("text", " "))
     mean_word = (F.length("text") - n_ws + 1) / n_ws
     canon_h = h32(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))))

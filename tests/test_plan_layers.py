@@ -39,11 +39,11 @@ COLUMNS = (*TABLES, "shuffles", "reused", "broadcasts", "build_jobs")
 # of the edge list into its left_anti join, which a run executes or skips
 # depending on when AQE re-plans that join, so its pin is 11.
 PINS: dict[str, tuple[int, ...]] = {
-    "tpch_q21_sole_blame_supplier": (1, 1, 0, 3, 1, 3, 3),
-    "candidate_parts": (4, 5, 0, 6, 4, 10, 4),
-    "dedup_cluster_cc": (0, 0, 1, 10, 0, 7, 32),
-    "graph_label_propagation": (1, 1, 0, 13, 0, 12, 6),
-    "graph_link_prediction": (1, 1, 0, 11, 0, 7, 4),
+    "tpch_q21_sole_blame_supplier": (1, 1, 0, 3, 1, 3, 0),
+    "candidate_parts": (4, 5, 0, 6, 4, 10, 0),
+    "dedup_cluster_cc": (0, 0, 1, 10, 0, 7, 31),
+    "graph_label_propagation": (1, 1, 0, 13, 0, 12, 0),
+    "graph_link_prediction": (1, 1, 0, 11, 0, 7, 0),
 }
 
 
