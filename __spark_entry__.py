@@ -17,6 +17,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from database_scan_spark.registry import SPECS
+from database_scan_spark.session import ENGINE_PERSISTS, release
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -31,15 +32,10 @@ def entry(spark: SparkSession) -> DataFrame:
     return candidate_parts(spark, "/root/testdata/sf0.001")
 
 
-# DataFrames the ENGINE persisted while building the previous query's
-# plan — released on the next query's entry. Tracking (instead of the
-# session-global clearCache() used through r5) keeps caller-created
-# caches (e.g. a pre-cached input table) untouched (ADVICE r5).
-_ENGINE_PERSISTS: list[DataFrame] = []
-# Thread currently inside a wrapped query build (None when idle). The
-# class-level persist/cache patch is process-global, so attribution is
-# scoped to this thread: persists from OTHER threads during the build
-# window are caller caches and are never recorded/drained (VERDICT r6).
+# The engine's cache record (``session.persist`` appends to it); the
+# name stays because callers read its length after a build.
+_ENGINE_PERSISTS = ENGINE_PERSISTS
+# Thread currently inside a wrapped query build (None when idle).
 _BUILD_OWNER: int | None = None
 _BUILD_LOCK = threading.Lock()
 
@@ -47,110 +43,47 @@ _BUILD_LOCK = threading.Lock()
 def _released(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSession, str], DataFrame]:
     """Release the PREVIOUS query's cached intermediates on entry.
 
-    Operators persist() intermediates they consume more than once;
-    those caches are correct to drop the moment the query's result
-    has been read, but a lazily-returned DataFrame can't unpersist
-    behind itself. Bounding the session to AT MOST ONE query's
-    caches at the contract boundary instead: the driver runs queries
-    strictly sequentially (collect, then next), so releasing on entry
-    drops exactly the finished query's caches. Uncaching is
-    plan-shape only — a cleared DataFrame recomputes correctly if
-    re-collected. See SCALE.md "Cache lifecycle".
+    Builders cache what they read more than once with
+    ``session.persist``, which records the frame; a lazily returned
+    DataFrame cannot unpersist behind itself. The driver runs queries
+    strictly sequentially (collect, then next), so releasing the record
+    on entry drops exactly the finished query's caches and bounds the
+    session to at most one query's. A cache the caller made itself is
+    never recorded, so it survives. Uncaching is plan-shape only: a
+    released DataFrame recomputes correctly if read again. See
+    SCALE.md "Cache lifecycle".
 
-    Mechanics: every engine persist happens inside ``fn(spark,
-    sf_dir)`` (plan construction), so ``DataFrame.persist`` AND
-    ``DataFrame.cache`` (classic ``cache()`` does not route through
-    ``persist()`` — ADVICE r6) are intercepted for exactly that call
-    and each persisted frame is recorded; the next query's entry
-    unpersists the recorded frames and nothing else. Scoping rules:
-
-    - Only persists issued by the BUILDING THREAD are recorded — a
-      concurrent caller thread's ``persist()`` during the build
-      window is never attributed to the engine (the class patch is
-      process-global; the record step is thread-gated).
-    - Nested wrapped calls (a ``queries()`` entry invoking another)
-      pass straight through — no drain, no double-patch — so an
-      inner entry can't unpersist the outer query's live caches
-      (ADVICE r6 reentrancy finding).
-    - A SECOND thread entering a wrapped query while one is mid-build
-      fails loud: the drain step cannot tell "finished previous
-      query" from "live concurrent query", so the strictly-sequential
-      driver contract is asserted rather than silently corrupted.
-    - SINGLE-THREADED BUILD assumption (ADVICE r7): the thread gate
-      records a persist only when it is issued on the building
-      thread's ident, so a persist issued from a worker thread the
-      query builder ITSELF spawns during plan construction would go
-      untracked — a latent cross-query cache leak. No operator in
-      this package builds plans from spawned threads (mechanically
-      enforced: test_cache_lifecycle.py's threaded-builder canary
-      fails loud if one ever does); a future threaded builder must
-      register its worker idents with this intercept first.
+    - A nested entry (a ``queries()`` builder calling another) passes
+      straight through, so it cannot release the outer query's live
+      caches.
+    - A SECOND thread entering while a build is in flight fails loud:
+      the release cannot tell "finished previous query" from "live
+      concurrent query", so the sequential contract is asserted rather
+      than silently corrupted.
     """
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         global _BUILD_OWNER
         me = threading.get_ident()
         with _BUILD_LOCK:
-            if _BUILD_OWNER == me:
-                # Nested engine query on the same thread: the outer
-                # intercept is live and already records persists.
-                nested = True
-            elif _BUILD_OWNER is not None:
+            nested = _BUILD_OWNER == me
+            if _BUILD_OWNER is not None and not nested:
                 raise RuntimeError(
                     "queries() entries must run strictly sequentially: "
                     f"thread {me} entered while thread {_BUILD_OWNER} "
                     "is mid-build (see SCALE.md 'Cache lifecycle')"
                 )
-            else:
-                _BUILD_OWNER = me
-                nested = False
+            _BUILD_OWNER = me
         if nested:
             return fn(spark, sf_dir)
-        # EVERYTHING after owner acquisition sits inside the try: a
-        # BaseException (KeyboardInterrupt in a blocking unpersist py4j
-        # call, say) escaping the drain or the patch loop must still
-        # release ownership and unwind any partial patching, or every
-        # later query on this thread takes the nested passthrough (the
-        # exact unbounded-cache leak this wrapper exists to prevent).
-        patched: list[tuple[type, str, object]] = []
+        # the release sits inside the try: a BaseException escaping it
+        # (KeyboardInterrupt in a blocking unpersist, say) must still
+        # give up ownership, or every later query on this thread takes
+        # the nested passthrough and the caches pile up
         try:
-            while _ENGINE_PERSISTS:
-                df = _ENGINE_PERSISTS.pop()
-                try:
-                    df.unpersist()
-                except Exception:  # session gone / already unpersisted
-                    pass
-            # Patch every class that DEFINES persist/cache (PySpark 4's
-            # classic DataFrame subclasses the pyspark.sql.DataFrame
-            # facade and overrides both — patching only the base never
-            # fires).
-            targets = [DataFrame]
-            try:  # pragma: no branch - classic is always present locally
-                from pyspark.sql.classic.dataframe import (  # noqa: PLC0415
-                    DataFrame as _ClassicDF,
-                )
-
-                targets.append(_ClassicDF)
-            except ImportError:  # pragma: no cover - future layout change
-                pass
-            for cls in targets:
-                for meth in ("persist", "cache"):
-                    if meth not in cls.__dict__:
-                        continue
-                    orig = cls.__dict__[meth]
-
-                    def tracked(self: DataFrame, *a: object, _orig=orig, **k: object) -> DataFrame:
-                        out = _orig(self, *a, **k)
-                        if threading.get_ident() == me:
-                            _ENGINE_PERSISTS.append(out)
-                        return out
-
-                    setattr(cls, meth, tracked)
-                    patched.append((cls, meth, orig))
+            release()
             return fn(spark, sf_dir)
         finally:
-            for cls, meth, orig in patched:
-                setattr(cls, meth, orig)
             with _BUILD_LOCK:
                 _BUILD_OWNER = None
 
@@ -160,15 +93,14 @@ def _released(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSe
 
 
 def drain() -> None:
-    """Release the previous query's engine-persisted caches NOW.
+    """Release the previous query's engine caches NOW.
 
-    The ``_released`` wrapper drains automatically on the next query's
-    entry, which is correct for the sequential driver — but a caller
-    that TIMES queries (bench.py) would then charge the previous
-    query's unpersist cost to the next query's clock (ADVICE r9).
-    Calling this between queries, outside the timed region, makes the
-    wrapper's own drain loop a no-op. Safe when idle; loud if a build
-    is mid-flight (same strictly-sequential contract as the wrapper).
+    ``_released`` releases on the next query's entry, which is right
+    for the sequential driver, but a caller that TIMES queries would
+    then charge the previous query's unpersist cost to the next
+    query's clock. Calling this between queries, outside the timed
+    region, leaves the entry nothing to release. Safe when idle; loud
+    if a build is in flight (the same sequential contract).
     """
     with _BUILD_LOCK:
         if _BUILD_OWNER is not None:
@@ -176,12 +108,7 @@ def drain() -> None:
                 "drain() called while a query build is in flight on "
                 f"thread {_BUILD_OWNER}"
             )
-    while _ENGINE_PERSISTS:
-        df = _ENGINE_PERSISTS.pop()
-        try:
-            df.unpersist()
-        except Exception:  # session gone / already unpersisted
-            pass
+    release()
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -37,6 +37,7 @@ from ..operators._helpers import (
     ntile_from_rank,
     workdir,
 )
+from ..session import persist
 from ..spec import QuerySpec
 from .windows import _daily_priority_cents
 
@@ -116,8 +117,6 @@ SPECS.append(
         "topk_group_agg",
         topk_group_agg,
         TOPK_GROUP_AGG_ORACLE,
-        doc="Aggregation-based per-group top-k (no ranking-window sort).",
-        tags=("core", "agg"),
     )
 )
 
@@ -161,8 +160,6 @@ SPECS.append(
         "win_count_distinct",
         win_count_distinct,
         WIN_COUNT_DISTINCT_ORACLE,
-        doc="Rolling distinct count via collect_set window (no native DISTINCT OVER).",
-        tags=("window",),
     )
 )
 
@@ -226,8 +223,6 @@ SPECS.append(
         "wf_mv_incremental",
         wf_mv_incremental,
         WF_MV_INCREMENTAL_ORACLE,
-        doc="Incremental materialized-view refresh: base partial states + delta merge.",
-        tags=("workflow",),
     )
 )
 
@@ -303,8 +298,6 @@ SPECS.append(
         "fn_minmax_by",
         fn_minmax_by,
         FN_MINMAX_BY_ORACLE,
-        doc="max_by/min_by/mode with tie-proof packed ordering keys.",
-        tags=("core", "agg"),
     )
 )
 
@@ -350,8 +343,6 @@ SPECS.append(
         "agg_heavy_hitters",
         agg_heavy_hitters,
         AGG_HEAVY_HITTERS_ORACLE,
-        doc="Exact frequency-threshold heavy hitters, two-phase aggregate.",
-        tags=("core", "agg"),
     )
 )
 
@@ -507,8 +498,6 @@ SPECS.append(
         "analytic_attribution",
         analytic_attribution,
         ANALYTIC_ATTRIBUTION_ORACLE,
-        doc="First/last/linear multi-touch attribution, window-only (no pair join).",
-        tags=("core", "analytics"),
     )
 )
 
@@ -652,8 +641,6 @@ SPECS.append(
         "agg_countmin_sketch",
         agg_countmin_sketch,
         AGG_COUNTMIN_SKETCH_ORACLE,
-        doc="Count-Min sketch: bounded-memory frequency summary + point estimates.",
-        tags=("core", "agg", "sketch"),
     )
 )
 
@@ -718,8 +705,6 @@ SPECS.append(
         "agg_histogram_equidepth",
         agg_histogram_equidepth,
         AGG_HISTOGRAM_EQUIDEPTH_ORACLE,
-        doc="Equi-depth histogram via ntile over a deterministic order.",
-        tags=("core", "agg"),
     )
 )
 
@@ -797,8 +782,6 @@ SPECS.append(
         "dq_benford",
         dq_benford,
         DQ_BENFORD_ORACLE,
-        doc="Benford first-digit audit with chi-square contributions.",
-        tags=("quality",),
     )
 )
 
@@ -895,8 +878,6 @@ SPECS.append(
         "analytic_ab_test",
         analytic_ab_test,
         ANALYTIC_AB_TEST_ORACLE,
-        doc="Deterministic-bucket A/B test with exact-moment Welch z.",
-        tags=("analytic",),
     )
 )
 
@@ -940,8 +921,6 @@ SPECS.append(
         "agg_bitmap_distinct",
         agg_bitmap_distinct,
         AGG_BITMAP_DISTINCT_ORACLE,
-        doc="Exact distinct via mergeable bitmap partials (constant-size state).",
-        tags=("core", "agg"),
     )
 )
 
@@ -1002,8 +981,6 @@ SPECS.append(
         "dq_corpus_report",
         dq_corpus_report,
         DQ_CORPUS_REPORT_ORACLE,
-        doc="Dataset-card corpus rollup: docs/tokens/length/share per lang×source.",
-        tags=("llm", "quality"),
     )
 )
 
@@ -1104,8 +1081,6 @@ SPECS.append(
         "wf_snapshot_diff",
         wf_snapshot_diff,
         WF_SNAPSHOT_DIFF_ORACLE,
-        doc="Snapshot reconciliation: added/removed/changed audit with checksums.",
-        tags=("workflow", "quality"),
     )
 )
 
@@ -1227,8 +1202,6 @@ SPECS.append(
         "dq_drift_psi",
         dq_drift_psi,
         DQ_DRIFT_PSI_ORACLE,
-        doc="PSI distribution-drift monitor between two time windows.",
-        tags=("quality",),
     )
 )
 
@@ -1304,8 +1277,6 @@ SPECS.append(
         "filter_winsorize",
         filter_winsorize,
         FILTER_WINSORIZE_ORACLE,
-        doc="Percentile clipping with per-class before/after audit.",
-        tags=("quality",),
     )
 )
 
@@ -1398,8 +1369,6 @@ SPECS.append(
         "agg_linreg",
         agg_linreg,
         AGG_LINREG_ORACLE,
-        doc="Per-group OLS slope/intercept/r2 from exact sufficient moments.",
-        tags=("analytic", "agg"),
     )
 )
 
@@ -1471,8 +1440,6 @@ SPECS.append(
         "wf_backfill_plan",
         wf_backfill_plan,
         WF_BACKFILL_PLAN_ORACLE,
-        doc="missing daily partitions grouped into contiguous backfill runs",
-        tags=("workflow",),
     )
 )
 
@@ -1602,8 +1569,6 @@ SPECS.append(
         "analytic_logreg_gd",
         analytic_logreg_gd,
         ANALYTIC_LOGREG_GD_ORACLE,
-        doc="in-engine GD training: 3 unrolled steps, exact decimal gradient sums, hard sigmoid",
-        tags=("analytics", "ml"),
     )
 )
 
@@ -1686,8 +1651,6 @@ SPECS.append(
         "agg_weighted_median",
         agg_weighted_median,
         AGG_WEIGHTED_MEDIAN_ORACLE,
-        doc="weighted median via windowed cumulative weights (no group buffering)",
-        tags=("core", "agg"),
     )
 )
 
@@ -1777,8 +1740,6 @@ SPECS.append(
         "wf_late_restatement",
         wf_late_restatement,
         WF_LATE_RESTATEMENT_ORACLE,
-        doc="published-v1 vs restated-v2 daily revenue with late-arrival corrections",
-        tags=("core", "workflow"),
     )
 )
 
@@ -1825,7 +1786,7 @@ def analytic_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisting the dimension-sized per-user table keeps those (and
     # the window inputs) from replaying the fact aggregation three
     # times. Session cache contract: released at next query entry.
-    rfm = rfm.persist()
+    rfm = persist(rfm)
     n = rfm.agg(F.count(F.lit(1)).alias("_n"))
     uid = (F.col("user_id"),)
     g = global_order(rfm, F.col("r_days"), uid, rank_col="_r_rk")
@@ -1883,8 +1844,6 @@ SPECS.append(
         "analytic_rfm",
         analytic_rfm,
         ANALYTIC_RFM_ORACLE,
-        doc="RFM quintile segmentation with total-order-deterministic ntiles",
-        tags=("core", "analytics"),
     )
 )
 
@@ -2010,8 +1969,6 @@ SPECS.append(
         "agg_quantile_histogram",
         agg_quantile_histogram,
         AGG_QUANTILE_HISTOGRAM_ORACLE,
-        doc="deterministic mergeable histogram quantiles (p50/p90/p99, bounded error)",
-        tags=("core", "agg", "sketch"),
     )
 )
 
@@ -2115,8 +2072,6 @@ SPECS.append(
         "analytic_pareto",
         analytic_pareto,
         ANALYTIC_PARETO_ORACLE,
-        doc="ABC/80-20 concentration analysis, division-free DECIMAL boundaries",
-        tags=("core", "analytics"),
     )
 )
 
@@ -2223,8 +2178,6 @@ SPECS.append(
         "analytic_cohort_ltv",
         analytic_cohort_ltv,
         ANALYTIC_COHORT_LTV_ORACLE,
-        doc="signup-cohort LTV curves: revenue matrix + per-cohort cumulative sums",
-        tags=("core", "analytics"),
     )
 )
 
@@ -2331,8 +2284,6 @@ SPECS.append(
         "analytic_time_to_convert",
         analytic_time_to_convert,
         ANALYTIC_TIME_TO_CONVERT_ORACLE,
-        doc="signup-to-first-purchase conversion curve with right-censoring",
-        tags=("core", "analytics"),
     )
 )
 
@@ -2426,8 +2377,6 @@ SPECS.append(
         "analytic_gini",
         analytic_gini,
         ANALYTIC_GINI_ORACLE,
-        doc="per-segment revenue Gini via exact rank-weighted DECIMAL sums",
-        tags=("core", "analytics"),
     )
 )
 
@@ -2525,8 +2474,6 @@ SPECS.append(
         "analytic_survival",
         analytic_survival,
         ANALYTIC_SURVIVAL_ORACLE,
-        doc="Kaplan-Meier retention risk table — exact BIGINT counts at every death time",
-        tags=("core", "analytics", "survival"),
     )
 )
 
@@ -2660,8 +2607,6 @@ SPECS.append(
         "analytic_ks_test",
         analytic_ks_test,
         ANALYTIC_KS_TEST_ORACLE,
-        doc="exact two-sample KS over segment pairs — integer D numerator, DECIMAL rejection",
-        tags=("core", "analytics", "stats"),
     )
 )
 
@@ -2754,8 +2699,6 @@ SPECS.append(
         "analytic_price_index",
         analytic_price_index,
         ANALYTIC_PRICE_INDEX_ORACLE,
-        doc="Laspeyres fixed-basket price index in ppm — integer division end to end",
-        tags=("core", "analytics"),
     )
 )
 
@@ -2864,8 +2807,6 @@ SPECS.append(
         "analytic_did",
         analytic_did,
         ANALYTIC_DID_ORACLE,
-        doc="difference-in-differences PROMO effect — DECIMAL cell sums, 2x2 + interaction",
-        tags=("core", "analytics", "causal"),
     )
 )
 
@@ -2974,8 +2915,6 @@ SPECS.append(
         "analytic_bootstrap_ci",
         analytic_bootstrap_ci,
         ANALYTIC_BOOTSTRAP_CI_ORACLE,
-        doc="deterministic Poisson bootstrap replicas — hash-CDF integer weights",
-        tags=("core", "analytics", "stats", "sampling"),
     )
 )
 
@@ -3066,8 +3005,6 @@ SPECS.append(
         "analytic_trend_mk",
         analytic_trend_mk,
         ANALYTIC_TREND_MK_ORACLE,
-        doc="Mann-Kendall monotone-trend test — integer S, squared 1.96sigma verdict",
-        tags=("core", "analytics", "stats"),
     )
 )
 
@@ -3146,8 +3083,6 @@ SPECS.append(
         "analytic_theil_sen",
         analytic_theil_sen,
         ANALYTIC_THEIL_SEN_ORACLE,
-        doc="Theil-Sen robust slope — discrete median of exact pairwise slopes",
-        tags=("core", "analytics", "stats"),
     )
 )
 
@@ -3249,8 +3184,6 @@ SPECS.append(
         "analytic_auc",
         analytic_auc,
         ANALYTIC_AUC_ORACLE,
-        doc="exact ROC-AUC via Mann-Whitney rank sum with tie-averaged ranks",
-        tags=("core", "analytics", "stats", "mlops"),
     )
 )
 
@@ -3359,8 +3292,6 @@ SPECS.append(
         "analytic_gains_table",
         analytic_gains_table,
         ANALYTIC_GAINS_TABLE_ORACLE,
-        doc="decile gains/lift table — total-order ntile, exact counts",
-        tags=("core", "analytics", "mlops"),
     )
 )
 
@@ -3474,8 +3405,6 @@ SPECS.append(
         "analytic_calibration",
         analytic_calibration,
         ANALYTIC_CALIBRATION_ORACLE,
-        doc="reliability bins + exact Brier score from integer power sums",
-        tags=("core", "analytics", "mlops"),
     )
 )
 
@@ -3549,8 +3478,6 @@ SPECS.append(
         "analytic_heavy_change",
         analytic_heavy_change,
         ANALYTIC_HEAVY_CHANGE_ORACLE,
-        doc="heavy-change detection: top-N |Δcount| users across the exact window midpoint",
-        tags=("core", "analytics"),
     )
 )
 
@@ -3709,8 +3636,6 @@ SPECS.append(
         "pipeline_model_eval",
         pipeline_model_eval,
         _pme_oracle(),
-        doc="train on folds 0-3, evaluate fold 4: held-out accuracy + exact histogram AUC",
-        tags=("analytics", "ml", "pipeline"),
     )
 )
 
@@ -3798,8 +3723,6 @@ SPECS.append(
         "analytic_tost_equivalence",
         analytic_tost_equivalence,
         ANALYTIC_TOST_EQUIVALENCE_ORACLE,
-        doc="TOST equivalence: both one-sided Welch tests vs a 5%-of-mean margin",
-        tags=("analytics", "stats"),
     )
 )
 
@@ -3942,8 +3865,6 @@ SPECS.append(
         "analytic_shapley_attribution",
         analytic_shapley_attribution,
         ANALYTIC_SHAPLEY_ATTRIBUTION_ORACLE,
-        doc="exact Shapley channel credit over the 8-coalition bitmask table, pure integers",
-        tags=("analytics", "core"),
     )
 )
 
@@ -4080,8 +4001,6 @@ SPECS.append(
         "analytic_adstock",
         analytic_adstock,
         _adstock_oracle(),
-        doc="geometric adstock carryover (exact binary lambda powers) + exact-moment OLS response",
-        tags=("analytics",),
     )
 )
 
@@ -4179,8 +4098,6 @@ SPECS.append(
         "analytic_event_study",
         analytic_event_study,
         ANALYTIC_EVENT_STUDY_ORACLE.replace("{cut}", str(DID_CUT_YEAR)),
-        doc="dynamic DiD leads-and-lags: per-year effects vs the reference year, pre-trend check",
-        tags=("analytics", "stats"),
     )
 )
 
@@ -4295,8 +4212,6 @@ SPECS.append(
         "analytic_rdd",
         analytic_rdd,
         _rdd_oracle(),
-        doc="sharp regression discontinuity with a built-in placebo-cutoff falsification row",
-        tags=("analytics", "stats"),
     )
 )
 
@@ -4462,7 +4377,5 @@ SPECS.append(
         "analytic_raking_ipf",
         analytic_raking_ipf,
         _ipf_oracle(),
-        doc="survey raking (3 unrolled IPF rounds) on the cell table, margin errors in ppm",
-        tags=("analytics", "stats"),
     )
 )

@@ -166,10 +166,10 @@ QUALIFY rank <= 3
 
 
 SPECS = [
-    QuerySpec("tpch_q3_shipping_priority", tpch_q3_shipping_priority, TPCH_Q3_ORACLE, tags=("composite",)),
-    QuerySpec("tpch_q5_local_supplier_volume", tpch_q5_local_supplier_volume, TPCH_Q5_ORACLE, tags=("composite",)),
-    QuerySpec("tpch_q10_returned_items", tpch_q10_returned_items, TPCH_Q10_ORACLE, tags=("composite",)),
-    QuerySpec("grouped_pandas_topk", grouped_pandas_topk, GROUPED_PANDAS_TOPK_ORACLE, tags=("composite", "udf")),
+    QuerySpec("tpch_q3_shipping_priority", tpch_q3_shipping_priority, TPCH_Q3_ORACLE),
+    QuerySpec("tpch_q5_local_supplier_volume", tpch_q5_local_supplier_volume, TPCH_Q5_ORACLE),
+    QuerySpec("tpch_q10_returned_items", tpch_q10_returned_items, TPCH_Q10_ORACLE),
+    QuerySpec("grouped_pandas_topk", grouped_pandas_topk, GROUPED_PANDAS_TOPK_ORACLE),
 ]
 
 
@@ -244,8 +244,6 @@ SPECS.append(
         "funnel_conversion",
         funnel_conversion,
         FUNNEL_CONVERSION_ORACLE,
-        doc="ordered view->click->purchase funnel over the event stream",
-        tags=("composite", "events"),
     )
 )
 
@@ -416,15 +414,12 @@ FROM per ORDER BY l_returnflag
 
 SPECS.extend(
     [
-        QuerySpec("tpch_q12_shipmode_priority", tpch_q12_shipmode_priority, TPCH_Q12_ORACLE, tags=("composite",)),
-        QuerySpec("tpch_q14_promo_revenue", tpch_q14_promo_revenue, TPCH_Q14_ORACLE, tags=("composite",)),
+        QuerySpec("tpch_q12_shipmode_priority", tpch_q12_shipmode_priority, TPCH_Q12_ORACLE),
+        QuerySpec("tpch_q14_promo_revenue", tpch_q14_promo_revenue, TPCH_Q14_ORACLE),
         QuerySpec(
             "agg_approx",
             agg_approx,
             AGG_APPROX_ORACLE,
-            doc="approx sketches self-judged against exact in-plan (per-flag + ALL, "
-            "3 quantile bands); oracle pins the verdicts",
-            tags=("composite", "approx"),
         ),
     ]
 )
@@ -465,7 +460,7 @@ GROUP BY 1, 2
 """
 
 SPECS.append(
-    QuerySpec("cohort_retention", cohort_retention, COHORT_RETENTION_ORACLE, tags=("composite", "events"))
+    QuerySpec("cohort_retention", cohort_retention, COHORT_RETENTION_ORACLE)
 )
 
 
@@ -554,9 +549,9 @@ JOIN customer ON o_custkey = c_custkey
 
 SPECS.extend(
     [
-        QuerySpec("tpch_q6_forecast_revenue", tpch_q6_forecast_revenue, TPCH_Q6_ORACLE, tags=("composite",)),
-        QuerySpec("tpch_q16_supplier_cnt", tpch_q16_supplier_cnt, TPCH_Q16_ORACLE, tags=("composite",)),
-        QuerySpec("tpch_q18_large_orders", tpch_q18_large_orders, TPCH_Q18_ORACLE, tags=("composite",)),
+        QuerySpec("tpch_q6_forecast_revenue", tpch_q6_forecast_revenue, TPCH_Q6_ORACLE),
+        QuerySpec("tpch_q16_supplier_cnt", tpch_q16_supplier_cnt, TPCH_Q16_ORACLE),
+        QuerySpec("tpch_q18_large_orders", tpch_q18_large_orders, TPCH_Q18_ORACLE),
     ]
 )
 
@@ -603,8 +598,6 @@ SPECS.append(
         "agg_hll_sketch",
         agg_hll_sketch,
         AGG_HLL_SKETCH_ORACLE,
-        doc="mergeable daily HLL sketches unioned per type; oracle pins the 5% accuracy contract",
-        tags=("composite", "approx", "sketch"),
     )
 )
 
@@ -658,8 +651,6 @@ SPECS.append(
         "analytic_user_paths",
         analytic_user_paths,
         ANALYTIC_USER_PATHS_ORACLE,
-        doc="first-5-event journey paths with user frequencies",
-        tags=("composite", "analytics"),
     )
 )
 
@@ -714,8 +705,6 @@ SPECS.append(
         "agg_theta_distinct_union",
         agg_theta_distinct_union,
         AGG_THETA_DISTINCT_UNION_ORACLE,
-        doc="theta-sketch distinct counts with sketch-level set union ('ALL' row)",
-        tags=("composite", "approx", "sketch"),
     )
 )
 
@@ -773,8 +762,6 @@ SPECS.append(
         "agg_approx_error_eval",
         agg_approx_error_eval,
         AGG_APPROX_ERROR_EVAL_ORACLE,
-        doc="approx sketches judged against exact in-plan; oracle pins the verdicts",
-        tags=("composite", "approx"),
     )
 )
 
@@ -845,8 +832,6 @@ SPECS.append(
         "agg_theta_set_algebra",
         agg_theta_set_algebra,
         AGG_THETA_SET_ALGEBRA_ORACLE,
-        doc="theta-sketch intersection/difference per type pair — exact below nominal",
-        tags=("composite", "approx", "sketch"),
     )
 )
 
@@ -968,8 +953,5 @@ SPECS.append(
         "agg_hll_portable",
         agg_hll_portable,
         AGG_HLL_PORTABLE_ORACLE,
-        doc="hand-rolled HyperLogLog (owned hash family): registers + estimate "
-        "bit-reproducible in SQL, judged vs exact distinct in-engine",
-        tags=("composite", "approx", "sketch"),
     )
 )

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import persist
 from ..spec import QuerySpec
 from ._helpers import h32, spread
 
@@ -161,8 +162,8 @@ def _verified_pairs(sh: DataFrame, candidates: DataFrame) -> DataFrame:
     candidate set is tiny and the shingle table is a bounded blowup
     of the corpus, so persist() — at cluster scale this is the
     checkpoint you'd write before the verification stage anyway."""
-    sh = sh.persist()
-    candidates = candidates.persist()
+    sh = persist(sh)
+    candidates = persist(candidates)
     cand_docs = (
         candidates.select(F.col("doc_a").alias("doc_id"))
         .unionByName(candidates.select(F.col("doc_b").alias("doc_id")))
@@ -284,7 +285,7 @@ def dedup_ngram_jaccard(
     manager, which matches the identical plan: the doc scan + explode
     runs once.
     """
-    sh = _shingle_df(spark, sf_dir, sample_mod=sample_mod).persist()
+    sh = persist(_shingle_df(spark, sf_dir, sample_mod=sample_mod))
     if prefix_filter:
         return _verified_pairs(sh, _prefix_filtered_candidates(sh))
     return _jaccard_scored(_shingle_overlaps(sh))
@@ -402,12 +403,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("ids") > 1)
         .select(F.sort_array("ids").alias("ids"))
     )
-    candidates = (
+    candidates = persist(
         buckets.select(F.explode("ids").alias("doc_a"), "ids")
         .select("doc_a", F.explode("ids").alias("doc_b"))
         .filter(F.col("doc_a") < F.col("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
-        .persist()
     )
     cand_docs = (
         candidates.select(F.col("doc_a").alias("doc_id"))
@@ -732,13 +732,13 @@ WHERE round(list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) >
 
 
 SPECS = [
-    QuerySpec("dedup_exact", dedup_exact, DEDUP_EXACT_ORACLE, tags=("llm", "dedup")),
-    QuerySpec("dedup_ngram_jaccard", dedup_ngram_jaccard, DEDUP_NGRAM_JACCARD_ORACLE, tags=("llm", "dedup")),
-    QuerySpec("dedup_jaccard_prefix", dedup_jaccard_prefix, DEDUP_NGRAM_JACCARD_ORACLE, tags=("llm", "dedup")),
-    QuerySpec("dedup_minhash_lsh", dedup_minhash_lsh, _minhash_oracle(), tags=("llm", "dedup")),
-    QuerySpec("dedup_simhash", dedup_simhash, _simhash_oracle(), tags=("llm", "dedup")),
-    QuerySpec("dedup_simhash_pairs", dedup_simhash_pairs, _simhash_pairs_oracle(), tags=("llm", "dedup")),
-    QuerySpec("dedup_embedding_cosine", dedup_embedding_cosine, DEDUP_EMBEDDING_COSINE_ORACLE, tags=("llm", "dedup")),
+    QuerySpec("dedup_exact", dedup_exact, DEDUP_EXACT_ORACLE),
+    QuerySpec("dedup_ngram_jaccard", dedup_ngram_jaccard, DEDUP_NGRAM_JACCARD_ORACLE),
+    QuerySpec("dedup_jaccard_prefix", dedup_jaccard_prefix, DEDUP_NGRAM_JACCARD_ORACLE),
+    QuerySpec("dedup_minhash_lsh", dedup_minhash_lsh, _minhash_oracle()),
+    QuerySpec("dedup_simhash", dedup_simhash, _simhash_oracle()),
+    QuerySpec("dedup_simhash_pairs", dedup_simhash_pairs, _simhash_pairs_oracle()),
+    QuerySpec("dedup_embedding_cosine", dedup_embedding_cosine, DEDUP_EMBEDDING_COSINE_ORACLE),
 ]
 
 
@@ -801,11 +801,6 @@ SPECS.append(
         "dedup_minhash_mllib",
         dedup_minhash_mllib,
         _minhash_oracle(),
-        doc=(
-            "cross-implementation check: MLlib LSH candidates through the "
-            "same exact-Jaccard verify must equal dedup_minhash_lsh's output"
-        ),
-        tags=("llm", "dedup", "mllib"),
     )
 )
 
@@ -864,8 +859,6 @@ SPECS.append(
         "dedup_levenshtein",
         dedup_levenshtein,
         DEDUP_LEVENSHTEIN_ORACLE,
-        doc="edit-distance entity resolution over the distinct-name dictionary",
-        tags=("llm", "dedup"),
     )
 )
 
@@ -976,8 +969,6 @@ SPECS.append(
         "dedup_levenshtein_passjoin",
         dedup_levenshtein_passjoin,
         DEDUP_LEVENSHTEIN_ORACLE,
-        doc="PassJoin segment blocking for the edit-distance join (VLDB'11)",
-        tags=("llm", "dedup"),
     )
 )
 
@@ -1070,8 +1061,6 @@ SPECS.append(
         "dedup_decontaminate",
         dedup_decontaminate,
         DEDUP_DECONTAMINATE_ORACLE,
-        doc="eval-set decontamination: broadcast eval shingles, containment flag",
-        tags=("llm", "dedup"),
     )
 )
 
@@ -1146,8 +1135,6 @@ SPECS.append(
         "dedup_containment",
         dedup_containment,
         DEDUP_CONTAINMENT_ORACLE,
-        doc="asymmetric subset/superset containment pairs (quote/extension dedup)",
-        tags=("llm", "dedup"),
     )
 )
 
@@ -1236,8 +1223,6 @@ SPECS.append(
         "dedup_substring_spans",
         dedup_substring_spans,
         DEDUP_SUBSTRING_SPANS_ORACLE,
-        doc="Shared 8-token span detection (exact-substring dedup signal).",
-        tags=("llm", "dedup"),
     )
 )
 
@@ -1263,7 +1248,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the whole pipeline has an exact SQL oracle. At 100 TB the
     index is the only state the pipeline keeps; appending today's
     bands to it (one partition write) rolls the window forward."""
-    sh = _shingle_df(spark, sf_dir).persist()
+    sh = persist(_shingle_df(spark, sf_dir))
     is_delta = h32(F.col("doc_id").cast("string")) % _DELTA_MOD == 0
 
     import os  # noqa: PLC0415
@@ -1276,7 +1261,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             "overwrite"
         ).parquet(idx_path)
     base_bands = spark.read.parquet(idx_path)
-    delta_bands = _bands_from_shingles(sh.filter(is_delta)).persist()
+    delta_bands = persist(_bands_from_shingles(sh.filter(is_delta)))
     all_bands = base_bands.unionByName(delta_bands)
     cand = (
         delta_bands.alias("d")
@@ -1307,8 +1292,6 @@ SPECS.append(
         "dedup_incremental_minhash",
         dedup_incremental_minhash,
         _incremental_minhash_oracle(),
-        doc="incremental dedup: new-batch bands vs standing MinHash index",
-        tags=("llm", "dedup"),
     )
 )
 
@@ -1430,8 +1413,6 @@ SPECS.append(
         "dedup_minhash_bbit",
         dedup_minhash_bbit,
         _bbit_oracle(),
-        doc="b-bit minhash: 2-bit slots, collision-corrected Jaccard vs exact",
-        tags=("llm", "dedup"),
     )
 )
 
@@ -1519,7 +1500,12 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             x,
         ).otherwise(acc),
     )
-    assigned = (
+    # consumed THREE times below (both sides of the intra-cluster
+    # pair join + the final audit join) and the differing aliases
+    # defeat ReuseExchange (measured: 0 reused exchanges, K·n dot
+    # products computed 3x; persist takes sf0.1 warm 6.9s -> 5.4s).
+    # Released at the next query's entry (session.persist).
+    assigned = persist(
         emb.crossJoin(F.broadcast(cents1))
         .select("vec_id", "embedding", best.alias("b"))
         .select(
@@ -1528,12 +1514,6 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.cluster").alias("cluster"),
             F.col("b.sim").alias("centroid_sim"),
         )
-        # consumed THREE times below (both sides of the intra-cluster
-        # pair join + the final audit join) and the differing aliases
-        # defeat ReuseExchange (measured: 0 reused exchanges, K·n dot
-        # products computed 3x; persist takes sf0.1 warm 6.9s -> 5.4s).
-        # Released by the __spark_entry__ cache lifecycle.
-        .persist()
     )
     v = assigned.select(
         F.col("vec_id"), "embedding", "cluster", "centroid_sim"
@@ -1620,8 +1600,6 @@ SPECS.append(
         "dedup_semdedup",
         dedup_semdedup,
         DEDUP_SEMDEDUP_ORACLE,
-        doc="SemDeDup: seed-centroid clusters, intra-cluster cosine dups, keep-lowest-centroid-sim",
-        tags=("llm", "dedup", "embedding"),
     )
 )
 
@@ -1783,8 +1761,6 @@ SPECS.append(
         "dedup_fellegi_sunter",
         dedup_fellegi_sunter,
         _fs_oracle(),
-        doc="Fellegi-Sunter linkage weight table: blocked pairs, exact u-probabilities",
-        tags=("llm", "dedup", "stats"),
     )
 )
 
@@ -1849,8 +1825,6 @@ SPECS.append(
         "dedup_token_sort",
         dedup_token_sort,
         DEDUP_TOKEN_SORT_ORACLE,
-        doc="order-insensitive exact dup groups via sorted-token canonical key",
-        tags=("llm", "dedup"),
     )
 )
 
@@ -1948,8 +1922,6 @@ SPECS.append(
         "sim_corpus_overlap",
         sim_corpus_overlap,
         _corpus_overlap_oracle(),
-        doc="source-pair corpus overlap from mergeable per-source MinHash",
-        tags=("llm", "dedup", "similarity"),
     )
 )
 
@@ -2081,8 +2053,6 @@ SPECS.append(
         "dedup_jaro_winkler",
         dedup_jaro_winkler,
         DEDUP_JARO_WINKLER_ORACLE,
-        doc="Jaro-Winkler linkage scores, blocked equi-join, cross-implementation oracle",
-        tags=("llm", "dedup"),
     )
 )
 
@@ -2236,8 +2206,6 @@ SPECS.append(
         "dedup_bloom_archive",
         dedup_bloom_archive,
         _bloom_oracle(),
-        doc="portable Bloom-filter archive dedup with measured false-positive audit",
-        tags=("llm", "dedup", "scale"),
     )
 )
 
@@ -2286,7 +2254,7 @@ def dedup_minhash_oph(
     # dedup_ngram_jaccard consume the same persisted (doc_id, shingle)
     # relation (its identical persist() plan hits this cache), so the
     # doc scan + split + explode runs once, not twice.
-    sh = _shingle_df(spark, sf_dir, sample_mod=sample_mod).persist()
+    sh = persist(_shingle_df(spark, sf_dir, sample_mod=sample_mod))
     hv = h32(F.concat(F.lit("oph:"), F.col("shingle")))
     raw = (
         sh.select(
@@ -2410,8 +2378,6 @@ SPECS.append(
         "dedup_minhash_oph",
         dedup_minhash_oph,
         DEDUP_MINHASH_OPH_ORACLE.replace("{thr}", str(JACCARD_THRESHOLD)),
-        doc="one-permutation MinHash + rotation densification; estimate audited vs exact Jaccard",
-        tags=("llm", "dedup", "scale"),
     )
 )
 
@@ -2441,9 +2407,6 @@ SPECS.append(
             "FROM documents)",
             f"FROM documents WHERE {_OPH_SAMPLE_PRED})",
         ),
-        doc="OPH estimator audit on a deterministic 1/2 doc sample — "
-        "the bounded-cost form of the exact-join accuracy audit",
-        tags=("llm", "dedup", "scale"),
     )
 )
 
@@ -2555,8 +2518,6 @@ SPECS.append(
         "dedup_cdc_chunks",
         dedup_cdc_chunks,
         DEDUP_CDC_CHUNKS_ORACLE,
-        doc="content-defined chunking (rsync/LBFS rule): shift-robust shared-content ledger",
-        tags=("llm", "dedup", "scale"),
     )
 )
 
@@ -2586,16 +2547,16 @@ def dedup_method_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Each pair set appears several times in the union plan (its own
     # count, the overlap join, the exact-total denominator); persist
     # so each dedup pipeline executes ONCE, not once per occurrence.
-    ex = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b").persist()
+    ex = persist(dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b"))
     methods = [
         ("exact_jaccard", ex),
         (
             "minhash_lsh",
-            dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b").persist(),
+            persist(dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")),
         ),
         (
             "simhash_h3",
-            dedup_simhash_pairs(spark, sf_dir).select("doc_a", "doc_b").persist(),
+            persist(dedup_simhash_pairs(spark, sf_dir).select("doc_a", "doc_b")),
         ),
     ]
     ex_n = ex.agg(F.count(F.lit(1)).alias("n_exact"))
@@ -2660,8 +2621,5 @@ SPECS.append(
         "dedup_method_matrix",
         dedup_method_matrix,
         _method_matrix_oracle(),
-        doc="dedup-variant agreement audit: exact vs MinHash-LSH vs SimHash, "
-        "precision/recall in-engine (sim_ann_recall_matrix pattern)",
-        tags=("llm", "dedup"),
     )
 )

@@ -190,13 +190,13 @@ FROM documents
 
 
 SPECS = [
-    QuerySpec("fn_coalesce", fn_coalesce, FN_COALESCE_ORACLE, tags=("functions",)),
-    QuerySpec("fn_str_format", fn_str_format, FN_STR_FORMAT_ORACLE, tags=("functions",)),
-    QuerySpec("fn_str_ops", fn_str_ops, FN_STR_OPS_ORACLE, tags=("functions",)),
-    QuerySpec("fn_date_ops", fn_date_ops, FN_DATE_OPS_ORACLE, tags=("functions",)),
-    QuerySpec("fn_array_ops", fn_array_ops, FN_ARRAY_OPS_ORACLE, tags=("functions",)),
-    QuerySpec("fn_json_pretty", fn_json_pretty, FN_JSON_PRETTY_ORACLE, tags=("functions",)),
-    QuerySpec("udf_smiles_canonical", udf_canonicalize, UDF_CANONICALIZE_ORACLE, tags=("functions", "udf")),
+    QuerySpec("fn_coalesce", fn_coalesce, FN_COALESCE_ORACLE),
+    QuerySpec("fn_str_format", fn_str_format, FN_STR_FORMAT_ORACLE),
+    QuerySpec("fn_str_ops", fn_str_ops, FN_STR_OPS_ORACLE),
+    QuerySpec("fn_date_ops", fn_date_ops, FN_DATE_OPS_ORACLE),
+    QuerySpec("fn_array_ops", fn_array_ops, FN_ARRAY_OPS_ORACLE),
+    QuerySpec("fn_json_pretty", fn_json_pretty, FN_JSON_PRETTY_ORACLE),
+    QuerySpec("udf_smiles_canonical", udf_canonicalize, UDF_CANONICALIZE_ORACLE),
 ]
 
 
@@ -224,7 +224,7 @@ FROM supplier GROUP BY s_nationkey
 """
 
 SPECS.append(
-    QuerySpec("fn_string_agg", fn_string_agg, FN_STRING_AGG_ORACLE, tags=("functions",))
+    QuerySpec("fn_string_agg", fn_string_agg, FN_STRING_AGG_ORACLE)
 )
 
 
@@ -264,8 +264,6 @@ SPECS.append(
         "fn_map_ops",
         fn_map_ops,
         FN_MAP_OPS_ORACLE,
-        doc="MapType surface: JSON props as map<string,long>, map fn scalars.",
-        tags=("functions",),
     )
 )
 
@@ -328,8 +326,6 @@ SPECS.append(
         "udf_grouped_agg_median",
         udf_grouped_agg_median,
         UDF_GROUPED_AGG_MEDIAN_ORACLE,
-        doc="GROUPED_AGG pandas UDF: exact integer-cents median per group.",
-        tags=("functions", "udf"),
     )
 )
 
@@ -375,8 +371,6 @@ SPECS.append(
         "fn_variant_json",
         fn_variant_json,
         FN_VARIANT_JSON_ORACLE,
-        doc="Spark 4 VARIANT: parse-once typed JSON access with corrupt-row tolerance",
-        tags=("functions", "variant"),
     )
 )
 
@@ -426,8 +420,6 @@ SPECS.append(
         "udf_arrow_map_batches",
         udf_arrow_map_batches,
         UDF_ARROW_MAP_BATCHES_ORACLE,
-        doc="mapInArrow: raw RecordBatch iteration with pyarrow.compute kernels",
-        tags=("functions", "udf", "arrow"),
     )
 )
 
@@ -534,22 +526,16 @@ SPECS.extend(
             "fn_collation_compare",
             fn_collation_compare,
             FN_COLLATION_COMPARE_ORACLE,
-            doc="Spark 4 collations: UTF8_LCASE distinct-count vs binary",
-            tags=("functions", "collation"),
         ),
         QuerySpec(
             "fn_xml_roundtrip",
             fn_xml_roundtrip,
             FN_XML_ROUNDTRIP_ORACLE,
-            doc="to_xml/from_xml lossless round trip against the original columns",
-            tags=("functions", "xml"),
         ),
         QuerySpec(
             "fn_url_parse",
             fn_url_parse,
             FN_URL_PARSE_ORACLE,
-            doc="parse_url host/path/query extraction vs string-arithmetic oracle",
-            tags=("functions", "url"),
         ),
     ]
 )
@@ -595,8 +581,6 @@ SPECS.append(
         "fn_try_arithmetic",
         fn_try_arithmetic,
         FN_TRY_ARITHMETIC_ORACLE,
-        doc="ANSI try_* family: div-zero/bad-cast/overflow become NULLs, not failed jobs",
-        tags=("functions", "ansi"),
     )
 )
 
@@ -640,8 +624,6 @@ SPECS.append(
         "fn_interval_ops",
         fn_interval_ops,
         FN_INTERVAL_OPS_ORACLE,
-        doc="interval arithmetic: +INTERVAL, date_add, add_months clamp, datediff, last_day",
-        tags=("functions", "temporal"),
     )
 )
 
@@ -684,8 +666,6 @@ SPECS.append(
         "fn_lambda_ops",
         fn_lambda_ops,
         FN_LAMBDA_OPS_ORACLE,
-        doc="higher-order lambdas: transform/filter/exists/forall/aggregate",
-        tags=("functions", "lambda"),
     )
 )
 
@@ -745,8 +725,6 @@ SPECS.append(
         "fn_column_protection",
         fn_column_protection,
         FN_COLUMN_PROTECTION_ORACLE,
-        doc="PII masking + AES roundtrip; oracle pins mask bytes and PKCS7 length",
-        tags=("core", "fn", "governance"),
     )
 )
 
@@ -802,8 +780,6 @@ SPECS.append(
         "udf_scalar_iter",
         udf_scalar_iter,
         UDF_SCALAR_ITER_ORACLE,
-        doc="SCALAR_ITER pandas UDF: per-worker regex compile amortized over Arrow batches",
-        tags=("functions", "udf"),
     )
 )
 
@@ -865,8 +841,6 @@ SPECS.append(
         "fn_sql_udf",
         fn_sql_udf,
         FN_SQL_UDF_ORACLE,
-        doc="Spark 4 SQL UDF — Catalyst-inlined scalar function, no Python boundary",
-        tags=("functions", "sql"),
     )
 )
 
@@ -930,8 +904,6 @@ SPECS.append(
         "udf_window_pandas",
         udf_window_pandas,
         UDF_WINDOW_PANDAS_ORACLE,
-        doc="GROUPED_AGG pandas UDF over a rolling window (WindowInPandas node)",
-        tags=("functions", "udf", "window"),
     )
 )
 
@@ -998,8 +970,6 @@ SPECS.append(
         "udf_arrow_python",
         udf_arrow_python,
         UDF_ARROW_PYTHON_ORACLE,
-        doc="Arrow-optimized plain Python UDF (useArrow) with SQL-twin kernel",
-        tags=("functions", "udf"),
     )
 )
 
@@ -1062,8 +1032,6 @@ SPECS.append(
         "fn_uuid_deterministic",
         fn_uuid_deterministic,
         FN_UUID_DETERMINISTIC_ORACLE,
-        doc="UUIDv5-style deterministic content IDs, reload-stable",
-        tags=("functions",),
     )
 )
 
@@ -1180,8 +1148,6 @@ SPECS.append(
         "udf_cogrouped_merge",
         udf_cogrouped_merge,
         UDF_COGROUPED_MERGE_ORACLE,
-        doc="cogrouped applyInPandas: both sides of a key in one Python merge fn",
-        tags=("udf", "functions"),
     )
 )
 
@@ -1246,8 +1212,6 @@ SPECS.append(
         "proj_withfield",
         proj_withfield,
         PROJ_WITHFIELD_ORACLE,
-        doc="withField/dropFields nested-struct surgery, flattened audit",
-        tags=("projection", "functions"),
     )
 )
 
@@ -1301,8 +1265,6 @@ SPECS.append(
         "fn_timezone_ops",
         fn_timezone_ops,
         FN_TIMEZONE_OPS_ORACLE,
-        doc="IANA tz conversions (JVM tzdb vs DuckDB ICU hash-checked), local-hour flags",
-        tags=("functions",),
     )
 )
 
@@ -1364,7 +1326,5 @@ SPECS.append(
         "fn_bitwise_ops",
         fn_bitwise_ops,
         FN_BITWISE_OPS_ORACLE,
-        doc="bitwise scalar (shift/and/or/xor/popcount) + BIT_AND/OR/XOR aggregates",
-        tags=("functions",),
     )
 )

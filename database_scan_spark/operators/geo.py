@@ -134,8 +134,6 @@ SPECS = [
         "geo_radius_join",
         geo_radius_join,
         GEO_RADIUS_JOIN_ORACLE,
-        doc="grid-cell-blocked spatial radius join (3x3 neighbor cover, exact verify)",
-        tags=("geo", "join", "scale"),
     ),
 ]
 
@@ -178,8 +176,6 @@ SPECS.append(
         "geo_knn_join",
         geo_knn_join,
         GEO_KNN_JOIN_ORACLE,
-        doc="radius-bounded spatial kNN: per-point window over cell candidates only",
-        tags=("geo", "join"),
     )
 )
 
@@ -272,8 +268,6 @@ SPECS.append(
         "geo_point_in_polygon",
         geo_point_in_polygon,
         _pip_oracle(),
-        doc="ray-casting geofence test as row-local static edge terms (no join)",
-        tags=("geo",),
     )
 )
 
@@ -381,7 +375,5 @@ SPECS.append(
         "geo_geohash_encode",
         geo_geohash_encode,
         _geohash_oracle(),
-        doc="closed-form integer geohash encode + 4-char prefix occupancy",
-        tags=("geo",),
     )
 )

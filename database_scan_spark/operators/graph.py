@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import persist
 from ..spec import QuerySpec
 
 SCALE = 10**12
@@ -72,7 +73,7 @@ def _rank_rounds(
     those columns). Each round a node keeps ``teleport + 85% of its
     inflow``, the inflow being every in-neighbour's rank split by edge
     weight (integer div). Returns the final ranks with ``n_name``."""
-    edges = _trade_edges(spark, sf_dir).persist()
+    edges = persist(_trade_edges(spark, sf_dir))
     out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
     keep = [*nodes.columns, *consts.columns]
     ranks = nodes.crossJoin(F.broadcast(consts)).select(*keep, F.expr(init).alias("rank"))
@@ -160,8 +161,6 @@ SPECS = [
         "graph_pagerank",
         graph_pagerank,
         _pagerank_oracle(),
-        doc="weighted PageRank, 3 unrolled iterations, exact scaled-integer ranks",
-        tags=("graph", "analytics"),
     ),
 ]
 
@@ -175,7 +174,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (≤ nations² rows after the weight aggregate) is dimension-
     sized, so both joins broadcast; the heavy work stays in the one
     fact-fact aggregate that built the edges."""
-    und = _undirected_pairs(spark, sf_dir).distinct().persist()
+    und = persist(_undirected_pairs(spark, sf_dir).distinct())
     e1 = und.select(F.col("a").alias("t_a"), F.col("b").alias("t_b"))
     e2 = und.select(F.col("a").alias("t_b2"), F.col("b").alias("t_c"))
     e3 = und.select(F.col("a").alias("t_a3"), F.col("b").alias("t_c3"))
@@ -225,8 +224,6 @@ SPECS.append(
         "graph_triangle_count",
         graph_triangle_count,
         GRAPH_TRIANGLE_COUNT_ORACLE,
-        doc="per-node triangle counts via canonical-edge double self-join",
-        tags=("graph", "analytics"),
     )
 )
 
@@ -250,11 +247,10 @@ def graph_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge list dominates; the unrolled rounds stay dimension-sized."""
     weighted = _trade_edges(spark, sf_dir).filter(F.col("src") != F.col("dst"))
     rn = F.row_number().over(Window.partitionBy("src").orderBy(F.desc("w"), F.asc("dst")))
-    edges = (
+    edges = persist(
         weighted.withColumn("rn", rn)
         .filter(F.col("rn") <= BFS_FANOUT)
         .select("src", "dst")
-        .persist()
     )
     nation = load(spark, sf_dir, "nation")
     dist = nation.filter(F.col("n_nationkey") == BFS_SEED).select(
@@ -305,8 +301,6 @@ SPECS.append(
         "graph_shortest_path",
         graph_shortest_path,
         GRAPH_SHORTEST_PATH_ORACLE,
-        doc="bounded-depth BFS shortest path, unrolled rounds vs recursive-CTE oracle",
-        tags=("graph", "analytics"),
     )
 )
 
@@ -353,7 +347,7 @@ def _sparsified_pairs(spark: SparkSession, sf_dir: str):
     # The relation is dimension-bounded (≤ nation² undirected pairs,
     # ≤300 rows), so one tracked persist removes an entire fact join
     # at any scale for the cost of caching a few hundred rows.
-    pairs = (
+    pairs = persist(
         _trade_edges(spark, sf_dir)
         .filter(F.col("src") != F.col("dst"))
         .select(
@@ -363,7 +357,6 @@ def _sparsified_pairs(spark: SparkSession, sf_dir: str):
         )
         .groupBy("a", "b")
         .agg(F.sum("w").alias("w"))
-        .persist()
     )
     dirs = (
         pairs.select("a", "b", "w")
@@ -420,7 +413,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the standard per-key top-k shuffle, bounded output k·|V|."""
     pairs, kept = _sparsified_pairs(spark, sf_dir)
     sparse = F.broadcast(kept).join(pairs, ["a", "b"])
-    edges = (
+    edges = persist(
         sparse.select("a", "b", "w")
         .unionByName(
             sparse.select(
@@ -428,7 +421,6 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .select(F.col("a").alias("src"), F.col("b").alias("dst"), "w")
-        .persist()
     )
     nodes = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("node")
@@ -537,8 +529,6 @@ SPECS.append(
         "graph_label_propagation",
         graph_label_propagation,
         _lpa_oracle(),
-        doc="deterministic synchronous LPA communities, 3 unrolled rounds",
-        tags=("graph", "analytics"),
     )
 )
 
@@ -570,8 +560,6 @@ SPECS.append(
         "graph_degree_histogram",
         graph_degree_histogram,
         GRAPH_DEGREE_HISTOGRAM_ORACLE,
-        doc="degree distribution of the trade graph (skew diagnosis for graph ops)",
-        tags=("graph",),
     )
 )
 
@@ -584,9 +572,11 @@ def _linkpred_build(spark: SparkSession, sf_dir: str):
     ``_sparsified_pairs`` so the construction stays in lockstep with
     ``graph_label_propagation`` by sharing code, not by copy."""
     _pairs, kept = _sparsified_pairs(spark, sf_dir)
-    return kept.select("a", "b").unionByName(
-        kept.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).select(F.col("a").alias("src"), F.col("b").alias("dst")).persist()
+    return persist(
+        kept.select("a", "b")
+        .unionByName(kept.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    )
 
 
 def graph_link_prediction_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -703,8 +693,6 @@ SPECS.append(
         "graph_link_prediction",
         graph_link_prediction_impl,
         GRAPH_LINK_PREDICTION_ORACLE,
-        doc="common-neighbor Jaccard link prediction over two-hop candidates only",
-        tags=("graph", "analytics"),
     )
 )
 
@@ -764,7 +752,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     weights, promote the two sums to DECIMAL(38,0) — shape
     unchanged). Iterations run on the ≤ nations² edge relation; the
     fact-scale work is the ONE edge-building aggregate."""
-    edges = _trade_edges(spark, sf_dir).persist()
+    edges = persist(_trade_edges(spark, sf_dir))
     nodes = load(spark, sf_dir, "nation").select(F.col("n_nationkey").alias("node"))
     hubs = nodes.select("node", F.lit(SCALE).cast("bigint").alias("h"))
     auth = None
@@ -868,8 +856,6 @@ SPECS.append(
         "graph_hits",
         graph_hits,
         _hits_oracle(),
-        doc="HITS hubs/authorities — scaled-BIGINT half-rounds with integer renormalization",
-        tags=("core", "graph", "iterative"),
     )
 )
 
@@ -915,7 +901,7 @@ def graph_random_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # WALK_STEPS unrolled joins — without the cache the single-scan
     # posture rests on ReuseExchange unifying 3 identical fact-agg
     # subtrees, which AQE re-optimization is not guaranteed to keep
-    nbr = ranked.join(degree, "src").persist()
+    nbr = persist(ranked.join(degree, "src"))
     walk = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("start")
     ).withColumn("cur", F.col("start"))
@@ -987,8 +973,6 @@ SPECS.append(
         "graph_random_walk",
         graph_random_walk,
         _walk_oracle(),
-        doc="hash-seeded deterministic walks — DeepWalk corpus generation, 3 unrolled hops",
-        tags=("core", "graph", "llm"),
     )
 )
 
@@ -1027,11 +1011,10 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted: each fixpoint round's localCheckpoint/count action
     # would otherwise re-run the fact-scale edge aggregate through
     # this subtree's lineage (only frontier/closure are checkpointed)
-    edges = (
+    edges = persist(
         edges_w.withColumn("rk", F.row_number().over(w_rk))
         .filter(F.col("rk") <= _SCC_TOPK)
         .select(F.col("src").cast("long"), F.col("dst").cast("long"))
-        .persist()
     )
     nodes = (
         load(spark, sf_dir, "nation")
@@ -1125,8 +1108,6 @@ SPECS.append(
         "graph_scc",
         graph_scc,
         GRAPH_SCC_ORACLE,
-        doc="SCC via semi-naive closure to fixpoint on the sparsified trade graph",
-        tags=("graph",),
     )
 )
 
@@ -1153,7 +1134,7 @@ def graph_neighborhood_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output per radius t: pairs reached, newly reached pairs, and the
     reached fraction in ppm — the curve whose 90% crossing is the
     effective diameter."""
-    edges = _trade_edges(spark, sf_dir).select("src", "dst").persist()
+    edges = persist(_trade_edges(spark, sf_dir).select("src", "dst"))
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
@@ -1196,13 +1177,12 @@ def graph_neighborhood_function(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("src").alias("node"))
             .agg(F.bit_or("ball").alias("nbr_ball"))
         )
-        balls = (
+        balls = persist(
             balls.join(nbr, "node", "left")
             .select(
                 "node",
                 F.col("ball").bitwiseOR(F.coalesce("nbr_ball", F.lit(0))).alias("ball"),
             )
-            .persist()
         )
         rows.append(
             balls.agg(
@@ -1280,8 +1260,6 @@ SPECS.append(
         "graph_neighborhood_function",
         graph_neighborhood_function,
         _nf_oracle(),
-        doc="HyperBall dataflow (exact bitsets at this scale): N(t) curve, effective-diameter readout",
-        tags=("graph", "scale"),
     )
 )
 
@@ -1400,8 +1378,5 @@ SPECS.append(
         "graph_ppr",
         graph_ppr,
         _ppr_oracle(),
-        doc="personalized PageRank from a region seed set — the web-graph "
-        "trust-propagation curation signal, exact scaled-integer rounds",
-        tags=("graph", "analytics", "llm"),
     )
 )

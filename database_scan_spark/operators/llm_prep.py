@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import persist
 from ..spec import QuerySpec
 from ._helpers import h32, spread
 
@@ -221,29 +222,21 @@ SPECS = [
         name="wf_chunk_documents",
         fn=wf_chunk_documents,
         oracle=WF_CHUNK_DOCUMENTS_ORACLE,
-        doc="overlapping token-window chunking into training sequences (narrow, shuffle-free)",
-        tags=("llm", "workflow"),
     ),
     QuerySpec(
         name="wf_data_mixture",
         fn=wf_data_mixture,
         oracle=WF_DATA_MIXTURE_ORACLE,
-        doc="deterministic per-source mixture sampling audit (hash-threshold membership)",
-        tags=("llm", "workflow"),
     ),
     QuerySpec(
         name="text_ngram_topk",
         fn=text_ngram_topk,
         oracle=TEXT_NGRAM_TOPK_ORACLE,
-        doc="corpus bigram vocabulary: top-5 per language, explicit total order",
-        tags=("llm", "text"),
     ),
     QuerySpec(
         name="win_forward_fill",
         fn=win_forward_fill,
         oracle=WIN_FORWARD_FILL_ORACLE,
-        doc="last-observation-carried-forward imputation per user (streaming window frame)",
-        tags=("window",),
     ),
 ]
 
@@ -368,7 +361,7 @@ def analytic_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deliberately NOT persisted: the distinct basket table feeds four
     consumers, but its shuffle output is identical for all of them,
     so Spark's ReuseExchange serves every branch from ONE
-    materialized exchange — while an explicit .persist() replaces
+    materialized exchange — while an explicit persist replaces
     that with an InMemoryRelation whose columnar cache scans block
     whole-stage codegen fusion and AQE stage reuse (measured at
     sf0.01/local[8]: 26-37 s cached vs 0.7-1.2 s uncached, a 30x
@@ -529,29 +522,21 @@ SPECS.extend(
             name="win_ewma",
             fn=win_ewma,
             oracle=_ewma_oracle(),
-            doc="EWMA smoothing, alpha=1/2 truncated to 8 exact power-of-two weights",
-            tags=("window", "analytics"),
         ),
         QuerySpec(
             name="text_surprisal",
             fn=text_surprisal,
             oracle=TEXT_SURPRISAL_ORACLE,
-            doc="unigram surprisal quality score, integer-bit quantized (perplexity proxy)",
-            tags=("llm", "text"),
         ),
         QuerySpec(
             name="analytic_market_basket",
             fn=analytic_market_basket,
             oracle=ANALYTIC_MARKET_BASKET_ORACLE,
-            doc="association rules over order baskets: support / pair counts / lift top-k",
-            tags=("analytics",),
         ),
         QuerySpec(
             name="udtf_rle_tokens",
             fn=udtf_rle_tokens,
             oracle=UDTF_RLE_TOKENS_ORACLE,
-            doc="Python UDTF (Arrow) run-length encoding vs gaps-and-islands SQL oracle",
-            tags=("llm", "udf"),
         ),
     ]
 )
@@ -642,8 +627,6 @@ SPECS.append(
         name="udtf_analyze_parse",
         fn=udtf_analyze_parse,
         oracle=UDTF_ANALYZE_PARSE_ORACLE,
-        doc="polymorphic UDTF: analyze() derives typed output schema from the format arg",
-        tags=("llm", "udf"),
     )
 )
 
@@ -812,8 +795,6 @@ SPECS.append(
         "text_bpe_train",
         text_bpe_train,
         _bpe_train_oracle(),
-        doc="BPE merge induction (3 unrolled rounds) over the word-frequency table",
-        tags=("llm", "text"),
     )
 )
 
@@ -887,8 +868,6 @@ SPECS.append(
         "text_bpe_apply",
         text_bpe_apply,
         _bpe_apply_oracle(),
-        doc="tokenize the corpus with the learned BPE merges; per-doc compression",
-        tags=("llm", "text"),
     )
 )
 
@@ -984,8 +963,6 @@ SPECS.append(
         name="udtf_table_arg",
         fn=udtf_table_arg,
         oracle=UDTF_TABLE_ARG_ORACLE,
-        doc="UDTF over TABLE(...) PARTITION BY/ORDER BY: per-user burst summary",
-        tags=("udf", "llm"),
     )
 )
 
@@ -1118,8 +1095,6 @@ SPECS.append(
         name="wf_fair_share_budget",
         fn=wf_fair_share_budget,
         oracle=WF_FAIR_SHARE_BUDGET_ORACLE,
-        doc="closed-form max-min fair token-budget allocation across sources",
-        tags=("workflow", "llm"),
     )
 )
 
@@ -1226,8 +1201,6 @@ SPECS.append(
         "wf_mixture_temperature",
         wf_mixture_temperature,
         WF_MIXTURE_TEMPERATURE_ORACLE,
-        doc="n^alpha temperature mixing with exact largest-remainder integer budget",
-        tags=("llm", "workflow"),
     )
 )
 
@@ -1326,8 +1299,6 @@ SPECS.append(
         "wf_sft_format",
         wf_sft_format,
         WF_SFT_FORMAT_ORACLE,
-        doc="chat-template SFT rendering with char-offset loss-mask boundary",
-        tags=("llm", "workflow"),
     )
 )
 
@@ -1445,8 +1416,6 @@ SPECS.append(
         "wf_curriculum_schedule",
         wf_curriculum_schedule,
         WF_CURRICULUM_SCHEDULE_ORACLE,
-        doc="easy-to-hard curriculum phases, equal token budgets via difficulty histogram",
-        tags=("llm", "workflow"),
     )
 )
 
@@ -1515,8 +1484,6 @@ SPECS.append(
         "wf_active_learning_select",
         wf_active_learning_select,
         _al_oracle(),
-        doc="uncertainty-sampling annotation batch with per-source caps, reproducible order",
-        tags=("llm", "workflow"),
     )
 )
 
@@ -1618,8 +1585,6 @@ SPECS.append(
         "wf_dpo_pair_builder",
         wf_dpo_pair_builder,
         _dpo_oracle(),
-        doc="DPO preference pairs: near-dup variants ordered by quality score, gap + tie flag",
-        tags=("llm", "workflow"),
     )
 )
 
@@ -1743,9 +1708,6 @@ SPECS.append(
         "wf_dsir_select",
         wf_dsir_select,
         WF_DSIR_SELECT_ORACLE,
-        doc="DSIR importance resampling (Xie '23): bucket LMs broadcast, "
-        "integer micro-nat scores, top-K pool selection",
-        tags=("llm", "workflow"),
     )
 )
 
@@ -1881,7 +1843,7 @@ def text_ccnet_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate and window input would otherwise each replay the
     # expensive token-stream joins (session cache contract: released
     # at next query entry)
-    out = out.persist()
+    out = persist(out)
     n_docs = out.agg(F.count(F.lit(1)).alias("_n"))
     g = global_order(
         out,
@@ -1945,8 +1907,5 @@ SPECS.append(
         "text_ccnet_perplexity",
         text_ccnet_perplexity,
         TEXT_CCNET_PERPLEXITY_ORACLE,
-        doc="CCNet perplexity buckets (Wenzek '20): self-trained interpolated "
-        "bigram LM, integer micro-nat surprisal, head/middle/tail terciles",
-        tags=("llm", "text"),
     )
 )

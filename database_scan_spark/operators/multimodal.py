@@ -462,25 +462,19 @@ SPECS = [
         "src_binary_files",
         src_binary_files,
         MM_DECODE_REAL_ORACLE,
-        doc="binaryFile-source media ingest: staged real blob files, header parse.",
-        tags=("llm", "multimodal", "source"),
     ),
     QuerySpec(
         "mm_decode_real",
         mm_decode_real,
         MM_DECODE_REAL_ORACLE,
-        doc="Real BMP/WAV construct→header-parse roundtrip (vendored pure-Python codec).",
-        tags=("llm", "multimodal", "udf"),
     ),
-    QuerySpec("mm_decode_meta", mm_decode_meta, MM_DECODE_META_ORACLE, tags=("llm", "multimodal", "udf")),
-    QuerySpec("mm_feature_extract", mm_feature_extract, MM_FEATURE_EXTRACT_ORACLE, tags=("llm", "multimodal", "udf")),
-    QuerySpec("mm_frame_sample", mm_frame_sample, MM_FRAME_SAMPLE_ORACLE, tags=("llm", "multimodal")),
+    QuerySpec("mm_decode_meta", mm_decode_meta, MM_DECODE_META_ORACLE),
+    QuerySpec("mm_feature_extract", mm_feature_extract, MM_FEATURE_EXTRACT_ORACLE),
+    QuerySpec("mm_frame_sample", mm_frame_sample, MM_FRAME_SAMPLE_ORACLE),
     QuerySpec(
         "mm_resize",
         mm_resize,
         MM_RESIZE_ORACLE,
-        doc="aspect-fit resize plan over real decoded BMP dims (vendored codec)",
-        tags=("llm", "multimodal"),
     ),
 ]
 
@@ -685,8 +679,6 @@ SPECS.append(
         "mm_audio_energy",
         mm_audio_energy,
         MM_AUDIO_ENERGY_ORACLE,
-        doc="real windowed PCM energy from the WAV data chunk, byte-exact oracle",
-        tags=("llm", "multimodal", "udf"),
     )
 )
 
@@ -772,8 +764,6 @@ SPECS.append(
         "mm_image_rowsum",
         mm_image_rowsum,
         MM_IMAGE_ROWSUM_ORACLE,
-        doc="real BMP pixel-row luminance sums, header/stride/tiling pinned by oracle",
-        tags=("llm", "multimodal", "udf"),
     )
 )
 
@@ -950,8 +940,6 @@ SPECS.append(
         "mm_phash_pairs",
         mm_phash_pairs,
         MM_PHASH_PAIRS_ORACLE,
-        doc="aHash perceptual image near-dup: real BMP decode, banded candidates, exact Hamming",
-        tags=("llm", "multimodal", "dedup"),
     )
 )
 
@@ -1031,8 +1019,6 @@ SPECS.append(
         "mm_vad_segments",
         mm_vad_segments,
         MM_VAD_SEGMENTS_ORACLE,
-        doc="VAD segmentation: real WAV energy windows + gaps-and-islands, integer-exact",
-        tags=("llm", "multimodal", "udf"),
     )
 )
 
@@ -1161,8 +1147,6 @@ SPECS.append(
         "mm_audio_fingerprint",
         mm_audio_fingerprint,
         MM_AUDIO_FINGERPRINT_ORACLE,
-        doc="landmark-pair audio fingerprint matching over real WAV energy peaks",
-        tags=("llm", "multimodal", "dedup"),
     )
 )
 
@@ -1268,8 +1252,6 @@ SPECS.append(
         "mm_audio_snr",
         mm_audio_snr,
         MM_AUDIO_SNR_ORACLE,
-        doc="per-clip SNR from real WAV energy windows (voiced vs unvoiced)",
-        tags=("llm", "multimodal", "quality"),
     )
 )
 
@@ -1439,8 +1421,6 @@ SPECS.append(
         "mm_png_roundtrip",
         mm_png_roundtrip,
         MM_PNG_ROUNDTRIP_ORACLE,
-        doc="real PNG encode->decode (stdlib zlib, CRC chunks, filter inverse), closed-form oracle",
-        tags=("llm", "multimodal"),
     )
 )
 
@@ -1553,8 +1533,6 @@ SPECS.append(
         "mm_thumbnail_real",
         mm_thumbnail_real,
         MM_THUMBNAIL_REAL_ORACLE,
-        doc="real BMP G×G box-filter thumbnail (exact integer luminance cells)",
-        tags=("llm", "multimodal"),
     )
 )
 
@@ -1673,8 +1651,6 @@ SPECS.append(
         "mm_image_edge_density",
         mm_image_edge_density,
         MM_IMAGE_EDGE_DENSITY_ORACLE,
-        doc="real-pixel gradient density gate; closed-form neighbor-byte oracle, no self-join",
-        tags=("llm", "multimodal", "udf"),
     )
 )
 
@@ -1765,7 +1741,5 @@ SPECS.append(
         "mm_audio_clipping",
         mm_audio_clipping,
         MM_AUDIO_CLIPPING_ORACLE,
-        doc="signed PCM16 clipping-rate gate; two's-complement byte-exact oracle",
-        tags=("llm", "multimodal", "udf"),
     )
 )

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators._helpers import global_order
+from ..session import persist
 from ..spec import QuerySpec
 
 
@@ -181,15 +182,11 @@ SPECS = [
         "dq_constraint_audit",
         dq_constraint_audit,
         DQ_CONSTRAINT_AUDIT_ORACLE,
-        doc="dbt/Deequ-style constraint audit: FK orphans, uniqueness, domains, ranges",
-        tags=("quality", "audit"),
     ),
     QuerySpec(
         "dq_profile_numeric",
         dq_profile_numeric,
         DQ_PROFILE_NUMERIC_ORACLE,
-        doc="numeric column profile of lineitem (nulls, distincts, exact min/max)",
-        tags=("quality", "profile"),
     ),
 ]
 
@@ -277,8 +274,6 @@ SPECS.append(
         "dq_correlation",
         dq_correlation,
         DQ_CORRELATION_ORACLE,
-        doc="Pearson correlation matrix from exact decimal sufficient statistics",
-        tags=("quality", "profile"),
     )
 )
 
@@ -339,8 +334,6 @@ SPECS.append(
         "dq_observed_metrics",
         dq_observed_metrics,
         DQ_OBSERVED_METRICS_ORACLE,
-        doc="df.observe audit metrics piggybacked on the gated write (no second scan)",
-        tags=("quality", "observe"),
     )
 )
 
@@ -380,7 +373,7 @@ def dq_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted: j feeds both the MAD aggregate and the flagging pass;
     # uncached, each action's lineage re-scans events (and recomputes
     # med inside it) — five passes where the docstring promises three
-    j = ev.join(F.broadcast(med), "event_type").persist()
+    j = persist(ev.join(F.broadcast(med), "event_type"))
     mad = j.groupBy("event_type").agg(
         F.expr("percentile(abs(value - med), 0.5)").alias("mad")
     )
@@ -436,8 +429,6 @@ SPECS.append(
         "dq_anomaly_mad",
         dq_anomaly_mad,
         DQ_ANOMALY_MAD_ORACLE,
-        doc="MAD modified-z robust outlier counts per event type (50% breakdown point)",
-        tags=("quality",),
     )
 )
 
@@ -496,8 +487,6 @@ SPECS.append(
         "dq_freshness_sla",
         dq_freshness_sla,
         DQ_FRESHNESS_SLA_ORACLE,
-        doc="per-feed ingest-lag vs high-water mark with SLA breach flags",
-        tags=("quality",),
     )
 )
 
@@ -572,8 +561,6 @@ SPECS.append(
         "dq_error_budget",
         dq_error_budget,
         DQ_ERROR_BUDGET_ORACLE,
-        doc="per-day SLO error-budget burn with cumulative consumption ledger",
-        tags=("quality",),
     )
 )
 
@@ -659,8 +646,6 @@ SPECS.append(
         "dq_seasonal_baseline",
         dq_seasonal_baseline,
         DQ_SEASONAL_BASELINE_ORACLE,
-        doc="leave-one-out same-weekday baseline anomaly flags, moment-derived",
-        tags=("quality",),
     )
 )
 
@@ -694,7 +679,12 @@ def wf_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load(spark, sf_dir, "customer")
     nat = load(spark, sf_dir, "nation")
     reg = load(spark, sf_dir, "region")
-    recs = (
+    # persisted: the ladder references recs from ~6 union branches
+    # (keep0/v0 via l0, r1, l1, keep1, suppressed) and Spark shares
+    # no subexpressions across DataFrame branches — without the
+    # cache one action scans customer+dims ~6x, not once as the
+    # docstring promises
+    recs = persist(
         cust.join(F.broadcast(nat), cust["c_nationkey"] == nat["n_nationkey"])
         .join(F.broadcast(reg), nat["n_regionkey"] == reg["r_regionkey"])
         .select(
@@ -704,14 +694,8 @@ def wf_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("c_acctbal") / 2000).cast("bigint").alias("b0"),
             F.floor(F.col("c_acctbal") / 4000).cast("bigint").alias("b1"),
         )
-        # persisted: the ladder references recs from ~6 union branches
-        # (keep0/v0 via l0, r1, l1, keep1, suppressed) and Spark shares
-        # no subexpressions across DataFrame branches — without the
-        # cache one action scans customer+dims ~6x, not once as the
-        # docstring promises
-        .persist()
     )
-    l0 = recs.groupBy("s", "nat", "b0").agg(F.count(F.lit(1)).alias("cnt")).persist()
+    l0 = persist(recs.groupBy("s", "nat", "b0").agg(F.count(F.lit(1)).alias("cnt")))
     keep0 = l0.filter(F.col("cnt") >= K_ANON).select(
         F.lit(0).alias("level"),
         F.col("s").alias("segment"),
@@ -720,8 +704,8 @@ def wf_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cnt").alias("class_size"),
     )
     v0 = l0.filter(F.col("cnt") < K_ANON).select("s", "nat", "b0")
-    r1 = recs.join(v0, ["s", "nat", "b0"], "left_semi").persist()
-    l1 = r1.groupBy("s", "rg", "b1").agg(F.count(F.lit(1)).alias("cnt")).persist()
+    r1 = persist(recs.join(v0, ["s", "nat", "b0"], "left_semi"))
+    l1 = persist(r1.groupBy("s", "rg", "b1").agg(F.count(F.lit(1)).alias("cnt")))
     keep1 = l1.filter(F.col("cnt") >= K_ANON).select(
         F.lit(1).alias("level"),
         F.col("s").alias("segment"),
@@ -781,8 +765,6 @@ SPECS.append(
         "wf_k_anonymity",
         wf_k_anonymity,
         WF_K_ANONYMITY_ORACLE,
-        doc="k-anonymity: two-rung generalization ladder + suppression audit, exact counts",
-        tags=("core", "quality", "governance"),
     )
 )
 
@@ -903,8 +885,6 @@ SPECS.append(
         "dq_entropy_profile",
         dq_entropy_profile,
         _entropy_oracle(),
-        doc="Shannon entropy per categorical column — DECIMAL-summed 12dp log2 terms",
-        tags=("core", "quality", "profile"),
     )
 )
 
@@ -1003,8 +983,6 @@ SPECS.append(
         "dq_moments",
         dq_moments,
         DQ_MOMENTS_ORACLE,
-        doc="population skewness/kurtosis from exact integer power sums",
-        tags=("core", "quality", "profile", "stats"),
     )
 )
 
@@ -1094,8 +1072,6 @@ SPECS.append(
         "dq_annotator_agreement",
         dq_annotator_agreement,
         DQ_ANNOTATOR_AGREEMENT_ORACLE,
-        doc="Cohen's kappa between two labeling rules — exact 2x2 counts",
-        tags=("core", "quality", "stats"),
     )
 )
 
@@ -1175,8 +1151,6 @@ SPECS.append(
         "wf_dp_counts",
         wf_dp_counts,
         WF_DP_COUNTS_ORACLE,
-        doc="geometric-mechanism DP count release with hash-derived noise",
-        tags=("workflow", "quality", "privacy"),
     )
 )
 
@@ -1303,8 +1277,6 @@ SPECS.append(
         "dq_key_discovery",
         dq_key_discovery,
         _key_discovery_oracle(),
-        doc="PK uniqueness + FK inclusion discovery across the star schema",
-        tags=("quality", "catalog"),
     )
 )
 
@@ -1427,8 +1399,6 @@ SPECS.append(
         "dq_drift_wasserstein",
         dq_drift_wasserstein,
         DQ_DRIFT_WASSERSTEIN_ORACLE,
-        doc="exact 1-Wasserstein drift between periods over the value dictionary",
-        tags=("quality", "stats"),
     )
 )
 
@@ -1533,8 +1503,6 @@ SPECS.append(
         "dq_outlier_ensemble",
         dq_outlier_ensemble,
         DQ_OUTLIER_ENSEMBLE_ORACLE,
-        doc="IQR + MAD + 3-sigma ensemble votes per daily point",
-        tags=("quality", "stats", "timeseries"),
     )
 )
 
@@ -1656,8 +1624,6 @@ SPECS.append(
         "dq_schema_contract",
         dq_schema_contract,
         _schema_contract_oracle(),
-        doc="declared-vs-physical schema audit: presence, type (normalized), ordinal",
-        tags=("quality", "catalog"),
     )
 )
 
@@ -1745,8 +1711,6 @@ SPECS.append(
         "wf_dlq_replay",
         wf_dlq_replay,
         WF_DLQ_REPLAY_ORACLE,
-        doc="dead-letter replay: rule-per-reason repair + re-ingest, conservation audit",
-        tags=("quality", "workflow"),
     )
 )
 
@@ -1785,7 +1749,7 @@ def dq_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pairs (near-dup-sized) is the broadcast side; persisted because
     # both tag joins probe it and the generation is the expensive leg
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b").persist()
+    pairs = persist(dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b"))
     half = tags.select(
         F.col("doc_id").alias("doc_a"), F.col("split").alias("split_a")
     ).join(F.broadcast(pairs), "doc_a")
@@ -1874,8 +1838,6 @@ SPECS.append(
         "dq_split_leakage_audit",
         dq_split_leakage_audit,
         _leakage_oracle(),
-        doc="cross-split near-dup contamination audit over the real split rule",
-        tags=("quality", "llm"),
     )
 )
 
@@ -1955,8 +1917,6 @@ SPECS.append(
         "dq_dup_rate_by_source",
         dq_dup_rate_by_source,
         DQ_DUP_RATE_BY_SOURCE_ORACLE,
-        doc="per-source exact-dup rate + keep-first survival — corpus governance rollup",
-        tags=("quality", "llm", "dedup"),
     )
 )
 
@@ -2024,7 +1984,5 @@ SPECS.append(
         "dq_near_dup_rate_by_source",
         dq_near_dup_rate_by_source,
         _near_dup_rate_oracle(),
-        doc="per-source verified-near-dup participation rate (MinHash pipeline rollup)",
-        tags=("quality", "llm", "dedup"),
     )
 )

@@ -832,42 +832,40 @@ QUALIFY rn <= 3
 
 
 SPECS = [
-    QuerySpec("src_parquet_scan", src_parquet_scan, SRC_PARQUET_SCAN_ORACLE, tags=("core",)),
-    QuerySpec("src_csv", src_csv, SRC_CSV_ORACLE, tags=("core",)),
+    QuerySpec("src_parquet_scan", src_parquet_scan, SRC_PARQUET_SCAN_ORACLE),
+    QuerySpec("src_csv", src_csv, SRC_CSV_ORACLE),
     QuerySpec(
         "src_json_permissive",
         src_json_permissive,
         SRC_JSON_PERMISSIVE_ORACLE,
-        doc="error-tolerant JSON ingestion with corrupt-record quarantine",
-        tags=("core",),
     ),
-    QuerySpec("src_search", src_search, SRC_SEARCH_ORACLE, tags=("core",)),
-    QuerySpec("param_bind", param_bind, PARAM_BIND_ORACLE, tags=("core",)),
-    QuerySpec("proj_flatten", proj_flatten, PROJ_FLATTEN_ORACLE, tags=("core",)),
-    QuerySpec("proj_rename_addcol", proj_rename_addcol, PROJ_RENAME_ADDCOL_ORACLE, tags=("core",)),
-    QuerySpec("proj_json_path", proj_json_path, PROJ_JSON_PATH_ORACLE, tags=("core",)),
-    QuerySpec("filter_score_ge", filter_score_ge, FILTER_SCORE_GE_ORACLE, tags=("core",)),
-    QuerySpec("filter_not_in", filter_not_in, FILTER_NOT_IN_ORACLE, tags=("core",)),
-    QuerySpec("filter_exclude_seed", filter_exclude_seed, FILTER_EXCLUDE_SEED_ORACLE, tags=("core",)),
-    QuerySpec("filter_null_guard", filter_null_guard, FILTER_NULL_GUARD_ORACLE, tags=("core",)),
-    QuerySpec("limit_first_hit", limit_first_hit, LIMIT_FIRST_HIT_ORACLE, tags=("core",)),
-    QuerySpec("dedup_by_id", dedup_by_id, DEDUP_BY_ID_ORACLE, tags=("core",)),
-    QuerySpec("dedup_memoize", dedup_memoize, DEDUP_MEMOIZE_ORACLE, tags=("core",)),
-    QuerySpec("join_merge_inner_same_key", join_inner_same_key, JOIN_INNER_SAME_KEY_ORACLE, tags=("core",)),
-    QuerySpec("join_merge_inner_diff_keys", join_inner_diff_keys, JOIN_INNER_DIFF_KEYS_ORACLE, tags=("core",)),
-    QuerySpec("join_lookup_nested_loop", join_lookup_broadcast, JOIN_LOOKUP_BROADCAST_ORACLE, tags=("core",)),
-    QuerySpec("join_api_foreach", join_api_foreach, JOIN_API_FOREACH_ORACLE, tags=("core",)),
-    QuerySpec("join_multi_hop", join_multi_hop, JOIN_MULTI_HOP_ORACLE, tags=("core",)),
-    QuerySpec("set_difference", set_difference, SET_DIFFERENCE_ORACLE, tags=("core",)),
-    QuerySpec("set_intersection", set_intersection, SET_INTERSECTION_ORACLE, tags=("core",)),
-    QuerySpec("set_union_accumulate", set_union_accumulate, SET_UNION_ACCUMULATE_ORACLE, tags=("core",)),
-    QuerySpec("set_membership", set_membership, SET_MEMBERSHIP_ORACLE, tags=("core",)),
-    QuerySpec("agg_count_distinct", agg_count_distinct, AGG_COUNT_DISTINCT_ORACLE, tags=("core",)),
-    QuerySpec("agg_group_sums", agg_group_sums, AGG_GROUP_SUMS_ORACLE, tags=("core",)),
-    QuerySpec("agg_rollup", agg_rollup, AGG_ROLLUP_ORACLE, tags=("core",)),
-    QuerySpec("agg_cube", agg_cube, AGG_CUBE_ORACLE, tags=("core",)),
-    QuerySpec("sort_topk", sort_topk, SORT_TOPK_ORACLE, tags=("core",)),
-    QuerySpec("topk_per_group", topk_per_group, TOPK_PER_GROUP_ORACLE, tags=("core",)),
+    QuerySpec("src_search", src_search, SRC_SEARCH_ORACLE),
+    QuerySpec("param_bind", param_bind, PARAM_BIND_ORACLE),
+    QuerySpec("proj_flatten", proj_flatten, PROJ_FLATTEN_ORACLE),
+    QuerySpec("proj_rename_addcol", proj_rename_addcol, PROJ_RENAME_ADDCOL_ORACLE),
+    QuerySpec("proj_json_path", proj_json_path, PROJ_JSON_PATH_ORACLE),
+    QuerySpec("filter_score_ge", filter_score_ge, FILTER_SCORE_GE_ORACLE),
+    QuerySpec("filter_not_in", filter_not_in, FILTER_NOT_IN_ORACLE),
+    QuerySpec("filter_exclude_seed", filter_exclude_seed, FILTER_EXCLUDE_SEED_ORACLE),
+    QuerySpec("filter_null_guard", filter_null_guard, FILTER_NULL_GUARD_ORACLE),
+    QuerySpec("limit_first_hit", limit_first_hit, LIMIT_FIRST_HIT_ORACLE),
+    QuerySpec("dedup_by_id", dedup_by_id, DEDUP_BY_ID_ORACLE),
+    QuerySpec("dedup_memoize", dedup_memoize, DEDUP_MEMOIZE_ORACLE),
+    QuerySpec("join_merge_inner_same_key", join_inner_same_key, JOIN_INNER_SAME_KEY_ORACLE),
+    QuerySpec("join_merge_inner_diff_keys", join_inner_diff_keys, JOIN_INNER_DIFF_KEYS_ORACLE),
+    QuerySpec("join_lookup_nested_loop", join_lookup_broadcast, JOIN_LOOKUP_BROADCAST_ORACLE),
+    QuerySpec("join_api_foreach", join_api_foreach, JOIN_API_FOREACH_ORACLE),
+    QuerySpec("join_multi_hop", join_multi_hop, JOIN_MULTI_HOP_ORACLE),
+    QuerySpec("set_difference", set_difference, SET_DIFFERENCE_ORACLE),
+    QuerySpec("set_intersection", set_intersection, SET_INTERSECTION_ORACLE),
+    QuerySpec("set_union_accumulate", set_union_accumulate, SET_UNION_ACCUMULATE_ORACLE),
+    QuerySpec("set_membership", set_membership, SET_MEMBERSHIP_ORACLE),
+    QuerySpec("agg_count_distinct", agg_count_distinct, AGG_COUNT_DISTINCT_ORACLE),
+    QuerySpec("agg_group_sums", agg_group_sums, AGG_GROUP_SUMS_ORACLE),
+    QuerySpec("agg_rollup", agg_rollup, AGG_ROLLUP_ORACLE),
+    QuerySpec("agg_cube", agg_cube, AGG_CUBE_ORACLE),
+    QuerySpec("sort_topk", sort_topk, SORT_TOPK_ORACLE),
+    QuerySpec("topk_per_group", topk_per_group, TOPK_PER_GROUP_ORACLE),
 ]
 
 
@@ -906,7 +904,5 @@ SPECS.append(
         "param_identifier",
         param_identifier,
         PARAM_IDENTIFIER_ORACLE,
-        doc="IDENTIFIER(:name) parameterized table/column references (injection-safe dispatch)",
-        tags=("core", "params"),
     )
 )

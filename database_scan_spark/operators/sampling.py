@@ -150,22 +150,16 @@ SPECS = [
         "sample_hash_bernoulli",
         sample_hash_bernoulli,
         SAMPLE_HASH_BERNOULLI_ORACLE,
-        doc="content-hash Bernoulli sample; layout- and engine-stable",
-        tags=("pipeline", "sampling"),
     ),
     QuerySpec(
         "sample_stratified",
         sample_stratified,
         SAMPLE_STRATIFIED_ORACLE,
-        doc="per-stratum hash-threshold sampling with audit counts",
-        tags=("pipeline", "sampling"),
     ),
     QuerySpec(
         "split_train_test",
         split_train_test,
         SPLIT_TRAIN_TEST_ORACLE,
-        doc="hash-range 80/10/10 corpus split with checksum audit",
-        tags=("pipeline", "sampling"),
     ),
 ]
 
@@ -237,8 +231,6 @@ SPECS.append(
         "wf_shuffle_shard",
         wf_shuffle_shard,
         WF_SHUFFLE_SHARD_ORACLE,
-        doc="content-hash global shuffle into N stable training shards, audited",
-        tags=("pipeline", "sampling"),
     )
 )
 
@@ -288,8 +280,6 @@ SPECS.append(
         "sample_reservoir",
         sample_reservoir,
         SAMPLE_RESERVOIR_ORACLE,
-        doc="Efraimidis-Spirakis weighted sample w/o replacement, hash-derived keys",
-        tags=("sampling",),
     )
 )
 
@@ -355,8 +345,6 @@ SPECS.append(
         "sample_balanced_class",
         sample_balanced_class,
         SAMPLE_BALANCED_CLASS_ORACLE,
-        doc="balanced per-class downsample to minority size, content-hash order",
-        tags=("sampling", "llm"),
     )
 )
 
@@ -414,8 +402,6 @@ SPECS.append(
         "split_kfold",
         split_kfold,
         SPLIT_KFOLD_ORACLE,
-        doc="deterministic 5-fold CV assignment with membership checksums",
-        tags=("sampling", "llm"),
     )
 )
 
@@ -576,8 +562,6 @@ SPECS.append(
         "sample_stratified_neyman",
         sample_stratified_neyman,
         SAMPLE_STRATIFIED_NEYMAN_ORACLE,
-        doc="Neyman optimal allocation from exact integer moments + hash-rank membership",
-        tags=("sampling", "llm"),
     )
 )
 
@@ -662,8 +646,6 @@ SPECS.append(
         "split_temporal_embargo",
         split_temporal_embargo,
         SPLIT_TEMPORAL_EMBARGO_ORACLE,
-        doc="leakage-safe temporal split with purge gap — membership checksums",
-        tags=("sampling", "llm", "mlops"),
     )
 )
 
@@ -745,8 +727,6 @@ SPECS.append(
         "wf_target_encoding",
         wf_target_encoding,
         WF_TARGET_ENCODING_ORACLE,
-        doc="out-of-fold target encoding — exact DECIMAL sums, hash folds, leakage-safe",
-        tags=("sampling", "llm", "mlops"),
     )
 )
 
@@ -806,7 +786,5 @@ SPECS.append(
         "split_group_holdout",
         split_group_holdout,
         SPLIT_GROUP_HOLDOUT_ORACLE,
-        doc="cluster-randomized split on the group key: whole sources share a fold",
-        tags=("llm", "sampling"),
     )
 )

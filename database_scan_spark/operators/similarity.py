@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import persist
 from ..spec import QuerySpec
 from ._helpers import h32 as _h32, spread
 
@@ -174,8 +175,8 @@ WHERE rank <= {TOP_K}
 
 
 SPECS = [
-    QuerySpec("sim_topk_bruteforce", sim_topk_bruteforce, SIM_TOPK_BRUTEFORCE_ORACLE, tags=("llm", "similarity")),
-    QuerySpec("sim_lsh_ann", sim_lsh_ann, _lsh_oracle(), tags=("llm", "similarity")),
+    QuerySpec("sim_topk_bruteforce", sim_topk_bruteforce, SIM_TOPK_BRUTEFORCE_ORACLE),
+    QuerySpec("sim_lsh_ann", sim_lsh_ann, _lsh_oracle()),
 ]
 
 
@@ -277,8 +278,6 @@ SPECS.append(
         "sim_ivf_flat",
         sim_ivf_flat,
         SIM_IVF_FLAT_ORACLE,
-        doc="IVF-flat ANN: codebook assign + nprobe probing (FAISS shape)",
-        tags=("llm", "similarity"),
     )
 )
 
@@ -328,8 +327,6 @@ SPECS.append(
         "sim_lsh_recall_eval",
         sim_lsh_recall_eval,
         _recall_oracle(),
-        doc="in-engine ANN recall evaluation (LSH vs exact top-k)",
-        tags=("llm", "similarity", "eval"),
     )
 )
 
@@ -461,8 +458,6 @@ SPECS.append(
         "sim_label_centroids",
         sim_label_centroids,
         SIM_LABEL_CENTROIDS_ORACLE,
-        doc="per-label class prototypes from exact DECIMAL component sums",
-        tags=("llm", "similarity", "ml"),
     )
 )
 SPECS.append(
@@ -470,8 +465,6 @@ SPECS.append(
         "sim_centroid_assign",
         sim_centroid_assign,
         SIM_CENTROID_ASSIGN_ORACLE,
-        doc="nearest-centroid classification with broadcast prototypes",
-        tags=("llm", "similarity", "ml"),
     )
 )
 
@@ -548,7 +541,7 @@ def sim_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spread(load(spark, sf_dir, "embeddings")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    emb = emb.persist()
+    emb = persist(emb)
     centroids = emb.filter(F.col("vec_id") < K_SEEDS).select(
         F.col("vec_id").cast("int").alias("cluster"), F.col("embedding").alias("c_arr")
     )
@@ -611,8 +604,6 @@ SPECS.append(
         "sim_kmeans",
         sim_kmeans,
         _kmeans_oracle(),
-        doc="K-means Lloyd iterations with broadcast centroids and exact DECIMAL updates",
-        tags=("llm", "similarity", "ml", "iterative"),
     )
 )
 
@@ -791,8 +782,6 @@ SPECS.append(
         "sim_pq_adc",
         sim_pq_adc,
         SIM_PQ_ADC_ORACLE,
-        doc="Product-quantization ANN with asymmetric-distance LUT search.",
-        tags=("llm", "similarity"),
     )
 )
 
@@ -889,8 +878,6 @@ SPECS.append(
         "sim_pq_rerank",
         sim_pq_rerank,
         _pq_rerank_oracle(),
-        doc="Two-stage retrieval: PQ candidate list, exact-cosine rerank.",
-        tags=("llm", "similarity"),
     )
 )
 
@@ -959,8 +946,6 @@ SPECS.append(
         "sim_knn_classify",
         sim_knn_classify,
         SIM_KNN_CLASSIFY_ORACLE,
-        doc="k-NN majority-vote classification eval over the labeled corpus.",
-        tags=("llm", "similarity"),
     )
 )
 
@@ -1023,8 +1008,6 @@ SPECS.append(
         "sim_topk_filtered",
         sim_topk_filtered,
         SIM_TOPK_FILTERED_ORACLE,
-        doc="filtered vector search: label predicate pre-filters the corpus scan",
-        tags=("llm", "similarity"),
     )
 )
 
@@ -1249,8 +1232,6 @@ SPECS.append(
         "sim_mmr_rerank",
         sim_mmr_rerank,
         _mmr_oracle(),
-        doc="MMR diversified top-5 over the exact top-20 pool; unrolled greedy steps",
-        tags=("llm", "similarity", "rag"),
     )
 )
 
@@ -1397,8 +1378,6 @@ SPECS.append(
         "sim_matryoshka_rerank",
         sim_matryoshka_rerank,
         SIM_MATRYOSHKA_RERANK_ORACLE,
-        doc="prefix-dim retrieve + full-dim rerank with exact-top-k agreement audit",
-        tags=("llm", "similarity", "rag"),
     )
 )
 
@@ -1510,8 +1489,6 @@ SPECS.append(
         "sim_centroid_drift",
         sim_centroid_drift,
         SIM_CENTROID_DRIFT_ORACLE,
-        doc="per-class embedding centroid displacement between hash halves",
-        tags=("similarity", "mlops", "quality"),
     )
 )
 
@@ -1768,8 +1745,6 @@ SPECS.append(
         "sim_ivfpq",
         sim_ivfpq,
         SIM_IVFPQ_ORACLE,
-        doc="IVF-PQ: coarse quantizer + PQ residual codes + exact q·c + ADC search",
-        tags=("llm", "similarity"),
     )
 )
 
@@ -1892,8 +1867,6 @@ SPECS.append(
         "sim_sq8_error",
         sim_sq8_error,
         SIM_SQ8_ERROR_ORACLE,
-        doc="SQ8 scalar quantization: midpoint reconstruction, asymmetric search, error readout",
-        tags=("llm", "similarity"),
     )
 )
 
@@ -2005,8 +1978,6 @@ SPECS.append(
         "sim_random_projection",
         sim_random_projection,
         _jl_oracle(),
-        doc="JL Rademacher projection 64->16 with exact per-vector distortion audit",
-        tags=("llm", "similarity"),
     )
 )
 
@@ -2043,7 +2014,7 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("ne"),
         F.col("label").alias("nlabel"),
     )
-    scored = (
+    scored = persist(
         F.broadcast(queries)
         .join(corpus, F.col("query_id") != F.col("neighbor_id"))
         .select(
@@ -2053,7 +2024,6 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "nlabel",
             F.round(_dot(F.col("qe"), F.col("ne")), 6).alias("sim"),
         )
-        .persist()
     )
     pos = (
         scored.filter(F.col("nlabel") == F.col("qlabel"))
@@ -2114,8 +2084,6 @@ SPECS.append(
         "sim_hard_negatives",
         sim_hard_negatives,
         _hard_neg_oracle(),
-        doc="contrastive hard-negative mining: top diff-label neighbors + margin violations",
-        tags=("llm", "similarity"),
     )
 )
 
@@ -2139,11 +2107,10 @@ def sim_ann_recall_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     method contributes a distinct-pair semi-join + one-row counts.
     All relations are (queries × k)-sized — evaluation never touches
     the corpus beyond what the methods themselves do."""
-    exact = (
+    exact = persist(
         sim_topk_bruteforce(spark, sf_dir)
         .select("query_id", "neighbor_id")
         .distinct()
-        .persist()
     )
     methods = [
         ("ivf_flat", sim_ivf_flat),
@@ -2209,7 +2176,5 @@ SPECS.append(
         "sim_ann_recall_matrix",
         sim_ann_recall_matrix,
         _recall_matrix_oracle(),
-        doc="in-engine recall of every ANN variant vs exact top-k, one oracled matrix",
-        tags=("llm", "similarity"),
     )
 )

@@ -483,24 +483,24 @@ FROM part
 
 
 SPECS = [
-    QuerySpec("src_graphql_post", src_graphql_post, SRC_GRAPHQL_POST_ORACLE, tags=("core",)),
-    QuerySpec("src_rest_get", src_rest_get, SRC_REST_GET_ORACLE, tags=("core",)),
-    QuerySpec("filter_http_status", filter_http_status, FILTER_HTTP_STATUS_ORACLE, tags=("core",)),
-    QuerySpec("catalog", catalog_scan, CATALOG_ORACLE, tags=("core",)),
-    QuerySpec("paginate", paginate, PAGINATE_ORACLE, tags=("core",)),
-    QuerySpec("sink_csv", sink_csv, SINK_CSV_ORACLE, tags=("core",)),
-    QuerySpec("sink_stdout", sink_stdout, SINK_STDOUT_ORACLE, tags=("core",)),
-    QuerySpec("proj_graphql_fields", proj_graphql_fields, PROJ_GRAPHQL_FIELDS_ORACLE, tags=("core",)),
-    QuerySpec("proj_drop", proj_drop, PROJ_DROP_ORACLE, tags=("core",)),
-    QuerySpec("wf_rate_limit", wf_rate_limit, WF_RATE_LIMIT_ORACLE, tags=("workflow", "udf")),
-    QuerySpec("wf_quality_gate", wf_quality_gate, WF_QUALITY_GATE_ORACLE, tags=("workflow",)),
-    QuerySpec("agg_count", agg_count, AGG_COUNT_ORACLE, tags=("core",)),
-    QuerySpec("sort_remote_score_desc", sort_remote_score_desc, SORT_REMOTE_SCORE_DESC_ORACLE, tags=("core",)),
-    QuerySpec("topk_first", topk_first, TOPK_FIRST_ORACLE, tags=("core",)),
-    QuerySpec("fn_str_replace", fn_str_replace, FN_STR_REPLACE_ORACLE, tags=("functions",)),
-    QuerySpec("fn_str_strip", fn_str_strip, FN_STR_STRIP_ORACLE, tags=("functions",)),
-    QuerySpec("fn_json_get", fn_json_get, FN_JSON_GET_ORACLE, tags=("functions",)),
-    QuerySpec("udf_molecule_name", udf_molecule_name, UDF_MOLECULE_NAME_ORACLE, tags=("functions",)),
+    QuerySpec("src_graphql_post", src_graphql_post, SRC_GRAPHQL_POST_ORACLE),
+    QuerySpec("src_rest_get", src_rest_get, SRC_REST_GET_ORACLE),
+    QuerySpec("filter_http_status", filter_http_status, FILTER_HTTP_STATUS_ORACLE),
+    QuerySpec("catalog", catalog_scan, CATALOG_ORACLE),
+    QuerySpec("paginate", paginate, PAGINATE_ORACLE),
+    QuerySpec("sink_csv", sink_csv, SINK_CSV_ORACLE),
+    QuerySpec("sink_stdout", sink_stdout, SINK_STDOUT_ORACLE),
+    QuerySpec("proj_graphql_fields", proj_graphql_fields, PROJ_GRAPHQL_FIELDS_ORACLE),
+    QuerySpec("proj_drop", proj_drop, PROJ_DROP_ORACLE),
+    QuerySpec("wf_rate_limit", wf_rate_limit, WF_RATE_LIMIT_ORACLE),
+    QuerySpec("wf_quality_gate", wf_quality_gate, WF_QUALITY_GATE_ORACLE),
+    QuerySpec("agg_count", agg_count, AGG_COUNT_ORACLE),
+    QuerySpec("sort_remote_score_desc", sort_remote_score_desc, SORT_REMOTE_SCORE_DESC_ORACLE),
+    QuerySpec("topk_first", topk_first, TOPK_FIRST_ORACLE),
+    QuerySpec("fn_str_replace", fn_str_replace, FN_STR_REPLACE_ORACLE),
+    QuerySpec("fn_str_strip", fn_str_strip, FN_STR_STRIP_ORACLE),
+    QuerySpec("fn_json_get", fn_json_get, FN_JSON_GET_ORACLE),
+    QuerySpec("udf_molecule_name", udf_molecule_name, UDF_MOLECULE_NAME_ORACLE),
 ]
 
 
@@ -540,8 +540,6 @@ SPECS.append(
         "src_python_datasource",
         src_python_datasource,
         SRC_PYTHON_DATASOURCE_ORACLE,
-        doc="Spark 4 Python DataSource API connector shape",
-        tags=("core", "source"),
     )
 )
 
@@ -586,8 +584,6 @@ SPECS.append(
         "src_orc",
         src_orc,
         SRC_ORC_ORACLE,
-        doc="ORC round-trip source with filter pushdown, lossless vs parquet oracle",
-        tags=("core", "source"),
     )
 )
 
@@ -648,8 +644,6 @@ SPECS.append(
         "src_federated_union",
         src_federated_union,
         SRC_FEDERATED_UNION_ORACLE,
-        doc="one logical table across parquet+CSV+ORC shards, filter pushed per format",
-        tags=("source", "storage"),
     )
 )
 
@@ -716,8 +710,6 @@ SPECS.append(
         "src_python_stream_datasource",
         src_python_stream_datasource,
         SRC_PYTHON_STREAM_DATASOURCE_ORACLE,
-        doc="Python streaming DataSource: cursor-paged source, one page per micro-batch",
-        tags=("core", "source", "stream"),
     )
 )
 
@@ -732,6 +724,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     JSON float round-trip is exact (repr shortest-roundtrip)."""
     import shutil  # noqa: PLC0415
 
+    from ..sources.graphql_snapshot import entity_edges  # noqa: PLC0415
     from ..sources.jsonl_sink import make_jsonl_sink  # noqa: PLC0415
 
     try:
@@ -741,15 +734,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise
     out_dir = workdir(sf_dir, "sink_python_datasource")
     shutil.rmtree(out_dir, ignore_errors=True)  # fresh commit each run
-    edges = (
-        load(spark, sf_dir, "orders")
-        .filter(F.col("o_custkey") < 50)
-        .select(
-            F.col("o_custkey").alias("entity_id"),
-            F.col("o_orderkey").alias("edge_id"),
-            F.col("o_totalprice").alias("score"),
-        )
-    )
+    edges = entity_edges(spark, sf_dir)
     edges.write.format("edges_jsonl").option("path", out_dir).mode("append").save()
     assert os.path.exists(os.path.join(out_dir, "_SUCCESS"))
     return spark.read.schema("entity_id bigint, edge_id bigint, score double").json(
@@ -767,8 +752,6 @@ SPECS.append(
         "sink_python_datasource",
         sink_python_datasource,
         SINK_PYTHON_DATASOURCE_ORACLE,
-        doc="Python DataSource batch writer: staged files, atomic driver commit, manifest",
-        tags=("core", "sink"),
     )
 )
 
@@ -818,8 +801,6 @@ SPECS.append(
         "sink_csv_roundtrip_quoted",
         sink_csv_roundtrip_quoted,
         SINK_CSV_ROUNDTRIP_QUOTED_ORACLE,
-        doc="RFC 4180 round trip: delimiter/quote/newline-bearing values survive the sink",
-        tags=("core", "sink", "csv"),
     )
 )
 
@@ -898,8 +879,6 @@ SPECS.append(
         "src_csv_corrupt_recovery",
         src_csv_corrupt_recovery,
         SRC_CSV_CORRUPT_RECOVERY_ORACLE,
-        doc="PERMISSIVE CSV parse: corrupt lines quarantined verbatim, fields recovered",
-        tags=("core", "source", "csv"),
     )
 )
 
@@ -941,8 +920,6 @@ SPECS.append(
         "sink_jsonl_roundtrip",
         sink_jsonl_roundtrip,
         SINK_JSONL_ROUNDTRIP_ORACLE,
-        doc="JSONL corpus export and schema-pinned re-ingest, field-exact",
-        tags=("sink", "source", "llm"),
     )
 )
 
@@ -992,7 +969,5 @@ SPECS.append(
         "src_text_lines",
         src_text_lines,
         SRC_TEXT_LINES_ORACLE,
-        doc="line-oriented raw text ingestion (read.text) with schema-on-read parse",
-        tags=("source", "llm"),
     )
 )

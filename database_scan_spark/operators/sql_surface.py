@@ -401,26 +401,24 @@ ORDER BY bin
 
 
 SPECS = [
-    QuerySpec("join_outer_left", join_outer_left, JOIN_OUTER_LEFT_ORACLE, tags=("sql",)),
-    QuerySpec("agg_grouping_sets", agg_grouping_sets, AGG_GROUPING_SETS_ORACLE, tags=("sql",)),
-    QuerySpec("agg_percentile_exact", agg_percentile_exact, AGG_PERCENTILE_EXACT_ORACLE, tags=("sql",)),
+    QuerySpec("join_outer_left", join_outer_left, JOIN_OUTER_LEFT_ORACLE),
+    QuerySpec("agg_grouping_sets", agg_grouping_sets, AGG_GROUPING_SETS_ORACLE),
+    QuerySpec("agg_percentile_exact", agg_percentile_exact, AGG_PERCENTILE_EXACT_ORACLE),
     QuerySpec(
         "agg_histogram",
         agg_histogram,
         AGG_HISTOGRAM_ORACLE,
-        doc="fixed-width histogram with data-derived broadcast bounds",
-        tags=("sql",),
     ),
-    QuerySpec("join_outer_full", join_outer_full, JOIN_OUTER_FULL_ORACLE, tags=("sql",)),
-    QuerySpec("join_semi_anti", join_semi_anti, JOIN_SEMI_ANTI_ORACLE, tags=("sql",)),
-    QuerySpec("agg_pivot", agg_pivot, AGG_PIVOT_ORACLE, tags=("sql",)),
-    QuerySpec("proj_unpivot", proj_unpivot, PROJ_UNPIVOT_ORACLE, tags=("sql",)),
-    QuerySpec("proj_posexplode", proj_posexplode, PROJ_POSEXPLODE_ORACLE, tags=("sql",)),
-    QuerySpec("filter_null_safe_eq", filter_null_safe_eq, FILTER_NULL_SAFE_EQ_ORACLE, tags=("sql",)),
-    QuerySpec("fn_math_ops", fn_math_ops, FN_MATH_OPS_ORACLE, tags=("sql",)),
-    QuerySpec("fn_cond_case", fn_cond_case, FN_COND_CASE_ORACLE, tags=("sql",)),
-    QuerySpec("subquery_correlated", subquery_correlated, _SUBQUERY_SQL, tags=("sql",)),
-    QuerySpec("sql_frontend_report", sql_frontend_report, _FRONTEND_SQL, tags=("sql",)),
+    QuerySpec("join_outer_full", join_outer_full, JOIN_OUTER_FULL_ORACLE),
+    QuerySpec("join_semi_anti", join_semi_anti, JOIN_SEMI_ANTI_ORACLE),
+    QuerySpec("agg_pivot", agg_pivot, AGG_PIVOT_ORACLE),
+    QuerySpec("proj_unpivot", proj_unpivot, PROJ_UNPIVOT_ORACLE),
+    QuerySpec("proj_posexplode", proj_posexplode, PROJ_POSEXPLODE_ORACLE),
+    QuerySpec("filter_null_safe_eq", filter_null_safe_eq, FILTER_NULL_SAFE_EQ_ORACLE),
+    QuerySpec("fn_math_ops", fn_math_ops, FN_MATH_OPS_ORACLE),
+    QuerySpec("fn_cond_case", fn_cond_case, FN_COND_CASE_ORACLE),
+    QuerySpec("subquery_correlated", subquery_correlated, _SUBQUERY_SQL),
+    QuerySpec("sql_frontend_report", sql_frontend_report, _FRONTEND_SQL),
 ]
 
 
@@ -664,29 +662,21 @@ SPECS.extend(
             "wf_cdc_upsert",
             wf_cdc_upsert,
             WF_CDC_UPSERT_ORACLE,
-            doc="latest-wins CDC merge in one shuffle (MERGE INTO shape)",
-            tags=("sql", "pipeline"),
         ),
         QuerySpec(
             "filter_outlier_iqr",
             filter_outlier_iqr,
             FILTER_OUTLIER_IQR_ORACLE,
-            doc="IQR fence cleaning gate with broadcast per-group fences",
-            tags=("sql", "pipeline"),
         ),
         QuerySpec(
             "wf_pack_sequences",
             wf_pack_sequences,
             WF_PACK_SEQUENCES_ORACLE,
-            doc="token-budget sequence packing, per-source windows (no global sort)",
-            tags=("sql", "pipeline", "llm"),
         ),
         QuerySpec(
             "wf_scd2_history",
             wf_scd2_history,
             WF_SCD2_HISTORY_ORACLE,
-            doc="SCD type-2 validity intervals from the CDC batch, one shuffle",
-            tags=("sql", "pipeline"),
         ),
     ]
 )
@@ -786,8 +776,6 @@ SPECS.append(
         "analytic_skyline",
         analytic_skyline,
         ANALYTIC_SKYLINE_ORACLE,
-        doc="Pareto frontier (min price, max size) via bucketed two-pass prefix maxima",
-        tags=("sql", "analytics"),
     )
 )
 
@@ -875,8 +863,6 @@ SPECS.append(
         "catalog_stats_cbo",
         catalog_stats_cbo,
         CATALOG_STATS_CBO_ORACLE,
-        doc="ANALYZE'd catalog stats drive CBO join reorder on a pathological star order",
-        tags=("sql", "catalog", "scale"),
     )
 )
 
@@ -980,22 +966,16 @@ SPECS.extend(
             "sql_recursive_cte",
             sql_recursive_cte,
             SQL_RECURSIVE_CTE_ORACLE,
-            doc="WITH RECURSIVE hierarchy walk (region→nation→customer) with per-root level counts",
-            tags=("sql", "recursive"),
         ),
         QuerySpec(
             "sql_lateral_topk",
             sql_lateral_topk,
             SQL_LATERAL_TOPK_ORACLE,
-            doc="LATERAL correlated per-row top-k, decorrelated by Catalyst",
-            tags=("sql",),
         ),
         QuerySpec(
             "sql_pipe_syntax",
             sql_pipe_syntax,
             SQL_PIPE_SYNTAX_ORACLE,
-            doc="SQL pipe-syntax (|>) pipeline form of the Q1 aggregate",
-            tags=("sql",),
         ),
     ]
 )
@@ -1057,15 +1037,11 @@ SPECS.extend(
             "join_existence_project",
             join_existence_project,
             JOIN_EXISTENCE_PROJECT_ORACLE,
-            doc="EXISTS projected as a flag column -> ExistenceJoin (no row duplication)",
-            tags=("sql", "join"),
         ),
         QuerySpec(
             "agg_filter_clause",
             agg_filter_clause,
             AGG_FILTER_CLAUSE_ORACLE,
-            doc="FILTER (WHERE ...) aggregates: N conditioned metrics in one scan",
-            tags=("sql", "agg"),
         ),
     ]
 )
@@ -1106,8 +1082,6 @@ SPECS.append(
         "set_ops_multiset",
         set_ops_multiset,
         SET_OPS_MULTISET_ORACLE,
-        doc="INTERSECT ALL / EXCEPT ALL bag semantics (multiplicity-preserving)",
-        tags=("sql", "set"),
     )
 )
 
@@ -1164,8 +1138,6 @@ SPECS.append(
         "param_execute_immediate",
         param_execute_immediate,
         PARAM_EXECUTE_IMMEDIATE_ORACLE,
-        doc="EXECUTE IMMEDIATE + session variable binding — dynamic SQL stays in Catalyst",
-        tags=("sql", "params"),
     )
 )
 
@@ -1225,8 +1197,6 @@ SPECS.append(
         "join_hint_matrix",
         join_hint_matrix,
         _hint_matrix_oracle(),
-        doc="BROADCAST/SHUFFLE_MERGE/SHUFFLE_HASH hints, result-identical",
-        tags=("join", "sql"),
     )
 )
 
@@ -1270,8 +1240,6 @@ SPECS.append(
         "sql_group_by_all",
         sql_group_by_all,
         SQL_GROUP_BY_ALL_ORACLE,
-        doc="GROUP BY ALL / ORDER BY ALL inferred-grain aggregation",
-        tags=("sql",),
     )
 )
 
@@ -1318,7 +1286,5 @@ SPECS.append(
         "join_null_aware_anti",
         join_null_aware_anti,
         JOIN_NULL_AWARE_ANTI_ORACLE,
-        doc="NOT IN (subquery) three-valued semantics: null-aware anti join, empty-on-null leg",
-        tags=("sql", "join"),
     )
 )

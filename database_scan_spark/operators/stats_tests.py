@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import persist
 from ..spec import QuerySpec
 from .graph import _trade_edges, _undirected_pairs
 
@@ -135,8 +136,6 @@ SPECS.append(
         "analytic_chi_square",
         analytic_chi_square,
         ANALYTIC_CHI_SQUARE_ORACLE,
-        doc="Pearson chi-square independence test over the segment x region grid",
-        tags=("analytics", "stats"),
     )
 )
 
@@ -259,8 +258,6 @@ SPECS.append(
         "analytic_spearman",
         analytic_spearman,
         ANALYTIC_SPEARMAN_ORACLE,
-        doc="Spearman rank correlation from value-domain aggregates (no global sort)",
-        tags=("analytics", "stats"),
     )
 )
 
@@ -354,8 +351,6 @@ SPECS.append(
         "analytic_avg_precision",
         analytic_avg_precision,
         ANALYTIC_AVG_PRECISION_ORACLE,
-        doc="average precision (PR-AUC) from distinct-threshold aggregates",
-        tags=("analytics", "stats", "mlops"),
     )
 )
 
@@ -472,8 +467,6 @@ SPECS.append(
         "analytic_changepoint",
         analytic_changepoint,
         ANALYTIC_CHANGEPOINT_ORACLE,
-        doc="binary-segmentation changepoint step with exact integer prefix sums",
-        tags=("analytics", "stats", "timeseries"),
     )
 )
 
@@ -510,7 +503,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select(
         F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")
     )
-    edges = li.distinct().persist()
+    edges = persist(li.distinct())
     stats = []
     cur = edges
     for rnd in range(1, _KCORE_ROUNDS + 1):
@@ -518,10 +511,9 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         deg_s = cur.groupBy("s").agg(F.count(F.lit(1)).alias("ds"))
         keep_p = deg_p.filter(F.col("dp") >= _KCORE_K).select("p")
         keep_s = deg_s.filter(F.col("ds") >= _KCORE_K).select("s")
-        cur = (
+        cur = persist(
             cur.join(keep_p, "p", "left_semi")
             .join(keep_s, "s", "left_semi")
-            .persist()
         )
         stats.append(
             cur.agg(
@@ -574,8 +566,6 @@ SPECS.append(
         "graph_kcore",
         graph_kcore,
         _kcore_oracle(),
-        doc="bounded k-core peel of the part-supplier bipartite graph",
-        tags=("graph", "analytics"),
     )
 )
 
@@ -601,7 +591,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms are three dimension-sized aggregations joined on the ≤5-row
     region relation."""
     nat = load(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
-    edges = (
+    edges = persist(
         _trade_edges(spark, sf_dir)
         .join(
             F.broadcast(nat.select(F.col("n_nationkey").alias("src"),
@@ -613,7 +603,6 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
                                    F.col("n_regionkey").alias("dst_reg"))),
             "dst",
         )
-        .persist()
     )
     m = edges.agg(F.sum("w").alias("m"))
     intra = (
@@ -709,8 +698,6 @@ SPECS.append(
         "graph_modularity",
         graph_modularity,
         GRAPH_MODULARITY_ORACLE,
-        doc="exact directed modularity of the region partition on the trade graph",
-        tags=("graph", "analytics"),
     )
 )
 
@@ -739,7 +726,7 @@ def analytic_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity").cast("bigint").alias("q"),
         F.round(F.col("l_discount") * 100).cast("bigint").alias("d"),
     )
-    joint = li.groupBy("q", "d").agg(F.count(F.lit(1)).alias("cnt")).persist()
+    joint = persist(li.groupBy("q", "d").agg(F.count(F.lit(1)).alias("cnt")))
     a = joint.select(
         F.col("q").alias("qa"), F.col("d").alias("da"), F.col("cnt").alias("ca")
     )
@@ -838,8 +825,6 @@ SPECS.append(
         "analytic_kendall_tau",
         analytic_kendall_tau,
         ANALYTIC_KENDALL_TAU_ORACLE,
-        doc="exact Kendall tau-b from histogram cell pairs (no row-pair join)",
-        tags=("analytics", "stats"),
     )
 )
 
@@ -993,8 +978,6 @@ SPECS.append(
         "analytic_mannwhitney",
         analytic_mannwhitney,
         ANALYTIC_MANNWHITNEY_ORACLE,
-        doc="tie-corrected Mann-Whitney U across all event-type pairs, no global sort",
-        tags=("analytics", "stats"),
     )
 )
 
@@ -1066,8 +1049,6 @@ SPECS.append(
         "analytic_power_analysis",
         analytic_power_analysis,
         ANALYTIC_POWER_ANALYSIS_ORACLE,
-        doc="A/B per-arm sample-size planning from exact DECIMAL moments",
-        tags=("analytics", "stats", "mlops"),
     )
 )
 
@@ -1165,8 +1146,6 @@ SPECS.append(
         "analytic_seasonality_strength",
         analytic_seasonality_strength,
         ANALYTIC_SEASONALITY_STRENGTH_ORACLE,
-        doc="weekday ANOVA: eta-squared seasonality strength + F verdict",
-        tags=("analytics", "stats", "timeseries"),
     )
 )
 
@@ -1278,8 +1257,6 @@ SPECS.append(
         "analytic_cuped",
         analytic_cuped,
         ANALYTIC_CUPED_ORACLE,
-        doc="CUPED pre-period covariate adjustment: theta and variance reduction",
-        tags=("analytics", "stats", "mlops"),
     )
 )
 
@@ -1364,8 +1341,6 @@ SPECS.append(
         "graph_assortativity",
         graph_assortativity,
         GRAPH_ASSORTATIVITY_ORACLE,
-        doc="edge-wise degree assortativity from exact moment sums",
-        tags=("graph", "analytics", "stats"),
     )
 )
 
@@ -1446,8 +1421,6 @@ SPECS.append(
         "win_rolling_corr",
         win_rolling_corr,
         WIN_ROLLING_CORR_ORACLE,
-        doc="14-day rolling Pearson correlation from exact integer window sums",
-        tags=("window", "analytics", "timeseries"),
     )
 )
 
@@ -1575,8 +1548,6 @@ SPECS.append(
         "analytic_prop_ztest",
         analytic_prop_ztest,
         ANALYTIC_PROP_ZTEST_ORACLE,
-        doc="pooled two-proportion z-tests per funnel transition, hash-split cohorts",
-        tags=("analytics", "stats"),
     )
 )
 
@@ -1755,8 +1726,6 @@ SPECS.append(
         "pipeline_experiment_readout",
         pipeline_experiment_readout,
         PIPELINE_EXPERIMENT_READOUT_ORACLE,
-        doc="experiment readout flagship: hash cohorts, CUPED, raw+adjusted z",
-        tags=("analytics", "stats", "mlops", "pipeline"),
     )
 )
 
@@ -1862,8 +1831,6 @@ SPECS.append(
         "analytic_forecast_backtest",
         analytic_forecast_backtest,
         ANALYTIC_FORECAST_BACKTEST_ORACLE,
-        doc="rolling-origin MAPE/sMAPE/bias of the weekday-mean forecaster",
-        tags=("analytics", "stats", "timeseries", "mlops"),
     )
 )
 
@@ -1948,8 +1915,6 @@ SPECS.append(
         "analytic_fdr_bh",
         analytic_fdr_bh,
         _bh_oracle(),
-        doc="Benjamini-Hochberg step-up FDR over the Mann-Whitney battery (z scale)",
-        tags=("analytics", "stats", "mlops"),
     )
 )
 
@@ -2039,8 +2004,6 @@ SPECS.append(
         "analytic_var_cvar",
         analytic_var_cvar,
         ANALYTIC_VAR_CVAR_ORACLE,
-        doc="empirical VaR and CVaR of daily revenue deltas, exact order statistic",
-        tags=("analytics", "stats", "timeseries"),
     )
 )
 
@@ -2173,8 +2136,6 @@ SPECS.append(
         "analytic_psm",
         analytic_psm,
         ANALYTIC_PSM_ORACLE,
-        doc="propensity stratification matching: deterministic pairing, ATT vs naive",
-        tags=("analytics", "stats", "mlops"),
     )
 )
 
@@ -2284,8 +2245,6 @@ SPECS.append(
         "graph_bipartite_projection",
         graph_bipartite_projection,
         GRAPH_BIPARTITE_PROJECTION_ORACLE,
-        doc="one-mode co-sourcing projection with exact shared counts and Jaccard",
-        tags=("graph", "analytics"),
     )
 )
 
@@ -2411,8 +2370,6 @@ SPECS.append(
         "analytic_effect_size",
         analytic_effect_size,
         ANALYTIC_EFFECT_SIZE_ORACLE,
-        doc="Cohen's d / Hedges' g with 95% CI from exact cohort moments",
-        tags=("analytics", "stats", "mlops"),
     )
 )
 
@@ -2502,8 +2459,6 @@ SPECS.append(
         "analytic_qte",
         analytic_qte,
         _qte_oracle(),
-        doc="quantile treatment effects at 5 percentiles, exact interpolation",
-        tags=("analytics", "stats", "mlops"),
     )
 )
 
@@ -2570,8 +2525,6 @@ SPECS.append(
         "agg_frequency_moments",
         agg_frequency_moments,
         _freq_moments_oracle(),
-        doc="exact AMS frequency moments per join key; skew factor = F2*F0/F1^2",
-        tags=("agg", "stats", "scale"),
     )
 )
 
@@ -2663,8 +2616,6 @@ SPECS.append(
         "analytic_contribution",
         analytic_contribution,
         ANALYTIC_CONTRIBUTION_ORACLE,
-        doc="Adtributor-style segment contribution to a metric delta",
-        tags=("analytics", "stats"),
     )
 )
 
@@ -2754,8 +2705,6 @@ SPECS.append(
         "win_seasonal_decompose",
         win_seasonal_decompose,
         WIN_SEASONAL_DECOMPOSE_ORACLE,
-        doc="STL-lite additive decomposition with integer-cleared seasonal means",
-        tags=("window", "analytics", "timeseries"),
     )
 )
 
@@ -2778,7 +2727,7 @@ def graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     hops, one groupBy); reciprocity is then one self-join of the
     dimension-sized edge list on the REVERSED key pair and a
     two-number exact-integer reduce — one final division."""
-    edges = _trade_edges(spark, sf_dir).filter(F.col("src") != F.col("dst")).persist()
+    edges = persist(_trade_edges(spark, sf_dir).filter(F.col("src") != F.col("dst")))
     rev = edges.select(
         F.col("dst").alias("src"), F.col("src").alias("dst"), F.col("w").alias("w_rev")
     )
@@ -2823,8 +2772,6 @@ SPECS.append(
         "graph_reciprocity",
         graph_reciprocity,
         GRAPH_RECIPROCITY_ORACLE,
-        doc="weighted directed reciprocity: min(w_ij, w_ji) mass over total",
-        tags=("graph", "analytics"),
     )
 )
 
@@ -2893,8 +2840,6 @@ SPECS.append(
         "analytic_markov_transition",
         analytic_markov_transition,
         ANALYTIC_MARKOV_TRANSITION_ORACLE,
-        doc="first-order event-type transition matrix with exact row-normalized p",
-        tags=("analytics", "stats"),
     )
 )
 
@@ -2920,7 +2865,7 @@ def analytic_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     two ratios divide them. Dimension of everything after the first
     distinct: users × active-weeks."""
     ev = load(spark, sf_dir, "events")
-    uw = (
+    uw = persist(
         ev.select(
             "user_id",
             F.floor(F.datediff(F.to_date("ts"), F.lit("2024-01-01")) / 7)
@@ -2928,7 +2873,6 @@ def analytic_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("wk"),
         )
         .distinct()
-        .persist()
     )
     w = Window.partitionBy("user_id").orderBy("wk")
     tagged = uw.select(
@@ -3031,8 +2975,6 @@ SPECS.append(
         "analytic_growth_accounting",
         analytic_growth_accounting,
         ANALYTIC_GROWTH_ACCOUNTING_ORACLE,
-        doc="weekly growth accounting ledger: new/retained/resurrected/churned",
-        tags=("analytics", "stats"),
     )
 )
 
@@ -3111,8 +3053,6 @@ SPECS.append(
         "win_rolling_skewness",
         win_rolling_skewness,
         WIN_ROLLING_SKEWNESS_ORACLE,
-        doc="rolling 14-day skewness from exact integer window moments",
-        tags=("window", "analytics", "timeseries"),
     )
 )
 
@@ -3133,18 +3073,16 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the dimension-sized canonical edge list (both joins
     broadcast); degrees are one aggregation; C_v is exact-integer
     in, one division out (d_v < 2 → null)."""
-    wpairs = (
+    wpairs = persist(
         _undirected_pairs(spark, sf_dir)
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("w"))
-        .persist()
     )
     med = wpairs.agg(F.expr("percentile(w, 0.5)").alias("m"))
-    edges = (
+    edges = persist(
         wpairs.crossJoin(F.broadcast(med))
         .filter(F.col("w") >= F.col("m"))
         .select("a", "b")
-        .persist()
     )
     e1 = edges.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = edges.select(F.col("a").alias("y"), F.col("b").alias("z"))
@@ -3232,8 +3170,6 @@ SPECS.append(
         "graph_clustering_coefficient",
         graph_clustering_coefficient,
         GRAPH_CLUSTERING_COEFFICIENT_ORACLE,
-        doc="local clustering coefficients on the median-thresholded trade graph",
-        tags=("graph", "analytics"),
     )
 )
 
@@ -3259,7 +3195,7 @@ def analytic_retention_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums (the `text_zipf_fit` recipe); half-life is one fixed double
     expression. Everything after the first distinct is offsets-sized."""
     ev = load(spark, sf_dir, "events")
-    uw = (
+    uw = persist(
         ev.select(
             "user_id",
             F.floor(F.datediff(F.to_date("ts"), F.lit("2024-01-01")) / 7)
@@ -3267,7 +3203,6 @@ def analytic_retention_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("wk"),
         )
         .distinct()
-        .persist()
     )
     cohort = uw.groupBy("user_id").agg(F.min("wk").alias("c0"))
     maxwk = uw.agg(F.max("wk").alias("max_wk"))
@@ -3370,8 +3305,6 @@ SPECS.append(
         "analytic_retention_fit",
         analytic_retention_fit,
         ANALYTIC_RETENTION_FIT_ORACLE,
-        doc="pooled retention decay fit: OLS on log retention, implied half-life",
-        tags=("analytics", "stats"),
     )
 )
 
@@ -3521,8 +3454,6 @@ SPECS.append(
         "analytic_msprt",
         analytic_msprt,
         ANALYTIC_MSPRT_ORACLE,
-        doc="mSPRT always-valid sequential p-value per day (peeking-safe A/B)",
-        tags=("analytics", "stats"),
     )
 )
 
@@ -3620,7 +3551,5 @@ SPECS.append(
         "analytic_srm",
         analytic_srm,
         ANALYTIC_SRM_ORACLE,
-        doc="sample-ratio-mismatch chi-square per day over distinct units (A/B guardrail)",
-        tags=("analytics", "stats"),
     )
 )

@@ -225,27 +225,21 @@ SPECS = [
         "sink_parquet_partitioned",
         sink_parquet_partitioned,
         SINK_PARQUET_PARTITIONED_ORACLE,
-        tags=("core", "storage"),
     ),
     QuerySpec(
         "sink_compact_small_files",
         sink_compact_small_files,
         SINK_COMPACT_SMALL_FILES_ORACLE,
-        doc="small-file bin-packing rewrite with content-checksum audit",
-        tags=("core", "storage"),
     ),
     QuerySpec(
         "sink_clustered_write",
         sink_clustered_write,
         SINK_CLUSTERED_WRITE_ORACLE,
-        doc="range-clustered layout for footer min/max file skipping",
-        tags=("core", "storage"),
     ),
     QuerySpec(
         "join_bucketed",
         join_bucketed,
         JOIN_BUCKETED_ORACLE,
-        tags=("core", "storage"),
     ),
 ]
 
@@ -292,8 +286,6 @@ SPECS.append(
         "join_salted",
         join_salted,
         JOIN_SALTED_ORACLE,
-        doc="skew-mitigation salting; semantics identical to plain join",
-        tags=("core", "storage", "skew"),
     )
 )
 
@@ -432,8 +424,6 @@ SPECS.append(
         "join_skew_unsalted",
         join_skew_unsalted,
         JOIN_SKEW_ORACLE,
-        doc="skew pair baseline: straight shuffle join on a 99%-hot synthesized key",
-        tags=("core", "storage", "skew"),
     )
 )
 SPECS.append(
@@ -441,8 +431,6 @@ SPECS.append(
         "join_skew_salted",
         join_skew_salted,
         JOIN_SKEW_ORACLE,
-        doc="skew pair treatment: salted join, hot key spread over 32 reducers",
-        tags=("core", "storage", "skew"),
     )
 )
 
@@ -522,8 +510,6 @@ SPECS.append(
         "sink_zorder_write",
         sink_zorder_write,
         SINK_ZORDER_WRITE_ORACLE,
-        doc="Morton/Z-order 2-D clustered layout for multi-dim file skipping",
-        tags=("core", "storage"),
     )
 )
 
@@ -612,8 +598,6 @@ SPECS.append(
         "wf_delete_compliance",
         wf_delete_compliance,
         WF_DELETE_COMPLIANCE_ORACLE,
-        doc="targeted hard delete: broadcast anti-join purge, rewritten files, audit",
-        tags=("workflow", "storage"),
     )
 )
 
@@ -679,8 +663,6 @@ SPECS.append(
         "sink_dynamic_partition_overwrite",
         sink_dynamic_partition_overwrite,
         SINK_DYNAMIC_PARTITION_OVERWRITE_ORACLE,
-        doc="idempotent partition-scoped rerun: dynamic overwrite replaces only written partitions",
-        tags=("storage", "workflow"),
     )
 )
 
@@ -730,8 +712,6 @@ SPECS.append(
         "src_merge_schema",
         src_merge_schema,
         SRC_MERGE_SCHEMA_ORACLE,
-        doc="schema-evolution read: mergeSchema unions parquet generations, NULL-fills",
-        tags=("storage", "source"),
     )
 )
 
@@ -816,9 +796,6 @@ SPECS.append(
         "join_bloom_prefilter",
         join_bloom_prefilter,
         JOIN_BLOOM_PREFILTER_ORACLE,
-        doc="runtime bloom-filter semi-join reduction: dim builds bloom_filter_agg, "
-        "fact scan gains might_contain before its shuffle",
-        tags=("core", "storage", "scale"),
     )
 )
 
@@ -946,8 +923,6 @@ SPECS.append(
         "storage_time_travel",
         storage_time_travel,
         STORAGE_TIME_TRAVEL_ORACLE,
-        doc="mini COW versioned table: manifest commit by atomic rename, reads by version",
-        tags=("storage", "scale"),
     )
 )
 
@@ -1161,8 +1136,6 @@ SPECS.append(
         "storage_merge_on_read",
         storage_merge_on_read,
         STORAGE_MERGE_ON_READ_ORACLE,
-        doc="merge-on-read table: append-only delta log, reader-side latest-wins merge",
-        tags=("storage", "scale"),
     )
 )
 
@@ -1269,8 +1242,6 @@ SPECS.append(
         "storage_mor_compact",
         storage_mor_compact,
         STORAGE_MOR_COMPACT_ORACLE,
-        doc="MOR compaction: merged view materialized as new base, delta log retired",
-        tags=("storage", "scale"),
     )
 )
 
@@ -1332,8 +1303,6 @@ SPECS.append(
         "join_dynamic_partition_pruning",
         join_dynamic_partition_pruning,
         JOIN_DPP_ORACLE,
-        doc="runtime partition pruning: dim filter prunes fact directories via DPP",
-        tags=("join", "storage", "scale"),
     )
 )
 
@@ -1468,8 +1437,6 @@ SPECS.append(
         "storage_vacuum_retention",
         storage_vacuum_retention,
         STORAGE_VACUUM_RETENTION_ORACLE,
-        doc="MOR vacuum: soft-retire superseded base+log, post-vacuum view exact",
-        tags=("storage", "scale"),
     )
 )
 
@@ -1554,8 +1521,6 @@ SPECS.append(
         "storage_partition_evolution",
         storage_partition_evolution,
         STORAGE_PARTITION_EVOLUTION_ORACLE,
-        doc="coarse->fine partition-spec evolution, unified pruned read over both layouts",
-        tags=("storage", "scale"),
     )
 )
 
@@ -1648,8 +1613,6 @@ SPECS.append(
         "storage_manifest_skipping",
         storage_manifest_skipping,
         STORAGE_MANIFEST_SKIPPING_ORACLE,
-        doc="footer-manifest file skipping: plan from min/max stats, read selected files only",
-        tags=("storage", "scale"),
     )
 )
 
@@ -1736,8 +1699,6 @@ SPECS.append(
         "wf_compaction_plan",
         wf_compaction_plan,
         WF_COMPACTION_PLAN_ORACLE,
-        doc="next-fit compaction bin assignment from a partition manifest (planner half)",
-        tags=("storage", "scale", "workflow"),
     )
 )
 
@@ -1815,8 +1776,6 @@ SPECS.append(
         "storage_deletion_vectors",
         storage_deletion_vectors,
         STORAGE_DELETION_VECTORS_ORACLE,
-        doc="position-delete sidecar + anti-join read path; base files never rewritten",
-        tags=("storage", "scale"),
     )
 )
 
@@ -1988,7 +1947,5 @@ SPECS.append(
         "storage_clustering_audit",
         storage_clustering_audit,
         STORAGE_CLUSTERING_AUDIT_ORACLE,
-        doc="footer-stats clustering audit: stabbing depth of per-file key ranges, two layouts",
-        tags=("storage", "scale"),
     )
 )

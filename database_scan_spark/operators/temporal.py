@@ -164,15 +164,11 @@ SPECS = [
         "join_asof",
         join_asof,
         JOIN_ASOF_ORACLE,
-        doc="as-of join via union+window (vs DuckDB native ASOF JOIN)",
-        tags=("temporal",),
     ),
     QuerySpec(
         "join_range_events",
         join_range_events,
         JOIN_RANGE_EVENTS_ORACLE,
-        doc="banded range self-join (vs DuckDB inequality join)",
-        tags=("temporal",),
     ),
 ]
 
@@ -385,15 +381,11 @@ SPECS.extend(
             "join_asof_forward",
             join_asof_forward,
             JOIN_ASOF_FORWARD_ORACLE,
-            doc="forward as-of (next purchase after each error) via mirrored union+window",
-            tags=("temporal", "asof"),
         ),
         QuerySpec(
             "join_asof_nearest",
             join_asof_nearest,
             JOIN_ASOF_NEAREST_ORACLE,
-            doc="nearest as-of: both directions in one shuffle, backward wins ties",
-            tags=("temporal", "asof"),
         ),
     ]
 )
@@ -499,8 +491,6 @@ SPECS.append(
         "join_asof_tolerance",
         join_asof_tolerance,
         JOIN_ASOF_TOLERANCE_ORACLE,
-        doc="as-of join with 72h staleness bound (feature-store point-in-time rule)",
-        tags=("join", "temporal"),
     )
 )
 
@@ -594,8 +584,6 @@ SPECS.append(
         "join_interval_overlap",
         join_interval_overlap,
         JOIN_INTERVAL_OVERLAP_ORACLE,
-        doc="banded interval-overlap join: extents explode to <=2 bands, exact overlap",
-        tags=("join", "temporal"),
     )
 )
 
@@ -698,7 +686,5 @@ SPECS.append(
         "join_pit_features",
         join_pit_features,
         JOIN_PIT_FEATURES_ORACLE,
-        doc="leakage-free point-in-time N-feature join in one window pass",
-        tags=("join", "temporal", "llm"),
     )
 )

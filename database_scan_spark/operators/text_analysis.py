@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import persist
 from ..spec import QuerySpec
 
 STOPWORDS = ["the", "a", "of", "to", "and", "is", "in", "it"]
@@ -364,17 +365,15 @@ FROM gram_side g JOIN top_side s ON g.doc_id = s.doc_id
 
 
 SPECS = [
-    QuerySpec("text_tokens", text_tokens, TEXT_TOKENS_ORACLE, tags=("llm", "text")),
-    QuerySpec("text_quality", text_quality, TEXT_QUALITY_ORACLE, tags=("llm", "text")),
-    QuerySpec("text_lang_id", text_lang_id, _lang_id_oracle(), tags=("llm", "text")),
-    QuerySpec("text_fingerprint", text_fingerprint, TEXT_FINGERPRINT_ORACLE, tags=("llm", "text")),
-    QuerySpec("text_pii_redact", text_pii_redact, TEXT_PII_REDACT_ORACLE, tags=("llm", "text")),
+    QuerySpec("text_tokens", text_tokens, TEXT_TOKENS_ORACLE),
+    QuerySpec("text_quality", text_quality, TEXT_QUALITY_ORACLE),
+    QuerySpec("text_lang_id", text_lang_id, _lang_id_oracle()),
+    QuerySpec("text_fingerprint", text_fingerprint, TEXT_FINGERPRINT_ORACLE),
+    QuerySpec("text_pii_redact", text_pii_redact, TEXT_PII_REDACT_ORACLE),
     QuerySpec(
         "text_repetition",
         text_repetition,
         TEXT_REPETITION_ORACLE,
-        doc="Gopher-style duplicate n-gram / top-token repetition signals",
-        tags=("llm", "text"),
     ),
 ]
 
@@ -504,8 +503,6 @@ SPECS.append(
         "text_tfidf_topk",
         text_tfidf_topk,
         TEXT_TFIDF_TOPK_ORACLE,
-        doc="top-3 TF-IDF keywords per document (rank on rounded score)",
-        tags=("llm", "text", "retrieval"),
     )
 )
 SPECS.append(
@@ -513,8 +510,6 @@ SPECS.append(
         "text_inverted_index",
         text_inverted_index,
         TEXT_INVERTED_INDEX_ORACLE,
-        doc="term -> df + bounded sorted posting list",
-        tags=("llm", "text", "retrieval"),
     )
 )
 
@@ -642,8 +637,6 @@ SPECS.append(
         "text_bm25_search",
         text_bm25_search,
         _bm25_oracle(),
-        doc="Okapi BM25 top-10 retrieval for a literal query (decimal-summed scores)",
-        tags=("llm", "text", "retrieval"),
     )
 )
 
@@ -732,8 +725,6 @@ SPECS.append(
         "text_quality_logreg",
         text_quality_logreg,
         TEXT_QUALITY_LOGREG_ORACLE,
-        doc="fixed-weight linear quality classifier, exact rational sigmoid",
-        tags=("llm", "text"),
     )
 )
 
@@ -822,9 +813,6 @@ SPECS.append(
         "text_chunk_dedup",
         text_chunk_dedup,
         TEXT_CHUNK_DEDUP_ORACLE,
-        doc="repeated-line (chunk) boilerplate removal, CCNet/RefinedWeb shape: "
-        "global chunk census -> join-back -> in-order reassembly",
-        tags=("llm", "text", "dedup"),
     )
 )
 
@@ -944,8 +932,6 @@ SPECS.append(
         "text_collocations",
         text_collocations,
         TEXT_COLLOCATIONS_ORACLE,
-        doc="PMI bigram collocations — exact counts, one rounded log2 per row",
-        tags=("llm", "text"),
     )
 )
 
@@ -1023,8 +1009,6 @@ SPECS.append(
         "text_readability",
         text_readability,
         TEXT_READABILITY_ORACLE,
-        doc="Flesch ease + FK grade with vowel-group syllable proxy — codegen-only",
-        tags=("llm", "text"),
     )
 )
 
@@ -1072,7 +1056,7 @@ def text_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (measured: 3 identical Exchange+Window chains, one per scan).
     # One tracked persist computes it once; released by the
     # __spark_entry__ cache lifecycle.
-    occ = seg.select("doc_id", "phrase_id", "pos", "w").persist()
+    occ = persist(seg.select("doc_id", "phrase_id", "pos", "w"))
     plen = occ.groupBy("doc_id", "phrase_id").agg(F.count(F.lit(1)).alias("plen"))
     wstat = (
         occ.join(plen, ["doc_id", "phrase_id"])
@@ -1178,8 +1162,6 @@ SPECS.append(
         "text_keyword_rake",
         text_keyword_rake,
         _rake_oracle(),
-        doc="RAKE keyword extraction: top stopword-delimited phrases per document",
-        tags=("llm", "text"),
     )
 )
 
@@ -1262,8 +1244,6 @@ SPECS.append(
         "text_hashing_vectorizer",
         text_hashing_vectorizer,
         TEXT_HASHING_VECTORIZER_ORACLE,
-        doc="vocabulary-free signed feature hashing into D=64 sparse vectors",
-        tags=("llm", "text", "mlops"),
     )
 )
 
@@ -1428,8 +1408,6 @@ SPECS.append(
         "sim_rrf_fusion",
         sim_rrf_fusion,
         _rrf_oracle(),
-        doc="reciprocal rank fusion of BM25 + set-overlap rankings (hybrid RAG merge)",
-        tags=("llm", "retrieval", "similarity"),
     )
 )
 
@@ -1591,8 +1569,6 @@ SPECS.append(
         "analytic_ndcg",
         analytic_ndcg,
         _ndcg_oracle(),
-        doc="NDCG@10 of the BM25 ranking; ideal DCG from the grade histogram",
-        tags=("llm", "retrieval", "stats", "mlops"),
     )
 )
 
@@ -1630,7 +1606,7 @@ def text_boilerplate_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("toks") >= _BP_N,
         F.sequence(F.lit(1), F.size("toks") - (_BP_N - 1)),
     ).otherwise(F.array().cast("array<int>"))
-    shingles = toked.select(
+    shingles = persist(toked.select(
         "doc_id",
         F.explode(
             F.array_distinct(
@@ -1643,7 +1619,7 @@ def text_boilerplate_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
         ).alias("sh"),
-    ).persist()
+    ))
     df_ = shingles.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
     scored = (
         shingles.join(df_, "sh")
@@ -1698,8 +1674,6 @@ SPECS.append(
         "text_boilerplate_fraction",
         text_boilerplate_fraction,
         TEXT_BOILERPLATE_FRACTION_ORACLE,
-        doc="cross-corpus boilerplate shingle share per doc with drop flag",
-        tags=("llm", "text", "dedup"),
     )
 )
 
@@ -1765,8 +1739,6 @@ SPECS.append(
         "dq_langid_confusion",
         dq_langid_confusion,
         _langid_confusion_oracle(),
-        doc="confusion matrix of the lang-ID heuristic vs ground-truth labels",
-        tags=("quality", "text", "mlops"),
     )
 )
 
@@ -1870,8 +1842,6 @@ SPECS.append(
         "text_zipf_fit",
         text_zipf_fit,
         TEXT_ZIPF_FIT_ORACLE,
-        doc="Zipf rank-frequency power-law fit (slope, intercept, r2)",
-        tags=("llm", "text", "stats"),
     )
 )
 
@@ -1900,7 +1870,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("toks") >= _NV_N,
         F.sequence(F.lit(1), F.size("toks") - (_NV_N - 1)),
     ).otherwise(F.array().cast("array<int>"))
-    shingles = toked.select(
+    shingles = persist(toked.select(
         "doc_id",
         F.explode(
             F.array_distinct(
@@ -1913,7 +1883,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
         ).alias("sh"),
-    ).persist()
+    ))
     first = shingles.groupBy("sh").agg(F.min("doc_id").alias("first_doc"))
     scored = (
         shingles.join(first, "sh")
@@ -1962,8 +1932,6 @@ SPECS.append(
         "text_ngram_novelty",
         text_ngram_novelty,
         TEXT_NGRAM_NOVELTY_ORACLE,
-        doc="first-occurrence shingle novelty per doc vs the ingest archive",
-        tags=("llm", "text", "dedup"),
     )
 )
 
@@ -2113,8 +2081,6 @@ SPECS.append(
         "pipeline_corpus_dashboard",
         pipeline_corpus_dashboard,
         _corpus_dashboard_oracle(),
-        doc="corpus-health dashboard composing five registered legs, drift-proof",
-        tags=("llm", "text", "pipeline", "quality"),
     )
 )
 
@@ -2223,8 +2189,6 @@ SPECS.append(
         "text_stylometry_distance",
         text_stylometry_distance,
         _stylometry_oracle(),
-        doc="pairwise chi-square function-word style distance between sources",
-        tags=("llm", "text", "stats", "quality"),
     )
 )
 
@@ -2328,8 +2292,6 @@ SPECS.append(
         "text_watermark_detect",
         text_watermark_detect,
         TEXT_WATERMARK_DETECT_ORACLE,
-        doc="green-list watermark detection (Kirchenbauer shape), integer z-test, no floats",
-        tags=("llm", "text"),
     )
 )
 
@@ -2503,8 +2465,6 @@ SPECS.append(
         "sim_prf_rocchio",
         sim_prf_rocchio,
         _prf_oracle(),
-        doc="pseudo-relevance feedback: BM25 top-5 mine expansion terms, expanded re-search",
-        tags=("llm", "text", "similarity"),
     )
 )
 
@@ -2661,8 +2621,6 @@ SPECS.append(
         "text_winnowing_fingerprints",
         text_winnowing_fingerprints,
         TEXT_WINNOWING_FINGERPRINTS_ORACLE,
-        doc="MOSS winnowing: rightmost-min fingerprints, guaranteed density, sharing audit",
-        tags=("llm", "text", "dedup"),
     )
 )
 
@@ -2765,8 +2723,6 @@ SPECS.append(
         "text_gopher_rules",
         text_gopher_rules,
         TEXT_GOPHER_RULES_ORACLE,
-        doc="Gopher rule filter (Rae '21): integer-exact word/mean-len/stopword/alpha rules",
-        tags=("llm", "text"),
     )
 )
 
@@ -2842,7 +2798,5 @@ SPECS.append(
         "text_token_fertility",
         text_token_fertility,
         TEXT_TOKEN_FERTILITY_ORACLE,
-        doc="per-language subword fertility / bytes-per-chunk profile (mixing-weight input)",
-        tags=("llm", "text"),
     )
 )

@@ -690,16 +690,16 @@ ORDER BY c_mktsegment
 
 
 SPECS: list[QuerySpec] = [
-    QuerySpec("tpch_q2_min_cost_supplier", tpch_q2_min_cost_supplier, TPCH_Q2_ORACLE, tags=("composite",)),
-    QuerySpec("tpch_q4_order_priority", tpch_q4_order_priority, TPCH_Q4_ORACLE, tags=("composite",)),
-    QuerySpec("tpch_q7_volume_shipping", tpch_q7_volume_shipping, TPCH_Q7_ORACLE, tags=("composite",)),
-    QuerySpec("tpch_q8_market_share", tpch_q8_market_share, TPCH_Q8_ORACLE, tags=("composite",)),
-    QuerySpec("tpch_q9_product_profit", tpch_q9_product_profit, TPCH_Q9_ORACLE, tags=("composite",)),
-    QuerySpec("tpch_q13_customer_distribution", tpch_q13_customer_distribution, TPCH_Q13_ORACLE, tags=("composite",)),
-    QuerySpec("tpch_q15_top_supplier", tpch_q15_top_supplier, TPCH_Q15_ORACLE, tags=("composite",)),
-    QuerySpec("tpch_q17_small_qty_revenue", tpch_q17_small_qty_revenue, TPCH_Q17_ORACLE, tags=("composite",)),
-    QuerySpec("tpch_q19_disjunctive_revenue", tpch_q19_disjunctive_revenue, TPCH_Q19_ORACLE, tags=("composite",)),
-    QuerySpec("tpch_q20_promotion_suppliers", tpch_q20_promotion_suppliers, TPCH_Q20_ORACLE, tags=("composite",)),
-    QuerySpec("tpch_q21_sole_blame_supplier", tpch_q21_sole_blame_supplier, TPCH_Q21_ORACLE, tags=("composite",)),
-    QuerySpec("tpch_q22_sales_opportunity", tpch_q22_sales_opportunity, TPCH_Q22_ORACLE, tags=("composite",)),
+    QuerySpec("tpch_q2_min_cost_supplier", tpch_q2_min_cost_supplier, TPCH_Q2_ORACLE),
+    QuerySpec("tpch_q4_order_priority", tpch_q4_order_priority, TPCH_Q4_ORACLE),
+    QuerySpec("tpch_q7_volume_shipping", tpch_q7_volume_shipping, TPCH_Q7_ORACLE),
+    QuerySpec("tpch_q8_market_share", tpch_q8_market_share, TPCH_Q8_ORACLE),
+    QuerySpec("tpch_q9_product_profit", tpch_q9_product_profit, TPCH_Q9_ORACLE),
+    QuerySpec("tpch_q13_customer_distribution", tpch_q13_customer_distribution, TPCH_Q13_ORACLE),
+    QuerySpec("tpch_q15_top_supplier", tpch_q15_top_supplier, TPCH_Q15_ORACLE),
+    QuerySpec("tpch_q17_small_qty_revenue", tpch_q17_small_qty_revenue, TPCH_Q17_ORACLE),
+    QuerySpec("tpch_q19_disjunctive_revenue", tpch_q19_disjunctive_revenue, TPCH_Q19_ORACLE),
+    QuerySpec("tpch_q20_promotion_suppliers", tpch_q20_promotion_suppliers, TPCH_Q20_ORACLE),
+    QuerySpec("tpch_q21_sole_blame_supplier", tpch_q21_sole_blame_supplier, TPCH_Q21_ORACLE),
+    QuerySpec("tpch_q22_sales_opportunity", tpch_q22_sales_opportunity, TPCH_Q22_ORACLE),
 ]

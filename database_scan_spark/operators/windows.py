@@ -215,12 +215,12 @@ GROUP BY user_id, session_id
 
 
 SPECS = [
-    QuerySpec("win_running_sum", win_running_sum, WIN_RUNNING_SUM_ORACLE, tags=("window",)),
-    QuerySpec("win_rank_dense", win_rank_dense, WIN_RANK_DENSE_ORACLE, tags=("window",)),
-    QuerySpec("win_lag_lead", win_lag_lead, WIN_LAG_LEAD_ORACLE, tags=("window",)),
-    QuerySpec("win_tumbling", win_tumbling, WIN_TUMBLING_ORACLE, tags=("window", "stream-shape")),
-    QuerySpec("win_sliding", win_sliding, WIN_SLIDING_ORACLE, tags=("window", "stream-shape")),
-    QuerySpec("win_session", win_session, WIN_SESSION_ORACLE, tags=("window", "stream-shape")),
+    QuerySpec("win_running_sum", win_running_sum, WIN_RUNNING_SUM_ORACLE),
+    QuerySpec("win_rank_dense", win_rank_dense, WIN_RANK_DENSE_ORACLE),
+    QuerySpec("win_lag_lead", win_lag_lead, WIN_LAG_LEAD_ORACLE),
+    QuerySpec("win_tumbling", win_tumbling, WIN_TUMBLING_ORACLE),
+    QuerySpec("win_sliding", win_sliding, WIN_SLIDING_ORACLE),
+    QuerySpec("win_session", win_session, WIN_SESSION_ORACLE),
 ]
 
 
@@ -254,7 +254,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts) / 1000000.0
 """
 
 SPECS.append(
-    QuerySpec("win_range_frame", win_range_frame, WIN_RANGE_FRAME_ORACLE, tags=("window",))
+    QuerySpec("win_range_frame", win_range_frame, WIN_RANGE_FRAME_ORACLE)
 )
 
 
@@ -282,7 +282,7 @@ WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey)
 """
 
 SPECS.append(
-    QuerySpec("win_distribution", win_distribution, WIN_DISTRIBUTION_ORACLE, tags=("window",))
+    QuerySpec("win_distribution", win_distribution, WIN_DISTRIBUTION_ORACLE)
 )
 
 
@@ -365,8 +365,6 @@ SPECS.append(
         "win_gap_fill",
         win_gap_fill,
         WIN_GAP_FILL_ORACLE,
-        doc="dense-calendar resample: zero rows for silent hours",
-        tags=("window", "temporal"),
     )
 )
 
@@ -461,8 +459,6 @@ SPECS.append(
         "win_rolling_zscore",
         win_rolling_zscore,
         WIN_ROLLING_ZSCORE_ORACLE,
-        doc="rolling z-score anomaly flag from exact BIGINT window moments",
-        tags=("window", "analytics"),
     )
 )
 
@@ -530,8 +526,6 @@ SPECS.append(
         "win_ohlc_resample",
         win_ohlc_resample,
         WIN_OHLC_RESAMPLE_ORACLE,
-        doc="per-type hourly OHLC bars with explicit total-order open/close",
-        tags=("window", "timeseries"),
     )
 )
 
@@ -609,8 +603,6 @@ SPECS.append(
         "win_streak",
         win_streak,
         WIN_STREAK_ORACLE,
-        doc="Gaps-and-islands longest consecutive-day streak per user.",
-        tags=("window",),
     )
 )
 
@@ -656,8 +648,6 @@ SPECS.append(
         "win_nav_ignore_nulls",
         win_nav_ignore_nulls,
         WIN_NAV_IGNORE_NULLS_ORACLE,
-        doc="first_value/nth_value/last_value IGNORE NULLS over sparse purchase signal",
-        tags=("window",),
     )
 )
 
@@ -730,8 +720,6 @@ SPECS.append(
         "win_twap",
         win_twap,
         WIN_TWAP_ORACLE,
-        doc="time-weighted average over irregular per-user event intervals",
-        tags=("window",),
     )
 )
 
@@ -821,8 +809,6 @@ SPECS.append(
         "win_drawdown",
         win_drawdown,
         WIN_DRAWDOWN_ORACLE,
-        doc="max drawdown via nested running-sum/running-max windows, exact DECIMAL",
-        tags=("window",),
     )
 )
 
@@ -952,8 +938,6 @@ SPECS.append(
         "win_cusum",
         win_cusum,
         WIN_CUSUM_ORACLE,
-        doc="two-sided CUSUM via prefix-min/max closed form — pure BIGINT windows",
-        tags=("window", "analytics"),
     )
 )
 
@@ -1046,8 +1030,6 @@ SPECS.append(
         "win_hampel",
         win_hampel,
         WIN_HAMPEL_ORACLE,
-        doc="rolling-median Hampel outlier filter — discrete medians, integer 3.5x test",
-        tags=("window", "quality"),
     )
 )
 
@@ -1167,8 +1149,6 @@ SPECS.append(
         "win_interpolate",
         win_interpolate,
         WIN_INTERPOLATE_ORACLE,
-        doc="linear interpolation of missing hourly points — exact integer blend, no extrapolation",
-        tags=("window", "temporal"),
     )
 )
 
@@ -1309,8 +1289,6 @@ SPECS.append(
         "win_sax_symbolize",
         win_sax_symbolize,
         WIN_SAX_SYMBOLIZE_ORACLE,
-        doc="SAX: z-normalized PAA segments to a 4-letter symbol string per user",
-        tags=("window", "analytics"),
     )
 )
 
@@ -1371,8 +1349,6 @@ SPECS.append(
         "win_decay_score",
         win_decay_score,
         WIN_DECAY_SCORE_ORACLE,
-        doc="recency-weighted score: sum(value * exp(-lambda*age)), exact decimal summation",
-        tags=("window", "analytics"),
     )
 )
 
@@ -1468,8 +1444,6 @@ SPECS.append(
         "win_mtd_ytd",
         win_mtd_ytd,
         WIN_MTD_YTD_ORACLE,
-        doc="calendar YTD running totals + integer-exact YoY basis points on the months relation",
-        tags=("window", "analytics"),
     )
 )
 
@@ -1579,10 +1553,6 @@ SPECS.append(
         "win_running_sum_sharded",
         win_running_sum_sharded,
         WIN_RUNNING_SUM_SHARDED_ORACLE,
-        doc="two-pass distributed prefix sum: chunked partial totals + "
-        "cumulative offsets + bounded within-chunk windows — the "
-        "hot-key-safe rewrite of a per-user running sum",
-        tags=("window", "scale"),
     )
 )
 
@@ -1713,10 +1683,6 @@ SPECS.append(
         "win_lag_lead_sharded",
         win_lag_lead_sharded,
         WIN_LAG_LEAD_ORACLE,
-        doc="hot-key-safe lag/lead: dense timeline index from bounded "
-        "windows, neighbors fetched by equi-join — no whole-user "
-        "window partition",
-        tags=("window", "scale"),
     )
 )
 
@@ -1732,10 +1698,6 @@ SPECS.append(
         "win_ewma_sharded",
         win_ewma_sharded,
         _win_ewma_sharded_oracle(),
-        doc="hot-key-safe 8-term EWMA: indexed equi-join fan-out + "
-        "ordered refold replaying the plain expression's addition "
-        "order exactly",
-        tags=("window", "scale"),
     )
 )
 
@@ -1818,9 +1780,5 @@ SPECS.append(
         "win_session_sharded",
         win_session_sharded,
         WIN_SESSION_ORACLE,
-        doc="hot-key-safe sessionization: indexed-join gap flags + "
-        "chunked prefix-sum session ids + hash agg — no whole-user "
-        "window or session-merge state anywhere",
-        tags=("window", "scale"),
     )
 )

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import JACCARD_THRESHOLD, dedup_ngram_jaccard
 from ..operators.text_analysis import text_quality as text_quality_fn
+from ..session import persist
 from ..spec import QuerySpec
 
 MAX_ITERS = 20  # safety bound; diameter of near-dup clusters is tiny
@@ -77,14 +78,13 @@ def dedup_cluster_cc(
     # pure plan-time at sf0.1 and an explainString OOM at 100x.
     # localCheckpoint truncates the lineage itself (graph_scc's
     # pattern); the shallow exact-join plan stays on plain persist.
-    edges = edges.localCheckpoint(eager=False) if lsh_pairs else edges.persist()
-    labels_p = (
+    edges = edges.localCheckpoint(eager=False) if lsh_pairs else persist(edges)
+    labels_p = persist(
         edges.groupBy("src")
         .agg(
             F.least(F.col("src"), F.min("dst")).alias("label"),
             (F.min("dst") < F.col("src")).alias("chg"),
         )
-        .persist()
     )
     # Round 1 needs NO convergence count (optimization r11, guide §5
     # "the driver should do almost no data work" — one action fewer):
@@ -111,7 +111,7 @@ def dedup_cluster_cc(
                 )
             )
         )
-        new_p = (
+        new_p = persist(
             contribs.groupBy("src")
             .agg(
                 F.min("label").alias("label"),
@@ -120,7 +120,6 @@ def dedup_cluster_cc(
                     < F.min(F.when(F.col("is_self") == 1, F.col("label")))
                 ).alias("chg"),
             )
-            .persist()
         )
         changed = new_p.filter("chg").count()
         labels_p.unpersist()
@@ -292,16 +291,11 @@ SPECS = [
         "dedup_cluster_cc",
         dedup_cluster_cc,
         DEDUP_CLUSTER_CC_ORACLE,
-        doc="iterative connected components over near-dup pairs vs recursive-CTE oracle",
-        tags=("llm", "dedup", "iterative"),
     ),
     QuerySpec(
         "dedup_cluster_cc_twostar",
         dedup_cluster_cc_twostar,
         DEDUP_CLUSTER_CC_ORACLE,
-        doc="large-star/small-star CC (Kiveris SoCC'14) — diameter-independent "
-        "round count, the 100 TB CC shape; same oracle as dedup_cluster_cc",
-        tags=("llm", "dedup", "iterative"),
     ),
 ]
 
@@ -376,8 +370,6 @@ SPECS.append(
         "dedup_keep_best",
         dedup_keep_best,
         _keep_best_oracle(),
-        doc="per-cluster canonical election: keep argmax quality, drop the rest",
-        tags=("llm", "dedup", "pipeline"),
     )
 )
 
@@ -427,9 +419,5 @@ SPECS.append(
         "dedup_cluster_cc_lsh",
         dedup_cluster_cc_lsh,
         _cc_lsh_oracle(),
-        doc="connected components over banded-LSH pairs — the "
-        "bucket-bounded edge source that survives 100x where the "
-        "exact join OOMs",
-        tags=("llm", "dedup", "scale"),
     )
 )

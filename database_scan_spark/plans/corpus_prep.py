@@ -159,7 +159,5 @@ SPECS = [
         "pipeline_corpus_prep",
         corpus_prep,
         _oracle(),
-        doc="quality gate → exact dedup → near-dup drop → token budget, one plan",
-        tags=("llm", "pipeline"),
     ),
 ]

@@ -142,7 +142,5 @@ SPECS = [
         "pipeline_incremental_ingest",
         pipeline_incremental_ingest,
         _oracle(),
-        doc="daily ingest composed end-to-end: delta -> quality -> index-probe dedup -> manifest",
-        tags=("pipeline", "llm"),
     ),
 ]

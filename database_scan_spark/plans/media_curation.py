@@ -150,7 +150,5 @@ SPECS = [
         "pipeline_media_curation",
         pipeline_media_curation,
         _oracle(),
-        doc="cross-modality curation: quality gate + phash dedup + VAD voiced-fraction gate",
-        tags=("llm", "pipeline", "multimodal"),
     )
 ]

@@ -5,7 +5,7 @@ from disk instead of recrawling (`load_from_files=True` —
 `/root/reference/x2.2.py:249-256,341-406`). Spark-first: each stage
 is written once as parquet into a deterministic stage directory; a
 resumed run re-reads the checkpoint instead of recomputing the
-lineage. (Intra-job, `df.persist()`/`checkpoint()` fill the same
+lineage. (Intra-job, `session.persist`/`checkpoint()` fill the same
 role; the on-disk form is what survives process death — the crash
 recovery a 100 TB crawl actually needs.)
 
@@ -114,7 +114,5 @@ SPECS = [
         "wf_checkpoint_resume",
         wf_checkpoint_resume,
         WF_CHECKPOINT_RESUME_ORACLE,
-        doc="staged parquet checkpoint + resume (x2.2.py Mode A/B analog)",
-        tags=("workflow",),
     ),
 ]

@@ -155,8 +155,6 @@ SPECS = [
         "pipeline_pretrain_batches",
         pipeline_pretrain_batches,
         PIPELINE_PRETRAIN_BATCHES_ORACLE,
-        doc="documents→batches flagship: gate→dedup→tokenize→pack→shard, checksummed manifest",
-        tags=("llm", "pipeline", "flagship"),
     )
 ]
 
@@ -315,7 +313,5 @@ SPECS.append(
         "wf_provenance_chain",
         wf_provenance_chain,
         WF_PROVENANCE_CHAIN_ORACLE,
-        doc="chained per-stage lineage manifest: final link certifies the whole derivation",
-        tags=("llm", "workflow", "pipeline"),
     )
 )

@@ -155,8 +155,5 @@ SPECS = [
         "pipeline_quality_funnel",
         pipeline_quality_funnel,
         PIPELINE_QUALITY_FUNNEL_ORACLE,
-        doc="per-stage corpus attrition funnel composing the registered "
-        "Gopher / CCNet / exact-dedup gates (RefinedWeb-style report)",
-        tags=("llm", "pipeline"),
     )
 ]

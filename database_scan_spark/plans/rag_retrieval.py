@@ -183,7 +183,5 @@ SPECS = [
         "pipeline_rag_retrieval",
         pipeline_rag_retrieval,
         _rag_oracle(),
-        doc="RAG retrieval end to end: chunk, embed, broadcast-score, windowed top-k",
-        tags=("llm", "pipeline", "flagship"),
     )
 ]

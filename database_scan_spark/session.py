@@ -12,6 +12,9 @@ local-mode hack:
   pickled rows.
 - UTC session timezone: fixture timestamps are naive; keep Spark and
   the DuckDB oracle byte-identical.
+
+It also owns the session state a query leaves behind: confs
+(``scoped_confs``) and cached intermediates (``persist``/``release``).
 """
 
 from __future__ import annotations
@@ -20,7 +23,7 @@ import contextlib
 import os
 from collections.abc import Iterator, Mapping
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -83,6 +86,37 @@ def scoped_confs(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+# Frames the engine cached while building a query's plan, oldest
+# first. Only ``persist`` adds to it, so a cache the caller made itself
+# is never released by the engine.
+ENGINE_PERSISTS: list[DataFrame] = []
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """``df.persist()``, recorded for the next ``release()``.
+
+    A builder caches an intermediate it reads more than once, but a
+    lazily returned result cannot unpersist behind itself. Queries run
+    one after another in a shared session (the driver contract), so
+    ``__spark_entry__`` releases the finished query's caches when the
+    next query enters, or at ``drain()``. The only place in the package
+    that calls ``.persist()``.
+    """
+    out = df.persist()
+    ENGINE_PERSISTS.append(out)
+    return out
+
+
+def release() -> None:
+    """Unpersist every recorded engine cache, newest first, and forget it."""
+    while ENGINE_PERSISTS:
+        df = ENGINE_PERSISTS.pop()
+        try:
+            df.unpersist()
+        except Exception:  # session gone / already unpersisted
+            pass
 
 
 # Recommended configuration for a real multi-executor deployment at

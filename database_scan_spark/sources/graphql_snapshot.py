@@ -265,6 +265,24 @@ def make_datasource():
     return GraphQLSnapshotDataSource
 
 
+def entity_edges(spark, sf_dir: str):
+    """The entity-edge rows a crawl of the snapshot returns: orders of
+    customers below 50 as (entity_id, edge_id, score)."""
+    from pyspark.sql import functions as F  # noqa: PLC0415
+
+    from ..catalog import load  # noqa: PLC0415
+
+    return (
+        load(spark, sf_dir, "orders")
+        .filter(F.col("o_custkey") < 50)
+        .select(
+            F.col("o_custkey").alias("entity_id"),
+            F.col("o_orderkey").alias("edge_id"),
+            F.col("o_totalprice").alias("score"),
+        )
+    )
+
+
 def materialize_pages(spark, sf_dir: str, out_dir: str, n_pages: int = 4) -> None:
     """Produce the JSON-lines 'response pages' this source reads, from
     the orders edge table (what a cursor-paged GraphQL crawl of the
@@ -276,14 +294,8 @@ def materialize_pages(spark, sf_dir: str, out_dir: str, n_pages: int = 4) -> Non
     from pyspark.sql import functions as F  # noqa: PLC0415
 
     (
-        spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-        .filter(F.col("o_custkey") < 50)
-        .select(
-            F.col("o_custkey").alias("entity_id"),
-            F.col("o_orderkey").alias("edge_id"),
-            F.col("o_totalprice").alias("score"),
-            (F.col("o_orderkey") % n_pages).alias("page"),
-        )
+        entity_edges(spark, sf_dir)
+        .withColumn("page", F.col("edge_id") % n_pages)
         .repartition("page")
         .write.mode("overwrite")
         .partitionBy("page")

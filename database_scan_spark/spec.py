@@ -12,7 +12,7 @@ the whole operator inventory (SURVEY.md §5.2).
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,12 +30,12 @@ class QuerySpec:
     oracle: equivalent DuckDB SQL over the pre-registered fixture
             views, or None for non-SQL-expressible ops (the driver
             then records a weaker rows-only check).
-    tags:   coarse grouping for tests/bench ("core", "llm",
-            "window", "stream", ...).
+
+    A builder that caches an intermediate it reads more than once
+    does so with ``session.persist``, which records the frame for
+    release at the next ``__spark_entry__.queries()`` entry.
     """
 
     name: str
     fn: QueryFn
     oracle: str | None
-    doc: str = ""
-    tags: tuple[str, ...] = field(default=())

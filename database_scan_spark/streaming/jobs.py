@@ -642,39 +642,28 @@ GROUP BY 1, 2, 3
 
 
 SPECS = [
-    QuerySpec("stream_tumbling", stream_tumbling, STREAM_TUMBLING_ORACLE, tags=("stream",)),
-    QuerySpec("stream_sliding", stream_sliding, STREAM_SLIDING_ORACLE, tags=("stream",)),
-    QuerySpec("stream_session", stream_session, STREAM_SESSION_ORACLE, tags=("stream",)),
+    QuerySpec("stream_tumbling", stream_tumbling, STREAM_TUMBLING_ORACLE),
+    QuerySpec("stream_sliding", stream_sliding, STREAM_SLIDING_ORACLE),
+    QuerySpec("stream_session", stream_session, STREAM_SESSION_ORACLE),
     QuerySpec(
         "stream_stateful_user_totals",
         stream_stateful_user_totals,
         STREAM_STATEFUL_USER_TOTALS_ORACLE,
-        doc=(
-            "applyInPandasWithState per-user totals; final-state "
-            "selection + integer-cents state made it oracle-able (r5)"
-        ),
-        tags=("stream",),
     ),
     QuerySpec(
         "stream_stateful_running_total",
         stream_stateful_running_total,
         STREAM_STATEFUL_RUNNING_TOTAL_ORACLE,
-        doc="Spark 4 transformWithStateInPandas ValueState totals (int-cents, oracled).",
-        tags=("stream",),
     ),
     QuerySpec(
         "stream_tws_recent_events",
         stream_tws_recent_events,
         STREAM_TWS_RECENT_EVENTS_ORACLE,
-        doc="transformWithStateInPandas ListState: per-user k most recent events.",
-        tags=("stream",),
     ),
     QuerySpec(
         "stream_tws_type_counts",
         stream_tws_type_counts,
         STREAM_TWS_TYPE_COUNTS_ORACLE,
-        doc="transformWithStateInPandas MapState: per-user event_type counts.",
-        tags=("stream",),
     ),
 ]
 
@@ -702,8 +691,6 @@ SPECS.append(
         "stream_dedup",
         stream_dedup,
         STREAM_DEDUP_ORACLE,
-        doc="watermarked streaming dropDuplicates (state-evicting)",
-        tags=("stream", "dedup"),
     )
 )
 
@@ -765,8 +752,6 @@ SPECS.append(
         "stream_stream_interval_join",
         stream_stream_interval_join,
         STREAM_SS_JOIN_ORACLE,
-        doc="watermarked stream-stream interval join (same oracle as batch range join)",
-        tags=("stream", "temporal"),
     )
 )
 
@@ -818,8 +803,6 @@ SPECS.append(
         "stream_foreach_batch_sink",
         stream_foreach_batch_sink,
         STREAM_FOREACH_BATCH_SINK_ORACLE,
-        doc="foreachBatch idempotent parquet sink, oracle checks the sinked data",
-        tags=("stream", "sink"),
     )
 )
 
@@ -905,8 +888,6 @@ SPECS.append(
         "stream_mv_refresh",
         stream_mv_refresh,
         STREAM_MV_REFRESH_ORACLE,
-        doc="foreachBatch incremental MV: 4 micro-batches merge partial aggregates",
-        tags=("stream", "workflow"),
     )
 )
 
@@ -1107,9 +1088,6 @@ SPECS.append(
         "stream_tws_inactivity_flush",
         stream_tws_inactivity_flush,
         STREAM_TWS_INACTIVITY_FLUSH_ORACLE,
-        doc="event-time TIMERS across two real micro-batches: inactivity session "
-        "flush (timer + arrival), exact SQL oracle over the same split",
-        tags=("stream",),
     )
 )
 
@@ -1238,9 +1216,6 @@ SPECS.append(
         "stream_tws_proctime_timer",
         stream_tws_proctime_timer,
         STREAM_TWS_PROCTIME_TIMER_ORACLE,
-        doc="processing-time TIMERS: first-sight snapshot frozen at registration, "
-        "emitted by the timer fire; exact SQL oracle over the arrival split",
-        tags=("stream",),
     )
 )
 
@@ -1414,10 +1389,6 @@ SPECS.append(
         "stream_tws_eventtime_timer",
         stream_tws_eventtime_timer,
         STREAM_TWS_EVENTTIME_TIMER_ORACLE,
-        doc="event-time TIMERS, pure deadline lifecycle: tiered per-key SLA "
-        "armed at first sight, fired by watermark passage, frozen snapshot "
-        "emitted once; exact SQL oracle over the arrival split",
-        tags=("stream",),
     )
 )
 
@@ -1481,15 +1452,11 @@ SPECS.extend(
             "stream_static_join",
             stream_static_join,
             STREAM_STATIC_JOIN_ORACLE,
-            doc="stream-static broadcast dim enrichment + windowless aggregate",
-            tags=("stream", "join"),
         ),
         QuerySpec(
             "stream_dedup_within_watermark",
             stream_dedup_within_watermark,
             STREAM_DEDUP_WITHIN_WATERMARK_ORACLE,
-            doc="bounded-state dropDuplicatesWithinWatermark (state evicts at the delay)",
-            tags=("stream", "dedup"),
         ),
     ]
 )
@@ -1587,9 +1554,6 @@ SPECS.append(
         "stream_left_outer_interval_join",
         stream_left_outer_interval_join,
         STREAM_LEFT_OUTER_JOIN_ORACLE,
-        doc="stream-stream LEFT OUTER interval join: watermark-driven null emission, "
-        "oracle pins the eviction horizon",
-        tags=("stream", "temporal"),
     )
 )
 
@@ -1654,8 +1618,6 @@ SPECS.append(
         "sink_python_stream_datasource",
         sink_python_stream_datasource,
         SINK_PYTHON_STREAM_DATASOURCE_ORACLE,
-        doc="streaming Python DataSource sink: batch-scoped commit, full loop oracled",
-        tags=("stream", "sink"),
     )
 )
 
@@ -1738,8 +1700,6 @@ SPECS.append(
         "stream_update_vs_complete",
         stream_update_vs_complete,
         STREAM_UPDATE_VS_COMPLETE_ORACLE,
-        doc="output-mode semantics pinned: update emissions vs complete snapshot",
-        tags=("stream",),
     )
 )
 
@@ -1832,8 +1792,6 @@ SPECS.append(
         "stream_watermark_late_drop",
         stream_watermark_late_drop,
         STREAM_WATERMARK_LATE_DROP_ORACLE,
-        doc="append-mode lateness timing pinned: 3-batch hash replay, exact drop set",
-        tags=("stream",),
     )
 )
 
@@ -1929,8 +1887,6 @@ SPECS.append(
         "stream_checkpoint_resume",
         stream_checkpoint_resume,
         STREAM_CHECKPOINT_RESUME_ORACLE,
-        doc="exactly-once checkpoint recovery: run 2 processes only the new file",
-        tags=("stream", "workflow"),
     )
 )
 
@@ -2007,8 +1963,6 @@ SPECS.append(
         "stream_chained_aggregations",
         stream_chained_aggregations,
         STREAM_CHAINED_AGGREGATIONS_ORACLE,
-        doc="two chained stateful windowed aggs in one query (window_time rollup)",
-        tags=("stream",),
     )
 )
 
@@ -2143,8 +2097,6 @@ SPECS.append(
         "stream_pit_enrich",
         stream_pit_enrich,
         STREAM_PIT_ENRICH_ORACLE,
-        doc="stateful streaming PIT enrichment == batch join_pit_features (Kappa parity)",
-        tags=("stream", "llm"),
     )
 )
 
@@ -2235,8 +2187,6 @@ SPECS.append(
         "stream_dlq_split",
         stream_dlq_split,
         STREAM_DLQ_SPLIT_ORACLE,
-        doc="dual-sink dead-letter split per micro-batch, complete-partition oracle",
-        tags=("stream", "quality"),
     )
 )
 
@@ -2380,7 +2330,5 @@ SPECS.append(
         "stream_corpus_ingest",
         stream_corpus_ingest,
         STREAM_CORPUS_INGEST_ORACLE,
-        doc="streaming corpus intake: gate + cross-batch exact dedup ledger, per-batch manifest",
-        tags=("stream", "llm", "pipeline"),
     )
 )

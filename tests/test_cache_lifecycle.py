@@ -1,15 +1,15 @@
 """Session cache lifecycle at the driver contract boundary.
 
-VERDICT r4 "persist hygiene": operators persist() intermediates and
-cannot unpersist behind their own lazily-returned result, so the
-lifetime contract is session-level — `__spark_entry__.queries()`
-releases the previous query's engine-tracked persists on each query's
-entry, bounding a sequential sweep to at most one query's cached
-relations (SCALE.md "Cache lifecycle").
+Operators cache intermediates with `session.persist` and cannot
+unpersist behind their own lazily-returned result, so the lifetime
+contract is session-level: `__spark_entry__.queries()` releases the
+previous query's recorded persists on each query's entry, bounding a
+sequential sweep to at most one query's cached relations (SCALE.md
+"Cache lifecycle").
 
-ADVICE r5 upgrade: the release is TRACKED, not `clearCache()` — a
-cache the CALLER created (e.g. a pre-cached input table) must survive
-engine queries running around it.
+The release is recorded, not `clearCache()`: a cache the CALLER
+created (e.g. a pre-cached input table) must survive engine queries
+running around it.
 """
 
 from __future__ import annotations
@@ -59,8 +59,8 @@ def test_second_query_releases_first_querys_caches(spark):
     )
     assert b.count() > 0
 
-    # And the raw spec path (bench/tests) is untouched: no implicit
-    # clear when calling spec.fn directly.
+    # And the raw spec path (tests) releases nothing itself: no
+    # implicit clear when calling spec.fn directly.
     from database_scan_spark.registry import get
 
     spark.catalog.clearCache()
@@ -101,9 +101,9 @@ def test_caller_caches_survive_engine_queries(spark):
 
 
 def test_persist_intercept_is_scoped(spark):
-    """DataFrame.persist is intercepted only WHILE an engine query
-    builds its plan — after queries() returns, a caller persist must
-    not be tracked (and so must survive the next engine entry)."""
+    """Nothing patches DataFrame.persist: after queries() returns, a
+    caller persist must not be recorded (and so must survive the next
+    engine entry)."""
     from pyspark.sql import DataFrame
 
     from database_scan_spark.catalog import load
@@ -123,13 +123,13 @@ def test_persist_intercept_is_scoped(spark):
 
 
 def test_second_thread_persist_during_build_is_not_tracked(spark):
-    """The persist intercept is class-global while a query builds, but
-    attribution is THREAD-scoped (VERDICT r6): a persist issued by a
-    different thread mid-build is a caller cache — never recorded, so
+    """Only ``session.persist`` records: a plain ``persist()`` issued
+    by a caller thread mid-build is a caller cache, never recorded, so
     never drained by the next engine entry."""
     import threading
 
     from database_scan_spark.catalog import load
+    from database_scan_spark.session import persist
 
     spark.catalog.clearCache()
     entry_mod._ENGINE_PERSISTS.clear()
@@ -139,7 +139,7 @@ def test_second_thread_persist_during_build_is_not_tracked(spark):
         caller_holder.append(load(spark, SF, "region").persist())
 
     def engine_fn(s, sf):
-        df = load(s, sf, "nation").persist()  # engine-owned: tracked
+        df = persist(load(s, sf, "nation"))  # engine-owned: tracked
         t = threading.Thread(target=caller_thread)
         t.start()
         t.join()
@@ -165,12 +165,13 @@ def test_second_thread_persist_during_build_is_not_tracked(spark):
 
 
 def test_nested_wrapped_call_does_not_drain_outer_caches(spark):
-    """ADVICE r6 reentrancy: a wrapped query invoking another wrapped
-    query must not drain the outer query's live persists mid-build,
-    and must not double-wrap persist."""
+    """Reentrancy: a wrapped query invoking another wrapped query must
+    not drain the outer query's live persists mid-build, and must
+    leave DataFrame.persist as it found it."""
     from pyspark.sql import DataFrame
 
     from database_scan_spark.catalog import load
+    from database_scan_spark.session import persist
 
     spark.catalog.clearCache()
     entry_mod._ENGINE_PERSISTS.clear()
@@ -179,7 +180,7 @@ def test_nested_wrapped_call_does_not_drain_outer_caches(spark):
     inner = entry_mod._released(lambda s, sf: load(s, sf, "region"))
 
     def outer_fn(s, sf):
-        live = load(s, sf, "nation").persist()
+        live = persist(load(s, sf, "nation"))
         live.count()  # materialize so an unpersist would be observable
         assert live.storageLevel.useMemory
         inner_df = inner(s, sf)  # nested wrapped call: passthrough
@@ -226,72 +227,41 @@ def test_concurrent_wrapped_entry_fails_loud(spark):
     assert entry_mod._BUILD_OWNER is None
 
 
-def test_cache_call_is_tracked_like_persist(spark):
-    """ADVICE r6: classic DataFrame.cache() does not route through
-    persist() — it must be intercepted too, or a future .cache()-ing
-    operator silently escapes the release contract."""
+def test_persist_on_a_build_spawned_thread_is_released(spark):
+    """Ownership is decided where the persist is written, not by which
+    thread issues it: a ``session.persist`` on a worker thread the
+    build itself spawns is recorded and released at the next entry."""
+    import threading
+
     from database_scan_spark.catalog import load
+    from database_scan_spark.session import persist
 
     spark.catalog.clearCache()
     entry_mod._ENGINE_PERSISTS.clear()
+    made: list = []
 
-    def caching_fn(s, sf):
-        df = load(s, sf, "nation").cache()
-        df.count()
-        return df
+    def threaded_fn(s, sf):
+        t = threading.Thread(target=lambda: made.append(persist(load(s, sf, "nation"))))
+        t.start()
+        t.join()
+        return made[0]
 
-    cached = entry_mod._released(caching_fn)(spark, SF)
-    assert len(entry_mod._ENGINE_PERSISTS) == 1, (
-        ".cache() inside a query build was not tracked"
-    )
+    cached = entry_mod._released(threaded_fn)(spark, SF)
+    assert cached.count() > 0
     assert cached.storageLevel.useMemory
-    # Next entry releases it.
+    assert [id(d) for d in entry_mod._ENGINE_PERSISTS] == [id(cached)], (
+        "a persist on a build-spawned thread was not recorded"
+    )
     entry_mod._released(lambda s, sf: load(s, sf, "region"))(spark, SF)
     assert not cached.storageLevel.useMemory, (
-        "tracked .cache() was not released on the next entry"
+        "a build-spawned thread's persist was not released on the next entry"
     )
+    assert not entry_mod._ENGINE_PERSISTS
     spark.catalog.clearCache()
 
 
-def test_no_plan_builder_spawns_threads():
-    """Threaded-builder canary (ADVICE r7): the persist/cache
-    intercept attributes a persist to the engine only when it is
-    issued on the BUILDING thread's ident, so a plan builder that
-    spawned worker threads would leak any persist those workers issue
-    (untracked → never released → cross-query cache leak). The
-    single-threaded-build assumption is documented in _released's
-    docstring; this test makes it mechanical: no non-vendored engine
-    source may spawn threads during plan construction. If a threaded
-    builder ever lands, it must register its worker idents with the
-    intercept first — then extend this allowlist."""
-    import glob as g
-    import os
-    import re
-
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "database_scan_spark",
-    )
-    spawn = re.compile(
-        r"threading\.Thread\(|ThreadPoolExecutor\(|start_new_thread\("
-    )
-    offenders = []
-    for path in g.glob(os.path.join(root, "**", "*.py"), recursive=True):
-        if os.sep + "_vendor" + os.sep in path:
-            continue  # vendored protobuf runtime: no engine persists
-        with open(path) as fh:
-            for lineno, line in enumerate(fh, 1):
-                if spawn.search(line):
-                    offenders.append(f"{os.path.relpath(path, root)}:{lineno}")
-    assert not offenders, (
-        "plan-builder thread spawn found — persists from spawned "
-        "threads are untracked by the __spark_entry__ intercept "
-        f"(see _released docstring): {offenders}"
-    )
-
-
 def test_drain_releases_between_queries(spark):
-    """bench.py's out-of-band drain (ADVICE r9): calling
+    """The out-of-band drain (bench.py, perfbench): calling
     ``__spark_entry__.drain()`` between queries releases the previous
     query's engine persists immediately, so the next query's timed
     region starts with nothing to drain."""

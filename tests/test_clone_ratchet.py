@@ -56,6 +56,7 @@ ALLOWED: dict[tuple[str, str], str] = {
         "executor-side closures pickled by value: each must hold its own code"
     ),
     ("sampling.<module>", "temporal.<module>"): "module import headers",
+    ("graph.<module>", "stats_tests.<module>"): "module import headers",
     ("similarity.sim_hard_negatives", "similarity.sim_topk_filtered"): (
         "query/corpus projections of the embeddings table; the join conditions differ"
     ),

@@ -93,13 +93,20 @@ _STATIC_RULES = (
         {"database_scan_spark/catalog.py"},
         ("database_scan_spark", "tools", "bench.py"),
     ),
+    # engine caches go through session.persist, which records them
+    # for release at the next queries() entry
+    (
+        (".persist(", ".cache()"),
+        {"database_scan_spark/session.py"},
+        ("database_scan_spark",),
+    ),
 )
 
 
 def test_operators_never_collect():
     """Static scan for constructs only their owner module may use:
-    driver-side materialization in the hot path, session conf changes
-    and the raw events.ts reader shim."""
+    driver-side materialization in the hot path, session conf changes,
+    the raw events.ts reader shim and engine caches."""
     import pathlib
 
     repo = pathlib.Path(__file__).resolve().parent.parent

@@ -4,7 +4,8 @@ Every timing and verification tool (``bench.py`` and ``tools/*``) runs
 queries through this module, so the protocol is decided once:
 
 - queries come from ``__spark_entry__.queries()``, whose ``_released``
-  wrapper bounds the session to one query's persisted caches;
+  wrapper releases the caches the previous query recorded with
+  ``session.persist``, bounding the session to one query's;
 - ``drain()`` releases the previous query's caches OUTSIDE the clock;
 - the Spark job description is the query name;
 - timed runs apply ``bench.EXTRA_CONFS`` through
