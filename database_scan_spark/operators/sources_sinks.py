@@ -17,6 +17,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import TABLES, load
+from ..session import run_stream
+from ..sources import register
 from ..spec import QuerySpec
 from ._helpers import workdir
 
@@ -518,15 +520,8 @@ def src_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pages_dir = workdir(sf_dir, "graphql_pages")
     materialize_pages(spark, sf_dir, pages_dir)
-    try:
-        # closure-built class: pickled by value, workers need no import
-        spark.dataSource.register(make_datasource())
-    except Exception as exc:
-        # only the re-registration case is benign; anything else
-        # (missing API, pickling failure) must surface here, not as a
-        # confusing DATA_SOURCE_NOT_FOUND at read time
-        if "exists" not in str(exc).lower() and "already" not in str(exc).lower():
-            raise
+    # closure-built class: pickled by value, workers need no import
+    register(spark, make_datasource())
     return spark.read.format("graphql_snapshot").option("path", pages_dir).load()
 
 
@@ -655,25 +650,20 @@ def src_python_stream_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     Structured Streaming source — each micro-batch consumes one
     response page, the checkpointed offset {"page": i} is the cursor,
     and failure recovery replays committed ranges through
-    `readBetweenOffsets` (see sources/page_stream.py). Runs under a
-    processing-time trigger + `processAllAvailable()` so the
-    page-per-batch cadence is real (availableNow prefetches and
-    coalesces the whole backlog into one batch);
+    `readBetweenOffsets` (see sources/page_stream.py). Runs with
+    `run_stream(per_offset=True)` (processing-time trigger +
+    `processAllAvailable()`) so the page-per-batch cadence is real
+    (availableNow prefetches and coalesces the whole backlog into one
+    batch);
     tests/test_streaming.py asserts >= n_pages committed offsets in
     the checkpoint. The aggregate mirrors the batch twin's shape and
     hash-matches the same DuckDB oracle — stream/batch unification."""
-    import shutil  # noqa: PLC0415
-
     from ..sources.graphql_snapshot import materialize_pages  # noqa: PLC0415
     from ..sources.page_stream import make_page_stream_source  # noqa: PLC0415
 
     pages_dir = workdir(sf_dir, "graphql_pages")
     materialize_pages(spark, sf_dir, pages_dir)
-    try:
-        spark.dataSource.register(make_page_stream_source())
-    except Exception as exc:
-        if "exists" not in str(exc).lower() and "already" not in str(exc).lower():
-            raise
+    register(spark, make_page_stream_source())
     edges = spark.readStream.format("page_stream").option("path", pages_dir).load()
     agg = edges.groupBy("entity_id").agg(
         F.count(F.lit(1)).alias("n_edges"),
@@ -681,19 +671,10 @@ def src_python_stream_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink = f"src_py_stream_{os.path.basename(os.path.normpath(sf_dir)).replace('.', '_')}"
     ckpt = os.path.join(workdir(sf_dir, "src_python_stream_datasource"), "checkpoint")
-    shutil.rmtree(ckpt, ignore_errors=True)  # fresh cursor each invocation
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(processingTime="0 seconds")
-        .start()
+    run_stream(
+        agg, ckpt, lambda w: w.format("memory").queryName(sink).outputMode("complete"),
+        per_offset=True,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.table(sink)
 
 
@@ -727,11 +708,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.graphql_snapshot import entity_edges  # noqa: PLC0415
     from ..sources.jsonl_sink import make_jsonl_sink  # noqa: PLC0415
 
-    try:
-        spark.dataSource.register(make_jsonl_sink())
-    except Exception as exc:
-        if "exists" not in str(exc).lower() and "already" not in str(exc).lower():
-            raise
+    register(spark, make_jsonl_sink())
     out_dir = workdir(sf_dir, "sink_python_datasource")
     shutil.rmtree(out_dir, ignore_errors=True)  # fresh commit each run
     edges = entity_edges(spark, sf_dir)

@@ -69,17 +69,42 @@ for _mod in _MODULES:
 
 # The driver's correctness check runs the first 50 entries of SPECS, so
 # the queries the latest change touched lead the list; everything else
-# keeps registration order (the sort is stable). Now: the benchmark's
-# workload queries, the three Python data-source queries, then queries
-# whose builds reach every ``session.persist`` call site between them,
-# then the heaviest remaining persisters.
+# keeps registration order (the sort is stable). Now: every streaming
+# spec and the Python stream source (all start their streams through
+# ``session.run_stream``), then the benchmark's workload queries.
 FOCUS: tuple[str, ...] = (
-    # perfbench workload "pipeline"
+    # streaming/jobs.py
+    "stream_tumbling",
+    "stream_sliding",
+    "stream_session",
+    "stream_stateful_user_totals",
+    "stream_stateful_running_total",
+    "stream_tws_recent_events",
+    "stream_tws_type_counts",
+    "stream_dedup",
+    "stream_stream_interval_join",
+    "stream_foreach_batch_sink",
+    "stream_mv_refresh",
+    "stream_tws_inactivity_flush",
+    "stream_tws_proctime_timer",
+    "stream_tws_eventtime_timer",
+    "stream_static_join",
+    "stream_dedup_within_watermark",
+    "stream_left_outer_interval_join",
+    "sink_python_stream_datasource",
+    "stream_update_vs_complete",
+    "stream_watermark_late_drop",
+    "stream_checkpoint_resume",
+    "stream_chained_aggregations",
+    "stream_pit_enrich",
+    "stream_dlq_split",
+    "stream_corpus_ingest",
+    "src_python_stream_datasource",
+    # perfbench workload "pipeline" (stream_corpus_ingest is above)
     "dedup_cluster_cc",
     "text_keyword_rake",
     "udf_smiles_canonical",
     "mm_audio_fingerprint",
-    "stream_corpus_ingest",
     "wf_checkpoint_resume",
     "sink_python_datasource",
     "src_python_datasource",
@@ -93,40 +118,6 @@ FOCUS: tuple[str, ...] = (
     "tpch_q5_local_supplier_volume",
     "tpch_q10_returned_items",
     "tpch_q21_sole_blame_supplier",
-    "src_python_stream_datasource",
-    # with the two workload queries above, these reach all 48 sites
-    "dedup_method_matrix",
-    "dedup_incremental_minhash",
-    "wf_k_anonymity",
-    "pipeline_corpus_dashboard",
-    "graph_label_propagation",
-    "graph_neighborhood_function",
-    "graph_kcore",
-    "graph_clustering_coefficient",
-    "dedup_semdedup",
-    "dedup_minhash_oph",
-    "sim_kmeans",
-    "sim_hard_negatives",
-    "sim_ann_recall_matrix",
-    "graph_pagerank",
-    "graph_triangle_count",
-    "graph_shortest_path",
-    "graph_link_prediction",
-    "graph_hits",
-    "graph_random_walk",
-    "graph_scc",
-    "dq_anomaly_mad",
-    "dq_split_leakage_audit",
-    "text_ccnet_perplexity",
-    "analytic_rfm",
-    "graph_modularity",
-    "analytic_kendall_tau",
-    "graph_reciprocity",
-    "analytic_growth_accounting",
-    "analytic_retention_fit",
-    "pipeline_corpus_prep",
-    "dedup_keep_best",
-    "pipeline_incremental_ingest",
 )
 _FOCUS_RANK = {name: i for i, name in enumerate(FOCUS)}
 SPECS.sort(key=lambda s: _FOCUS_RANK.get(s.name, len(FOCUS)))

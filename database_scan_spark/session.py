@@ -14,16 +14,19 @@ local-mode hack:
   the DuckDB oracle byte-identical.
 
 It also owns the session state a query leaves behind: confs
-(``scoped_confs``) and cached intermediates (``persist``/``release``).
+(``scoped_confs``), cached intermediates (``persist``/``release``) and
+streaming runs (``run_stream``).
 """
 
 from __future__ import annotations
 
 import contextlib
 import os
-from collections.abc import Iterator, Mapping
+import shutil
+from collections.abc import Callable, Iterator, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -86,6 +89,62 @@ def scoped_confs(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def run_stream(
+    df: DataFrame,
+    checkpoint: str,
+    sink: Callable[[DataStreamWriter], DataStreamWriter],
+    confs: Mapping[str, str] | None = None,
+    *,
+    resume: bool = False,
+    per_offset: bool = False,
+) -> None:
+    """Run the streaming plan ``df`` to completion through the writer
+    that ``sink`` configures (format or ``foreachBatch``, output mode,
+    sink options). The only place in the package that starts a stream.
+
+    - The checkpoint is cleared first, so each call is a fresh run;
+      ``resume=True`` keeps it, to restart from its committed offsets.
+    - ``spark.sql.shuffle.partitions`` is pinned to the session's
+      ``defaultParallelism`` while the stream runs, with ``confs`` in
+      the same ``scoped_confs`` window. A stateful stream freezes the
+      count into its state-store layout at first start, and in a
+      caller-owned vanilla session the default 200 means 200 state
+      partitions (delta files and tasks) per stateful operator per
+      micro-batch: fixed overhead at any data size. A fresh checkpoint
+      has no layout to keep (a resumed one restores the count it
+      recorded), no stream result depends on the count, and at cluster
+      scale the session's own parallelism is the right default anyway.
+    - The trigger is ``availableNow``. ``per_offset=True`` runs a
+      processing-time trigger and ``processAllAvailable`` instead, so
+      each source offset is its own micro-batch (``availableNow`` may
+      coalesce the backlog into one).
+    - The query is stopped in a ``finally``, also when it fails.
+
+    SINGLE-QUERY-AT-A-TIME CONTRACT: the pin mutates the session-global
+    conf, so a caller-owned session must not run other queries while a
+    stream runs; the restore would race with them. That matches the
+    driver contract (one registry query at a time per session). A
+    multi-tenant session should serialize the streaming specs.
+    """
+    spark = df.sparkSession
+    if not resume:
+        shutil.rmtree(checkpoint, ignore_errors=True)
+    pin = {"spark.sql.shuffle.partitions": str(spark.sparkContext.defaultParallelism)}
+    with scoped_confs(spark, {**pin, **(confs or {})}):
+        writer = sink(df.writeStream).option("checkpointLocation", checkpoint)
+        if per_offset:
+            q = writer.trigger(processingTime="0 seconds").start()
+        else:
+            q = writer.trigger(availableNow=True).start()
+        try:
+            if per_offset:
+                q.processAllAvailable()
+            else:
+                q.awaitTermination()
+        finally:
+            q.stop()
 
 
 # Frames the engine cached while building a query's plan, oldest

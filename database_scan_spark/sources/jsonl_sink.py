@@ -158,7 +158,7 @@ def make_jsonl_stream_sink():
                     os.remove(m.staged)
 
     class EdgesJsonlStreamSink(DataSource):
-        """``df.writeStream.format("edges_jsonl_stream")...``"""
+        """The streaming sink, ``format("edges_jsonl_stream")`` (see ``session.run_stream``)."""
 
         @classmethod
         def name(cls) -> str:

@@ -26,6 +26,7 @@ Production shape notes (local fixtures stream one parquet file):
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 from collections.abc import Iterator
@@ -38,7 +39,8 @@ from pyspark.sql import types as T
 
 from ..catalog import READ_SCHEMAS, events_ts, load, read_raw, table_path
 from ..operators._helpers import workdir
-from ..session import scoped_confs
+from ..session import run_stream
+from ..sources import register
 from ..spec import QuerySpec
 
 # transformWithStateInPandas keeps state in per-variable column
@@ -84,49 +86,24 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _run_to_memory(
-    df: DataFrame, spark: SparkSession, sf_dir: str, name: str, mode: str,
-    confs: dict[str, str] | None = None,
+    df: DataFrame, sf_dir: str, name: str, mode: str, confs: dict[str, str] | None = None,
 ) -> DataFrame:
     """Execute a streaming plan to completion (availableNow) into a
-    fresh memory sink + checkpoint dir; return the sink table.
-
-    Shuffle partitions are pinned to the session's core count around
-    execution: a stateful stream freezes ``spark.sql.shuffle.
-    partitions`` into its state-store layout at first start, and in a
-    CALLER-owned vanilla session the 200 default would mean 200 state
-    partitions (200 checkpoint delta files + tasks) per stateful
-    operator per micro-batch — pure fixed overhead at any data size.
-    Safe: the checkpoint is fresh each invocation (no layout to
-    preserve), results are partition-count-independent (integer /
-    DECIMAL accumulators; the memory-sink compare is order-
-    insensitive), and at cluster scale the session's own parallelism
-    is the right default anyway. ``confs`` (e.g. ``_ROCKSDB``) are
-    scoped to the same window.
-
-    SINGLE-QUERY-AT-A-TIME CONTRACT (ADVICE r4): the scoped confs
-    mutate the session-global conf, so a caller-owned session must
-    not run CONCURRENT queries while a streaming spec executes — the
-    restore would race with them. That matches the driver contract
-    (one registry query at a time per session) and every batch spec
-    here is conf-neutral; callers
-    embedding these jobs in a multi-tenant session should scope the
-    conf per-query via ``writeStream`` options where Spark supports
-    it, or serialize streaming specs."""
+    fresh memory sink + checkpoint dir through ``session.run_stream``
+    (which pins the shuffle partitions and scopes ``confs``, e.g.
+    ``_ROCKSDB``); return the sink table. The memory-sink compare is
+    order-insensitive."""
     sink = f"{name}_{os.path.basename(os.path.normpath(sf_dir)).replace('.', '_')}"
     ckpt = os.path.join(workdir(sf_dir, name), "checkpoint")
-    shutil.rmtree(ckpt, ignore_errors=True)  # fresh run each invocation
-    shuffle = {"spark.sql.shuffle.partitions": str(spark.sparkContext.defaultParallelism)}
-    with scoped_confs(spark, {**shuffle, **(confs or {})}):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_stream(df, ckpt, lambda w: w.format("memory").queryName(sink).outputMode(mode), confs)
     return df.sparkSession.table(sink)
+
+
+def _read_batches(spark: SparkSession, root: str) -> DataFrame:
+    """Every ``batch_id=N`` directory a ``foreachBatch`` sink wrote under
+    ``root``, read with ``batch_id`` as a partition column."""
+    batches = sorted(glob.glob(os.path.join(root, "batch_id=*")))
+    return spark.read.option("basePath", root).parquet(*batches)
 
 
 def _stage_arrivals(
@@ -137,8 +114,6 @@ def _stage_arrivals(
     order: FileStreamSource orders arrivals by modification time, so
     ``_replay`` delivers them one micro-batch each, in that order.
     Idempotent (guarded by _SPLIT_OK)."""
-    import glob  # noqa: PLC0415
-
     if os.path.exists(os.path.join(src_dir, "_SPLIT_OK")):
         return
     shutil.rmtree(src_dir, ignore_errors=True)
@@ -178,7 +153,7 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    return _run_to_memory(agg, spark, sf_dir, "stream_tumbling", "complete")
+    return _run_to_memory(agg, sf_dir, "stream_tumbling", "complete")
 
 
 STREAM_TUMBLING_ORACLE = """
@@ -211,7 +186,7 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    return _run_to_memory(agg, spark, sf_dir, "stream_session", "complete")
+    return _run_to_memory(agg, sf_dir, "stream_session", "complete")
 
 
 STREAM_SESSION_ORACLE = """
@@ -309,7 +284,7 @@ def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    sink = _run_to_memory(out, spark, sf_dir, "stream_stateful", "update")
+    sink = _run_to_memory(out, sf_dir, "stream_stateful", "update")
     return sink.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.max_by("total_value", "n_events").alias("total_value"),
@@ -437,9 +412,7 @@ def stream_stateful_running_total(spark: SparkSession, sf_dir: str) -> DataFrame
         outputMode="Update",
         timeMode="None",
     )
-    return _run_to_memory(
-        out, spark, sf_dir, "stream_tws_totals", "update", _ROCKSDB
-    )
+    return _run_to_memory(out, sf_dir, "stream_tws_totals", "update", _ROCKSDB)
 
 
 STREAM_STATEFUL_RUNNING_TOTAL_ORACLE = """
@@ -516,9 +489,7 @@ def stream_tws_recent_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-    return _run_to_memory(
-        out, spark, sf_dir, "stream_tws_recent", "update", _ROCKSDB
-    )
+    return _run_to_memory(out, sf_dir, "stream_tws_recent", "update", _ROCKSDB)
 
 
 STREAM_TWS_RECENT_EVENTS_ORACLE = f"""
@@ -589,9 +560,7 @@ def stream_tws_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-    return _run_to_memory(
-        out, spark, sf_dir, "stream_tws_types", "update", _ROCKSDB
-    )
+    return _run_to_memory(out, sf_dir, "stream_tws_types", "update", _ROCKSDB)
 
 
 STREAM_TWS_TYPE_COUNTS_ORACLE = """
@@ -623,7 +592,7 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    return _run_to_memory(agg, spark, sf_dir, "stream_sliding", "complete")
+    return _run_to_memory(agg, sf_dir, "stream_sliding", "complete")
 
 
 STREAM_SLIDING_ORACLE = """
@@ -679,7 +648,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = ev.dropDuplicates(["event_id", "ts"]).select(
         "event_id", "user_id", "event_type", "value"
     )
-    return _run_to_memory(deduped, spark, sf_dir, "stream_dedup", "append")
+    return _run_to_memory(deduped, sf_dir, "stream_dedup", "append")
 
 
 STREAM_DEDUP_ORACLE = """
@@ -734,7 +703,7 @@ def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "gap_seconds"
         ),
     )
-    return _run_to_memory(joined, spark, sf_dir, "stream_ss_join", "append")
+    return _run_to_memory(joined, sf_dir, "stream_ss_join", "append")
 
 
 STREAM_SS_JOIN_ORACLE = """
@@ -763,8 +732,6 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once file-sink recipe when the target lacks transactions).
     The query returns the re-read of everything the sink wrote, so
     the oracle checks the SINKED data end to end."""
-    import glob  # noqa: PLC0415
-
     out_root = os.path.join(workdir(sf_dir, "stream_fb_sink"), "data")
     shutil.rmtree(out_root, ignore_errors=True)
 
@@ -780,18 +747,8 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type", "value"
     )
     ckpt = os.path.join(workdir(sf_dir, "stream_fb_sink"), "checkpoint")
-    shutil.rmtree(ckpt, ignore_errors=True)
-    q = (
-        ev.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    written = sorted(glob.glob(os.path.join(out_root, "batch_id=*")))
-    return spark.read.option("basePath", out_root).parquet(*written).select(
-        "event_id", "user_id", "event_type", "value"
-    )
+    run_stream(ev, ckpt, lambda w: w.foreachBatch(write_batch))
+    return _read_batches(spark, out_root).select("event_id", "user_id", "event_type", "value")
 
 
 STREAM_FOREACH_BATCH_SINK_ORACLE = """
@@ -820,8 +777,6 @@ def stream_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exactly the invariant a production incremental pipeline
     monitors. Versioned directories double as the idempotence story:
     re-delivery of batch N rewrites version N, never duplicates."""
-    import glob  # noqa: PLC0415
-
     root = workdir(sf_dir, "stream_mv_refresh")
     src_dir = os.path.join(root, "src")
     # modulo split: four deterministic arrival batches, no driver
@@ -832,7 +787,6 @@ def stream_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     mv_root = os.path.join(root, "mv")
     ckpt = os.path.join(root, "checkpoint")
     shutil.rmtree(mv_root, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -860,13 +814,7 @@ def stream_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _replay(spark, _events_raw_schema(spark, sf_dir), src_dir).select(
         "user_id", "value"
     )
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(stream, ckpt, lambda w: w.foreachBatch(merge_batch))
     final = sorted(glob.glob(os.path.join(mv_root, "v*")))[-1]
     return spark.read.parquet(final).select(
         "user_id",
@@ -1030,9 +978,7 @@ def stream_tws_inactivity_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Append",
         timeMode="EventTime",
     )
-    sink = _run_to_memory(
-        out, spark, sf_dir, "stream_tws_flush", "append", _ROCKSDB
-    )
+    sink = _run_to_memory(out, sf_dir, "stream_tws_flush", "append", _ROCKSDB)
     return sink.select(
         "user_id",
         "n_events",
@@ -1188,7 +1134,7 @@ def stream_tws_proctime_timer(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeMode="ProcessingTime",
     )
     sink = _run_to_memory(
-        out, spark, sf_dir, "stream_tws_proctime", "append",
+        out, sf_dir, "stream_tws_proctime", "append",
         {**_ROCKSDB, "spark.sql.streaming.noDataMicroBatches.enabled": "false"},
     )
     return sink.select(
@@ -1330,9 +1276,7 @@ def stream_tws_eventtime_timer(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Append",
         timeMode="EventTime",
     )
-    sink = _run_to_memory(
-        out, spark, sf_dir, "stream_tws_evtime", "append", _ROCKSDB
-    )
+    sink = _run_to_memory(out, sf_dir, "stream_tws_evtime", "append", _ROCKSDB)
     return sink.select(
         "user_id",
         "n_first",
@@ -1410,7 +1354,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
     )
-    return _run_to_memory(agg, spark, sf_dir, "stream_static_join", "complete")
+    return _run_to_memory(agg, sf_dir, "stream_static_join", "complete")
 
 
 STREAM_STATIC_JOIN_ORACLE = """
@@ -1437,9 +1381,7 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     deduped = ev.dropDuplicatesWithinWatermark(["event_id"]).select(
         "event_id", "user_id", "event_type", "value"
     )
-    return _run_to_memory(
-        deduped, spark, sf_dir, "stream_dedup_within_watermark", "append"
-    )
+    return _run_to_memory(deduped, sf_dir, "stream_dedup_within_watermark", "append")
 
 
 STREAM_DEDUP_WITHIN_WATERMARK_ORACLE = """
@@ -1507,7 +1449,7 @@ def stream_left_outer_interval_join(spark: SparkSession, sf_dir: str) -> DataFra
         "error_id",
         (F.unix_micros("ts_b") - F.unix_micros("ts_a")).alias("gap_us"),
     )
-    return _run_to_memory(joined, spark, sf_dir, "stream_lo_join", "append")
+    return _run_to_memory(joined, sf_dir, "stream_lo_join", "append")
 
 
 # The final watermark after the trailing no-data batch: max event time
@@ -1574,15 +1516,10 @@ def sink_python_stream_datasource(spark: SparkSession, sf_dir: str) -> DataFrame
     timestamp type; string round-trips are locale bait)."""
     from ..sources.jsonl_sink import make_jsonl_stream_sink  # noqa: PLC0415
 
-    try:
-        spark.dataSource.register(make_jsonl_stream_sink())
-    except Exception:
-        pass  # already registered in this session
+    register(spark, make_jsonl_stream_sink())
     root = workdir(sf_dir, "stream_pysink")
     out = os.path.join(root, "out")
-    ckpt = os.path.join(root, "checkpoint")
     shutil.rmtree(out, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
     ev = _events_stream(spark, sf_dir).select(
         "event_id",
         "user_id",
@@ -1590,14 +1527,8 @@ def sink_python_stream_datasource(spark: SparkSession, sf_dir: str) -> DataFrame
         F.unix_micros("ts").alias("ts_us"),
         "value",
     )
-    q = (
-        ev.writeStream.format("edges_jsonl_stream")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ckpt = os.path.join(root, "checkpoint")
+    run_stream(ev, ckpt, lambda w: w.format("edges_jsonl_stream").option("path", out))
     return (
         spark.read.schema(
             "event_id long, user_id long, event_type string, ts_us long,"
@@ -1660,9 +1591,7 @@ def stream_update_vs_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev = _replay(spark, raw_schema, src_dir).withColumn("ts", nts).select(
             "event_type", "ts"
         )
-        sink = _run_to_memory(
-            agg_of(ev), spark, sf_dir, f"stream_mode_{mode}", mode
-        )
+        sink = _run_to_memory(agg_of(ev), sf_dir, f"stream_mode_{mode}", mode)
         outs.append(
             sink.select(
                 F.lit(mode).alias("mode"), "event_type", "n_events"
@@ -1750,7 +1679,7 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_kept",
         )
     )
-    sink = _run_to_memory(agg, spark, sf_dir, "stream_wm_drop3", "append")
+    sink = _run_to_memory(agg, sf_dir, "stream_wm_drop3", "append")
     return sink.select(
         F.date_format("w_start", "yyyy-MM-dd HH:mm:ss").alias("w_start"),
         F.date_format("w_end", "yyyy-MM-dd HH:mm:ss").alias("w_end"),
@@ -1823,7 +1752,6 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_dir = os.path.join(root, "src")
     ckpt = os.path.join(root, "ckpt")
     shutil.rmtree(src_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
     os.makedirs(src_dir)
     shutil.copy(
         os.path.join(stage, "events_0.parquet"),
@@ -1846,15 +1774,11 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("value") * 100).cast("decimal(18,0)").alias("cents"),
             F.lit(run).cast("int").alias("run"),
         )
-        q = (
-            rows.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        # run 1 starts a fresh checkpoint, run 2 resumes it
+        run_stream(
+            rows, ckpt, lambda w: w.format("parquet").option("path", out_dir).outputMode("append"),
+            resume=run == 2,
         )
-        q.awaitTermination()
     return (
         spark.read.parquet(out_dir)
         .groupBy("run")
@@ -1926,7 +1850,7 @@ def stream_chained_aggregations(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_buckets",
         )
     )
-    sink = _run_to_memory(hourly, spark, sf_dir, "stream_chained_agg", "append")
+    sink = _run_to_memory(hourly, sf_dir, "stream_chained_agg", "append")
     return sink.select(
         F.date_format("h_start", "yyyy-MM-dd HH:mm:ss").alias("h_start"),
         "event_type",
@@ -2062,7 +1986,7 @@ def stream_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return _run_to_memory(out, spark, sf_dir, "stream_pit_enrich", "append")
+    return _run_to_memory(out, sf_dir, "stream_pit_enrich", "append")
 
 
 STREAM_PIT_ENRICH_ORACLE = """
@@ -2120,8 +2044,6 @@ def stream_dlq_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the split predicate is row-local (no shuffle); each batch
     writes two sequential parquet jobs — the cost of durable
     quarantine, amortized per micro-batch."""
-    import glob  # noqa: PLC0415
-
     root = workdir(sf_dir, "stream_dlq")
     ok_root = os.path.join(root, "accepted")
     dlq_root = os.path.join(root, "quarantine")
@@ -2145,21 +2067,8 @@ def stream_dlq_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).parquet(os.path.join(dlq_root, f"batch_id={batch_id}"))
 
     ev = _events_stream(spark, sf_dir).select("event_id", "event_type", "value", "props")
-    ckpt = os.path.join(root, "checkpoint")
-    shutil.rmtree(ckpt, ignore_errors=True)
-    q = (
-        ev.writeStream.foreachBatch(split_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    ok = spark.read.option("basePath", ok_root).parquet(
-        *sorted(glob.glob(os.path.join(ok_root, "batch_id=*")))
-    )
-    dlq = spark.read.option("basePath", dlq_root).parquet(
-        *sorted(glob.glob(os.path.join(dlq_root, "batch_id=*")))
-    )
+    run_stream(ev, os.path.join(root, "checkpoint"), lambda w: w.foreachBatch(split_batch))
+    ok, dlq = _read_batches(spark, ok_root), _read_batches(spark, dlq_root)
     return ok.select(
         "event_id",
         F.lit("accepted").alias("route"),
@@ -2226,8 +2135,6 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ledger carries one row per distinct accepted content — the same
     state a streaming dedup operator would hold, but spillable and
     inspectable as a table."""
-    import glob  # noqa: PLC0415
-
     from ..operators._helpers import h32  # noqa: PLC0415
 
     root = workdir(sf_dir, "stream_corpus_ingest")
@@ -2273,20 +2180,10 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     stream = _replay(spark, doc_schema, src_dir)
-    ckpt = os.path.join(root, "checkpoint")
-    shutil.rmtree(ckpt, ignore_errors=True)
-    q = (
-        stream.writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    accepted = spark.read.option("basePath", acc_root).parquet(
-        *sorted(glob.glob(os.path.join(acc_root, "batch_id=*")))
-    )
+    run_stream(stream, os.path.join(root, "checkpoint"), lambda w: w.foreachBatch(ingest_batch))
     return (
-        accepted.groupBy(F.col("batch_id").cast("int").alias("batch_id"))
+        _read_batches(spark, acc_root)
+        .groupBy(F.col("batch_id").cast("int").alias("batch_id"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_new"),
             F.sum("n_tok").cast("bigint").alias("tokens_new"),

@@ -300,6 +300,8 @@ def test_queries_leave_no_session_conf_behind(spark):
         "udtf_analyze_parse",
         "udtf_table_arg",
         "stream_tws_type_counts",
+        "src_python_stream_datasource",
+        "stream_corpus_ingest",
     ):
         session = spark.newSession()
         before = session.conf.getAll

@@ -66,6 +66,29 @@ def test_json_permissive_quarantines_planted_corrupt_rows(spark):
         raw.unpersist()
 
 
+def test_data_source_registration_fails_loud(spark, monkeypatch):
+    """Every data-source query registers its Python DataSource on each
+    run through ``sources.register``: registering the real sink again,
+    also from a ``newSession()`` session (which Spark refuses with
+    DATA_SOURCE_ALREADY_EXISTS), must not raise. Anything that cannot
+    be registered must fail the query right there, not later as a
+    confusing DATA_SOURCE_NOT_FOUND, nor silently run the source an
+    earlier query registered under the same name."""
+    import pytest
+
+    from database_scan_spark.sources import jsonl_sink, register
+    from database_scan_spark.streaming.jobs import sink_python_stream_datasource
+
+    register(spark, jsonl_sink.make_jsonl_stream_sink())
+    register(spark, jsonl_sink.make_jsonl_stream_sink())
+    register(spark.newSession(), jsonl_sink.make_jsonl_stream_sink())
+    with pytest.raises(AttributeError):
+        register(spark, object)
+    monkeypatch.setattr(jsonl_sink, "make_jsonl_stream_sink", lambda: object)
+    with pytest.raises(AttributeError):
+        sink_python_stream_datasource(spark, SF_SMOKE)
+
+
 def test_jsonl_sink_abort_leaves_no_committed_output(spark):
     """The Python DataSource writer's commit protocol under task
     failure: a write job with one injected failing partition must (a)

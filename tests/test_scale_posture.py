@@ -100,13 +100,20 @@ _STATIC_RULES = (
         {"database_scan_spark/session.py"},
         ("database_scan_spark",),
     ),
+    # every stream starts in session.run_stream, which owns the fresh
+    # checkpoint, the shuffle-partition pin, start and await
+    (
+        (".writeStream",),
+        {"database_scan_spark/session.py"},
+        ("database_scan_spark", "tools", "bench.py"),
+    ),
 )
 
 
 def test_operators_never_collect():
     """Static scan for constructs only their owner module may use:
     driver-side materialization in the hot path, session conf changes,
-    the raw events.ts reader shim and engine caches."""
+    the raw events.ts reader shim, engine caches and stream starts."""
     import pathlib
 
     repo = pathlib.Path(__file__).resolve().parent.parent

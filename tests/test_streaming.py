@@ -148,7 +148,10 @@ def test_python_stream_source_pages_per_batch(spark):
     layout has 4 response pages and the processing-time trigger must
     commit one offset per page (>= 4 committed batches; availableNow
     would coalesce them into one). Offset files in the checkpoint are
-    the engine's own durable evidence."""
+    the engine's own durable evidence. A rerun in a session left at
+    Spark's default 200 shuffle partitions must still lay out at most
+    one state-store partition per core: the stream runner pins the
+    count while the stream runs."""
     import glob
     import os
 
@@ -156,6 +159,7 @@ def test_python_stream_source_pages_per_batch(spark):
     from database_scan_spark.operators.sources_sinks import (
         src_python_stream_datasource,
     )
+    from database_scan_spark.session import scoped_confs
 
     out = src_python_stream_datasource(spark, SF_SMOKE)
     assert out.count() > 0
@@ -167,6 +171,11 @@ def test_python_stream_source_pages_per_batch(spark):
     n_pages = len(glob.glob(os.path.join(workdir(SF_SMOKE, "graphql_pages"), "page=*")))
     assert n_pages >= 4
     assert len(offsets) >= n_pages
+
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": "200"}):
+        assert src_python_stream_datasource(spark, SF_SMOKE).count() > 0
+    state = [p for p in os.listdir(os.path.join(ckpt, "state", "0")) if p.isdigit()]
+    assert 0 < len(state) <= spark.sparkContext.defaultParallelism
 
 
 def test_python_stream_source_replay_is_deterministic(spark):
