@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 TMP_ROOT = os.environ.get("SPARK_GRAFT_TMP", "/tmp/spark_graft")
@@ -34,6 +34,20 @@ def disc_price() -> Column:
 SQL_DISC_PRICE = (
     "CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(8,2))"
 )
+
+
+def lineitems_of(customers: DataFrame, orders: DataFrame, lineitem: DataFrame) -> DataFrame:
+    """The 2-hop edge scan customer→orders→lineitem: the lineitems (with
+    their order's columns) of ``customers``, a frame with a
+    ``c_custkey`` column. Customer membership is a ``left_semi``, whose
+    size estimate is the orders side's; an inner join's is the product
+    of both inputs, which would make the projected lineitem scan look
+    like the smaller side and broadcast the fact table (SCALE.md
+    "Joins"). So the customers' orders build and lineitem streams.
+    Equal to the inner join chain while ``c_custkey`` is unique in
+    ``customers``."""
+    seg_orders = orders.join(customers, F.col("o_custkey") == F.col("c_custkey"), "left_semi")
+    return lineitem.join(seg_orders, F.col("l_orderkey") == F.col("o_orderkey"))
 
 
 def h32(col):

@@ -20,15 +20,15 @@ from ._helpers import SQL_DISC_PRICE, disc_price, h32
 
 def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q3 shape: revenue of unshipped-at-date orders for one segment,
-    top 10. Three-table join; the segment filter prunes customer
-    before the join (Catalyst pushes it into the scan); group on
+    top 10. Three-table join, facts first: filtered orders ⋈ lineitem,
+    then the segment's customers (SCALE.md "Joins"); group on
     (orderkey, orderdate, priority); TakeOrdered for the top-k."""
     customer = load(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = load(spark, sf_dir, "orders").filter(F.col("o_orderdate") < F.lit("1998-03-15"))
     lineitem = load(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > F.lit("1998-03-15"))
     return (
-        customer.join(orders, customer.c_custkey == orders.o_custkey)
-        .join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
+        orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
+        .join(customer, customer.c_custkey == orders.o_custkey)
         .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
         .agg(F.sum(disc_price()).cast("double").alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("o_orderkey"))
@@ -55,8 +55,9 @@ LIMIT 10
 
 def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q5 shape: per-nation revenue where customer and supplier share
-    the nation, one region, one year. Five-table join: dims broadcast,
-    the customer=supplier nation equi-condition rides the join."""
+    the nation, one region, one year. Five-table join, facts first
+    (SCALE.md "Joins"): dims broadcast, the customer=supplier nation
+    equi-condition rides the join."""
     region = load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     nation = load(spark, sf_dir, "nation")
     customer = load(spark, sf_dir, "customer")
@@ -67,8 +68,8 @@ def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     lineitem = load(spark, sf_dir, "lineitem")
     return (
-        customer.join(orders, customer.c_custkey == orders.o_custkey)
-        .join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
+        orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
+        .join(customer, customer.c_custkey == orders.o_custkey)
         .join(
             F.broadcast(supplier),
             (lineitem.l_suppkey == supplier.s_suppkey)
@@ -98,7 +99,8 @@ GROUP BY n_name
 
 def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q10 shape: top-20 customers by lost revenue on returned items
-    in a quarter — join + filter + group + TakeOrdered."""
+    in a quarter — join (facts first, SCALE.md "Joins") + filter +
+    group + TakeOrdered."""
     customer = load(spark, sf_dir, "customer")
     nation = load(spark, sf_dir, "nation")
     orders = load(spark, sf_dir, "orders").filter(
@@ -107,8 +109,8 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lineitem = load(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     return (
-        customer.join(orders, customer.c_custkey == orders.o_custkey)
-        .join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
+        orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
+        .join(customer, customer.c_custkey == orders.o_custkey)
         .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(F.sum(disc_price()).cast("double").alias("revenue"))

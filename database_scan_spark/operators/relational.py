@@ -26,7 +26,7 @@ from pyspark.sql import types as T
 
 from ..catalog import load
 from ..spec import QuerySpec
-from ._helpers import SQL_DISC_PRICE, disc_price, workdir
+from ._helpers import SQL_DISC_PRICE, disc_price, lineitems_of, workdir
 
 # ---------------------------------------------------------------------------
 # §2.1 Scans / sources / sinks
@@ -446,10 +446,9 @@ def join_inner_same_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = load(spark, sf_dir, "customer")
 
     def seg_rev(segment: str, alias: str) -> DataFrame:
-        seed = customer.filter(F.col("c_mktsegment") == segment).select("c_custkey")
+        seed = customer.filter(F.col("c_mktsegment") == segment)
         return (
-            seed.join(orders, seed.c_custkey == orders.o_custkey)
-            .join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
+            lineitems_of(seed, orders, lineitem)
             .groupBy("l_suppkey")
             .agg(F.sum(disc_price()).cast("double").alias(alias))
         )
@@ -553,15 +552,16 @@ def join_multi_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`/root/reference/x2.2.py:344-406`, `candidate_drugs.py:84-158`):
     chained equi-joins with per-hop dedup. Fixture analog:
     customer→orders→lineitem→supplier, distinct (customer, supplier)
-    pairs enriched with the supplier name."""
+    pairs enriched with the supplier name. The customer hop is a
+    membership test (``o_custkey`` is the customer key), so it goes
+    through ``lineitems_of``."""
     customer = load(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "FURNITURE")
     orders = load(spark, sf_dir, "orders")
     lineitem = load(spark, sf_dir, "lineitem")
     supplier = load(spark, sf_dir, "supplier")
     return (
-        customer.join(orders, customer.c_custkey == orders.o_custkey)
-        .join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
-        .select("c_custkey", "l_suppkey")
+        lineitems_of(customer, orders, lineitem)
+        .select(F.col("o_custkey").alias("c_custkey"), "l_suppkey")
         .dropDuplicates(["c_custkey", "l_suppkey"])
         .join(F.broadcast(supplier), F.col("l_suppkey") == supplier.s_suppkey)
         .select("c_custkey", "l_suppkey", "s_name")
@@ -587,8 +587,7 @@ def _parts_of_segment(spark: SparkSession, sf_dir: str, segment: str) -> DataFra
     orders = load(spark, sf_dir, "orders")
     lineitem = load(spark, sf_dir, "lineitem")
     return (
-        customer.join(orders, customer.c_custkey == orders.o_custkey)
-        .join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
+        lineitems_of(customer, orders, lineitem)
         .select("l_partkey")
         .dropDuplicates(["l_partkey"])
     )

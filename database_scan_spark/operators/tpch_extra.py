@@ -544,59 +544,36 @@ def tpch_q21_sole_blame_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q21 shape (adapted: 'returned' = l_returnflag R stands in for
     late receipt): per supplier, count finalized orders where this
     supplier had a returned item, another supplier is also on the
-    order (EXISTS → left-semi), but no OTHER supplier had a returned
-    item (NOT EXISTS → left-anti on the pair condition). The
-    multi-supplier / other-returned order sets are aggregates of
-    lineitem keyed on orderkey, so both correlations become hash
-    semi/anti joins on broadcast-reducible keys."""
+    order (EXISTS), but no OTHER supplier had a returned item (NOT
+    EXISTS).
+
+    Both correlations are per order, so ONE aggregate at the order
+    grain answers them in one lineitem pass (an (order, supplier)
+    grain barely reduces lineitem, so its partial aggregation would
+    save nothing and its two consumers read its exchange twice). Over
+    the order's non-NULL suppliers, min/max of ``l_suppkey`` differ
+    iff the order has two suppliers, and min/max of the returning
+    ``l_suppkey`` agree iff exactly one supplier returned, which is
+    then the blamed one. ``min``/``max`` skip NULLs, as the oracle's
+    ``<>`` correlations never count a NULL supplier, and a NULL or
+    non-R flag is not a return (tests/test_q21_semantics.py)."""
     li = load(spark, sf_dir, "lineitem")
     orders_f = load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     supplier = load(spark, sf_dir, "supplier")
-    # ONE lineitem pass (optimization r11, guide §2.4 exchange reuse):
-    # every correlation below needs only the distinct (order, supplier)
-    # pair set tagged with "did this supplier return on this order" —
-    # l1 is the has_ret pairs, multi-supplier is count(*) per order
-    # over the pairs, sole-blame is sum(has_ret) = 1 per order. The
-    # previous shape scanned lineitem three times (l1 dedup, a
-    # countDistinct per order, l1 re-aggregated); now the single
-    # (ok, sk) aggregate subtree feeds both consumers and its Exchange
-    # is reused, and the two order-level EXISTS/NOT-EXISTS semi joins
-    # fuse into one keep-set (n_supp > 1 AND n_ret = 1).
-    # The explicit isnotnull filters are load-bearing twice over:
-    # (a) they pin the rewrite to the oracle's NULL semantics (its
-    # countDistinct / <> correlations never count a NULL supplier, so
-    # neither may the pair grain), and (b) they make BOTH consumer
-    # branches' scan subtrees canonically IDENTICAL — without them the
-    # supplier join infers IsNotNull(l_suppkey) into only the l1
-    # branch, the two (ok, sk) aggregates stop canonicalizing equal,
-    # and AQE computes the exchange twice instead of reusing the
-    # shuffle stage (observed in the executed plan: two
-    # ShuffleQueryStages over two lineitem scans).
-    pairs = (
-        li.filter(
-            F.col("l_orderkey").isNotNull() & F.col("l_suppkey").isNotNull()
-        )
-        .select(
-            F.col("l_orderkey").alias("ok"),
-            F.col("l_suppkey").alias("sk"),
-            (F.col("l_returnflag") == "R").cast("int").alias("is_ret"),
-        )
-        .groupBy("ok", "sk")
-        .agg(F.max("is_ret").alias("has_ret"))
-    )
-    l1 = pairs.filter(F.col("has_ret") == 1).select("ok", "sk")
-    good_ok = (
-        pairs.groupBy(F.col("ok").alias("g_ok"))
+    ret_sk = F.when(F.col("l_returnflag") == "R", F.col("l_suppkey"))
+    blamed = (
+        li.groupBy(F.col("l_orderkey").alias("ok"))
         .agg(
-            F.count(F.lit(1)).alias("n_supp"),
-            F.sum("has_ret").alias("n_ret"),
+            F.min("l_suppkey").alias("lo"),
+            F.max("l_suppkey").alias("hi"),
+            F.min(ret_sk).alias("r_lo"),
+            F.max(ret_sk).alias("r_hi"),
         )
-        .filter((F.col("n_supp") > 1) & (F.col("n_ret") == 1))
-        .select("g_ok")
+        .filter((F.col("lo") != F.col("hi")) & (F.col("r_lo") == F.col("r_hi")))
+        .select("ok", F.col("r_lo").alias("sk"))
     )
     return (
-        l1.join(orders_f, F.col("ok") == orders_f.o_orderkey, "left_semi")
-        .join(good_ok, F.col("ok") == F.col("g_ok"), "left_semi")
+        blamed.join(orders_f, F.col("ok") == orders_f.o_orderkey, "left_semi")
         .join(supplier, F.col("sk") == supplier.s_suppkey)
         .groupBy("s_name")
         .agg(F.count(F.lit(1)).alias("numwait"))

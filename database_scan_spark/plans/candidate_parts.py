@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..operators._helpers import disc_price
+from ..operators._helpers import disc_price, lineitems_of
 
 SEED_SEGMENT = "BUILDING"
 # Seed resolution also thresholds on account balance so the seed is a
@@ -65,16 +65,11 @@ def candidate_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("c_mktsegment") == SEED_SEGMENT) & (F.col("c_acctbal") >= SEED_MIN_ACCTBAL)
     ).select("c_custkey")
 
-    # Seed edge scan: customer→orders→lineitem (2 hops, one per edge table).
-    # Deliberately NOT persisted although steps 2 and 3 both consume
-    # it: the joins are broadcast-shaped and pipeline inside one stage,
-    # so the duplicate scan costs less than a materialization barrier
-    # (measured at sf0.1: persist 2.3-2.9s vs recompute 1.8-2.5s).
-    # Revisit only if the seed slice stops fitting the broadcast path.
-    seed_li = (
-        seed_cust.join(orders, seed_cust.c_custkey == orders.o_custkey)
-        .join(lineitem, F.col("o_orderkey") == lineitem.l_orderkey)
-        .select("l_partkey", "l_suppkey", "l_extendedprice", "l_discount")
+    # Seed edge scan (``lineitems_of``): the seed orders build and
+    # lineitem streams. Exact for step 3's revenue sum as well as for
+    # the DISTINCT consumers: c_custkey is customer's key.
+    seed_li = lineitems_of(seed_cust, orders, lineitem).select(
+        "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
 
     # Step 2 — MainParts = parts the seed segment already orders.
@@ -97,25 +92,22 @@ def candidate_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Step 4 — OtherCustomers = customers reached from MainSuppliers,
     # minus the seed set (reverse hop + anti-membership —
     # opentargets_client_api.py:162,176).
-    # Fresh scan aliases: steps 4-5 re-scan the same edge tables on the
-    # other side of a self-join, so qualify them explicitly.
+    # Fresh scan aliases: step 4 re-scans the seed scan's edge tables
+    # on the other side of a self-join, so qualify them explicitly.
     li4 = lineitem.alias("li4")
     o4 = orders.alias("o4")
     other_cust = (
         li4.join(F.broadcast(main_sups), "l_suppkey")
         .join(o4, F.col("li4.l_orderkey") == F.col("o4.o_orderkey"))
-        .select(F.col("o4.o_custkey").alias("oc_custkey"))
-        .dropDuplicates(["oc_custkey"])
-        .join(seed_cust, F.col("oc_custkey") == seed_cust.c_custkey, "left_anti")
+        .select(F.col("o4.o_custkey").alias("c_custkey"))
+        .dropDuplicates(["c_custkey"])
+        .join(seed_cust, "c_custkey", "left_anti")
     )
 
     # Step 5 — OtherParts = parts ordered by those other customers.
-    li5 = lineitem.alias("li5")
-    o5 = orders.alias("o5")
     other_parts = (
-        other_cust.join(o5, F.col("oc_custkey") == F.col("o5.o_custkey"))
-        .join(li5, F.col("o5.o_orderkey") == F.col("li5.l_orderkey"))
-        .select(F.col("li5.l_partkey").alias("l_partkey"))
+        lineitems_of(other_cust, orders, lineitem)
+        .select("l_partkey")
         .dropDuplicates(["l_partkey"])
     )
 
@@ -128,7 +120,7 @@ def candidate_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     part_dim = part.select("p_partkey", "p_name", "p_retailprice")
     return (
         other_parts.join(main_parts, "l_partkey", "left_anti")
-        .join(part_dim, other_parts.l_partkey == part_dim.p_partkey)
+        .join(part_dim, F.col("l_partkey") == part_dim.p_partkey)
         .select("p_partkey", "p_name", "p_retailprice")
     )
 

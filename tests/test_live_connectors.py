@@ -64,13 +64,10 @@ def _expected() -> list[tuple]:
 
 
 def test_batch_live_mode_fetches_all_pages(spark, http_server):
+    from database_scan_spark.sources import register
     from database_scan_spark.sources.graphql_snapshot import make_datasource
 
-    try:
-        spark.dataSource.register(make_datasource())
-    except Exception as exc:
-        if "exists" not in str(exc).lower() and "already" not in str(exc).lower():
-            raise
+    register(spark, make_datasource())
     df = (
         spark.read.format("graphql_snapshot")
         .option("mode", "live")
@@ -89,13 +86,10 @@ def test_batch_live_mode_fetches_all_pages(spark, http_server):
 
 
 def test_batch_live_mode_requires_endpoint(spark):
+    from database_scan_spark.sources import register
     from database_scan_spark.sources.graphql_snapshot import make_datasource
 
-    try:
-        spark.dataSource.register(make_datasource())
-    except Exception as exc:
-        if "exists" not in str(exc).lower() and "already" not in str(exc).lower():
-            raise
+    register(spark, make_datasource())
     with pytest.raises(Exception, match="endpoint"):
         spark.read.format("graphql_snapshot").option("mode", "live").load().collect()
 
@@ -103,13 +97,10 @@ def test_batch_live_mode_requires_endpoint(spark):
 def test_stream_live_mode_one_page_per_batch_and_spool(
     spark, http_server, tmp_path
 ):
+    from database_scan_spark.sources import register
     from database_scan_spark.sources.page_stream import make_page_stream_source
 
-    try:
-        spark.dataSource.register(make_page_stream_source())
-    except Exception as exc:
-        if "exists" not in str(exc).lower() and "already" not in str(exc).lower():
-            raise
+    register(spark, make_page_stream_source())
     spool = str(tmp_path / "spool")
     q = (
         spark.readStream.format("page_stream")
@@ -252,6 +243,7 @@ def test_live_error_response_fails_loud_not_exhausted(spark, tmp_path):
     """GraphQL transports errors as HTTP 200 `{\"errors\": ...}` —
     they must raise, never read as cursor exhaustion (silent
     truncation / healthy-looking stalled stream)."""
+    from database_scan_spark.sources import register
     from database_scan_spark.sources.graphql_snapshot import make_datasource
 
     class _ErrHandler(BaseHTTPRequestHandler):
@@ -274,11 +266,7 @@ def test_live_error_response_fails_loud_not_exhausted(spark, tmp_path):
         pytest.skip("loopback sockets unavailable in this sandbox")
     threading.Thread(target=server.serve_forever, daemon=True).start()
     url = f"http://127.0.0.1:{server.server_address[1]}/graphql"
-    try:
-        spark.dataSource.register(make_datasource())
-    except Exception as exc:
-        if "exists" not in str(exc).lower() and "already" not in str(exc).lower():
-            raise
+    register(spark, make_datasource())
     df = (
         spark.read.format("graphql_snapshot")
         .option("mode", "live")
@@ -296,13 +284,10 @@ def test_live_max_pages_truncation_fails_loud(spark, http_server):
     """Hitting max_pages with a still-full last page means data was
     provably left behind — that must raise, not return a silently
     truncated DataFrame."""
+    from database_scan_spark.sources import register
     from database_scan_spark.sources.graphql_snapshot import make_datasource
 
-    try:
-        spark.dataSource.register(make_datasource())
-    except Exception as exc:
-        if "exists" not in str(exc).lower() and "already" not in str(exc).lower():
-            raise
+    register(spark, make_datasource())
     df = (
         spark.read.format("graphql_snapshot")
         .option("mode", "live")
@@ -321,13 +306,10 @@ def test_batch_live_strict_mode_stops_only_on_empty_page(spark, http_server):
     page and ends the crawl only on an ACTUALLY-empty one — one extra
     probe POST buys the no-silent-truncation guarantee for APIs that
     legitimately serve short mid-crawl pages."""
+    from database_scan_spark.sources import register
     from database_scan_spark.sources.graphql_snapshot import make_datasource
 
-    try:
-        spark.dataSource.register(make_datasource())
-    except Exception as exc:
-        if "exists" not in str(exc).lower() and "already" not in str(exc).lower():
-            raise
+    register(spark, make_datasource())
     df = (
         spark.read.format("graphql_snapshot")
         .option("mode", "live")
@@ -658,13 +640,10 @@ def test_stream_live_restart_resumes_row_granular_cursor(tmp_path):
 
 
 def test_live_rejects_nonpositive_rate(spark):
+    from database_scan_spark.sources import register
     from database_scan_spark.sources.graphql_snapshot import make_datasource
 
-    try:
-        spark.dataSource.register(make_datasource())
-    except Exception as exc:
-        if "exists" not in str(exc).lower() and "already" not in str(exc).lower():
-            raise
+    register(spark, make_datasource())
     df = (
         spark.read.format("graphql_snapshot")
         .option("mode", "live")
@@ -681,13 +660,10 @@ def test_live_rejects_nonpositive_page_caps(spark):
     rows WITHOUT tripping the non-exhausted-cursor guard — the one
     silent-truncation configuration left (VERDICT r9 item 7). Both
     are config errors now."""
+    from database_scan_spark.sources import register
     from database_scan_spark.sources.graphql_snapshot import make_datasource
 
-    try:
-        spark.dataSource.register(make_datasource())
-    except Exception as exc:
-        if "exists" not in str(exc).lower() and "already" not in str(exc).lower():
-            raise
+    register(spark, make_datasource())
     for opt, val, pat in (
         ("max_pages", "0", "max_pages"),
         ("page_size", "0", "page_size"),

@@ -126,6 +126,65 @@ _BROADCAST_FACT_OK: dict[str, int] = {
 }
 
 
+# --- lineitem-broadcast gate ------------------------------------------------
+#
+# Without CBO, Spark estimates an inner join's size as the product of its
+# inputs, so a customer ⋈ orders chain looks far bigger than the projected
+# lineitem scan and the static plan broadcasts the FACT table: the
+# driver builds, and every executor receives, a hashed copy of lineitem
+# (SCALE.md "Joins"). This walks the physical plan AQE starts from and
+# fails on any BroadcastExchange whose build side reaches a raw lineitem
+# scan without an aggregate or limit in between, whether a hint or the
+# planner chose it. The idioms that keep lineitem streaming are a
+# left_semi for membership and joining the facts before the dimensions.
+_LINEITEM_BROADCAST_OK: dict[str, str] = {
+    "catalog_stats_cbo": "CBO demo: the reorderer picks the join order from "
+    "ANALYZE'd statistics, by construction",
+    "tpch_q4_order_priority": "EXISTS as a left_semi can only build its right, "
+    "returned-lineitem side; building on orders instead needs a DISTINCT over "
+    "lineitem, a lineitem shuffle",
+}
+
+_PHYSICAL_BOUNDING = frozenset(
+    ["HashAggregateExec", "SortAggregateExec", "ObjectHashAggregateExec",
+     "GlobalLimitExec", "LocalLimitExec", "CollectLimitExec",
+     "TakeOrderedAndProjectExec"]
+)
+
+
+def _raw_lineitem_scan(node) -> str:
+    """The first raw lineitem scan under ``node`` that no aggregate or
+    limit bounds, as plan text, or ``""``."""
+    name = node.getClass().getSimpleName()
+    if name in _PHYSICAL_BOUNDING:
+        return ""
+    if name == "FileSourceScanExec":
+        roots = node.relation().location().rootPaths()
+        raw = any(roots.apply(i).getName() == "lineitem.parquet" for i in range(roots.size()))
+        return node.simpleString(120) if raw else ""
+    if name == "AdaptiveSparkPlanExec":
+        return _raw_lineitem_scan(node.executedPlan())
+    return next(filter(None, map(_raw_lineitem_scan, _children(node))), "")
+
+
+def _lineitem_broadcasts(node, hits: list) -> None:
+    """Broadcast build sides of the physical plan ``node`` (AQE's
+    initial plan before execution) that reach a raw lineitem scan."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        _lineitem_broadcasts(node.executedPlan(), hits)
+        return
+    if name == "BroadcastExchangeExec":
+        scan = _raw_lineitem_scan(node.child())
+        if scan:
+            hits.append(scan)
+    for c in _children(node):
+        _lineitem_broadcasts(c, hits)
+    sq = node.subqueries()
+    for i in range(sq.size()):
+        _lineitem_broadcasts(sq.apply(i), hits)
+
+
 # --- shuffle-budget ratchet (r7, fourth audit class) ------------------------
 #
 # Every groupBy/join/distinct/repartition is a shuffle, and at 100 TB
@@ -330,6 +389,15 @@ def test_no_plan_smells(spark, spec):
         f"side(s), ratchet allows {allowed} — a NEW forced broadcast of an "
         f"unbounded relation is an OOM cliff at scale: {bhits}"
     )
+    if spec.name not in _LINEITEM_BROADCAST_OK:
+        lhits: list = []
+        _lineitem_broadcasts(df._jdf.queryExecution().executedPlan(), lhits)
+        assert not lhits, (
+            f"{spec.name}: {len(lhits)} broadcast build side(s) of a raw "
+            f"lineitem scan — the planner took an inner join chain's "
+            f"product estimate for the bigger side; make membership a "
+            f"left_semi or join the facts first: {lhits}"
+        )
     if spec.name not in _PANDAS_GROUP_OK:
         ghits: list = []
         _unbounded_pandas_groups(df._jdf.queryExecution().optimizedPlan(), ghits)
@@ -485,3 +553,42 @@ def test_broadcast_ratchet_catches_bad_plan(spark):
     hits2: list = []
     _broadcast_fact_builds(ok._jdf.queryExecution().optimizedPlan(), hits2)
     assert not hits2, f"ratchet flagged an aggregated build side: {hits2}"
+
+
+def test_lineitem_broadcast_gate_catches_bad_plan(spark):
+    """Gate self-test: candidate_parts' old seed scan (customer ⋈
+    orders ⋈ lineitem, all inner) broadcasts lineitem and MUST be
+    flagged; the same scan through ``lineitems_of`` (customer
+    membership as a left_semi) builds the orders side and must not be,
+    and neither must an aggregated lineitem build side."""
+    from pyspark.sql import functions as F
+
+    from database_scan_spark.catalog import load
+    from database_scan_spark.operators._helpers import lineitems_of
+
+    customer = load(spark, SF_SMOKE, "customer")
+    orders = load(spark, SF_SMOKE, "orders")
+    lineitem = load(spark, SF_SMOKE, "lineitem")
+    seed_cust = customer.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
+    cols = ("l_partkey", "l_suppkey", "l_extendedprice", "l_discount")
+
+    bad = (
+        seed_cust.join(orders, seed_cust.c_custkey == orders.o_custkey)
+        .join(lineitem, F.col("o_orderkey") == lineitem.l_orderkey)
+        .select(*cols)
+    )
+    hits: list = []
+    _lineitem_broadcasts(bad._jdf.queryExecution().executedPlan(), hits)
+    assert hits, "gate missed a planner-chosen broadcast of lineitem"
+
+    ok = lineitems_of(seed_cust, orders, lineitem).select(*cols)
+    hits2: list = []
+    _lineitem_broadcasts(ok._jdf.queryExecution().executedPlan(), hits2)
+    assert not hits2, f"gate flagged the orders-side build: {hits2}"
+    assert "BroadcastExchange" in ok._jdf.queryExecution().executedPlan().toString()
+
+    agg = lineitem.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("n"))
+    bounded = orders.join(F.broadcast(agg), F.col("o_orderkey") == F.col("l_orderkey"))
+    hits3: list = []
+    _lineitem_broadcasts(bounded._jdf.queryExecution().executedPlan(), hits3)
+    assert not hits3, f"gate flagged an aggregated lineitem build side: {hits3}"

@@ -7,11 +7,11 @@ broadcast counts only if its metrics updated. The static ``explain``
 text misses this; in r11 it was wrong about three of five targets.
 
 A pin fails when a count grows. Reused exchanges are a floor instead:
-q21 reads lineitem once only because its two (orderkey, suppkey)
-branches canonicalize equal and the second becomes a ``ReusedExchange``;
-if they stop matching, lineitem is read twice and reuse drops to 0.
-Lower a pin when a change shrinks a count; raise one only with a
-measured reason.
+a drop means a shared subtree stopped canonicalizing equal and is
+computed twice. Lower a pin when a change shrinks a count; raise one
+only with a measured reason. ``broadcast_mb`` (the hashed relations'
+``data size``) is a ceiling about 5% above the measured value: it catches a
+fact table on a broadcast build side, which the count alone can hide.
 
 The run is one subprocess (its own JVM, scratch cwd and
 ``SPARK_GRAFT_TMP``), shared by every test here.
@@ -31,19 +31,30 @@ from conftest import SF_SMOKE
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = os.path.join(os.path.dirname(SF_SMOKE), "sf0.01")
 TABLES = ("lineitem", "orders", "documents")
-COLUMNS = (*TABLES, "shuffles", "reused", "broadcasts", "build_jobs")
+COLUMNS = (*TABLES, "shuffles", "reused", "broadcasts", "broadcast_mb", "build_jobs")
 
 # runtime scans of each table, then shuffles, reused exchanges (a floor),
-# broadcast builds and build-phase jobs. Link prediction runs 10 shuffles
-# in most runs and 11 in about 1 of 20: the extra one is the hash exchange
-# of the edge list into its left_anti join, which a run executes or skips
-# depending on when AQE re-plans that join, so its pin is 11.
-PINS: dict[str, tuple[int, ...]] = {
-    "tpch_q21_sole_blame_supplier": (1, 1, 0, 3, 1, 3, 0),
-    "candidate_parts": (4, 5, 0, 6, 4, 10, 0),
-    "dedup_cluster_cc": (0, 0, 1, 10, 0, 7, 31),
-    "graph_label_propagation": (1, 1, 0, 13, 0, 12, 0),
-    "graph_link_prediction": (1, 1, 0, 11, 0, 7, 0),
+# broadcast builds, broadcast MB and build-phase jobs. Link prediction
+# runs 10 shuffles in most runs and 11 in about 1 of 20: the extra one is
+# the hash exchange of the edge list into its left_anti join, which a run
+# executes or skips depending on when AQE re-plans that join, so its pin
+# is 11.
+#
+# candidate_parts and q21 stopped broadcasting lineitem (SCALE.md
+# "Joins"), measured in a vanilla session at sf0.01. candidate_parts:
+# steps 2 and 3 each stream lineitem where they shared one reused
+# lineitem broadcast, so lineitem 4 -> 5 and reused 4 -> 3; orders
+# 5 -> 3; step 5's membership left_semi shuffles orders by customer,
+# so shuffles 6 -> 7; broadcasts 10 -> 9 and 16.5 -> 9.3 MB. q21
+# aggregates once per order: shuffles 3 -> 2, reused 1 -> 0 (its one
+# lineitem scan feeds one aggregate, nothing is left to reuse),
+# broadcasts 3 -> 2 and 3.2 -> 2.1 MB.
+PINS: dict[str, tuple[int | float, ...]] = {
+    "tpch_q21_sole_blame_supplier": (1, 1, 0, 2, 0, 2, 2.2, 0),
+    "candidate_parts": (5, 3, 0, 7, 3, 9, 9.8, 0),
+    "dedup_cluster_cc": (0, 0, 1, 10, 0, 7, 15.8, 31),
+    "graph_label_propagation": (1, 1, 0, 13, 0, 12, 12.7, 0),
+    "graph_link_prediction": (1, 1, 0, 11, 0, 7, 7.5, 0),
 }
 
 

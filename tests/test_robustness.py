@@ -105,12 +105,10 @@ def test_jsonl_sink_abort_leaves_no_committed_output(spark):
 
     from database_scan_spark.catalog import load
     from database_scan_spark.operators._helpers import workdir
+    from database_scan_spark.sources import register
     from database_scan_spark.sources.jsonl_sink import make_jsonl_sink
 
-    try:
-        spark.dataSource.register(make_jsonl_sink())
-    except Exception:
-        pass  # already registered in this session
+    register(spark, make_jsonl_sink())
     out_dir = workdir(SF_SMOKE, "jsonl_sink_abort_test")
     shutil.rmtree(out_dir, ignore_errors=True)
     df = (

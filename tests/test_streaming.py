@@ -230,6 +230,7 @@ def test_python_stream_source_checkpoint_resume_exactly_once(spark):
     from pyspark.sql import functions as F
 
     from database_scan_spark.operators._helpers import workdir
+    from database_scan_spark.sources import register
     from database_scan_spark.sources.graphql_snapshot import materialize_pages
     from database_scan_spark.sources.page_stream import make_page_stream_source
 
@@ -247,10 +248,7 @@ def test_python_stream_source_checkpoint_resume_exactly_once(spark):
     for p in all_pages[:half]:
         shutil.copytree(p, os.path.join(stream_dir, os.path.basename(p)))
 
-    try:
-        spark.dataSource.register(make_page_stream_source())
-    except Exception:
-        pass
+    register(spark, make_page_stream_source())
 
     out_dir = os.path.join(base, "out")
 
