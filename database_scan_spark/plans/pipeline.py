@@ -87,12 +87,12 @@ def run_pipeline(spark: SparkSession, sf_dir: str, resume: bool = False) -> Data
 
 
 def wf_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Run the pipeline fresh (populating checkpoints), then run it
-    again in resume mode — the returned plan reads ONLY checkpoints,
-    proving the resume path end to end."""
-    run_pipeline(spark, sf_dir, resume=False).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    """Build the pipeline fresh, which writes every stage checkpoint as
+    it builds, then again in resume mode — the returned plan reads ONLY
+    checkpoints, proving the resume path end to end. The fresh run's
+    final join is never executed: it is the same plan over the same
+    checkpoints as the one returned."""
+    run_pipeline(spark, sf_dir, resume=False)
     return run_pipeline(spark, sf_dir, resume=True)
 
 

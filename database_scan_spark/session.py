@@ -12,6 +12,9 @@ local-mode hack:
   pickled rows.
 - UTC session timezone: fixture timestamps are naive; keep Spark and
   the DuckDB oracle byte-identical.
+- A generated-code cache that holds the working set: each generated
+  class compiles once per session, not once per repeated query
+  (``CODEGEN_CACHE_ENTRIES``; SCALE.md "Generated-code cache").
 
 It also owns the session state a query leaves behind: confs
 (``scoped_confs``), cached intermediates (``persist``/``release``) and
@@ -29,6 +32,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Entries of Spark's generated-class cache (an LRU, 100 by default).
+# A pass of the 8 traversal queries compiles 132 classes, of the 9
+# pipeline queries 202 and of the 107 bench headliners 2,117 (sf0.01),
+# so at 100 a repeated pass evicts every class before its reuse and
+# recompiles all of them (Janino, 12-19 ms each). About 2x the largest
+# of these, so a repeated pass hits every class.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def get_spark(
@@ -64,6 +74,8 @@ def get_spark(
         # tail of bench.py's output, and [Stage …] progress bars would
         # interleave with (and truncate) the summary JSON line
         .config("spark.ui.showConsoleProgress", "false")
+        # static conf: a caller-owned session keeps Spark's 100
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     return builder.getOrCreate()
 
@@ -199,4 +211,7 @@ CLUSTER_PROFILE_100TB = {
     "spark.sql.adaptive.localShuffleReader.enabled": "true",
     # writers: size output files for the lake (~512 MB row groups)
     "spark.sql.files.maxRecordsPerFile": "20000000",
+    # compile each generated class once per long-lived session, not
+    # once per repeated query (get_spark's value)
+    "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
 }

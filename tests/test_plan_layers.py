@@ -92,6 +92,11 @@ def test_executed_plan_within_pins(executed, name):
     )
 
 
+def test_layers_reports_compiles(executed):
+    got = {name: lay["compiles"] for name, lay in executed[0].items()}
+    assert all(isinstance(n, int) and n >= 0 for n in got.values()), got
+
+
 def test_layers_deletes_its_event_log(executed):
     left = [p.name for p in executed[1].iterdir() if p.name.startswith("spark-graft-eventlog-")]
     assert not left, f"runner.layers left event-log dirs behind: {left}"

@@ -2,8 +2,9 @@
 surface.
 
 - ``run_once`` restores the per-query EXTRA_CONFS even when the query
-  raises, and ``check`` reports a wrong oracle as a mismatch naming the
-  query.
+  raises and counts the generated classes a run compiles (a repeat
+  finds them in the codegen cache); ``check`` reports a wrong oracle
+  as a mismatch naming the query.
 - Importing any tool (or bench.py) starts no Spark JVM, and the two tool
   surfaces the benchmark imports still exist.
 - bench_cores.py rejects fewer than 2 core counts at parse time, and
@@ -15,6 +16,7 @@ from __future__ import annotations
 import os
 import subprocess
 import sys
+import time
 
 import pytest
 
@@ -46,6 +48,22 @@ def test_run_once_restores_extra_confs_when_query_raises(spark, monkeypatch):
         runner.run_once(spark, name, SF)
     assert seen == extra
     assert {k: spark.conf.get(k, None) for k in extra} == before
+
+
+def test_run_once_counts_codegen_compiles(spark, monkeypatch):
+    name = "candidate_parts"
+    # a literal no other test uses: its generated class is new to the cache
+    factor = time.time_ns() % 1_000_000_007
+
+    def fresh(spark_, sf_dir):
+        return spark_.range(8).selectExpr(f"id * {factor} AS x")
+
+    monkeypatch.setitem(runner.contract()[0], name, fresh)
+    first = runner.run_once(spark, name, SF)
+    build_s, exec_s = first
+    assert build_s >= 0 and exec_s >= 0
+    assert first.compiles >= 1
+    assert runner.run_once(spark, name, SF).compiles == 0, "the repeat missed the codegen cache"
 
 
 def test_check_reports_wrong_oracle_as_mismatch(spark, monkeypatch):

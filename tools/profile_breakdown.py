@@ -7,7 +7,8 @@ split each headliner's wall-clock into
 
 and record what the run executed (``runner.layers``, read from Spark's
 event log): runtime scans per table, shuffles, reused exchanges,
-broadcast builds and MB, build-phase and exec jobs.
+broadcast builds and MB, build-phase and exec jobs, and generated
+classes compiled (codegen cache misses).
 
 Build time is driver-side Python + any actions the builder itself
 runs (iterative fixpoints, K-sizing counts); exec time is the final
@@ -45,7 +46,8 @@ def main() -> None:
         scans = " ".join(f"{t}={n}" for t, n in lay["scans"].items())
         print(
             f"{out[name]['total']:8.3f} build={b:7.3f} exec={e:7.3f} "
-            f"shuffles={lay['shuffles']} reused={lay['reused']} scans[{scans}]  {name}",
+            f"shuffles={lay['shuffles']} reused={lay['reused']} "
+            f"compiles={lay['compiles']} scans[{scans}]  {name}",
             flush=True,
         )
     with open(os.path.join(HERE, "profile_breakdown.json"), "w") as fh:

@@ -86,12 +86,22 @@ def _described(spark, name: str) -> Iterator[None]:
 class Run(tuple):
     """``(build_s, exec_s)`` of one run. ``t0``/``t1``/``t2`` are its epoch
     stamps (build start, build end, exec end): the windows by which
-    perfbench's event-log parser attributes Spark events to a query."""
+    perfbench's event-log parser attributes Spark events to a query.
+    ``compiles`` is how many generated classes the run compiled, i.e.
+    missed Spark's codegen cache."""
 
-    def __new__(cls, t0: float, t1: float, t2: float):
+    def __new__(cls, t0: float, t1: float, t2: float, compiles: int):
         run = super().__new__(cls, (t1 - t0, t2 - t1))
-        run.t0, run.t1, run.t2 = t0, t1, t2
+        run.t0, run.t1, run.t2, run.compiles = t0, t1, t2, compiles
         return run
+
+
+def compile_count(spark) -> int:
+    """Generated classes this JVM has compiled so far (Spark's
+    ``CodegenMetrics`` compilation-time histogram; the driver and, in
+    local mode, every task count into it)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics  # noqa: SLF001
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def run_once(spark, name: str, sf_dir: str) -> Run:
@@ -103,11 +113,13 @@ def run_once(spark, name: str, sf_dir: str) -> Run:
     with scoped_confs(spark, EXTRA_CONFS.get(name, {})):
         entry.drain()
         with _described(spark, name):
+            c0 = compile_count(spark)
             t0 = time.time()
             df = contract()[0][name](spark, sf_dir)
             t1 = time.time()
             df.write.format("noop").mode("overwrite").save()
-            return Run(t0, t1, time.time())
+            t2 = time.time()
+            return Run(t0, t1, t2, compile_count(spark) - c0)
 
 
 def warm(spark, names: Iterable[str], sf_dir: str) -> None:
@@ -137,7 +149,10 @@ def layers(names: Iterable[str], sf_dir: str) -> dict[str, dict]:
     pass, then one ``run_once`` each, in a fresh vanilla session with
     Spark's event log on; the session is stopped and the log deleted.
     Counts come from ``perfbench/layers.per_query``, where a plan node
-    counts only if its metrics updated, i.e. it actually ran."""
+    counts only if its metrics updated, i.e. it actually ran, except
+    ``compiles`` (``Run.compiles``). The vanilla session keeps Spark's
+    100-entry codegen cache, so with more than one name the recorded
+    pass recompiles what the warm pass evicted."""
     import glob  # noqa: PLC0415
     import shutil  # noqa: PLC0415
     import tempfile  # noqa: PLC0415
@@ -183,6 +198,7 @@ def layers(names: Iterable[str], sf_dir: str) -> dict[str, dict]:
             "broadcast_mb": round(c.get("bcast_b", 0) / MB, 2),
             "build_jobs": c.get("build.jobs", 0),
             "exec_jobs": c.get("exec.jobs", 0),
+            "compiles": run.compiles,
         }
         for name, run, c in zip(names, runs, per)
     }
