@@ -141,7 +141,7 @@ def global_order(
             ).alias("_go_bs")
         )
         df = (
-            df.crossJoin(F.broadcast(bounds))
+            df.crossJoin(bounds)
             .withColumn(
                 "_go_pid",
                 F.size(

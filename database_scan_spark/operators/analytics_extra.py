@@ -321,7 +321,7 @@ def agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("cnt"))
     total = li.agg(F.count(F.lit(1)).alias("total"))
     return (
-        counts.crossJoin(F.broadcast(total))
+        counts.crossJoin(total)
         .withColumn("share", F.round(F.col("cnt") / F.col("total"), 6))
         .filter(F.col("share") >= HH_SHARE)
         .select("l_partkey", "cnt", "share")
@@ -672,7 +672,7 @@ def agg_histogram_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
         rank_col="rk",
     )
     return (
-        ranked.crossJoin(F.broadcast(n))
+        ranked.crossJoin(n)
         .select(
             "o_totalprice",
             ntile_from_rank(F.col("rk"), F.col("n"), 10)
@@ -743,7 +743,7 @@ def dq_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = orders.agg(F.count(F.lit(1)).alias("total"))
     return (
         obs.join(F.broadcast(bench), "digit")
-        .crossJoin(F.broadcast(total))
+        .crossJoin(total)
         .select(
             "digit",
             "n",
@@ -949,7 +949,7 @@ def dq_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_tokens").alias("total_tokens"),
             F.round(F.sum("n_chars") * 1.0 / F.count(F.lit(1)), 6).alias("avg_chars"),
         )
-        .crossJoin(F.broadcast(total))
+        .crossJoin(total)
         .select(
             "lang",
             "source",
@@ -1125,7 +1125,7 @@ def dq_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in range(1, 10):
             bucket = bucket + (F.col("x") > F.col(f"b{i}")).cast("int")
         return (
-            df.crossJoin(F.broadcast(breaks))
+            df.crossJoin(breaks)
             .select(bucket.alias("bucket"))
             .groupBy("bucket")
             .agg(F.count(F.lit(1)).alias("n"))
@@ -1146,7 +1146,7 @@ def dq_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p_ref = F.greatest(F.col("n_ref") / F.col("t_ref"), F.lit(1e-6))
     p_cur = F.greatest(F.col("n_cur") / F.col("t_cur"), F.lit(1e-6))
-    return joined.crossJoin(F.broadcast(tot)).select(
+    return joined.crossJoin(tot).select(
         "bucket",
         "n_ref",
         "n_cur",
@@ -1464,7 +1464,7 @@ def _logreg_fit(spark: SparkSession, rows: DataFrame) -> DataFrame:
     D = "decimal(28,12)"
     w = spark.range(1).select(F.lit(0.0).alias("w"), F.lit(0.0).alias("b"))
     for _ in range(LOGREG_STEPS):
-        j = rows.crossJoin(F.broadcast(w))
+        j = rows.crossJoin(w)
         err = _hard_sigmoid() - F.col("y")
         g = j.agg(
             F.sum(F.round(err * F.col("x"), 12).cast(D)).alias("sgw"),
@@ -1509,7 +1509,7 @@ def analytic_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = _logreg_fit(spark, base)
     # evaluation pass: confusion counts at p >= 0.5 with the final model
-    j = base.crossJoin(F.broadcast(w))
+    j = base.crossJoin(w)
     pred = (_hard_sigmoid() >= 0.5).cast("int")
     return j.groupBy().agg(
         F.first("w").alias("w"),
@@ -1776,7 +1776,7 @@ def analytic_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(vd).alias("m_dec"),
     )
     maxts = p.agg(F.max("ts").alias("corpus_max"))
-    rfm = per_user.crossJoin(F.broadcast(maxts)).select(
+    rfm = per_user.crossJoin(maxts).select(
         "user_id",
         F.datediff(F.to_date("corpus_max"), F.to_date("last_ts")).alias("r_days"),
         "f_cnt",
@@ -1792,7 +1792,7 @@ def analytic_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = global_order(rfm, F.col("r_days"), uid, rank_col="_r_rk")
     g = global_order(g, -F.col("f_cnt"), uid, rank_col="_f_rk")
     g = global_order(g, -F.col("m_sum"), uid, rank_col="_m_rk")
-    g = g.crossJoin(F.broadcast(n))
+    g = g.crossJoin(n)
     r_q = ntile_from_rank(F.col("_r_rk"), F.col("_n"), 5).cast("int")
     f_q = ntile_from_rank(F.col("_f_rk"), F.col("_n"), 5).cast("int")
     m_q = ntile_from_rank(F.col("_m_rk"), F.col("_n"), 5).cast("int")
@@ -1882,7 +1882,7 @@ def agg_quantile_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
     )
     binned = (
-        o.crossJoin(F.broadcast(mm))
+        o.crossJoin(mm)
         .select(
             F.least(
                 F.lit(_QH_BINS - 1),
@@ -2014,7 +2014,7 @@ def analytic_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("o_custkey"),),
             cum_sums={"cum": F.col("revenue")},
         )
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select("o_custkey", "revenue", "cum", "total")
     )
     cls = (
@@ -2228,7 +2228,7 @@ def analytic_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
         Window.unboundedPreceding, Window.currentRow
     )
     return (
-        per_day.crossJoin(F.broadcast(total))
+        per_day.crossJoin(total)
         .select(
             "day",
             "n_converted",
@@ -2416,7 +2416,7 @@ def analytic_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.to_date("ts")).alias("last_d"),
     )
     end1 = per_user.agg(F.max("last_d").alias("study_end"))
-    subj = per_user.crossJoin(F.broadcast(end1)).select(
+    subj = per_user.crossJoin(end1).select(
         F.datediff("last_d", "first_d").cast("bigint").alias("t_days"),
         (F.datediff("study_end", "last_d") > SURVIVAL_CHURN_GAP_DAYS)
         .cast("int")
@@ -3223,7 +3223,7 @@ def analytic_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_all = scored.agg(F.count(F.lit(1)).alias("_n"))
     dec = (
         global_order(scored, -F.col("s"), (F.col("event_id"),), rank_col="_rk")
-        .crossJoin(F.broadcast(n_all))
+        .crossJoin(n_all)
         .withColumn(
             "decile", ntile_from_rank(F.col("_rk"), F.col("_n"), 10).cast("int")
         )
@@ -3239,7 +3239,7 @@ def analytic_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         Window.unboundedPreceding, Window.currentRow
     )
     return (
-        per.crossJoin(F.broadcast(tot))
+        per.crossJoin(tot)
         .withColumn("cum_pos", F.sum("n_pos").over(wcum))
         .select(
             F.col("decile").cast("int").alias("decile"),
@@ -3321,7 +3321,7 @@ def analytic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100).cast("bigint").alias("s"),
     )
     mx = scored.agg(F.max("s").alias("mx"))
-    binned = scored.crossJoin(F.broadcast(mx)).withColumn(
+    binned = scored.crossJoin(mx).withColumn(
         "bin", F.least(F.lit(9), F.expr("(10 * s) div mx")).cast("int")
     )
     per = binned.groupBy("bin", "mx").agg(
@@ -3347,7 +3347,7 @@ def analytic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.col("pos_all").cast("double")
     ) / F.col("n_all")
     return (
-        per.crossJoin(F.broadcast(tot.select(brier.alias("brier"))))
+        per.crossJoin(tot.select(brier.alias("brier")))
         .select(
             "bin",
             F.col("n").cast("bigint").alias("n"),
@@ -3434,7 +3434,7 @@ def analytic_heavy_change(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("(min(unix_micros(ts)) + max(unix_micros(ts))) div 2").alias("mid_us")
     )
     per_user = (
-        ev.join(F.broadcast(bounds))
+        ev.join(bounds)
         .groupBy("user_id")
         .agg(
             F.sum(F.when(F.unix_micros("ts") < F.col("mid_us"), 1).otherwise(0))
@@ -3521,7 +3521,7 @@ def pipeline_model_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     train = base.filter(F.col("fold") < _PME_FOLDS - 1)
     test = base.filter(F.col("fold") == _PME_FOLDS - 1)
     w = _logreg_fit(spark, train)
-    scored = test.crossJoin(F.broadcast(w)).select(
+    scored = test.crossJoin(w).select(
         "y",
         F.round(_hard_sigmoid(), 9).alias("p"),
         F.col("w"),
@@ -3946,7 +3946,7 @@ def analytic_adstock(spark: SparkSession, sf_dir: str) -> DataFrame:
             * 1_000_000
         ).cast("bigint").alias("alpha_micro"),
     )
-    return days.crossJoin(F.broadcast(mom)).select(
+    return days.crossJoin(mom).select(
         F.date_format("day", "yyyy-MM-dd").alias("day"),
         F.round("spend", 2).alias("spend"),
         F.round("revenue", 2).alias("revenue"),
@@ -4255,7 +4255,7 @@ def analytic_raking_ipf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("c_mktsegment").alias("n_cols"),
     )
     D = "decimal(28,6)"
-    w = cells.crossJoin(F.broadcast(tot)).select(
+    w = cells.crossJoin(tot).select(
         "c_nationkey",
         "c_mktsegment",
         "n",

@@ -75,8 +75,8 @@ def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame
             (lineitem.l_suppkey == supplier.s_suppkey)
             & (customer.c_nationkey == supplier.s_nationkey),
         )
-        .join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .join(nation, supplier.s_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
         .groupBy("n_name")
         .agg(F.sum(disc_price()).cast("double").alias("revenue"))
     )
@@ -111,7 +111,7 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
         .join(customer, customer.c_custkey == orders.o_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
+        .join(nation, customer.c_nationkey == nation.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(F.sum(disc_price()).cast("double").alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("c_custkey"))

@@ -664,7 +664,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w_assign = Window.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("cand.cell"))
     assigned = (
-        emb.crossJoin(F.broadcast(cents1))
+        emb.crossJoin(cents1)
         .select("vec_id", "embedding", F.explode("cents").alias("cand"))
         .withColumn("d2", d2)
         .withColumn("rn", F.row_number().over(w_assign))
@@ -694,7 +694,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     cpairs = (
-        cellinfo.crossJoin(F.broadcast(info1))
+        cellinfo.crossJoin(info1)
         .select(
             F.struct(F.col("cell"), F.col("r"), F.col("c")).alias("ca"),
             F.explode("cells").alias("cb"),
@@ -1506,7 +1506,7 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # products computed 3x; persist takes sf0.1 warm 6.9s -> 5.4s).
     # Released at the next query's entry (session.persist).
     assigned = persist(
-        emb.crossJoin(F.broadcast(cents1))
+        emb.crossJoin(cents1)
         .select("vec_id", "embedding", best.alias("b"))
         .select(
             "vec_id",
@@ -1658,7 +1658,7 @@ def dedup_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("c").cast("decimal(38,0)") * (F.col("c") - 1)
                 ).alias("num")
             )
-            .crossJoin(F.broadcast(n_tot))
+            .crossJoin(n_tot)
             .select(
                 (F.col("num").cast("double") / F.col("denom").cast("double")).alias(
                     f"u_{field}"
@@ -1668,8 +1668,8 @@ def dedup_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     us = (
         u_of("type", "p_type")
-        .crossJoin(F.broadcast(u_of("band", "band")))
-        .crossJoin(F.broadcast(u_of("tok", "tok")))
+        .crossJoin(u_of("band", "band"))
+        .crossJoin(u_of("tok", "tok"))
     )
     a = parts.alias("a")
     b = parts.alias("b")
@@ -2099,7 +2099,7 @@ def dedup_bloom_archive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def positions(df):
-        return df.join(F.broadcast(m_row)).select(
+        return df.join(m_row).select(
             "doc_id",
             "h",
             F.explode(

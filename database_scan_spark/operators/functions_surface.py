@@ -48,7 +48,7 @@ def fn_str_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = load(spark, sf_dir, "customer")
     nation = load(spark, sf_dir, "nation")
     return (
-        customer.join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
+        customer.join(nation, customer.c_nationkey == nation.n_nationkey)
         .select(
             "c_custkey",
             F.format_string("%-20s %10.2f", F.col("n_name"), F.col("c_acctbal")).alias("line"),

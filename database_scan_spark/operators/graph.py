@@ -76,7 +76,7 @@ def _rank_rounds(
     edges = persist(_trade_edges(spark, sf_dir))
     out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
     keep = [*nodes.columns, *consts.columns]
-    ranks = nodes.crossJoin(F.broadcast(consts)).select(*keep, F.expr(init).alias("rank"))
+    ranks = nodes.crossJoin(consts).select(*keep, F.expr(init).alias("rank"))
     for _ in range(N_ITER):
         contrib = (
             ranks.join(F.broadcast(edges), ranks.node == edges.src)
@@ -97,7 +97,7 @@ def _rank_rounds(
         inflow = contrib.groupBy("dst").agg(F.sum("c").alias("inflow"))
         ranks = (
             nodes.join(F.broadcast(inflow), nodes.node == inflow.dst, "left")
-            .crossJoin(F.broadcast(consts))
+            .crossJoin(consts)
             .select(
                 *keep,
                 F.expr(f"{teleport} + (85 * coalesce(inflow, 0)) div 100").alias("rank"),
@@ -106,7 +106,7 @@ def _rank_rounds(
     names = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("node"), "n_name"
     )
-    return ranks.join(F.broadcast(names), "node")
+    return ranks.join(names, "node")
 
 
 def _pagerank_oracle() -> str:
@@ -263,7 +263,7 @@ def graph_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         dist = dist.unionByName(hop).groupBy("node").agg(F.min("dist").alias("dist"))
     return (
-        dist.join(F.broadcast(nation), dist.node == nation.n_nationkey)
+        dist.join(nation, dist.node == nation.n_nationkey)
         .select("node", "n_name", F.col("dist").cast("int").alias("dist"))
         .orderBy("dist", "node")
     )
@@ -429,12 +429,13 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     rn = F.row_number().over(
         Window.partitionBy("src").orderBy(F.desc("wsum"), F.asc("label"))
     )
-    for _ in range(LPA_ITER):
+    for i in range(LPA_ITER):
+        nbrs = labels.select(F.col("node").alias("nbr"), "label")
         best = (
-            edges.join(
-                F.broadcast(labels.select(F.col("node").alias("nbr"), "label")),
-                edges.dst == F.col("nbr"),
-            )
+            # round 1's labels are nation itself, which the planner
+            # broadcasts unasked; later rounds' labels come from the
+            # edge aggregate, whose size it cannot see
+            edges.join(F.broadcast(nbrs) if i else nbrs, edges.dst == F.col("nbr"))
             .groupBy("src", "label")
             .agg(F.sum("w").alias("wsum"))
             .withColumn("rn", rn)
@@ -452,7 +453,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_nationkey").alias("node"), "n_name"
     )
     return (
-        labels.join(F.broadcast(names), "node")
+        labels.join(names, "node")
         .select("node", "n_name", F.col("label").alias("community"))
         .orderBy("node")
     )
@@ -767,7 +768,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         auth = (
             nodes.join(a_raw, nodes.node == a_raw.dst, "left")
-            .crossJoin(F.broadcast(a_nrm))
+            .crossJoin(a_nrm)
             .select(
                 "node",
                 F.expr("coalesce(raw, 0) div nrm").cast("bigint").alias("a"),
@@ -783,7 +784,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         hubs = (
             nodes.join(h_raw, nodes.node == h_raw.src, "left")
-            .crossJoin(F.broadcast(h_nrm))
+            .crossJoin(h_nrm)
             .select(
                 "node",
                 F.expr("coalesce(raw, 0) div nrm").cast("bigint").alias("h"),
@@ -1294,7 +1295,7 @@ def graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r_name") == _PPR_SEED_REGION
     ).select("r_regionkey")
     nodes = nation.join(
-        F.broadcast(region), nation.n_regionkey == region.r_regionkey, "left"
+        region, nation.n_regionkey == region.r_regionkey, "left"
     ).select(
         "node",
         F.when(F.col("r_regionkey").isNotNull(), 1).otherwise(0).alias("is_seed"),

@@ -306,7 +306,7 @@ def text_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits = F.length(F.bin(F.col("n_total"))) - F.length(F.bin(F.col("cnt")))
     scored = (
         toks.join(vocab, "token")
-        .crossJoin(F.broadcast(total))
+        .crossJoin(total)
         .select("doc_id", bits.cast("long").alias("bits"))
     )
     return (
@@ -389,7 +389,7 @@ def analytic_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         pairs.join(c1, "p1")
         .join(c2, "p2")
-        .crossJoin(F.broadcast(n_orders))
+        .crossJoin(n_orders)
         .select(
             "p1",
             "p2",
@@ -685,7 +685,7 @@ def _bpe_learn(spark: SparkSession, sf_dir: str):
         wrapped = F.concat_ws(
             "", F.transform("arr", lambda s: F.concat(F.lit("<"), s, F.lit(">")))
         )
-        cur = cur.crossJoin(F.broadcast(m)).select(
+        cur = cur.crossJoin(m).select(
             "word",
             "cnt",
             F.regexp_extract_all(
@@ -1005,7 +1005,7 @@ def wf_fair_share_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         "demand",
         F.sum("demand").over(w.rowsBetween(Window.unboundedPreceding, 0)).alias("cum"),
         F.row_number().over(w).alias("k"),
-    ).crossJoin(F.broadcast(tot))
+    ).crossJoin(tot)
     # a source is FULLY satisfiable iff granting it (and every smaller
     # source) in full still leaves >= demand for each larger source
     sat = cum.withColumn(
@@ -1016,7 +1016,7 @@ def wf_fair_share_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.when(F.col("fits"), F.col("cum")).otherwise(0)).alias("cum_sat"),
     )
     alloc = (
-        sat.crossJoin(F.broadcast(cut))
+        sat.crossJoin(cut)
         .withColumn("n_uncapped", F.col("n_src") - F.col("k_sat"))
         .withColumn(
             "level",
@@ -1333,7 +1333,7 @@ def wf_curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
     vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("tf"))
     total_toks = vocab.agg(F.sum("tf").alias("total"))
-    rarity = vocab.join(F.broadcast(total_toks)).select(
+    rarity = vocab.join(total_toks).select(
         "tok",
         F.round(F.log2(F.col("total").cast("double") / F.col("tf")) * 1_000_000)
         .cast("long")
@@ -1644,7 +1644,7 @@ def wf_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         * 1_000_000.0,
         0,
     ).cast("long")
-    weights = counts.crossJoin(F.broadcast(totals)).select(
+    weights = counts.crossJoin(totals).select(
         "bucket", w.alias("w_unats")
     )
     pool = toks.filter(~is_target).join(F.broadcast(weights), "bucket")
@@ -1761,7 +1761,7 @@ def text_ccnet_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # vocabulary-sized stats with quantized surprisal terms
     uni_w = (
-        uni.crossJoin(F.broadcast(n_total))
+        uni.crossJoin(n_total)
         .select(
             "w",
             F.round(
@@ -1771,8 +1771,8 @@ def text_ccnet_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     big_w = (
         big.join(pctx, "pw")
-        .crossJoin(F.broadcast(n_total))
         .join(uni.select(F.col("w"), F.col("cw")), "w")
+        .crossJoin(n_total)
         .select(
             "pw",
             "w",
@@ -1850,7 +1850,7 @@ def text_ccnet_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("surprisal_unats") / F.col("n_tokens"),
         (F.col("doc_id"),),
         rank_col="_rk",
-    ).crossJoin(F.broadcast(n_docs))
+    ).crossJoin(n_docs)
     return g.withColumn(
         "ccnet_bucket",
         ntile_from_rank(F.col("_rk"), F.col("_n"), CCNET_BUCKETS).cast("int"),

@@ -457,7 +457,7 @@ def dq_freshness_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     hwm = ev.agg(F.max("ts").alias("hwm"))
     lag = F.unix_micros("hwm") - F.unix_micros("newest")
     return (
-        per_feed.crossJoin(F.broadcast(hwm))
+        per_feed.crossJoin(hwm)
         .select(
             "event_type",
             "n_rows",
@@ -685,8 +685,8 @@ def wf_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache one action scans customer+dims ~6x, not once as the
     # docstring promises
     recs = persist(
-        cust.join(F.broadcast(nat), cust["c_nationkey"] == nat["n_nationkey"])
-        .join(F.broadcast(reg), nat["n_regionkey"] == reg["r_regionkey"])
+        cust.join(nat, cust["c_nationkey"] == nat["n_nationkey"])
+        .join(reg, nat["n_regionkey"] == reg["r_regionkey"])
         .select(
             F.col("c_mktsegment").alias("s"),
             F.col("n_name").alias("nat"),
@@ -803,7 +803,7 @@ def dq_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         tot = counts.agg(
             F.sum("cnt").alias("n_rows"), F.count(F.lit(1)).alias("n_distinct")
         )
-        terms = counts.crossJoin(F.broadcast(tot)).select(
+        terms = counts.crossJoin(tot).select(
             "n_rows",
             "n_distinct",
             (
@@ -1230,7 +1230,7 @@ def dq_key_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         matched = child.join(parent, "k", "left_semi")
         row = (
             child.agg(F.count(F.lit(1)).alias("n_child"))
-            .crossJoin(F.broadcast(matched.agg(F.count(F.lit(1)).alias("n_match"))))
+            .crossJoin(matched.agg(F.count(F.lit(1)).alias("n_match")))
             .select(
                 F.lit("fk").alias("kind"),
                 F.lit(f"{ctbl}.{ccol}->{ptbl}.{pcol}").alias("subject"),
@@ -1334,7 +1334,7 @@ def dq_drift_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = per_v.agg(
         F.sum("c1").cast("bigint").alias("n1"), F.sum("c2").cast("bigint").alias("n2")
     )
-    terms = cum.crossJoin(F.broadcast(tot)).select(
+    terms = cum.crossJoin(tot).select(
         "n1",
         "n2",
         (
@@ -1436,11 +1436,11 @@ def dq_outlier_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("x").cast("decimal(38,0)") * F.col("x")).alias("q"),
     )
     mad = (
-        daily.crossJoin(F.broadcast(stats))
+        daily.crossJoin(stats)
         .select(F.abs(F.col("x") - F.col("med")).alias("ad"))
         .agg(F.expr("percentile(ad, 0.5)").alias("mad"))
     )
-    j = daily.crossJoin(F.broadcast(stats)).crossJoin(F.broadcast(mad))
+    j = daily.crossJoin(stats).crossJoin(mad)
     iqr = F.col("q3") - F.col("q1")
     iqr_flag = (F.col("x") < F.col("q1") - 1.5 * iqr) | (
         F.col("x") > F.col("q3") + 1.5 * iqr

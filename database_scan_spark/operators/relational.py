@@ -225,7 +225,7 @@ def proj_rename_addcol(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = load(spark, sf_dir, "customer")
     nation = load(spark, sf_dir, "nation")
     return (
-        customer.join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
+        customer.join(nation, customer.c_nationkey == nation.n_nationkey)
         .withColumnRenamed("c_custkey", "entity_id")
         .withColumnRenamed("c_name", "entity_name")
         .withColumnRenamed("n_name", "nation_name")
@@ -745,8 +745,8 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load(spark, sf_dir, "nation")
     region = load(spark, sf_dir, "region")
     joined = customer.join(
-        F.broadcast(nation), customer.c_nationkey == nation.n_nationkey
-    ).join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        nation, customer.c_nationkey == nation.n_nationkey
+    ).join(region, nation.n_regionkey == region.r_regionkey)
     return joined.rollup("r_name", "n_name").agg(
         F.count(F.lit(1)).alias("n_customers"),
         F.sum(F.col("c_acctbal").cast("decimal(18,2)")).cast("double").alias("sum_acctbal"),

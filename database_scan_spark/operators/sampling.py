@@ -313,7 +313,7 @@ def sample_balanced_class(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("n").alias("cut"))
     )
     return (
-        ranked.crossJoin(F.broadcast(cut))
+        ranked.crossJoin(cut)
         .filter(F.col("rk") <= F.col("cut"))
         .select("vec_id", "label", F.col("rk").cast("int").alias("rk"))
         .orderBy("label", "rk")
@@ -465,7 +465,7 @@ def sample_stratified_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("w", F.col("n_total") * F.col("s_h"))
     )
     tot = stats.agg(F.sum("w").alias("w_sum"))
-    alloc = stats.crossJoin(F.broadcast(tot)).select(
+    alloc = stats.crossJoin(tot).select(
         "stratum",
         "n_total",
         F.round("s_h", 6).alias("stddev"),
@@ -591,7 +591,7 @@ def split_temporal_embargo(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", F.to_date("ts").alias("day")
     )
     mx = ev.agg(F.max("day").alias("max_day"))
-    tagged = ev.crossJoin(F.broadcast(mx)).withColumn(
+    tagged = ev.crossJoin(mx).withColumn(
         "split",
         F.when(
             F.datediff("max_day", F.col("day")) < TEST_DAYS, F.lit("test")

@@ -699,7 +699,7 @@ def _pq_encode(df_sub: DataFrame, codebook: DataFrame, id_col: str) -> DataFrame
         ).otherwise(acc),
     )
     return (
-        df_sub.crossJoin(F.broadcast(cb1))
+        df_sub.crossJoin(cb1)
         .withColumn("dss", _dot(F.col("sub"), F.col("sub")))
         .select(id_col, "m", best.alias("b"))
         .select(id_col, "m", F.col("b.code_id").alias("code"))
@@ -1051,7 +1051,7 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = (
         emb.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
+        .crossJoin(q)
         .withColumn("rel", F.round(_dot(F.col("embedding"), F.col("qe")), 6))
         .orderBy(F.desc("rel"), F.asc("vec_id"))
         .limit(MMR_POOL)
@@ -1561,7 +1561,7 @@ def sim_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(acc),
     )
     assigned = (
-        corpus.crossJoin(F.broadcast(cents1))
+        corpus.crossJoin(cents1)
         .select("neighbor_id", "ne", c_best.alias("b"))
         .select(
             "neighbor_id",
@@ -1805,7 +1805,7 @@ def sim_sq8_error(spark: SparkSession, sf_dir: str) -> DataFrame:
             / 256
         ),
     )
-    recon = corpus.crossJoin(F.broadcast(stats)).select("neighbor_id", "ne", xh.alias("xh"))
+    recon = corpus.crossJoin(stats).select("neighbor_id", "ne", xh.alias("xh"))
     queries = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
@@ -2130,7 +2130,7 @@ def sim_ann_recall_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = row if out is None else out.unionByName(row)
     return (
-        out.crossJoin(F.broadcast(n_exact))
+        out.crossJoin(n_exact)
         .select(
             "method",
             "n_pairs",

@@ -219,7 +219,7 @@ def sink_stdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load(spark, sf_dir, "nation")
     supplier = load(spark, sf_dir, "supplier")
     return (
-        supplier.join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
+        supplier.join(nation, supplier.s_nationkey == nation.n_nationkey)
         .select(
             F.format_string(
                 "%-14s %-20s %8.2f", F.col("s_name"), F.col("n_name"), F.col("s_acctbal")
@@ -308,12 +308,12 @@ def wf_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load(spark, sf_dir, "nation")
     region = load(spark, sf_dir, "region")
     excluded_nations = (
-        nation.join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        nation.join(region, nation.n_regionkey == region.r_regionkey)
         .filter(F.col("r_name") == "ASIA")
         .select("n_nationkey")
     )
     return customer.join(
-        F.broadcast(excluded_nations),
+        excluded_nations,
         customer.c_nationkey == excluded_nations.n_nationkey,
         "left_anti",
     ).select("c_custkey", "c_name", "c_nationkey")

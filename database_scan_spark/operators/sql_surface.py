@@ -349,7 +349,7 @@ def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(F.col("l_extendedprice").cast("double")).alias("lo"),
         F.max(F.col("l_extendedprice").cast("double")).alias("hi"),
     )
-    binned = li.crossJoin(F.broadcast(bounds)).select(
+    binned = li.crossJoin(bounds).select(
         F.least(
             F.floor(
                 (F.col("l_extendedprice").cast("double") - F.col("lo"))

@@ -56,7 +56,7 @@ def analytic_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment", "c_nationkey")
     nat = load(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
     obs = (
-        cust.join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
+        cust.join(nat, cust.c_nationkey == nat.n_nationkey)
         .groupBy(
             F.col("c_mktsegment").alias("seg"),
             F.col("n_regionkey").alias("reg"),
@@ -66,7 +66,7 @@ def analytic_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = obs.groupBy("seg").agg(F.sum("o").alias("r"))
     cols = obs.groupBy("reg").agg(F.sum("o").alias("c"))
     tot = obs.agg(F.sum("o").alias("n"))
-    grid = rows.crossJoin(F.broadcast(cols)).crossJoin(F.broadcast(tot))
+    grid = rows.crossJoin(F.broadcast(cols)).crossJoin(tot)
     cells = grid.join(obs, ["seg", "reg"], "left").select(
         "n",
         F.coalesce(F.col("o"), F.lit(0)).alias("o"),
@@ -299,7 +299,7 @@ def analytic_avg_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cnt").over(w).alias("cum_cnt"),
     )
     tot = cum.agg(F.max("tp").alias("n_pos"), F.max("cum_cnt").alias("n_rows"))
-    terms = cum.crossJoin(F.broadcast(tot)).select(
+    terms = cum.crossJoin(tot).select(
         "n_pos",
         "n_rows",
         F.round(
@@ -392,7 +392,7 @@ def analytic_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("x").alias("s_tot"), F.count(F.lit(1)).alias("n_tot")
     )
     scored = (
-        pre.crossJoin(F.broadcast(tot))
+        pre.crossJoin(tot)
         .filter(F.col("n1") < F.col("n_tot"))
         .select(
             "day",
@@ -594,13 +594,11 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = persist(
         _trade_edges(spark, sf_dir)
         .join(
-            F.broadcast(nat.select(F.col("n_nationkey").alias("src"),
-                                   F.col("n_regionkey").alias("src_reg"))),
+            nat.select(F.col("n_nationkey").alias("src"), F.col("n_regionkey").alias("src_reg")),
             "src",
         )
         .join(
-            F.broadcast(nat.select(F.col("n_nationkey").alias("dst"),
-                                   F.col("n_regionkey").alias("dst_reg"))),
+            nat.select(F.col("n_nationkey").alias("dst"), F.col("n_regionkey").alias("dst_reg")),
             "dst",
         )
     )
@@ -621,7 +619,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         reg.join(F.broadcast(intra), "reg", "left")
         .join(F.broadcast(outdeg), "reg", "left")
         .join(F.broadcast(indeg), "reg", "left")
-        .crossJoin(F.broadcast(m))
+        .crossJoin(m)
         .select(
             "region",
             F.coalesce("e_c", F.lit(0)).cast("bigint").alias("intra_w"),
@@ -767,9 +765,9 @@ def analytic_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cnt").cast("bigint").alias("n_rows"),
     )
     out = (
-        cd.crossJoin(F.broadcast(tie_mass("q")))
-        .crossJoin(F.broadcast(tie_mass("d")))
-        .crossJoin(F.broadcast(n_tot))
+        cd.crossJoin(tie_mass("q"))
+        .crossJoin(tie_mass("d"))
+        .crossJoin(n_tot)
     )
     return out.select(
         "n_rows",
@@ -1873,7 +1871,7 @@ def analytic_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        j.crossJoin(F.broadcast(cutoff))
+        j.crossJoin(cutoff)
         .select(
             "ta",
             "tb",
@@ -1950,7 +1948,7 @@ def analytic_var_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = deltas.agg(F.count(F.lit(1)).alias("n"))
     ranked = deltas.withColumn(
         "rk", F.row_number().over(Window.orderBy("d"))
-    ).crossJoin(F.broadcast(n))
+    ).crossJoin(n)
     k = F.ceil(F.col("n") * _VAR_ALPHA_PCT / 100.0)
     var_row = ranked.filter(F.col("rk") == k).select(
         F.col("d").alias("var_cents"), "n"
@@ -2082,7 +2080,7 @@ def analytic_psm(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("naive_diff_cents"),
     )
-    return naive.crossJoin(F.broadcast(matched)).select(
+    return naive.crossJoin(matched).select(
         "n_treated", "n_control", "n_matched", "naive_diff_cents", "att_cents"
     )
 
@@ -2194,7 +2192,7 @@ def graph_bipartite_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         pairs.join(F.broadcast(d1), "s1")
         .join(F.broadcast(d2), "s2")
-        .crossJoin(F.broadcast(n_parts))
+        .crossJoin(n_parts)
         .filter(
             F.col("shared").cast("decimal(38,0)") * F.col("n_parts")
             >= _BP_LIFT * F.col("deg1").cast("decimal(38,0)") * F.col("deg2")
@@ -2568,7 +2566,7 @@ def analytic_contribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("ref_cents").cast("bigint").alias("ref_tot"),
         F.sum("cur_cents").cast("bigint").alias("cur_tot"),
     )
-    j = seg.crossJoin(F.broadcast(tot))
+    j = seg.crossJoin(tot)
     delta = (F.col("cur_cents") - F.col("ref_cents")).cast("double")
     tot_delta = (F.col("cur_tot") - F.col("ref_tot")).cast("double")
     mix_shift = (
@@ -3080,7 +3078,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     med = wpairs.agg(F.expr("percentile(w, 0.5)").alias("m"))
     edges = persist(
-        wpairs.crossJoin(F.broadcast(med))
+        wpairs.crossJoin(med)
         .filter(F.col("w") >= F.col("m"))
         .select("a", "b")
     )
@@ -3216,7 +3214,7 @@ def analytic_retention_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     elig = (
         cohort.groupBy("c0")
         .agg(F.count(F.lit(1)).alias("size"))
-        .crossJoin(F.broadcast(maxwk))
+        .crossJoin(maxwk)
     )
     # eligible mass at offset k = sum of cohort sizes with c0 + k <= max_wk
     ks = offs.select("k")

@@ -414,7 +414,7 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf, df_, n_docs = _term_stats(spark, sf_dir)
     scored = (
         tf.join(df_, "term")
-        .crossJoin(F.broadcast(n_docs))
+        .crossJoin(n_docs)
         .select(
             "doc_id",
             "term",
@@ -567,7 +567,7 @@ def _bm25_term_scores(hits: DataFrame, stats: DataFrame, name: str) -> DataFrame
     )
     return (
         tf.join(F.broadcast(df_), "term")
-        .crossJoin(F.broadcast(stats))
+        .crossJoin(stats)
         .select("doc_id", F.round(term_score, 6).cast("decimal(18,6)").alias(name))
     )
 
@@ -871,7 +871,7 @@ def text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         cand.join(u1, "w1")
         .join(u2, "w2")
-        .crossJoin(F.broadcast(n_total))
+        .crossJoin(n_total)
         .select(
             "w1",
             "w2",
@@ -1486,7 +1486,7 @@ def analytic_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("t")
     )
     idcg = ideal_terms.agg(F.sum("t").alias("idcg"))
-    return dcg.crossJoin(F.broadcast(idcg)).select(
+    return dcg.crossJoin(idcg).select(
         F.col("dcg").cast("double").alias("dcg"),
         F.col("idcg").cast("double").alias("idcg"),
         F.round(
@@ -2353,7 +2353,7 @@ def sim_prf_rocchio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     expansion = (
         fb_tf.join(corpus_df, "term")
-        .crossJoin(F.broadcast(stats))
+        .crossJoin(stats)
         .select(
             "term",
             F.round(
@@ -2374,7 +2374,7 @@ def sim_prf_rocchio(spark: SparkSession, sf_dir: str) -> DataFrame:
         bm25(expanded)
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(_PRF_TOP)
-        .crossJoin(F.broadcast(exp_list))
+        .crossJoin(exp_list)
         .select(
             "doc_id",
             F.col("score").cast("double").alias("score"),

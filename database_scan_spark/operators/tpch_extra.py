@@ -51,8 +51,8 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     bridge = (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .join(supplier, li.l_suppkey == supplier.s_suppkey)
-        .join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .join(nation, supplier.s_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
         .select("p_partkey", "p_name", "s_suppkey", "s_name", "s_acctbal", "n_name")
         .dropDuplicates(["p_partkey", "s_suppkey"])
     )
@@ -154,8 +154,8 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(supplier, li.l_suppkey == supplier.s_suppkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .join(customer, orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nk"))
+        .join(n1, F.col("s_nationkey") == F.col("s_nk"))
+        .join(n2, F.col("c_nationkey") == F.col("c_nk"))
         .filter(pair | rpair)
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
         .agg(F.sum(disc_price()).cast("double").alias("revenue"))
@@ -215,10 +215,10 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .join(customer, orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(cnat), F.col("c_nationkey") == F.col("c_nk"))
-        .join(F.broadcast(region), F.col("c_rk") == F.col("r_regionkey"))
+        .join(cnat, F.col("c_nationkey") == F.col("c_nk"))
+        .join(region, F.col("c_rk") == F.col("r_regionkey"))
         .join(load(spark, sf_dir, "supplier"), li.l_suppkey == F.col("s_suppkey"))
-        .join(F.broadcast(snat), F.col("s_nationkey") == F.col("s_nk"))
+        .join(snat, F.col("s_nationkey") == F.col("s_nk"))
         .groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
             F.round(
@@ -272,7 +272,7 @@ def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .join(supplier, li.l_suppkey == supplier.s_suppkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
+        .join(nation, supplier.s_nationkey == nation.n_nationkey)
         .groupBy(
             F.col("n_name").alias("nation"), F.year("o_orderdate").alias("o_year")
         )
@@ -366,7 +366,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier = load(spark, sf_dir, "supplier")
     return (
         revenue.join(
-            F.broadcast(max_rev), F.col("total_revenue_dec") == F.col("max_rev")
+            max_rev, F.col("total_revenue_dec") == F.col("max_rev")
         )
         .join(supplier, F.col("supplier_no") == supplier.s_suppkey)
         .select(
@@ -631,7 +631,7 @@ def tpch_q22_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate") >= F.lit("2000-07-01")
     )
     return (
-        customer.crossJoin(F.broadcast(avg_bal))
+        customer.crossJoin(avg_bal)
         .filter(F.col("c_acctbal") > F.col("avg_bal"))
         .join(orders, customer.c_custkey == orders.o_custkey, "left_anti")
         .groupBy("c_mktsegment")

@@ -83,7 +83,7 @@ def candidate_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     sup_rev = seed_li.groupBy("l_suppkey").agg(F.sum(disc_price()).alias("rev"))
     max_rev = sup_rev.agg(F.max(F.col("rev").cast("double")).alias("max_rev"))
     main_sups = (
-        sup_rev.crossJoin(F.broadcast(max_rev))
+        sup_rev.crossJoin(max_rev)
         .withColumn("score", F.col("rev").cast("double") / F.col("max_rev"))
         .filter(F.col("score") >= MIN_SCORE)
         .select("l_suppkey")

@@ -14,7 +14,9 @@ running around it.
 
 from __future__ import annotations
 
+import json
 import os
+import subprocess
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -285,24 +287,26 @@ _CATALOG_PINS = {
 }
 
 
-def test_queries_leave_no_session_conf_behind(spark):
-    """The driver runs queries one after another in one shared session,
-    so a conf a query sets must not outlive it. Each query that needs a
-    conf runs in a session that has none of them set yet (its own conf,
-    shared SparkContext); after it executes, the session's explicitly
-    set confs must be what they were, apart from the catalog pins."""
+_CONF_QUERIES = (
+    "join_bloom_prefilter",
+    "catalog_stats_cbo",
+    "udtf_rle_tokens",
+    "udtf_analyze_parse",
+    "udtf_table_arg",
+    "stream_tws_type_counts",
+    "src_python_stream_datasource",
+    "stream_corpus_ingest",
+)
+
+
+def _confs_left_behind(spark) -> dict[str, list[str]]:
+    """Run each of ``_CONF_QUERIES`` in a session that has none of their
+    confs set yet (its own conf, shared SparkContext) and return, per
+    query, the explicitly set confs that changed, apart from the catalog
+    pins."""
     qs = entry_mod.queries()
     leaked = {}
-    for name in (
-        "join_bloom_prefilter",
-        "catalog_stats_cbo",
-        "udtf_rle_tokens",
-        "udtf_analyze_parse",
-        "udtf_table_arg",
-        "stream_tws_type_counts",
-        "src_python_stream_datasource",
-        "stream_corpus_ingest",
-    ):
+    for name in _CONF_QUERIES:
         session = spark.newSession()
         before = session.conf.getAll
         qs[name](session, SF).write.format("noop").mode("overwrite").save()
@@ -314,4 +318,28 @@ def test_queries_leave_no_session_conf_behind(spark):
         } - _CATALOG_PINS
         if changed:
             leaked[name] = sorted(changed)
+    return leaked
+
+
+def test_queries_leave_no_session_conf_behind(tmp_path):
+    """The driver runs queries one after another in one shared session,
+    so a conf a query sets must not outlive it. The check runs in a
+    fresh process: a Python data source registered in a session cannot
+    be used from a ``newSession()`` child (``sources.register``), so in
+    the suite's shared session ``src_python_stream_datasource`` would
+    pass or fail by which tests ran before."""
+    tests = os.path.dirname(os.path.abspath(__file__))
+    code = (
+        f"import json, sys; sys.path.insert(0, {tests!r}); "
+        "import test_cache_lifecycle as t; "
+        "from database_scan_spark.session import get_spark; "
+        "print(json.dumps(t._confs_left_behind(get_spark('conf-leak', shuffle_partitions=8))))"
+    )
+    env = dict(os.environ, SPARK_GRAFT_TMP=str(tmp_path), SPARK_DRIVER_MEM="2g")
+    r = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        cwd=tmp_path, env=env, timeout=600,
+    )
+    assert r.returncode == 0, r.stdout[-2000:] + r.stderr[-4000:]
+    leaked = json.loads(r.stdout.splitlines()[-1])
     assert not leaked, f"queries left confs behind: {leaked}"

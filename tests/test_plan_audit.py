@@ -5,8 +5,7 @@ iterate until it's the plan you'd want".
 - BatchEvalPython = row-at-a-time Python UDF: forbidden everywhere
   (the engine's Python paths are Arrow-batched: ArrowEvalPython /
   MapInPandas / FlatMapGroupsInPandas).
-- CartesianProduct: forbidden except where the operator deliberately
-  demonstrates a nested-loop shape.
+- CartesianProduct: forbidden everywhere.
 """
 
 from __future__ import annotations
@@ -20,9 +19,6 @@ import pytest
 from database_scan_spark.registry import SPECS
 
 from conftest import SF_SMOKE
-
-# operators whose *point* is a nested-loop / cross shape
-CARTESIAN_OK = {"join_lookup_nested_loop"}
 
 # streaming jobs materialize via their own harness; building their
 # batch-reproduction plan still works, so no exclusions needed.
@@ -60,14 +56,18 @@ _UNPARTITIONED_WINDOW_OK: dict[str, str] = {}
 
 # --- broadcast-build-side ratchet (mechanizes the r5 manual audit) ---------
 #
-# r5 hand-audited all 257 F.broadcast sites: every build side is a one-row
-# aggregate, a fixed-cardinality dim, a filtered/selective dim projection,
-# or a probe/centroid/boundary set. The rule below flags a broadcast-hinted
-# join side whose subtree reaches a fact-scaled scan without crossing an
-# Aggregate/Limit; the dict freezes today's audited counts per spec so any
-# NEW unbounded-fact broadcast (the graph_kcore r5 OOM-cliff class) fails,
-# while the audited sites keep their hand proof. Lower a count when a site
-# is removed; NEVER raise one without re-doing the hand audit.
+# r5 hand-audited the 257 F.broadcast sites of its day; 127 calls on 126
+# lines are left. The one-row and nation/region build sides lost their
+# hints (the redundant-hint gate below keeps them out), so every hinted
+# side left is a filtered/selective dim projection, a probe/centroid/
+# boundary set, a keyed aggregate, or a one-row side whose product
+# estimate is above the broadcast threshold. The rule below flags a
+# broadcast-hinted join side whose subtree reaches a fact-scaled scan
+# without crossing an Aggregate/Limit; the dict freezes today's audited
+# counts per spec so any NEW unbounded-fact broadcast (the graph_kcore r5
+# OOM-cliff class) fails, while the audited sites keep their hand proof.
+# Lower a count when a site is removed; NEVER raise one without re-doing
+# the hand audit.
 #
 # Audited classes behind the counts:
 # - star-schema dim broadcasts (customer/supplier/part, usually filtered):
@@ -124,6 +124,20 @@ _BROADCAST_FACT_OK: dict[str, int] = {
     "dedup_decontaminate": 1,
     "sim_kmeans": 1,
 }
+
+# --- redundant-broadcast-hint gate -----------------------------------------
+#
+# The other half of the same walk: a hint on a side the planner already
+# broadcasts by its own size rule at every scale is noise. Such a side
+# has one row (a grouping-free aggregate, its projections and cross
+# joins: Catalyst plans it with maxRows 1) or reads only the fixed
+# nation/region dims and driver literals, and its size estimate is under
+# Spark's default threshold (10 MB; the engine session sets 64 MB). A
+# one-row side whose estimate is a product of cross joins above the
+# threshold keeps its hint: without it the join plans as a
+# CartesianProduct (dedup_fellegi_sunter).
+_FIXED_TABLES = frozenset(["nation.parquet", "region.parquet"])
+_BROADCAST_THRESHOLD = 10 * 1024 * 1024
 
 
 # --- lineitem-broadcast gate ------------------------------------------------
@@ -286,25 +300,57 @@ def _unpartitioned_fact_windows(node, hits: list) -> None:
         pass
 
 
-def _broadcast_fact_builds(node, hits: list) -> None:
-    """Broadcast-hinted join sides whose subtree reaches a fact scan
-    without an Aggregate/Limit bound (the forced-broadcast OOM-cliff
-    class r5 found in graph_kcore)."""
+def _broadcast_hinted_sides(node):
+    """Every broadcast-hinted side of a ``Join`` in the logical plan
+    ``node``, subquery plans included, as ``(join, side index, side)``."""
     if node.getClass().getSimpleName() == "Join":
         h = node.hint()
         kids = list(_children(node))
         for opt, side in ((h.leftHint(), 0), (h.rightHint(), 1)):
             if opt.isDefined() and "broadcast" in opt.get().toString():
-                if _reaches_fact_unbounded(kids[side]):
-                    hits.append(f"side={side} {node.simpleString(150)}")
+                yield node, side, kids[side]
     for c in _children(node):
-        _broadcast_fact_builds(c, hits)
+        yield from _broadcast_hinted_sides(c)
     try:
         sq = node.subqueries()
         for i in range(sq.size()):
-            _broadcast_fact_builds(sq.apply(i), hits)
+            yield from _broadcast_hinted_sides(sq.apply(i))
     except Exception:  # noqa: BLE001
         pass
+
+
+def _broadcast_fact_builds(node, hits: list) -> None:
+    """Broadcast-hinted join sides whose subtree reaches a fact scan
+    without an Aggregate/Limit bound (the forced-broadcast OOM-cliff
+    class r5 found in graph_kcore)."""
+    for join, side, plan in _broadcast_hinted_sides(node):
+        if _reaches_fact_unbounded(plan):
+            hits.append(f"side={side} {join.simpleString(150)}")
+
+
+def _fixed_leaves(node) -> bool:
+    """True if every leaf under ``node`` is a nation or region scan or
+    a driver literal: a relation whose size no scale factor changes."""
+    if not node.children().isEmpty():
+        return all(_fixed_leaves(c) for c in _children(node))
+    name = node.getClass().getSimpleName()
+    if name in ("LocalRelation", "OneRowRelation"):
+        return True
+    if name != "LogicalRelation":
+        return False
+    roots = node.relation().location().rootPaths()
+    return all(roots.apply(i).getName() in _FIXED_TABLES for i in range(roots.size()))
+
+
+def _redundant_broadcasts(node, hits: list) -> None:
+    """Broadcast-hinted join sides the planner broadcasts unasked at any
+    scale: one row, or only nation/region/literal leaves, with a size
+    estimate under Spark's default broadcast threshold."""
+    for join, side, plan in _broadcast_hinted_sides(node):
+        rows = plan.maxRows()
+        small = int(plan.stats().sizeInBytes()) <= _BROADCAST_THRESHOLD
+        if small and ((rows.isDefined() and rows.get() <= 1) or _fixed_leaves(plan)):
+            hits.append(f"side={side} {join.simpleString(150)}")
 
 
 def _grouping_keys(node) -> set:
@@ -372,17 +418,25 @@ def test_no_plan_smells(spark, spec):
         df._jdf.queryExecution(), "extended"
     )
     assert "BatchEvalPython" not in plan, f"{spec.name}: row-at-a-time Python UDF"
-    if spec.name not in CARTESIAN_OK:
-        assert "CartesianProduct" not in plan, f"{spec.name}: cartesian product"
+    assert "CartesianProduct" not in plan, f"{spec.name}: cartesian product"
+    optimized = df._jdf.queryExecution().optimizedPlan()
     if spec.name not in _UNPARTITIONED_WINDOW_OK:
         hits: list = []
-        _unpartitioned_fact_windows(df._jdf.queryExecution().optimizedPlan(), hits)
+        _unpartitioned_fact_windows(optimized, hits)
         assert not hits, (
             f"{spec.name}: unpartitioned Window over an unbounded "
             f"fact-table subtree (single-task sort at scale): {hits}"
         )
+    rhits: list = []
+    _redundant_broadcasts(optimized, rhits)
+    assert not rhits, (
+        f"{spec.name}: {len(rhits)} broadcast hint(s) on a side the "
+        f"planner broadcasts unasked at any scale (one row, or only "
+        f"nation/region/literal leaves, estimate <= 10 MB); drop the "
+        f"hint: {rhits}"
+    )
     bhits: list = []
-    _broadcast_fact_builds(df._jdf.queryExecution().optimizedPlan(), bhits)
+    _broadcast_fact_builds(optimized, bhits)
     allowed = _BROADCAST_FACT_OK.get(spec.name, 0)
     assert len(bhits) <= allowed, (
         f"{spec.name}: {len(bhits)} broadcast-hinted fact-reaching build "
@@ -400,7 +454,7 @@ def test_no_plan_smells(spark, spec):
         )
     if spec.name not in _PANDAS_GROUP_OK:
         ghits: list = []
-        _unbounded_pandas_groups(df._jdf.queryExecution().optimizedPlan(), ghits)
+        _unbounded_pandas_groups(optimized, ghits)
         assert not ghits, (
             f"{spec.name}: pandas-group node keyed only by "
             f"low-cardinality columns over an unbounded fact subtree — "
@@ -536,23 +590,56 @@ def test_pandas_group_gate_catches_bad_plan(spark):
 
 def test_broadcast_ratchet_catches_bad_plan(spark):
     """Ratchet self-test: a forced broadcast of a raw fact table MUST
-    be flagged; the same join with the build side aggregated must not."""
+    be flagged; the same join with the build side aggregated must not.
+    The redundant-hint half MUST flag a hinted global aggregate and a
+    hinted nation, and must pass the same one-row side unhinted and a
+    hinted one-row side whose product estimate is above the threshold
+    (the dedup_fellegi_sunter shape, which plans a CartesianProduct
+    without its hint)."""
+    from functools import reduce
+
     from pyspark.sql import functions as F
 
     from database_scan_spark.catalog import load
 
+    def flagged(df, check) -> list:
+        hits: list = []
+        check(df._jdf.queryExecution().optimizedPlan(), hits)
+        return hits
+
     ev = load(spark, SF_SMOKE, "events")
     o = load(spark, SF_SMOKE, "orders")
     bad = o.join(F.broadcast(ev), o.o_orderkey == ev.event_id)
-    hits: list = []
-    _broadcast_fact_builds(bad._jdf.queryExecution().optimizedPlan(), hits)
-    assert hits, "ratchet missed a forced broadcast of a raw fact table"
+    assert flagged(bad, _broadcast_fact_builds), (
+        "ratchet missed a forced broadcast of a raw fact table"
+    )
 
     agg = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     ok = o.join(F.broadcast(agg), o.o_orderstatus == agg.event_type)
-    hits2: list = []
-    _broadcast_fact_builds(ok._jdf.queryExecution().optimizedPlan(), hits2)
+    hits2 = flagged(ok, _broadcast_fact_builds)
     assert not hits2, f"ratchet flagged an aggregated build side: {hits2}"
+    assert not flagged(ok, _redundant_broadcasts), "keyed aggregate is not one row"
+
+    top = o.agg(F.max("o_totalprice").alias("top"))
+    assert flagged(o.crossJoin(F.broadcast(top)), _redundant_broadcasts), (
+        "gate missed a hinted one-row global aggregate"
+    )
+    nation = load(spark, SF_SMOKE, "nation")
+    cust = load(spark, SF_SMOKE, "customer")
+    hinted_dim = cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
+    assert flagged(hinted_dim, _redundant_broadcasts), "gate missed a hinted nation"
+    unhinted = flagged(o.crossJoin(top), _redundant_broadcasts)
+    assert not unhinted, f"gate flagged an unhinted one-row cross join: {unhinted}"
+
+    wide = reduce(
+        lambda a, b: a.crossJoin(b),
+        [o.agg(F.max("o_orderpriority").alias(f"m{i}")) for i in range(5)],
+    )
+    side = wide._jdf.queryExecution().optimizedPlan()
+    assert side.maxRows().get() == 1
+    assert int(side.stats().sizeInBytes()) > _BROADCAST_THRESHOLD
+    big_est = flagged(o.crossJoin(F.broadcast(wide)), _redundant_broadcasts)
+    assert not big_est, f"gate flagged a hint the product estimate needs: {big_est}"
 
 
 def test_lineitem_broadcast_gate_catches_bad_plan(spark):
