@@ -75,9 +75,11 @@ def spread(df):
     """Fan a small-file scan out to all cores before CPU-heavy narrow
     maps (hashing, dot products, Python batches). A few-MB parquet
     file arrives as ONE partition under maxPartitionBytes, which
-    serializes per-row-expensive work; one tiny round-robin shuffle
-    unlocks full parallelism. At cluster scale, inputs arrive in many
-    splits and this becomes a no-op-sized cost."""
+    serializes per-row-expensive work; a round-robin shuffle unlocks
+    full parallelism. The shuffle moves every row at any scale, and
+    AQE does not coalesce a repartition with an explicit partition
+    count, so where inputs already arrive in many splits (cluster
+    scale) it is pure cost (SCALE.md "Open items")."""
     sc = df.sparkSession.sparkContext
     return df.repartition(sc.defaultParallelism)
 

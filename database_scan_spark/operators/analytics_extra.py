@@ -1782,11 +1782,7 @@ def analytic_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
         "f_cnt",
         F.col("m_dec").cast("double").alias("m_sum"),
     )
-    # Three chained rank passes each run their own boundary aggregate;
-    # persisting the dimension-sized per-user table keeps those (and
-    # the window inputs) from replaying the fact aggregation three
-    # times. Session cache contract: released at next query entry.
-    rfm = persist(rfm)
+    rfm = persist(rfm)  # (b) scans 2 -> 6 without it
     n = rfm.agg(F.count(F.lit(1)).alias("_n"))
     uid = (F.col("user_id"),)
     g = global_order(rfm, F.col("r_days"), uid, rank_col="_r_rk")

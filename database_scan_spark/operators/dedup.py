@@ -154,15 +154,8 @@ GROUP BY md5(text)
 def _verified_pairs(sh: DataFrame, candidates: DataFrame) -> DataFrame:
     """Exact-Jaccard verification for a (small) candidate-pair set:
     semi-join the shingle table down to candidate docs first, then
-    count intersections for candidate pairs only.
-
-    Both inputs are referenced several times below; without an
-    explicit materialization point Spark re-derives the full lineage
-    per reference (only shuffle exchanges get ReusedExchange). The
-    candidate set is tiny and the shingle table is a bounded blowup
-    of the corpus, so persist() — at cluster scale this is the
-    checkpoint you'd write before the verification stage anyway."""
-    sh = persist(sh)
+    count intersections for candidate pairs only."""
+    # (b) dedup_incremental_minhash's scans 2 -> 6 without it
     candidates = persist(candidates)
     cand_docs = (
         candidates.select(F.col("doc_a").alias("doc_id"))
@@ -279,14 +272,10 @@ def dedup_ngram_jaccard(
     PPJoin prefix filter (see ``_prefix_filtered_candidates`` for
     when that wins). Both paths produce identical results; the DuckDB
     oracle is always the naive formulation (independent derivation).
-
-    A caller that already persisted the same ``_shingle_df(...)``
-    relation (the OPH estimator audit) shares it through Spark's cache
-    manager, which matches the identical plan: the doc scan + explode
-    runs once.
     """
-    sh = persist(_shingle_df(spark, sf_dir, sample_mod=sample_mod))
+    sh = _shingle_df(spark, sf_dir, sample_mod=sample_mod)
     if prefix_filter:
+        sh = persist(sh)  # (b) scans 1 -> 3 without it
         return _verified_pairs(sh, _prefix_filtered_candidates(sh))
     return _jaccard_scored(_shingle_overlaps(sh))
 
@@ -403,6 +392,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("ids") > 1)
         .select(F.sort_array("ids").alias("ids"))
     )
+    # (b) latency 1.24 -> 1.42 s (dq_near_dup_rate_by_source) and
+    # 0.97 -> 1.04 s (dedup_minhash_lsh) without it
     candidates = persist(
         buckets.select(F.explode("ids").alias("doc_a"), "ids")
         .select("doc_a", F.explode("ids").alias("doc_b"))
@@ -1248,7 +1239,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the whole pipeline has an exact SQL oracle. At 100 TB the
     index is the only state the pipeline keeps; appending today's
     bands to it (one partition write) rolls the window forward."""
-    sh = persist(_shingle_df(spark, sf_dir))
+    sh = persist(_shingle_df(spark, sf_dir))  # (b) scans 2 -> 3 without it
     is_delta = h32(F.col("doc_id").cast("string")) % _DELTA_MOD == 0
 
     import os  # noqa: PLC0415
@@ -1261,6 +1252,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             "overwrite"
         ).parquet(idx_path)
     base_bands = spark.read.parquet(idx_path)
+    # (b) shuffles 8 -> 9 without it
     delta_bands = persist(_bands_from_shingles(sh.filter(is_delta)))
     all_bands = base_bands.unionByName(delta_bands)
     cand = (
@@ -1500,11 +1492,7 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             x,
         ).otherwise(acc),
     )
-    # consumed THREE times below (both sides of the intra-cluster
-    # pair join + the final audit join) and the differing aliases
-    # defeat ReuseExchange (measured: 0 reused exchanges, K·n dot
-    # products computed 3x; persist takes sf0.1 warm 6.9s -> 5.4s).
-    # Released at the next query's entry (session.persist).
+    # (b) scans 3 -> 4 and shuffles 7 -> 8 without it
     assigned = persist(
         emb.crossJoin(cents1)
         .select("vec_id", "embedding", best.alias("b"))
@@ -2249,12 +2237,11 @@ def dedup_minhash_oph(
     sample — frequency /m, audit cost /m² — which is how an accuracy
     audit runs at 100 TB (the registered ``dedup_minhash_oph_sampled``
     pins the sampled path against its own exactly-sampled oracle)."""
-    # ONE shingle kernel for the whole audit (optimization r11): the
-    # signature pass below and the exact-pair ground truth inside
-    # dedup_ngram_jaccard consume the same persisted (doc_id, shingle)
-    # relation (its identical persist() plan hits this cache), so the
-    # doc scan + split + explode runs once, not twice.
-    sh = persist(_shingle_df(spark, sf_dir, sample_mod=sample_mod))
+    # ONE shingle kernel for the whole audit: the signature pass below
+    # and the exact-pair ground truth inside dedup_ngram_jaccard build
+    # the same (doc_id, shingle) plan, so exchange reuse runs the doc
+    # scan once.
+    sh = _shingle_df(spark, sf_dir, sample_mod=sample_mod)
     hv = h32(F.concat(F.lit("oph:"), F.col("shingle")))
     raw = (
         sh.select(
@@ -2544,47 +2531,32 @@ def dedup_method_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators themselves (single source of truth); metrics are
     count aggregates over broadcast-joined pair sets — the pair
     tables are LSH-sized, orders smaller than the corpus."""
-    # Each pair set appears several times in the union plan (its own
-    # count, the overlap join, the exact-total denominator); persist
-    # so each dedup pipeline executes ONCE, not once per occurrence.
-    ex = persist(dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b"))
+    ex = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     methods = [
         ("exact_jaccard", ex),
-        (
-            "minhash_lsh",
-            persist(dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")),
-        ),
-        (
-            "simhash_h3",
-            persist(dedup_simhash_pairs(spark, sf_dir).select("doc_a", "doc_b")),
-        ),
+        ("minhash_lsh", dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")),
+        ("simhash_h3", dedup_simhash_pairs(spark, sf_dir).select("doc_a", "doc_b")),
     ]
+    # One grouped count over the tagged pair sets: ex holds each pair
+    # once, so a left join keeps every method pair and counts both the
+    # pairs and their overlap. The pair sets' estimates hide their
+    # near-dup size, hence the hint (runtime shuffles 15 -> 14).
+    tagged = methods[0][1].withColumn("method", F.lit(methods[0][0]))
+    for name, pairs in methods[1:]:
+        tagged = tagged.unionByName(pairs.withColumn("method", F.lit(name)))
+    counted = (
+        tagged.join(F.broadcast(ex.withColumn("hit", F.lit(1))), ["doc_a", "doc_b"], "left")
+        .groupBy("method")
+        .agg(F.count(F.lit(1)).alias("n_pairs"), F.count("hit").alias("n_overlap"))
+    )
     ex_n = ex.agg(F.count(F.lit(1)).alias("n_exact"))
-    rows = []
-    for name, pairs in methods:
-        counted = pairs.agg(F.count(F.lit(1)).alias("n_pairs"))
-        overlap = pairs.join(ex, ["doc_a", "doc_b"]).agg(
-            F.count(F.lit(1)).alias("n_overlap")
-        )
-        rows.append(
-            counted.crossJoin(overlap)
-            .crossJoin(ex_n)
-            .select(
-                F.lit(name).alias("method"),
-                F.col("n_pairs").cast("long").alias("n_pairs"),
-                F.col("n_overlap").cast("long").alias("n_overlap_exact"),
-                F.round(F.col("n_overlap") / F.col("n_pairs"), 6).alias(
-                    "precision_vs_exact"
-                ),
-                F.round(F.col("n_overlap") / F.col("n_exact"), 6).alias(
-                    "recall_vs_exact"
-                ),
-            )
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out
+    return counted.crossJoin(ex_n).select(
+        "method",
+        F.col("n_pairs").cast("long").alias("n_pairs"),
+        F.col("n_overlap").cast("long").alias("n_overlap_exact"),
+        F.round(F.col("n_overlap") / F.col("n_pairs"), 6).alias("precision_vs_exact"),
+        F.round(F.col("n_overlap") / F.col("n_exact"), 6).alias("recall_vs_exact"),
+    )
 
 
 def _method_matrix_oracle() -> str:

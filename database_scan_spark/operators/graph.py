@@ -73,7 +73,7 @@ def _rank_rounds(
     those columns). Each round a node keeps ``teleport + 85% of its
     inflow``, the inflow being every in-neighbour's rank split by edge
     weight (integer div). Returns the final ranks with ``n_name``."""
-    edges = persist(_trade_edges(spark, sf_dir))
+    edges = persist(_trade_edges(spark, sf_dir))  # (b) scans 10 -> 12 without it
     out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
     keep = [*nodes.columns, *consts.columns]
     ranks = nodes.crossJoin(consts).select(*keep, F.expr(init).alias("rank"))
@@ -174,6 +174,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (≤ nations² rows after the weight aggregate) is dimension-
     sized, so both joins broadcast; the heavy work stays in the one
     fact-fact aggregate that built the edges."""
+    # (b) latency 0.44 -> 0.49 s without it
     und = persist(_undirected_pairs(spark, sf_dir).distinct())
     e1 = und.select(F.col("a").alias("t_a"), F.col("b").alias("t_b"))
     e2 = und.select(F.col("a").alias("t_b2"), F.col("b").alias("t_c"))
@@ -247,11 +248,7 @@ def graph_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge list dominates; the unrolled rounds stay dimension-sized."""
     weighted = _trade_edges(spark, sf_dir).filter(F.col("src") != F.col("dst"))
     rn = F.row_number().over(Window.partitionBy("src").orderBy(F.desc("w"), F.asc("dst")))
-    edges = persist(
-        weighted.withColumn("rn", rn)
-        .filter(F.col("rn") <= BFS_FANOUT)
-        .select("src", "dst")
-    )
+    edges = weighted.withColumn("rn", rn).filter(F.col("rn") <= BFS_FANOUT).select("src", "dst")
     nation = load(spark, sf_dir, "nation")
     dist = nation.filter(F.col("n_nationkey") == BFS_SEED).select(
         F.col("n_nationkey").alias("node"), F.lit(0).alias("dist")
@@ -339,14 +336,7 @@ def _sparsified_pairs(spark: SparkSession, sf_dir: str):
     on ``_trade_edges``: the undirected weight is the sum of the two
     directed counts (identical values, and the directed aggregate is
     the same map-side-combinable shuffle)."""
-    # PERSISTED (optimization r11, guide §2.4/§5): `pairs` is consumed
-    # twice — the sparsification window (via dirs) and the kept⋈pairs
-    # reattach — and the EXECUTED plan showed the two references never
-    # unify (AQE computed the fact-fact aggregate twice, two lineitem
-    # scans; exchange-reuse misses across the window/dedup boundary).
-    # The relation is dimension-bounded (≤ nation² undirected pairs,
-    # ≤300 rows), so one tracked persist removes an entire fact join
-    # at any scale for the cost of caching a few hundred rows.
+    # (b) label propagation's scans 9 -> 10 without it
     pairs = persist(
         _trade_edges(spark, sf_dir)
         .filter(F.col("src") != F.col("dst"))
@@ -413,6 +403,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the standard per-key top-k shuffle, bounded output k·|V|."""
     pairs, kept = _sparsified_pairs(spark, sf_dir)
     sparse = F.broadcast(kept).join(pairs, ["a", "b"])
+    # (b) shuffles 13 -> 21 without it
     edges = persist(
         sparse.select("a", "b", "w")
         .unionByName(
@@ -573,6 +564,7 @@ def _linkpred_build(spark: SparkSession, sf_dir: str):
     ``_sparsified_pairs`` so the construction stays in lockstep with
     ``graph_label_propagation`` by sharing code, not by copy."""
     _pairs, kept = _sparsified_pairs(spark, sf_dir)
+    # (b) link prediction's shuffles 10 -> 26 without it
     return persist(
         kept.select("a", "b")
         .unionByName(kept.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -753,7 +745,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     weights, promote the two sums to DECIMAL(38,0) — shape
     unchanged). Iterations run on the ≤ nations² edge relation; the
     fact-scale work is the ONE edge-building aggregate."""
-    edges = persist(_trade_edges(spark, sf_dir))
+    edges = persist(_trade_edges(spark, sf_dir))  # (b) scans 6 -> 10 without it
     nodes = load(spark, sf_dir, "nation").select(F.col("n_nationkey").alias("node"))
     hubs = nodes.select("node", F.lit(SCALE).cast("bigint").alias("h"))
     auth = None
@@ -898,11 +890,7 @@ def graph_random_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("rk"),
     )
     degree = ranked.groupBy("src").agg(F.max("rk").alias("deg"))
-    # persisted: the ranked-neighbor table is referenced by all
-    # WALK_STEPS unrolled joins — without the cache the single-scan
-    # posture rests on ReuseExchange unifying 3 identical fact-agg
-    # subtrees, which AQE re-optimization is not guaranteed to keep
-    nbr = persist(ranked.join(degree, "src"))
+    nbr = persist(ranked.join(degree, "src"))  # (b) latency 0.50 -> 0.56 s without it
     walk = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("start")
     ).withColumn("cur", F.col("start"))
@@ -1009,9 +997,8 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     edges_w = _trade_edges(spark, sf_dir)
     w_rk = Window.partitionBy("src").orderBy(F.desc("w"), F.asc("dst"))
-    # persisted: each fixpoint round's localCheckpoint/count action
-    # would otherwise re-run the fact-scale edge aggregate through
-    # this subtree's lineage (only frontier/closure are checkpointed)
+    # (a) each round's checkpoint and count read it: scans 5 -> 13 and
+    # build jobs 18 -> 30 without it
     edges = persist(
         edges_w.withColumn("rk", F.row_number().over(w_rk))
         .filter(F.col("rk") <= _SCC_TOPK)
@@ -1135,6 +1122,7 @@ def graph_neighborhood_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output per radius t: pairs reached, newly reached pairs, and the
     reached fraction in ppm — the curve whose 90% crossing is the
     effective diameter."""
+    # (a) the node count reads it at build: scans 4 -> 28 without it
     edges = persist(_trade_edges(spark, sf_dir).select("src", "dst"))
     nodes = (
         edges.select(F.col("src").alias("node"))
@@ -1178,13 +1166,12 @@ def graph_neighborhood_function(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("src").alias("node"))
             .agg(F.bit_or("ball").alias("nbr_ball"))
         )
-        balls = persist(
-            balls.join(nbr, "node", "left")
-            .select(
-                "node",
-                F.col("ball").bitwiseOR(F.coalesce("nbr_ball", F.lit(0))).alias("ball"),
-            )
+        balls = balls.join(nbr, "node", "left").select(
+            "node",
+            F.col("ball").bitwiseOR(F.coalesce("nbr_ball", F.lit(0))).alias("ball"),
         )
+        if t < _NF_ROUNDS:  # the last radius's balls feed only their own row
+            balls = persist(balls)  # (b) shuffles 13 -> 65 without it
         rows.append(
             balls.agg(
                 F.lit(t).alias("t"),

@@ -1839,11 +1839,7 @@ def text_ccnet_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ntile_from_rank,
     )
 
-    # persist the doc-sized score relation: the kernel's boundary
-    # aggregate and window input would otherwise each replay the
-    # expensive token-stream joins (session cache contract: released
-    # at next query entry)
-    out = persist(out)
+    out = persist(out)  # (b) shuffles 11 -> 18 without it
     n_docs = out.agg(F.count(F.lit(1)).alias("_n"))
     g = global_order(
         out,

@@ -370,9 +370,7 @@ def dq_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     med = ev.groupBy("event_type").agg(
         F.expr("percentile(value, 0.5)").alias("med")
     )
-    # persisted: j feeds both the MAD aggregate and the flagging pass;
-    # uncached, each action's lineage re-scans events (and recomputes
-    # med inside it) — five passes where the docstring promises three
+    # (b) scans 2 -> 3 without it
     j = persist(ev.join(F.broadcast(med), "event_type"))
     mad = j.groupBy("event_type").agg(
         F.expr("percentile(abs(value - med), 0.5)").alias("mad")
@@ -679,11 +677,7 @@ def wf_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load(spark, sf_dir, "customer")
     nat = load(spark, sf_dir, "nation")
     reg = load(spark, sf_dir, "region")
-    # persisted: the ladder references recs from ~6 union branches
-    # (keep0/v0 via l0, r1, l1, keep1, suppressed) and Spark shares
-    # no subexpressions across DataFrame branches — without the
-    # cache one action scans customer+dims ~6x, not once as the
-    # docstring promises
+    # (b) scans 3 -> 6 without it
     recs = persist(
         cust.join(nat, cust["c_nationkey"] == nat["n_nationkey"])
         .join(reg, nat["n_regionkey"] == reg["r_regionkey"])
@@ -695,6 +689,7 @@ def wf_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("c_acctbal") / 4000).cast("bigint").alias("b1"),
         )
     )
+    # (b) shuffles 5 -> 6 without it, as for l1
     l0 = persist(recs.groupBy("s", "nat", "b0").agg(F.count(F.lit(1)).alias("cnt")))
     keep0 = l0.filter(F.col("cnt") >= K_ANON).select(
         F.lit(0).alias("level"),
@@ -704,7 +699,7 @@ def wf_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cnt").alias("class_size"),
     )
     v0 = l0.filter(F.col("cnt") < K_ANON).select("s", "nat", "b0")
-    r1 = persist(recs.join(v0, ["s", "nat", "b0"], "left_semi"))
+    r1 = recs.join(v0, ["s", "nat", "b0"], "left_semi")
     l1 = persist(r1.groupBy("s", "rg", "b1").agg(F.count(F.lit(1)).alias("cnt")))
     keep1 = l1.filter(F.col("cnt") >= K_ANON).select(
         F.lit(1).alias("level"),
@@ -1747,9 +1742,8 @@ def dq_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags = docs.select(
         "doc_id", split_assignment(F.col("doc_id")).alias("split")
     )
-    # pairs (near-dup-sized) is the broadcast side; persisted because
-    # both tag joins probe it and the generation is the expensive leg
-    pairs = persist(dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b"))
+    # pairs (near-dup-sized) is the broadcast side
+    pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     half = tags.select(
         F.col("doc_id").alias("doc_a"), F.col("split").alias("split_a")
     ).join(F.broadcast(pairs), "doc_a")

@@ -541,7 +541,7 @@ def sim_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spread(load(spark, sf_dir, "embeddings")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    emb = persist(emb)
+    emb = persist(emb)  # (b) scans 1 -> 2 without it
     centroids = emb.filter(F.col("vec_id") < K_SEEDS).select(
         F.col("vec_id").cast("int").alias("cluster"), F.col("embedding").alias("c_arr")
     )
@@ -2014,6 +2014,7 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("ne"),
         F.col("label").alias("nlabel"),
     )
+    # (b) scans 2 -> 3 without it
     scored = persist(
         F.broadcast(queries)
         .join(corpus, F.col("query_id") != F.col("neighbor_id"))
@@ -2103,15 +2104,12 @@ def sim_ann_recall_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docstrings say so); the point is the measurement being part of
     the engine's oracled surface.
 
-    Shape: the exact pair set is computed once and persisted; each
-    method contributes a distinct-pair semi-join + one-row counts.
-    All relations are (queries × k)-sized — evaluation never touches
-    the corpus beyond what the methods themselves do."""
-    exact = persist(
-        sim_topk_bruteforce(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
+    Shape: the exact pair set is computed once (its readers share
+    its exchanges); each method contributes a distinct-pair semi-join
+    + one-row counts. All relations are (queries × k)-sized —
+    evaluation never touches the corpus beyond what the methods
+    themselves do."""
+    exact = sim_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id").distinct()
     methods = [
         ("ivf_flat", sim_ivf_flat),
         ("ivfpq", sim_ivfpq),

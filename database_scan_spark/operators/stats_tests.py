@@ -503,18 +503,17 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select(
         F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")
     )
-    edges = persist(li.distinct())
     stats = []
-    cur = edges
+    cur = li.distinct()
     for rnd in range(1, _KCORE_ROUNDS + 1):
+        # (b) scans 1 -> 6 without it; the last round's survivors feed
+        # only their own stats, so they are not cached
+        cur = persist(cur)
         deg_p = cur.groupBy("p").agg(F.count(F.lit(1)).alias("dp"))
         deg_s = cur.groupBy("s").agg(F.count(F.lit(1)).alias("ds"))
         keep_p = deg_p.filter(F.col("dp") >= _KCORE_K).select("p")
         keep_s = deg_s.filter(F.col("ds") >= _KCORE_K).select("s")
-        cur = persist(
-            cur.join(keep_p, "p", "left_semi")
-            .join(keep_s, "s", "left_semi")
-        )
+        cur = cur.join(keep_p, "p", "left_semi").join(keep_s, "s", "left_semi")
         stats.append(
             cur.agg(
                 F.lit(rnd).alias("round"),
@@ -591,6 +590,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms are three dimension-sized aggregations joined on the ≤5-row
     region relation."""
     nat = load(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
+    # (b) scans 6 -> 8 without it
     edges = persist(
         _trade_edges(spark, sf_dir)
         .join(
@@ -724,6 +724,7 @@ def analytic_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity").cast("bigint").alias("q"),
         F.round(F.col("l_discount") * 100).cast("bigint").alias("d"),
     )
+    # (b) scans 1 -> 2 without it
     joint = persist(li.groupBy("q", "d").agg(F.count(F.lit(1)).alias("cnt")))
     a = joint.select(
         F.col("q").alias("qa"), F.col("d").alias("da"), F.col("cnt").alias("ca")
@@ -2725,6 +2726,7 @@ def graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     hops, one groupBy); reciprocity is then one self-join of the
     dimension-sized edge list on the REVERSED key pair and a
     two-number exact-integer reduce — one final division."""
+    # (b) shuffles 1 -> 2 without it: uncached, the global sums need an exchange
     edges = persist(_trade_edges(spark, sf_dir).filter(F.col("src") != F.col("dst")))
     rev = edges.select(
         F.col("dst").alias("src"), F.col("src").alias("dst"), F.col("w").alias("w_rev")
@@ -2863,7 +2865,7 @@ def analytic_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     two ratios divide them. Dimension of everything after the first
     distinct: users × active-weeks."""
     ev = load(spark, sf_dir, "events")
-    uw = persist(
+    uw = persist(  # (b) scans 1 -> 3 without it
         ev.select(
             "user_id",
             F.floor(F.datediff(F.to_date("ts"), F.lit("2024-01-01")) / 7)
@@ -3071,12 +3073,14 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the dimension-sized canonical edge list (both joins
     broadcast); degrees are one aggregation; C_v is exact-integer
     in, one division out (d_v < 2 → null)."""
+    # (b) shuffles 4 -> 5 without it
     wpairs = persist(
         _undirected_pairs(spark, sf_dir)
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("w"))
     )
     med = wpairs.agg(F.expr("percentile(w, 0.5)").alias("m"))
+    # (b) latency 0.70 -> 0.77 s without it (median of 3 warm runs)
     edges = persist(
         wpairs.crossJoin(med)
         .filter(F.col("w") >= F.col("m"))
@@ -3193,7 +3197,7 @@ def analytic_retention_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums (the `text_zipf_fit` recipe); half-life is one fixed double
     expression. Everything after the first distinct is offsets-sized."""
     ev = load(spark, sf_dir, "events")
-    uw = persist(
+    uw = persist(  # (b) scans 1 -> 4 without it
         ev.select(
             "user_id",
             F.floor(F.datediff(F.to_date("ts"), F.lit("2024-01-01")) / 7)

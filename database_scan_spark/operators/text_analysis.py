@@ -1050,12 +1050,7 @@ def text_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
         "w",
         F.sum(F.col("w").isin(STOPWORDS).cast("int")).over(wseg).alias("phrase_id"),
     ).filter(~F.col("w").isin(STOPWORDS))
-    # consumed THREE times below (plen, corpus word stats, phrase
-    # assembly), and each consumer otherwise re-runs the explode +
-    # per-doc segmentation window — the plan's expensive subtree
-    # (measured: 3 identical Exchange+Window chains, one per scan).
-    # One tracked persist computes it once; released by the
-    # __spark_entry__ cache lifecycle.
+    # (b) scans 1 -> 2 and shuffles 2 -> 6 without it
     occ = persist(seg.select("doc_id", "phrase_id", "pos", "w"))
     plen = occ.groupBy("doc_id", "phrase_id").agg(F.count(F.lit(1)).alias("plen"))
     wstat = (
@@ -1606,6 +1601,7 @@ def text_boilerplate_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("toks") >= _BP_N,
         F.sequence(F.lit(1), F.size("toks") - (_BP_N - 1)),
     ).otherwise(F.array().cast("array<int>"))
+    # (b) scans 1 -> 2 without it
     shingles = persist(toked.select(
         "doc_id",
         F.explode(
@@ -1870,6 +1866,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("toks") >= _NV_N,
         F.sequence(F.lit(1), F.size("toks") - (_NV_N - 1)),
     ).otherwise(F.array().cast("array<int>"))
+    # (b) scans 1 -> 2 without it
     shingles = persist(toked.select(
         "doc_id",
         F.explode(

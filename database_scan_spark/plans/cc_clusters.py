@@ -78,6 +78,9 @@ def dedup_cluster_cc(
     # pure plan-time at sf0.1 and an explainString OOM at 100x.
     # localCheckpoint truncates the lineage itself (graph_scc's
     # pattern); the shallow exact-join plan stays on plain persist.
+    # (a) every round's count reads the edges, and round 2's the first
+    # labels: without them scans 1 -> 2 and build jobs 15 -> 18, and
+    # shuffles 6 -> 7 (dedup_cluster_cc, sf0.01)
     edges = edges.localCheckpoint(eager=False) if lsh_pairs else persist(edges)
     labels_p = persist(
         edges.groupBy("src")
@@ -111,6 +114,7 @@ def dedup_cluster_cc(
                 )
             )
         )
+        # (a) the next round's count reads it: shuffles 6 -> 13 without it
         new_p = persist(
             contribs.groupBy("src")
             .agg(

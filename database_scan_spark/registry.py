@@ -70,47 +70,31 @@ for _mod in _MODULES:
 # The driver's correctness check runs the first 50 entries of SPECS, so
 # the queries the latest change touched lead the list; everything else
 # keeps registration order (the sort is stable). Now: queries that lost
-# broadcast hints on one-row or nation/region build sides (the two whose
-# cross join moved, label propagation's round-1 side, the rest by hints
-# lost, then one for each module not yet covered), then the benchmark's
+# a persist (the dedup family through its shingle and pair-set caches,
+# then graph, k-anonymity and similarity), then the benchmark's
 # workload queries.
 FOCUS: tuple[str, ...] = (
-    # broadcast hints the planner makes anyway, dropped
-    "text_ccnet_perplexity",
-    "pipeline_quality_funnel",
-    "graph_label_propagation",
-    "dedup_fellegi_sunter",
-    "graph_ppr",
-    "analytic_gains_table",
-    "analytic_kendall_tau",
-    "analytic_rfm",
-    "dq_outlier_ensemble",
-    "graph_modularity",
-    "graph_pagerank",
-    "sim_ann_recall_matrix",
-    "sim_prf_rocchio",
-    "tpch_q8_market_share",
-    "agg_histogram_equidepth",
-    "agg_rollup",
-    "analytic_calibration",
-    "analytic_chi_square",
-    "analytic_ndcg",
-    "analytic_pareto",
-    "dedup_embedding_cosine",
-    "dq_drift_wasserstein",
-    "graph_hits",
-    "pipeline_model_eval",
-    "sim_ivfpq",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q7_volume_shipping",
+    # caches that exchange reuse covered or one site read, dropped
+    "dedup_method_matrix",
+    "dedup_ngram_jaccard",
+    "dedup_jaccard_prefix",
+    "dedup_minhash_oph",
+    "dedup_minhash_oph_sampled",
+    "dedup_minhash_bbit",
+    "dedup_minhash_mllib",
+    "dedup_incremental_minhash",
+    "dedup_cluster_cc_twostar",
+    "dedup_keep_best",
+    "dq_split_leakage_audit",
+    "wf_dpo_pair_builder",
+    "pipeline_corpus_prep",
+    "pipeline_incremental_ingest",
+    "graph_kcore",
+    "graph_neighborhood_function",
+    "graph_shortest_path",
     "wf_k_anonymity",
-    "wf_quality_gate",
-    "sample_stratified_neyman",
-    "agg_histogram",
-    "fn_str_format",
-    "analytic_logreg_gd",
-    # perfbench workload "traversal_scaled" (candidate_parts, q5 and q10
-    # lost hints too)
+    "sim_ann_recall_matrix",
+    # perfbench workload "traversal_scaled"
     "candidate_parts",
     "join_multi_hop",
     "set_union_accumulate",
@@ -119,7 +103,8 @@ FOCUS: tuple[str, ...] = (
     "tpch_q5_local_supplier_volume",
     "tpch_q10_returned_items",
     "tpch_q21_sole_blame_supplier",
-    # perfbench workload "pipeline"
+    # perfbench workload "pipeline" (dedup_cluster_cc also lost the
+    # shingle cache)
     "dedup_cluster_cc",
     "text_keyword_rake",
     "udf_smiles_canonical",

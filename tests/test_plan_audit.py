@@ -13,10 +13,12 @@ from __future__ import annotations
 import json
 import os
 import re
+from collections import Counter
 
 import pytest
 
 from database_scan_spark.registry import SPECS
+from database_scan_spark.session import ENGINE_PERSISTS, persist, release
 
 from conftest import SF_SMOKE
 
@@ -56,10 +58,10 @@ _UNPARTITIONED_WINDOW_OK: dict[str, str] = {}
 
 # --- broadcast-build-side ratchet (mechanizes the r5 manual audit) ---------
 #
-# r5 hand-audited the 257 F.broadcast sites of its day; 127 calls on 126
-# lines are left. The one-row and nation/region build sides lost their
-# hints (the redundant-hint gate below keeps them out), so every hinted
-# side left is a filtered/selective dim projection, a probe/centroid/
+# r5 hand-audited the 257 F.broadcast sites of its day; 128 calls on 127
+# lines are left (dedup_method_matrix's pair-set hint is the newest).
+# The one-row and nation/region build sides lost their hints (the
+# redundant-hint gate below keeps them out), so every hinted side left is a filtered/selective dim projection, a probe/centroid/
 # boundary set, a keyed aggregate, or a one-row side whose product
 # estimate is above the broadcast threshold. The rule below flags a
 # broadcast-hinted join side whose subtree reaches a fact-scaled scan
@@ -123,6 +125,26 @@ _BROADCAST_FACT_OK: dict[str, int] = {
     "graph_degree_histogram": 4,
     "dedup_decontaminate": 1,
     "sim_kmeans": 1,
+    # The customer/supplier dim broadcasts of graph._trade_pairs, the
+    # fact join under every trade-graph operator, seen once the walk
+    # entered cached plans: one pair per copy of the edge lineage in the
+    # optimized plan where the edges are not cached (15 in shortest
+    # path's unrolled BFS; exchange reuse runs them once), one pair
+    # inside the cache elsewhere.
+    "graph_shortest_path": 30,
+    "graph_random_walk": 2,
+    "graph_triangle_count": 2,
+    "graph_reciprocity": 2,
+    "graph_neighborhood_function": 2,
+    "graph_pagerank": 2,
+    "graph_ppr": 2,
+    "graph_hits": 2,
+    "graph_label_propagation": 2,
+    "graph_link_prediction": 2,
+    "graph_modularity": 2,
+    "graph_clustering_coefficient": 2,
+    # the N_QUERIES probe batch inside the persisted scored pass
+    "sim_hard_negatives": 1,
 }
 
 # --- redundant-broadcast-hint gate -----------------------------------------
@@ -138,6 +160,21 @@ _BROADCAST_FACT_OK: dict[str, int] = {
 # CartesianProduct (dedup_fellegi_sunter).
 _FIXED_TABLES = frozenset(["nation.parquet", "region.parquet"])
 _BROADCAST_THRESHOLD = 10 * 1024 * 1024
+
+
+# --- engine-cache gate ------------------------------------------------------
+#
+# SCALE.md "Caching discipline": a persist saves work only if (a) a
+# build-time action reads it (a fixpoint round or its count), or (b)
+# more than one plan site reads it. A cache read once recomputes nothing
+# less than its lineage would, and its boundary stops whole-stage codegen
+# from fusing the operators on either side; readers that share a subplan
+# under one exchange already get it computed once from ReuseExchange.
+# Every frame the build recorded in session.ENGINE_PERSISTS that is still
+# cached (a fixpoint unpersists its own rounds) fails if it is recorded
+# twice, or if the build never materialised it and fewer than 2
+# InMemoryRelation sites read it: the result's optimized plan plus the
+# other recorded caches' plans.
 
 
 # --- lineitem-broadcast gate ------------------------------------------------
@@ -194,9 +231,8 @@ def _lineitem_broadcasts(node, hits: list) -> None:
             hits.append(scan)
     for c in _children(node):
         _lineitem_broadcasts(c, hits)
-    sq = node.subqueries()
-    for i in range(sq.size()):
-        _lineitem_broadcasts(sq.apply(i), hits)
+    for q in _subqueries(node):
+        _lineitem_broadcasts(q, hits)
 
 
 # --- shuffle-budget ratchet (r7, fourth audit class) ------------------------
@@ -262,6 +298,68 @@ def _children(node):
         yield ch.apply(i)
 
 
+def _subqueries(node):
+    try:
+        sq = node.subqueries()
+    except Exception:  # noqa: BLE001 - subqueries() absent on some nodes
+        return
+    for i in range(sq.size()):
+        yield sq.apply(i)
+
+
+def _jvm_id(obj) -> int:
+    from pyspark import SparkContext
+
+    return SparkContext._jvm.System.identityHashCode(obj)  # noqa: SLF001
+
+
+def _cache_reads(node, reads: Counter) -> None:
+    """Count the cache reads in a logical or physical plan, per cache
+    (keyed by its ``CachedRDDBuilder``): ``InMemoryRelation`` leaves and
+    ``InMemoryTableScanExec`` nodes. A cached plan is adaptive, and
+    ``AdaptiveSparkPlanExec`` keeps its plan in ``inputPlan()``."""
+    name = node.getClass().getSimpleName()
+    if name == "InMemoryRelation":
+        reads[_jvm_id(node.cacheBuilder())] += 1
+        return
+    if name == "InMemoryTableScanExec":
+        reads[_jvm_id(node.relation().cacheBuilder())] += 1
+        return
+    if name == "AdaptiveSparkPlanExec":
+        node = node.inputPlan()
+    for c in _children(node):
+        _cache_reads(c, reads)
+    for q in _subqueries(node):
+        _cache_reads(q, reads)
+
+
+def _unread_caches(spark, df, recorded) -> list:
+    """The recorded engine caches of the build of ``df`` that save no
+    work: recorded twice, or never materialised by the build and read at
+    fewer than 2 sites."""
+    cm = spark._jsparkSession.sharedState().cacheManager()  # noqa: SLF001
+    builders: dict = {}
+    hits: list = []
+    for frame in recorded:
+        cached = cm.lookupCachedData(frame._jdf)  # noqa: SLF001
+        if not cached.isDefined():  # a fixpoint unpersisted its own round
+            continue
+        builder = cached.get().cachedRepresentation().cacheBuilder()
+        key = _jvm_id(builder)
+        if key in builders:
+            hits.append(f"recorded twice: {builder.cachedName()[:150]}")
+        builders[key] = builder
+    reads: Counter = Counter()
+    _cache_reads(df._jdf.queryExecution().optimizedPlan(), reads)  # noqa: SLF001
+    for builder in builders.values():
+        _cache_reads(builder.cachedPlan(), reads)
+    for key, builder in builders.items():
+        if reads[key] < 2 and not builder.isCachedColumnBuffersLoaded():
+            hits.append(f"read at {reads[key]} site(s), never materialised: "
+                        f"{builder.cachedName()[:150]}")
+    return hits
+
+
 # Leaves that can stand for an SF-scaled relation: a parquet scan, or a
 # cached fragment substituted by the cache manager (persist() marks the
 # plan immediately — if a cached subtree still exposes a fact key column
@@ -292,40 +390,50 @@ def _unpartitioned_fact_windows(node, hits: list) -> None:
             hits.append(node.simpleString(200))
     for c in _children(node):
         _unpartitioned_fact_windows(c, hits)
-    try:  # windows inside subquery plans count too
-        sq = node.subqueries()
-        for i in range(sq.size()):
-            _unpartitioned_fact_windows(sq.apply(i), hits)
-    except Exception:  # noqa: BLE001 - subqueries() absent on some nodes
-        pass
+    for q in _subqueries(node):  # windows inside subquery plans count too
+        _unpartitioned_fact_windows(q, hits)
 
 
-def _broadcast_hinted_sides(node):
+def _broadcast_hinted_sides(node, seen=None):
     """Every broadcast-hinted side of a ``Join`` in the logical plan
-    ``node``, subquery plans included, as ``(join, side index, side)``."""
-    if node.getClass().getSimpleName() == "Join":
+    ``node``, subquery plans and cached plans included, as ``(where,
+    side)``. An ``InMemoryRelation`` keeps the analysed plan its cache
+    was built from, where a hint is still a ``ResolvedHint`` node over
+    the side. Each cache is walked once, and a hint in it counts once
+    per distinct side: an outer cache's analysed plan repeats the
+    lineage of the caches under it, re-instanced for each self-join."""
+    seen = set() if seen is None else seen
+    name = node.getClass().getSimpleName()
+    if name == "Join":
         h = node.hint()
         kids = list(_children(node))
         for opt, side in ((h.leftHint(), 0), (h.rightHint(), 1)):
             if opt.isDefined() and "broadcast" in opt.get().toString():
-                yield node, side, kids[side]
+                yield f"side={side} {node.simpleString(150)}", kids[side]
+    elif name == "InMemoryRelation":
+        key = ("cache", _jvm_id(node.cacheBuilder()))
+        if key in seen:
+            return
+        seen.add(key)
+        node = node.cacheBuilder().logicalPlan()
+    elif name == "ResolvedHint" and "broadcast" in node.hints().toString():
+        key = ("side", node.child().semanticHash())
+        if key not in seen:
+            seen.add(key)
+            yield f"cached {node.child().simpleString(150)}", node.child()
     for c in _children(node):
-        yield from _broadcast_hinted_sides(c)
-    try:
-        sq = node.subqueries()
-        for i in range(sq.size()):
-            yield from _broadcast_hinted_sides(sq.apply(i))
-    except Exception:  # noqa: BLE001
-        pass
+        yield from _broadcast_hinted_sides(c, seen)
+    for q in _subqueries(node):
+        yield from _broadcast_hinted_sides(q, seen)
 
 
 def _broadcast_fact_builds(node, hits: list) -> None:
     """Broadcast-hinted join sides whose subtree reaches a fact scan
     without an Aggregate/Limit bound (the forced-broadcast OOM-cliff
     class r5 found in graph_kcore)."""
-    for join, side, plan in _broadcast_hinted_sides(node):
+    for where, plan in _broadcast_hinted_sides(node):
         if _reaches_fact_unbounded(plan):
-            hits.append(f"side={side} {join.simpleString(150)}")
+            hits.append(where)
 
 
 def _fixed_leaves(node) -> bool:
@@ -346,11 +454,11 @@ def _redundant_broadcasts(node, hits: list) -> None:
     """Broadcast-hinted join sides the planner broadcasts unasked at any
     scale: one row, or only nation/region/literal leaves, with a size
     estimate under Spark's default broadcast threshold."""
-    for join, side, plan in _broadcast_hinted_sides(node):
+    for where, plan in _broadcast_hinted_sides(node):
         rows = plan.maxRows()
         small = int(plan.stats().sizeInBytes()) <= _BROADCAST_THRESHOLD
         if small and ((rows.isDefined() and rows.get() <= 1) or _fixed_leaves(plan)):
-            hits.append(f"side={side} {join.simpleString(150)}")
+            hits.append(where)
 
 
 def _grouping_keys(node) -> set:
@@ -399,12 +507,8 @@ def _unbounded_pandas_groups(node, hits: list) -> None:
             hits.append(f"{name}[{','.join(sorted(keys))}]")
     for c in _children(node):
         _unbounded_pandas_groups(c, hits)
-    try:
-        sq = node.subqueries()
-        for i in range(sq.size()):
-            _unbounded_pandas_groups(sq.apply(i), hits)
-    except Exception:  # noqa: BLE001
-        pass
+    for q in _subqueries(node):
+        _unbounded_pandas_groups(q, hits)
 
 
 @pytest.mark.parametrize("spec", _ALL, ids=[s.name for s in _ALL])
@@ -412,6 +516,7 @@ def test_no_plan_smells(spark, spec):
     # Pristine plans: an earlier spec's persist() would otherwise let the
     # cache manager substitute a matching subtree of THIS spec's plan
     # with an InMemoryRelation, making gate coverage order-dependent.
+    release()
     spark.catalog.clearCache()
     df = spec.fn(spark, SF_SMOKE)
     plan = df._sc._jvm.PythonSQLUtils.explainString(
@@ -420,6 +525,12 @@ def test_no_plan_smells(spark, spec):
     assert "BatchEvalPython" not in plan, f"{spec.name}: row-at-a-time Python UDF"
     assert "CartesianProduct" not in plan, f"{spec.name}: cartesian product"
     optimized = df._jdf.queryExecution().optimizedPlan()
+    chits = _unread_caches(spark, df, ENGINE_PERSISTS)
+    assert not chits, (
+        f"{spec.name}: {len(chits)} engine cache(s) that save no work — "
+        f"persist only what a build-time action or two plan sites read "
+        f"(SCALE.md \"Caching discipline\"): {chits}"
+    )
     if spec.name not in _UNPARTITIONED_WINDOW_OK:
         hits: list = []
         _unpartitioned_fact_windows(optimized, hits)
@@ -595,7 +706,8 @@ def test_broadcast_ratchet_catches_bad_plan(spark):
     hinted nation, and must pass the same one-row side unhinted and a
     hinted one-row side whose product estimate is above the threshold
     (the dedup_fellegi_sunter shape, which plans a CartesianProduct
-    without its hint)."""
+    without its hint). Both halves see into a persisted frame: its
+    hinted nation MUST be flagged."""
     from functools import reduce
 
     from pyspark.sql import functions as F
@@ -640,6 +752,55 @@ def test_broadcast_ratchet_catches_bad_plan(spark):
     assert int(side.stats().sizeInBytes()) > _BROADCAST_THRESHOLD
     big_est = flagged(o.crossJoin(F.broadcast(wide)), _redundant_broadcasts)
     assert not big_est, f"gate flagged a hint the product estimate needs: {big_est}"
+
+    cached_dim = persist(hinted_dim)
+    try:
+        assert flagged(cached_dim.select("c_custkey"), _redundant_broadcasts), (
+            "gate missed a hinted nation inside a persisted frame"
+        )
+    finally:
+        release()
+
+
+def test_cache_gate_catches_unread_cache(spark):
+    """Gate self-test: a frame persisted and read once, and a frame
+    persisted twice, MUST be flagged; a frame read at 2 sites and a
+    frame read once after a build-time count() materialised it must
+    not be."""
+    from pyspark.sql import functions as F
+
+    from database_scan_spark.catalog import load
+
+    o = load(spark, SF_SMOKE, "orders")
+
+    def flagged(build) -> list:
+        release()
+        spark.catalog.clearCache()
+        try:
+            return _unread_caches(spark, build(), ENGINE_PERSISTS)
+        finally:
+            release()
+
+    def per_cust():
+        return persist(o.groupBy("o_custkey").agg(F.count(F.lit(1)).alias("n")))
+
+    def self_join(a):
+        return a.join(a.withColumnRenamed("n", "m"), "o_custkey")
+
+    def twice():
+        a = per_cust()
+        return self_join(persist(a))
+
+    def counted():
+        a = per_cust()
+        a.count()
+        return a.filter("n > 1")
+
+    assert flagged(lambda: per_cust().filter("n > 1")), "gate missed a cache read once"
+    assert flagged(twice), "gate missed a frame persisted twice"
+    read_twice = flagged(lambda: self_join(per_cust()))
+    assert not read_twice, f"gate flagged a cache read at 2 sites: {read_twice}"
+    assert not flagged(counted), "gate flagged a cache the build materialised"
 
 
 def test_lineitem_broadcast_gate_catches_bad_plan(spark):

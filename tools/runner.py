@@ -196,6 +196,7 @@ def layers(names: Iterable[str], sf_dir: str) -> dict[str, dict]:
             "reused": c.get("reused", 0),
             "broadcasts": c.get("ran.broadcast", 0),
             "broadcast_mb": round(c.get("bcast_b", 0) / MB, 2),
+            "cache_reads": c.get("ran.inmemory", 0),
             "build_jobs": c.get("build.jobs", 0),
             "exec_jobs": c.get("exec.jobs", 0),
             "compiles": run.compiles,
