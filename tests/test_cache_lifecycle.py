@@ -37,10 +37,21 @@ def _cached_relations(spark) -> int:
     return len([r for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()])
 
 
+def _clear_storage(spark) -> None:
+    # clearCache() drops the catalog's caches but not a localCheckpoint
+    # an earlier test left resident (the CC and SCC fixpoints checkpoint
+    # their rounds, which `release()` does not record); start from
+    # empty storage so the counts below are this test's own.
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist(True)
+    assert _cached_relations(spark) == 0
+
+
 def test_second_query_releases_first_querys_caches(spark):
     qs = entry_mod.queries()
 
-    spark.catalog.clearCache()
+    _clear_storage(spark)
     a = qs[_PERSISTING](spark, SF)
     a_rows = a.count()  # materialize: A's persists are now resident
     assert a_rows > 0
@@ -268,7 +279,7 @@ def test_drain_releases_between_queries(spark):
     query's engine persists immediately, so the next query's timed
     region starts with nothing to drain."""
     qs = entry_mod.queries()
-    spark.catalog.clearCache()
+    _clear_storage(spark)
     qs[_PERSISTING](spark, SF).count()
     assert _cached_relations(spark) > 0
     entry_mod.drain()

@@ -107,13 +107,22 @@ _STATIC_RULES = (
         {"database_scan_spark/session.py"},
         ("database_scan_spark", "tools", "bench.py"),
     ),
+    # tests and tools find their checkout through __file__: a hard-coded
+    # checkout path makes a run from another clone check (or write) the
+    # wrong tree
+    (
+        ("/root/repo",),
+        {"tests/test_scale_posture.py"},
+        ("tests", "tools", "bench.py"),
+    ),
 )
 
 
 def test_operators_never_collect():
     """Static scan for constructs only their owner module may use:
     driver-side materialization in the hot path, session conf changes,
-    the raw events.ts reader shim, engine caches and stream starts."""
+    the raw events.ts reader shim, engine caches, stream starts and a
+    hard-coded checkout path."""
     import pathlib
 
     repo = pathlib.Path(__file__).resolve().parent.parent
