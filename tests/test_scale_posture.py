@@ -7,6 +7,8 @@ correctness tests stay green but these fail.
 
 from __future__ import annotations
 
+import pathlib
+
 from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE
@@ -108,10 +110,10 @@ _STATIC_RULES = (
         ("database_scan_spark", "tools", "bench.py"),
     ),
     # tests and tools find their checkout through __file__: a hard-coded
-    # checkout path makes a run from another clone check (or write) the
-    # wrong tree
+    # checkout path (this checkout's own absolute path) makes a run from
+    # another clone check (or write) the wrong tree
     (
-        ("/root/repo",),
+        (str(pathlib.Path(__file__).resolve().parent.parent),),
         {"tests/test_scale_posture.py"},
         ("tests", "tools", "bench.py"),
     ),
